@@ -204,8 +204,9 @@ object Fsst {
     * candidate matcher indexes symbols by first byte, longest first with
     * the original's lowest-index tie-break, so the selected segments — and
     * therefore the trained table and every encoded payload — are
-    * byte-identical to the original implementation (pinned by FsstSpec and
-    * the BlockProfile sink checksum).
+    * byte-identical to the original implementation (pinned by FsstSpec's
+    * verbatim copy of the original trainer, and the BlockProfile sink
+    * checksum).
     */
   def train(sample: IndexedSeq[Array[Byte]], iterations: Int = 4, maxSymbols: Int = 255): FsstTable = {
     var table = new FsstTable(Array.empty[Array[Byte]])

@@ -321,13 +321,16 @@ object Huffman {
     lut
   }
 
+  /** Largest maxBits the fused encoder LUT supports (code in 24 bits). */
+  final val MaxLutBits = 24
+
   /** Encoder lookup tables: per context, one int per symbol packing
     * (codeLen << 24 | code) — the write loop's two 2D lookups (nBits,
     * codes) become one. codeLen 0 marks an absent symbol. Codes fit 24
     * bits for any maxBits <= 24 (enforced).
     */
   def encoderLut(t: SymbolTables): Array[Array[Int]] = {
-    require(t.maxBits <= 24, s"encoderLut supports maxBits <= 24, got ${t.maxBits}")
+    require(t.maxBits <= MaxLutBits, s"encoderLut supports maxBits <= $MaxLutBits, got ${t.maxBits}")
     val lut = Array.ofDim[Int](t.numContexts, t.numSymbols)
     var c = 0
     while (c < t.numContexts) {

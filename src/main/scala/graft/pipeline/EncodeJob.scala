@@ -4,7 +4,7 @@ import graft.core._
 import graft.core.MiniJson.ObjOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
@@ -14,19 +14,24 @@ import java.nio.charset.StandardCharsets
   * parameters.rs:92-125, to per-partition checkpoints + snapshot log).
   *
   * Output layout under `outDir`:
-  *   blocks/          parquet of EncodedBlock rows (appended per run)
+  *   blocks/          parquet of EncodedBlock rows (files added per run)
   *   _tables/header.bin   shared symbol tables in the reference's
   *                        self-describing header bit format
   *   _tables/meta.json    maxBits / numContexts / tableHash / config
-  *   _manifest/       parquet of per-bin manifests (appended per run)
+  *   _manifest/       parquet of per-bin manifests (one file per commit)
   *   _snapshots/snap-<n>.json   snapshot lineage (parent pointer, bins added)
   *
-  * Resume correctness: a bin is "done" iff its blocks are committed in
-  * blocks/ — the parquet commit is the atomic unit of progress, the manifest
-  * is derived metadata. Blocks are a deterministic function of (bin row set,
-  * symbol tables, config), so a resumed run is byte-identical to an
-  * uninterrupted one; the recorded table hash guards against resuming with
-  * different tables.
+  * Commit order of a run: block files → manifest file → snapshot. The
+  * encode tasks write their blocks (one file per partition, holding whole
+  * bins) into `_write_staging/` and report each bin's manifest row, so
+  * nothing is read back ([[commitBlocks]]).
+  *
+  * Resume correctness: a bin is "done" iff its blocks are in blocks/ — the
+  * rename of one block file into blocks/ is the unit of progress; the
+  * manifest and snapshot are derived metadata a resume repairs. Blocks are
+  * a deterministic function of (bin row set, symbol tables, config), so a
+  * resumed run is byte-identical to an uninterrupted one; the recorded
+  * table hash guards against resuming with different tables.
   */
 object EncodeJob {
 
@@ -269,9 +274,14 @@ object EncodeJob {
       if (files.isEmpty) {
         import spark.implicits._
         spark.emptyDataset[EncodedBlock].toDF()
-      } else spark.read.parquet(files.toIndexedSeq: _*)
-    } else spark.read.parquet(s"$outDir/blocks")
+      } else spark.read.schema(BlockSchema).parquet(files.toIndexedSeq: _*)
+    } else spark.read.schema(BlockSchema).parquet(s"$outDir/blocks")
   }
+
+  /** The known block schema: passing it skips parquet schema inference (a
+    * one-task footer-reading job per read).
+    */
+  private lazy val BlockSchema = Encoders.product[EncodedBlock].schema
 
   /** Bins already committed to blocks/ (empty if no output yet). */
   def doneBins(spark: SparkSession, outDir: String): Set[Int] = {
@@ -474,6 +484,8 @@ object EncodeJob {
     // routine encode entering the commit-to-heal crash window must not run
     // against a half-folded history (gated no-op on healthy dirs)
     Maintenance.healRebin(spark, outDir)
+    // a killed run's staged files were never published; nothing reads them
+    sweepStaging(spark, outDir)
 
     // 1. shared symbol tables: reuse persisted ones (byte-identical resume),
     // else pass-1 analyze + build + persist.
@@ -537,9 +549,9 @@ object EncodeJob {
     val todo = requested -- done
     val (snapshotId, parentId) = nextSnapshotId(spark, outDir)
 
-    // self-repair: a crash between block commit (the atomic unit of
-    // progress) and manifest append leaves a done bin with no manifest row
-    // forever — resume re-derives those rows along with this run's.
+    // self-repair: a crash between a block file's rename (the unit of
+    // progress) and the manifest commit leaves a done bin with no manifest
+    // row forever — resume re-derives those rows from the committed blocks.
     val manifested: Set[Int] =
       if (!exists(spark, s"$outDir/_manifest")) Set.empty
       else
@@ -550,7 +562,7 @@ object EncodeJob {
           .as[Int]
           .collect()
           .toSet
-    val toManifest = todo ++ (done -- manifested)
+    val repair = done -- manifested
 
     if (todo.nonEmpty) {
       // 3. encode only the missing bins: the bin predicate prunes before the
@@ -565,13 +577,15 @@ object EncodeJob {
             .where(binMembership(col("__bin"), todo))
             .drop("__bin")
             .as[TokenRow]
-      val blocks = GraftPipeline.encode(pending, bTables, cfg)
-      blocks.write.mode(SaveMode.Append).parquet(s"$outDir/blocks")
+      // 4. the encode tasks write their own block files and report their
+      // manifest rows; the driver publishes both.
+      commitBlocks(GraftPipeline.encode(pending, bTables, cfg), outDir, snapshotId)
     }
 
-    if (toManifest.nonEmpty) {
-      // 4. manifest entries derived from the committed blocks.
-      appendManifest(spark, outDir, toManifest, snapshotId)
+    if (repair.nonEmpty) {
+      // manifest entries for the repaired bins, derived from their
+      // committed blocks.
+      appendManifest(spark, outDir, repair, snapshotId)
     }
 
     // 5. snapshot lineage record. Self-repair mirrors the manifest's: a
@@ -611,8 +625,116 @@ object EncodeJob {
     if (bins.size <= 4096) c.isInCollection(bins)
     else udf((b: Int) => bins.contains(b)).apply(c)
 
+  /** Staging dirs of [[commitBlocks]] live under `_write_staging/` with
+    * this prefix; nothing reads them, and the next run (or vacuum's grace
+    * sweep) removes a killed run's leftovers.
+    */
+  private val StagingPrefix = "encode-"
+
+  private def sweepStaging(spark: SparkSession, outDir: String): Unit = {
+    val f = fs(spark, outDir)
+    val root = new Path(s"$outDir/_write_staging")
+    if (f.exists(root))
+      f.listStatus(root)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(StagingPrefix))
+        .foreach(st => f.delete(st.getPath, true): Unit)
+  }
+
+  /** Commit one run's encoded blocks with no re-read of what was written.
+    * Each encode task writes its partition's blocks as ONE file under
+    * `_write_staging/encode-<run>/` (named by task attempt, so a retried or
+    * speculative attempt never collides) and reports one manifest row per
+    * bin it wrote. The driver then
+    *   1. renames the files of the collected attempts into `blocks/` —
+    *      a partition holds whole bins, so every rename publishes complete
+    *      bins and is the unit of progress a resume skips;
+    *   2. writes the reported rows as ONE manifest file, staged and then
+    *      renamed into `_manifest/` (all-or-none, like [[appendManifest]]).
+    * A kill between the two leaves renamed bins with no manifest row; the
+    * next run's repair re-derives them with [[appendManifest]].
+    */
+  private def commitBlocks(
+      blocks: Dataset[EncodedBlock],
+      outDir: String,
+      snapshotId: Long
+  ): Unit = {
+    val spark = blocks.sparkSession
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val f = fs(spark, outDir)
+    val runId = java.util.UUID.randomUUID().toString
+    val staging = new Path(s"$outDir/_write_staging/$StagingPrefix$runId")
+    val stagingDir = staging.toString
+    val sConf = new graft.sources.SerializableHadoopConf(conf)
+    try {
+      val reported = blocks
+        .mapPartitions(it => writeBlockFile(it, stagingDir, runId, snapshotId, sConf))
+        .collect()
+      val blocksDir = new Path(s"$outDir/blocks")
+      f.mkdirs(blocksDir)
+      reported.map(_.files).distinct.sorted.foreach { name =>
+        val src = new Path(staging, name)
+        require(f.rename(src, new Path(blocksDir, name)), s"rename $src -> $blocksDir failed")
+      }
+      if (reported.nonEmpty) {
+        val rows = reported.groupBy(_.bin).values.map(_.reduce(mergeManifest)).toSeq.sortBy(_.bin)
+        val staged = new Path(staging, "manifest.parquet")
+        BlockParquet.writeManifest(staged, conf, rows)
+        val manifestDir = new Path(s"$outDir/_manifest")
+        f.mkdirs(manifestDir)
+        val dest = new Path(manifestDir, s"$StagingPrefix$runId.parquet")
+        require(f.rename(staged, dest), s"rename $staged -> $dest failed")
+      }
+    } finally f.delete(staging, true): Unit
+  }
+
+  /** One encode task's side of [[commitBlocks]]: write the partition's
+    * blocks to one staged file and return its per-bin manifest rows.
+    */
+  private def writeBlockFile(
+      blocks: Iterator[EncodedBlock],
+      stagingDir: String,
+      runId: String,
+      snapshotId: Long,
+      conf: graft.sources.SerializableHadoopConf
+  ): Iterator[BinManifest] = {
+    if (!blocks.hasNext) return Iterator.empty
+    val task = org.apache.spark.TaskContext.get()
+    val name = f"$StagingPrefix$runId-p${task.partitionId}%05d-t${task.taskAttemptId}.parquet"
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(BlockParquet.Schema)
+    val perBin = scala.collection.mutable.TreeMap[Int, BinManifest]()
+    val w = BlockParquet.open(new Path(stagingDir, name), conf.value)
+    try
+      blocks.foreach { b =>
+        w.write(BlockParquet.toGroup(b, groups))
+        val row = BinManifest(
+          snapshotId, b.bin, 1L, b.n_rows.toLong, b.n_values,
+          b.payload.length.toLong + b.meta_bytes, b.payload_bits, b.table_hash, name
+        )
+        perBin(b.bin) = perBin.get(b.bin).fold(row)(mergeManifest(_, row))
+      }
+    finally w.close()
+    perBin.valuesIterator
+  }
+
+  /** Sum two manifest rows of one bin (the aggregation of [[appendManifest]]). */
+  private def mergeManifest(a: BinManifest, b: BinManifest): BinManifest =
+    a.copy(
+      n_blocks = a.n_blocks + b.n_blocks,
+      n_rows = a.n_rows + b.n_rows,
+      n_values = a.n_values + b.n_values,
+      payload_bytes = a.payload_bytes + b.payload_bytes,
+      payload_bits = a.payload_bits + b.payload_bits,
+      files =
+        if (a.files == b.files) a.files
+        else (a.files.split(',') ++ b.files.split(',')).distinct.sorted.mkString(",")
+    )
+
   /** Derive + append manifest rows for `bins` from the COMMITTED blocks
-    * (cheap: the payload column is pruned away). `files` records which
+    * (a distributed scan that reads every payload for its length). The
+    * manifest rows of a [[run]]'s own bins come from its encode tasks
+    * instead ([[commitBlocks]]); [[run]] calls this only to repair bins a
+    * killed run renamed into blocks/ but never manifested. `files` records which
     * block parquet files hold each bin — the driver-side bin→file index
     * the DSv2 scan prunes from at any file count (the file-level analog of
     * the reference's random-access index, huffman_graph_decoder.rs:151-205).

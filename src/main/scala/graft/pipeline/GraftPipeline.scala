@@ -62,7 +62,8 @@ object GraftPipeline {
 
   /** @param numContexts  entropy-coder contexts (context = token of previous
     *                     value in the row, clamped; reference main.rs:394-399)
-    * @param maxBits      canonical-code length limit; 8 covers all int32 tokens
+    * @param maxBits      canonical-code length limit, 1..24; 8 covers all
+    *                     int32 tokens
     * @param numBins      logical partitions (salted-hash bins of doc_id);
     *                     sized independently of executor count so output is
     *                     byte-identical at any parallelism
@@ -102,6 +103,10 @@ object GraftPipeline {
       estimatedRounds: Boolean = true
   ) {
     require(numContexts >= 1 && numContexts <= Hybrid.MaxNumContexts)
+    require(
+      maxBits >= 1 && maxBits <= Huffman.MaxLutBits,
+      s"Config.maxBits=$maxBits out of range 1..${Huffman.MaxLutBits} (the encoder LUT packs codes in ${Huffman.MaxLutBits} bits)"
+    )
     /** Resolved context model; construction validates name + context count. */
     def model: ContextModel = ContextModel(contextModel, numContexts)
   }
@@ -158,8 +163,6 @@ object GraftPipeline {
     * ~12 GB into the driver; at small partial counts it stays flat.
     */
   def analyze(ds: Dataset[TokenRow], cfg: Config): Histograms = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val nCtx = cfg.numContexts
     val nSym = 1 << cfg.maxBits
     val model = cfg.model
@@ -170,15 +173,21 @@ object GraftPipeline {
       case s: SimpleContextModel => s.numContexts
       case _ => 0
     }
-    val flat = ds
-      .select($"tokens")
-      .as[Array[Int]]
+    // the column is read as InternalRow arrays (bulk toIntArray), not
+    // through the typed Array[Int] deserializer
+    val tokens = ds.select(col("tokens"))
+    val elemNullable = tokens.schema.head.dataType match {
+      case org.apache.spark.sql.types.ArrayType(_, containsNull) => containsNull
+      case _ => true
+    }
+    val flat = tokens.queryExecution.toRdd
       .mapPartitions { rows =>
         val hist = new Histograms(nCtx, nSym)
+        def next(): Array[Int] = tokenArray(rows.next(), elemNullable)
         if (simpleN > 0) {
           val ctxMax = simpleN - 1
           while (rows.hasNext) {
-            val tokens = rows.next()
+            val tokens = next()
             var ctx = 0
             var i = 0
             while (i < tokens.length) {
@@ -192,7 +201,7 @@ object GraftPipeline {
           }
         } else {
           while (rows.hasNext) {
-            val tokens = rows.next()
+            val tokens = next()
             var ctx = model.first(tokens.length)
             var i = 0
             while (i < tokens.length) {
@@ -206,11 +215,27 @@ object GraftPipeline {
         }
         Iterator.single(hist.flat)
       }
-      // the zero-histogram seed keeps the tree reduce total on an EMPTY
-      // corpus (tables degenerate to all-absent; encode then writes nothing)
-      .union(spark.createDataset(Seq(new Histograms(nCtx, nSym).flat)))
-      .rdd
-    Histograms.fromFlat(reduceFlat(flat), nCtx, nSym)
+    // every partition yields one partial, so only a partition-less input
+    // (an EMPTY corpus) leaves the reduce nothing: tables then degenerate
+    // to all-absent and encode writes nothing
+    if (flat.partitions.isEmpty) new Histograms(nCtx, nSym)
+    else Histograms.fromFlat(reduceFlat(flat), nCtx, nSym)
+  }
+
+  /** The `tokens` array of a one-column row, rejecting nulls by name (the
+    * bulk copy would read a null element as 0).
+    */
+  private def tokenArray(row: org.apache.spark.sql.catalyst.InternalRow, elemNullable: Boolean): Array[Int] = {
+    if (row.isNullAt(0)) throw new IllegalArgumentException("null tokens array unsupported")
+    val arr = row.getArray(0)
+    if (elemNullable) {
+      var i = 0
+      while (i < arr.numElements()) {
+        if (arr.isNullAt(i)) throw new IllegalArgumentException(s"null token at index $i unsupported")
+        i += 1
+      }
+    }
+    arr.toIntArray()
   }
 
   def buildTables(hist: Histograms, cfg: Config): SymbolTables =

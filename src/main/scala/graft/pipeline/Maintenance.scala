@@ -1096,10 +1096,11 @@ object Maintenance {
     if (fs.exists(tmp) && fs.getFileStatus(tmp).getModificationTime <= cutoff)
       if (fs.delete(tmp, true)) dirsDeleted += 1
 
-    // a DSv2 append whose driver died before commit leaves staged task
-    // files under _write_staging/<queryId>. The grace window protects LIVE
-    // writers (each staged file refreshes the dir's mtime): run vacuum with
-    // olderThanMs longer than the longest in-flight append or epoch.
+    // a DSv2 append or EncodeJob run whose driver died before commit
+    // leaves staged task files under _write_staging/<queryId> or
+    // _write_staging/encode-<run>. The grace window protects LIVE writers
+    // (each staged file refreshes the dir's mtime): run vacuum with
+    // olderThanMs longer than the longest in-flight append, epoch or encode.
     val wstage = new Path(s"$outDir/_write_staging")
     if (fs.exists(wstage)) {
       fs.listStatus(wstage).foreach { st =>

@@ -1,18 +1,12 @@
 package graft.sources
 
 import graft.core.{BitReader, Huffman, MiniJson}
-import graft.pipeline.{EncodeJob, EncodedBlock, GraftPipeline, Maintenance}
+import graft.pipeline.{BlockParquet, EncodeJob, GraftPipeline, Maintenance}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -35,7 +29,8 @@ import scala.collection.mutable
   * path ships), each task routes its rows to their deterministic salted
   * bins, runs the SAME block kernel as the batch encoder
   * ([[GraftPipeline.blockIterator]]), and writes the blocks as one parquet
-  * file in the dir's block layout. This is the Iceberg-style incremental
+  * file through the batch encoder's block-file writer
+  * ([[graft.pipeline.BlockParquet]]). This is the Iceberg-style incremental
   * append the north star asks for: new training sequences land in an
   * existing compressed table without re-encoding it.
   *
@@ -455,7 +450,7 @@ private[sources] object GraftAppendCommit {
     var snapshotId = -1L
     try {
       // 1. publish the task files (visible to full scans from here, exactly
-      // like EncodeJob's blocks-parquet commit before its snapshot write)
+      // like EncodeJob's block-file renames before its snapshot write)
       msgs.foreach { m =>
         val src = new Path(stagingDir, m.fileName)
         val dst = new Path(s"$path/blocks", m.fileName)
@@ -714,67 +709,4 @@ private[sources] object GraftDataWriter {
     * the cap report `allBins` instead — see [[GraftCommitMessage]].
     */
   val BinsInlineCap: Int = 16384
-}
-
-/** Hand-rolled parquet IO for block files: the writer tasks run without a
-  * SparkSession, so blocks are written through parquet-hadoop directly, in
-  * EXACTLY the schema Spark's own parquet writer produces for
-  * [[graft.pipeline.EncodedBlock]] — appended files and EncodeJob files are
-  * indistinguishable to every reader (Spark scans, the DSv2 readers'
-  * projected GroupReadSupport, footer bin-stat pruning, compaction).
-  */
-private[sources] object BlockParquet {
-  val Schema: MessageType = MessageTypeParser.parseMessageType(
-    """message spark_schema {
-      |  required int32 bin;
-      |  required int32 block_seq;
-      |  optional binary doc_ids_codec (UTF8);
-      |  optional binary doc_ids_payload;
-      |  optional binary sources_codec (UTF8);
-      |  optional binary sources_payload;
-      |  optional binary n_toks_codec (UTF8);
-      |  optional binary n_toks_payload;
-      |  optional binary row_bits_codec (UTF8);
-      |  optional binary row_bits_payload;
-      |  required boolean embedded_tables;
-      |  optional binary codec (UTF8);
-      |  required int32 n_rows;
-      |  required int64 n_values;
-      |  optional binary payload;
-      |  required int64 payload_bits;
-      |  required int64 meta_bytes;
-      |  required int64 table_hash;
-      |}""".stripMargin
-  )
-
-  def open(file: Path, conf: Configuration): ParquetWriter[Group] =
-    ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(file, conf))
-      .withType(Schema)
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-
-  def toGroup(b: EncodedBlock, f: SimpleGroupFactory): Group = {
-    val g = f.newGroup()
-    g.add("bin", b.bin)
-    g.add("block_seq", b.block_seq)
-    g.add("doc_ids_codec", b.doc_ids_codec)
-    g.add("doc_ids_payload", Binary.fromConstantByteArray(b.doc_ids_payload))
-    g.add("sources_codec", b.sources_codec)
-    g.add("sources_payload", Binary.fromConstantByteArray(b.sources_payload))
-    g.add("n_toks_codec", b.n_toks_codec)
-    g.add("n_toks_payload", Binary.fromConstantByteArray(b.n_toks_payload))
-    g.add("row_bits_codec", b.row_bits_codec)
-    g.add("row_bits_payload", Binary.fromConstantByteArray(b.row_bits_payload))
-    g.add("embedded_tables", b.embedded_tables)
-    g.add("codec", b.codec)
-    g.add("n_rows", b.n_rows)
-    g.add("n_values", b.n_values)
-    g.add("payload", Binary.fromConstantByteArray(b.payload))
-    g.add("payload_bits", b.payload_bits)
-    g.add("meta_bytes", b.meta_bytes)
-    g.add("table_hash", b.table_hash)
-    g
-  }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import graft.codec._
 import graft.core.BitWriter
 import graft.pipeline.{GraftPipeline, TokenTables}
+import graft.sources.GraftDataSource
 
 /** Single-threaded micro-profile of the block-encode path (dev tool, guide
   * §1.2 "per-task work"): generates the exact bench corpus rows locally
@@ -29,11 +30,12 @@ object BlockProfile {
     val reps = if (args.length > 1) args(1).toInt else 5
     val cfg = GraftPipeline.Config(numContexts = 64, numBins = 512)
 
-    // bench-corpus rows in staged order: binned by doc_id hash, rows sorted
-    // by (bin, source, doc_id) — bin granularity only decides block cuts
+    // bench-corpus rows in staged order: binned by the production
+    // pmod(xxhash64(doc_id, salt), numBins) routing, rows sorted by
+    // (bin, source, doc_id) — so the block cuts match the engine's
     val rows = (0L until nRows.toLong).map(i => TokenTables.syntheticRow(42L, i))
     val binned = rows
-      .map(r => (math.floorMod(r.doc_id.hashCode, cfg.numBins), r))
+      .map(r => (GraftDataSource.binOf(r.doc_id, cfg.numBins, cfg.salt), r))
       .sortBy { case (b, r) => (b, r.source, r.doc_id) }
 
     // pack into blocks with the production caps (same rule as blockIterator)

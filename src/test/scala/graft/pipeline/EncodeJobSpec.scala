@@ -239,4 +239,104 @@ class EncodeJobSpec extends AnyFunSuite {
     assert(manifest.map(_.n_rows).reduce(_ + _) == input.count())
     assert(manifest.map(_.table_hash).distinct().count() == 1L)
   }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(): Unit
+  }
+
+  private def manifestRows(dir: String): Set[EncodeJob.BinManifest] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/_manifest").as[EncodeJob.BinManifest].collect().toSet
+  }
+
+  test("task-reported manifest rows equal appendManifest's derivation over the committed blocks") {
+    val dir = Files.createTempDirectory("graft-taskmanifest").toString
+    val res = EncodeJob.run(input, dir, cfg)
+    val reported = manifestRows(dir)
+    assert(reported.map(_.bin) == (0 until cfg.numBins).toSet)
+    rmTree(new java.io.File(s"$dir/_manifest"))
+    EncodeJob.appendManifest(spark, dir, (0 until cfg.numBins).toSet, res.snapshotId)
+    assert(manifestRows(dir) == reported)
+  }
+
+  test("a killed run's staged files stay invisible and are swept; a half-renamed run is repaired") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fullDir = Files.createTempDirectory("graft-crash-full").toString
+    EncodeJob.run(input, fullDir, cfg)
+    val full = manifestRows(fullDir)
+    def binsOf(file: String): Set[Int] = full.filter(_.files.split(',').contains(file)).map(_.bin)
+    val committed = Set(0, 1)
+    // a block file of the uninterrupted run holding none of the committed bins
+    val (orphan, orphanBins) = full.toSeq.sortBy(_.bin).iterator
+      .flatMap(_.files.split(','))
+      .map(f => (f, binsOf(f)))
+      .find(_._2.intersect(committed).isEmpty)
+      .get
+
+    val dir = Files.createTempDirectory("graft-crash").toString
+    EncodeJob.run(input, dir, cfg, onlyBins = Some(committed))
+    val before = EncodeJob.readBlocks(spark, dir).count()
+    val staged = java.nio.file.Paths.get(dir, "_write_staging", "encode-killed", orphan)
+    Files.createDirectories(staged.getParent)
+    Files.copy(java.nio.file.Paths.get(fullDir, "blocks", orphan), staged)
+    // staged files are invisible to every reader
+    assert(EncodeJob.doneBins(spark, dir) == committed)
+    assert(EncodeJob.readBlocks(spark, dir).count() == before)
+    val rows = spark.read.format("graft").load(dir)
+    assert(rows.count() == input.where(GraftPipeline.binCol(cfg.numBins, cfg.salt).isin(committed.toSeq: _*)).count())
+    // ...and the existing vacuum grace sweep removes them
+    Maintenance.vacuum(spark, dir, olderThanMs = 0L)
+    assert(!Files.exists(staged.getParent))
+
+    // kill after some renames, before the manifest: the orphan's bins are
+    // committed blocks with no manifest row and no snapshot
+    Files.createDirectories(staged.getParent)
+    Files.copy(java.nio.file.Paths.get(fullDir, "blocks", orphan), staged)
+    Files.copy(java.nio.file.Paths.get(fullDir, "blocks", orphan), java.nio.file.Paths.get(dir, "blocks", orphan))
+    assert(EncodeJob.doneBins(spark, dir) == committed ++ orphanBins)
+    val resumed = EncodeJob.run(input, dir, cfg)
+    // the next run swept the staged leftover
+    assert(!Files.exists(staged.getParent))
+    assert(resumed.binsSkipped.toSet == committed ++ orphanBins)
+    assert(blockFingerprints(dir) == blockFingerprints(fullDir))
+    // the repair derived the orphan's manifest rows; every bin is claimed
+    val manifest = manifestRows(dir)
+    assert(manifest.map(_.bin) == (0 until cfg.numBins).toSet)
+    assert(manifest.filter(m => orphanBins(m.bin)).forall(_.files == orphan))
+    assert(manifest.toSeq.map(_.n_rows).sum == input.count())
+    assert(EncodeJob.loadSnapshots(dir, conf).flatMap(_._2).toSet == (0 until cfg.numBins).toSet)
+    assert(spark.read.format("graft").load(dir).count() == input.count())
+  }
+
+  test("a fresh EncodeJob.run submits at most 3 Spark jobs") {
+    val sc = spark.sparkContext
+    val group = "encode-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)          => jobs.incrementAndGet(): Unit
+          case Some("encode-marker") => marker.countDown()
+          case _                      => ()
+        }
+    }
+    input.count() // materialize the cached corpus outside the counted window
+    val dir = Files.createTempDirectory("graft-jobs").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "fresh encode")
+      EncodeJob.run(input, dir, cfg)
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the run has been counted
+      sc.setJobGroup("encode-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    info(s"${jobs.get()} jobs")
+    assert(jobs.get() >= 1 && jobs.get() <= 3, s"${jobs.get()} jobs")
+  }
 }

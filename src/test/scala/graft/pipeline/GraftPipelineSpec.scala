@@ -245,4 +245,29 @@ class GraftPipelineSpec extends AnyFunSuite {
     assert(m.map(_.n_values).reduce(_ + _) == blocks.map(_.n_values).reduce(_ + _))
     assert(m.map(_.payload_bits).reduce(_ + _) == blocks.map(_.payload_bits).reduce(_ + _))
   }
+
+  test("Config rejects maxBits outside 1..24 at construction, naming the field") {
+    for (bad <- Seq(0, 25, 57)) {
+      val e = intercept[IllegalArgumentException](Config(maxBits = bad))
+      assert(e.getMessage.contains(s"maxBits=$bad"), e.getMessage)
+    }
+    assert(Config(maxBits = 24).maxBits == 24)
+  }
+
+  test("analyze rejects negative tokens, null token arrays and null tokens by name") {
+    import spark.implicits._
+    def rows(tokensSql: String) =
+      spark.sql(s"SELECT 'd1' AS doc_id, $tokensSql AS tokens, 3 AS n_tok, 'web' AS source").as[TokenRow]
+    // the prev-token fast path and the generic context-model loop
+    for (c <- Seq(cfg, cfg.copy(contextModel = "single"))) {
+      def failure(tokensSql: String): String = {
+        val e = intercept[Exception](GraftPipeline.analyze(rows(tokensSql), c))
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      }
+      assert(failure("array(1, -2, 3)").contains("negative token -2 unsupported"))
+      assert(failure("CAST(NULL AS ARRAY<INT>)").contains("null tokens array unsupported"))
+      assert(failure("array(1, NULL, 3)").contains("null token at index 1 unsupported"))
+      assert(GraftPipeline.analyze(rows("array(1, 2, 3)"), c).total == 3L)
+    }
+  }
 }
