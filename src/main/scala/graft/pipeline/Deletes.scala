@@ -49,10 +49,10 @@ import org.apache.spark.sql.functions._
   *     (the rows are physically gone — maintenance coarsened reachable
   *     history, the same stance compaction takes with appended files).
   *
-  * Scale: the delete files are the only per-delete state; the read-side
-  * cost is bounded by [[graft.sources]]' two-tier application (driver
-  * inlines per-partition slices for small live sets, executors stream the
-  * delete files with bin row-group skipping past that). Chronic unpurged
+  * Scale: the delete files are the only per-delete state. Each scan task
+  * in [[graft.sources]] streams the delete files that apply to its data
+  * file — bin-filtered through row-group skipping for small bin sets,
+  * otherwise a full per-file load cached JVM-wide. Chronic unpurged
   * deletes degrade scan throughput linearly in delete bytes — purge is the
   * repair, exactly like Iceberg's rewrite_position_delete_files.
   *
@@ -114,9 +114,8 @@ object Deletes {
     * (the old `coalesce(1)`) would be the job's bottleneck — so past this
     * size the staged write range-partitions on (bin, doc_id) and ONE
     * snapshot commits every part (`deletes_added` is a list). Readers are
-    * indifferent: each part is bin-sorted, the inline cap keys off total
-    * ids, and past it executors stream whichever files apply with bin
-    * row-group skipping.
+    * indifferent: each part is bin-sorted, and every reader streams
+    * whichever files apply with bin row-group skipping.
     */
   private[graft] val DefaultIdsPerDeleteFile: Long = 16L * 1024 * 1024
 

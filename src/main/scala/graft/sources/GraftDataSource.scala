@@ -1013,38 +1013,15 @@ private[sources] class GraftScan(
     * monotonic in wall time, so any file a compaction folded was committed
     * before every later delete, and compaction refuses to run under LIVE
     * deletes ([[graft.pipeline.Maintenance.compact]]).
+    *
+    * Each partition carries its file's entry so the reader applies
+    * Iceberg's equality-delete sequence rule: delete file D committed at
+    * snapshot Sd hides rows only in data files committed at snapshots < Sd.
+    * A doc_id re-appended AFTER its delete is therefore visible — replace
+    * = delete + append, atomically via [[graft.pipeline.Deletes.replaceDocs]].
     */
   private lazy val fileCommitSnaps: Map[String, Long] =
     postListingRecords.flatMap(r => r.filesAdded.map(_ -> r.id)).toMap
-
-  /** Sequence scoping (Iceberg's equality-delete rule): delete file D
-    * committed at snapshot Sd hides rows only in data files committed at
-    * snapshots < Sd. A doc_id re-appended AFTER its delete is therefore
-    * visible — replace = delete + append, atomically via
-    * [[graft.pipeline.Deletes.replaceDocs]].
-    */
-  private def applicableDeletes(fileName: String): Seq[graft.pipeline.Deletes.DeleteFile] = {
-    val snap = fileCommitSnaps.getOrElse(fileName, -1L)
-    deleteState.live.filter(_.snapshotId > snap)
-  }
-
-  /** Small live delete sets are read ONCE on the driver and sliced per
-    * partition (a point read then ships a handful of ids, not file paths
-    * every reader re-opens); past the cap, readers stream the delete files
-    * themselves with bin row-group skipping. None = not inlined. Keyed per
-    * DELETE FILE so the per-partition slice can honor sequence scoping.
-    */
-  private lazy val inlineDeletesByFile: Option[Map[String, Map[Int, Array[String]]]] =
-    if (deleteState.isEmpty || deleteState.totalIds > GraftScan.sessionDeleteInlineCap) None
-    else {
-      val t0 = System.nanoTime()
-      val r = Some(deleteState.live.map { d =>
-        d.name -> GraftScan.readDeleteIdsByBin(Seq(s"$path/_deletes/${d.name}"), hadoopConf)
-      }.toMap)
-      if (System.getProperty("graft.debugTiming") != null)
-        System.err.println(f"[scan] inlineDeletesByFile  ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
 
   /** As-of file exclusion for DSv2 appends: bins are write-once for
     * EncodeJob snapshots (bin visibility covers them) but appends add files
@@ -1258,18 +1235,6 @@ private[sources] class GraftScan(
         r
     }
 
-  /** One shared broadcast of the inlined (delete file -> bin -> ids) map
-    * for partitions whose bin membership is unknown: slicing is impossible
-    * there, and shipping the WHOLE id set in every task serializes
-    * O(ids x files) strings through the scheduler (measured: ~1.7 s of
-    * per-file full-set sorts in planning plus ~1 MB per task at 32k ids /
-    * 322 files). Readers union the applicable files' ids themselves under
-    * the same sequence scoping the streamed tier uses.
-    */
-  private lazy val inlineDeletesBcast
-      : Option[org.apache.spark.broadcast.Broadcast[Map[String, Map[Int, Array[String]]]]] =
-    inlineDeletesByFile.map(byFile => SparkSession.active.sparkContext.broadcast(byFile))
-
   private def planInputPartitionsImpl(): Array[InputPartition] = {
     fromSnapshot.foreach { s =>
       // incremental read: ONLY the rows added by snapshots in (s, e] —
@@ -1294,9 +1259,9 @@ private[sources] class GraftScan(
     }
     keyedBinPartitions.foreach { groups =>
       // keyed (storage-partitioned) planning: one split per (file, bin),
-      // grouped into bin tasks by Spark via the partition key. Delete
-      // application falls back to the factory's streamed delete files
-      // (sequence scoping intact via fileCommitSnap).
+      // grouped into bin tasks by Spark via the partition key. Deletes
+      // apply in the reader like every other plan (fileCommitSnap scopes
+      // them).
       return groups.flatMap { case (b, fs) =>
         fs.map { f =>
           GraftInputPartition(
@@ -1353,32 +1318,11 @@ private[sources] class GraftScan(
             Some(m.iterator.collect { case (b, arr) if b >= lo && b <= hi => arr }.flatten.toArray.sorted)
           case GraftScan.UnknownBins => None
         }
-      val name = GraftScan.nameOf(f)
-      // inlined delete slice: only the delete files that APPLY to this data
-      // file (sequence scoping), each sliced to the file's bins. Files with
-      // UNKNOWN bins cannot be sliced — they share ONE broadcast of the id
-      // map instead of each task carrying (and the driver sorting) the full
-      // set; the reader unions the applicable files' ids itself.
-      val (fileDeletes, fileDeletesBc) = inlineDeletesByFile match {
-        case None => (None, None)
-        case Some(byFile) =>
-          fileBins match {
-            case GraftScan.UnknownBins => (None, inlineDeletesBcast)
-            case _ =>
-              val sliced = applicableDeletes(name).iterator
-                .flatMap(d => byFile.get(d.name).toSeq.flatMap(m => sliceBins(m).get))
-                .toArray
-                .sorted
-              (Some(sliced), None)
-          }
-      }
       GraftInputPartition(
         f,
         binsOverride = smallBins,
         docIdsOverride = idsByBin.flatMap(m => sliceBins(m).orElse(allIds)),
-        deletedIdsOverride = fileDeletes,
-        inlineDeletesBc = fileDeletesBc,
-        fileCommitSnap = fileCommitSnaps.getOrElse(name, -1L)
+        fileCommitSnap = fileCommitSnaps.getOrElse(GraftScan.nameOf(f), -1L)
       )
     }
   }
@@ -1401,10 +1345,8 @@ private[sources] class GraftScan(
       visibleBins = snapshotBins.map(_.toArray.sorted),
       conf = new SerializableHadoopConf(hadoopConf),
       limit = limit,
-      // always ship the live delete files (with their commit snapshots for
-      // sequence scoping) when deletes exist — batch partitions short-
-      // circuit via their inlined slice, but streaming partitions are
-      // planned without overrides and fall back to these
+      // the live delete files with their commit snapshots: every reader
+      // loads the ones that apply to its file (sequence scoping)
       deleteFiles =
         if (deleteState.isEmpty) Array.empty
         else deleteState.live.map(d => (s"$path/_deletes/${d.name}", d.snapshotId)).toArray,
@@ -1741,41 +1683,6 @@ private[sources] object GraftScan {
 
   private[sources] def nameOf(f: String): String = f.substring(f.lastIndexOf('/') + 1)
 
-  /** Live delete sets at or under this many ids are read once on the driver
-    * and sliced per partition; larger sets are streamed executor-side.
-    * Matches the runtime-filter id-slice cap: the same "ship ids, not
-    * files" trade at the same size.
-    */
-  val DeleteInlineCap = 65536L
-
-  /** Session-configurable inline cap (primarily the test hook that forces
-    * the executor-side delete-file streaming path at tiny sizes).
-    */
-  def sessionDeleteInlineCap: Long =
-    SparkSession.active.conf
-      .getOption("spark.graft.deleteInlineCap")
-      .map(_.toLong)
-      .getOrElse(DeleteInlineCap)
-
-  /** Driver-side read of small delete files: (bin → deleted doc_ids).
-    * Called only under [[DeleteInlineCap]], so the result is bounded.
-    */
-  def readDeleteIdsByBin(paths: Seq[String], conf: Configuration): Map[Int, Array[String]] = {
-    val byBin = scala.collection.mutable.HashMap[Int, scala.collection.mutable.ArrayBuffer[String]]()
-    paths.foreach { p =>
-      val r = ParquetReader.builder(new GroupReadSupport(), new Path(p)).withConf(conf).build()
-      try {
-        var g = r.read()
-        while (g != null) {
-          byBin.getOrElseUpdate(g.getInteger("bin", 0), scala.collection.mutable.ArrayBuffer[String]()) +=
-            g.getString("doc_id", 0)
-          g = r.read()
-        }
-      } finally r.close()
-    }
-    byBin.view.mapValues(_.toArray.sorted).toMap
-  }
-
   /** Min/max of the `bin` column per file, from parquet row-group stats.
     * Uncached footers are read on a bounded thread pool — footer opens are
     * latency-bound, and a cold 4096-file pass would otherwise serialize
@@ -1848,23 +1755,14 @@ private[sources] object GraftScan {
   * set (streaming) or a small wanted-bin set (batch point reads);
   * `docIdsOverride` carries THIS file's slice of the doc_id restriction —
   * the partition is the only channel that sees post-runtime-filter state
-  * (the reader factory is forced before dynamic pruning fires).
+  * (the reader factory is forced before dynamic pruning fires). Deletes
+  * carry no per-partition payload: `fileCommitSnap` picks which of the
+  * factory's delete files the reader streams.
   */
 private[sources] final case class GraftInputPartition(
     file: String,
     binsOverride: Option[Array[Int]] = None,
     docIdsOverride: Option[Array[String]] = None,
-    /** This file's slice of an INLINED live delete set (Some(empty) = no
-      * applicable deleted id can live in this file's bins). None = not
-      * inlined — the reader consults [[inlineDeletesBc]], else streams the
-      * factory's delete files.
-      */
-    deletedIdsOverride: Option[Array[String]] = None,
-    /** Shared broadcast of the inlined (delete file -> bin -> ids) map for
-      * partitions whose bin membership is unknown (unsliceable); the reader
-      * unions the files applicable to it under sequence scoping.
-      */
-    inlineDeletesBc: Option[org.apache.spark.broadcast.Broadcast[Map[String, Map[Int, Array[String]]]]] = None,
     /** Snapshot that committed this file via file lineage; -1 = bootstrap/
       * compacted (every delete applies). Scopes the reader's delete load.
       */
@@ -1992,7 +1890,7 @@ private[sources] final case class GraftReaderFactory(
         )
         new GraftAggReader(p.file, kinds, bins, conf, aggBySource)
       case None =>
-        new GraftPartitionReader(p.file, this, bins, docs, p.deletedIdsOverride, p.fileCommitSnap, p.inlineDeletesBc)
+        new GraftPartitionReader(p.file, this, bins, docs, p.fileCommitSnap)
     }
   }
 
@@ -2002,7 +1900,7 @@ private[sources] final case class GraftReaderFactory(
     val p = partition.asInstanceOf[GraftInputPartition]
     require(aggKinds.isEmpty, "internal error: columnar reader planned for a pushed aggregate")
     val (bins, docs) = effectiveSets(p)
-    new GraftColumnarReader(p.file, this, bins, docs, p.deletedIdsOverride, p.fileCommitSnap, p.inlineDeletesBc)
+    new GraftColumnarReader(p.file, this, bins, docs, p.fileCommitSnap)
   }
 }
 
@@ -2216,69 +2114,40 @@ private[sources] final class DecodedBlock(
   * `payload` column is only materialized when `tokens` is required), pushes
   * the bin predicate into parquet (row-group stats + record-level
   * filtering), and decodes hit rows — via the per-row bit index for sparse
-  * doc_id hits on hybrid blocks, full-block decode otherwise.
+  * doc_id hits on hybrid blocks, full-block decode otherwise. Merge-on-read
+  * deletes apply here and only here: the reader loads the delete files
+  * committed after its data file and drops the rows whose doc_id they hold.
   */
 private[sources] abstract class GraftBlockReaderBase(
     file: String,
     f: GraftReaderFactory,
     visibleBins: Option[Set[Int]],
     docFilter: Option[Set[String]],
-    inlineDeleted: Option[Array[String]],
-    fileCommitSnap: Long,
-    inlineDeletesBc: Option[org.apache.spark.broadcast.Broadcast[Map[String, Map[Int, Array[String]]]]] = None
+    fileCommitSnap: Long
 ) {
 
   /** Delete files that APPLY to this partition's data file under sequence
     * scoping: only those committed after the file itself.
     */
-  private def applicableDeleteFiles: Array[String] =
+  private val applicableDeleteFiles: Array[String] =
     f.deleteFiles.collect { case (p, snap) if snap > fileCommitSnap => p }
 
-  /** Can a deleted doc_id reach this partition? Some(empty) from the
-    * planner is a proof of absence; None with applicable factory delete
-    * files means "load and check".
-    */
-  private val deletesPossible =
-    inlineDeleted.map(_.nonEmpty).getOrElse(applicableDeleteFiles.nonEmpty)
+  private val deletesPossible = applicableDeleteFiles.nonEmpty
 
-  /** The deleted ids this partition must hide: the planner's inlined slice
-    * when present; else the shared inline broadcast, unioning the delete
-    * files applicable under sequence scoping; else the applicable delete
-    * files streamed with the partition's bin filter pushed to parquet row
-    * groups (delete files are written bin-sorted, so a single-bin point
-    * read touches one row group).
+  /** The partition-level bin set (fresh, incl. runtime-filter-derived
+    * bins) intersected with the factory's snapshot; pushed to parquet as
+    * an advisory row-group filter (exact checks follow), kept small.
     */
-  private lazy val deletedSet: Set[String] =
-    inlineDeleted match {
-      case Some(arr) => arr.toSet
-      case None =>
-        val files = applicableDeleteFiles
-        if (files.isEmpty) Set.empty
-        else
-          inlineDeletesBc match {
-            case Some(bc) =>
-              val byFile = bc.value
-              val bins = GraftDataSource.intersectOpt(visibleBins, f.wantedBins.map(_.toSet))
-              val b = Set.newBuilder[String]
-              files.foreach { p =>
-                byFile.get(GraftScan.nameOf(p)).foreach { m =>
-                  m.foreach { case (bin, ids) =>
-                    if (bins.forall(_.contains(bin))) b ++= ids
-                  }
-                }
-              }
-              b.result()
-            case None =>
-              GraftPartitionReader.deletedIds(
-                files,
-                f.conf,
-                GraftDataSource
-                  .intersectOpt(visibleBins, f.wantedBins.map(_.toSet))
-                  .filter(_.size <= 1024)
-                  .map(_.toArray.sorted)
-              )
-          }
-    }
+  private val pushedBins: Option[Array[Int]] = GraftDataSource
+    .intersectOpt(visibleBins, f.wantedBins.map(_.toSet))
+    .filter(_.size <= 1024)
+    .map(_.toArray.sorted)
+
+  /** The deleted ids this partition must hide, streamed from its
+    * applicable delete files ([[GraftPartitionReader.deletedIdSets]]).
+    */
+  private lazy val deletedSets: Array[Set[String]] =
+    GraftPartitionReader.deletedIdSets(applicableDeleteFiles, f.conf, pushedBins)
 
   private val needDocIds =
     f.requiredFields.contains("doc_id") || docFilter.isDefined || deletesPossible ||
@@ -2329,14 +2198,7 @@ private[sources] abstract class GraftBlockReaderBase(
       wanted += "payload"; wanted += "row_bits_codec"; wanted += "row_bits_payload"
       wanted += "embedded_tables"; wanted += "table_hash"
     }
-    // parquet row-group bin filter: the partition-level set (fresh, incl.
-    // runtime-filter-derived bins) intersected with the factory's snapshot;
-    // advisory (exact checks follow), kept small
-    val parquetBins = GraftDataSource
-      .intersectOpt(visibleBins, f.wantedBins.map(_.toSet))
-      .filter(_.size <= 1024)
-      .map(_.toArray.sorted)
-    GraftPartitionReader.openProjected(file, f.conf, wanted.toSet, parquetBins)
+    GraftPartitionReader.openProjected(file, f.conf, wanted.toSet, pushedBins)
   }
 
   private var exhausted = false
@@ -2417,7 +2279,7 @@ private[sources] abstract class GraftBlockReaderBase(
     // metadata stream, so length-filtered scans pay the payload decode only
     // for matching rows (sparse hits take the row-seek path below)
     val hits: Array[Int] = {
-      val del = if (deletesPossible) deletedSet else null
+      val del = if (deletesPossible) deletedSets else null
       val b = Array.newBuilder[Int]
       var r = 0
       while (r < nRows) {
@@ -2426,7 +2288,7 @@ private[sources] abstract class GraftBlockReaderBase(
             f.sourceFilter.forall(s => s.contains(sources(r))) &&
             f.ntokPred.forall(_.ok(nToks(r))) &&
             f.sample.forall(sp => sp.keep(docIds(r), if (sp.needsSource) sources(r) else null)) &&
-            (del == null || !del.contains(docIds(r)))
+            (del == null || !GraftPartitionReader.anyContains(del, docIds(r)))
         if (ok) b += r
         r += 1
       }
@@ -2587,10 +2449,8 @@ private[sources] class GraftPartitionReader(
     f: GraftReaderFactory,
     visibleBins: Option[Set[Int]],
     docFilter: Option[Set[String]],
-    inlineDeleted: Option[Array[String]] = None,
-    fileCommitSnap: Long = -1L,
-    inlineDeletesBc: Option[org.apache.spark.broadcast.Broadcast[Map[String, Map[Int, Array[String]]]]] = None
-) extends GraftBlockReaderBase(file, f, visibleBins, docFilter, inlineDeleted, fileCommitSnap, inlineDeletesBc)
+    fileCommitSnap: Long = -1L
+) extends GraftBlockReaderBase(file, f, visibleBins, docFilter, fileCommitSnap)
     with PartitionReader[InternalRow] {
 
   private var blk: DecodedBlock = null
@@ -2666,10 +2526,8 @@ private[sources] class GraftColumnarReader(
     f: GraftReaderFactory,
     visibleBins: Option[Set[Int]],
     docFilter: Option[Set[String]],
-    inlineDeleted: Option[Array[String]] = None,
-    fileCommitSnap: Long = -1L,
-    inlineDeletesBc: Option[org.apache.spark.broadcast.Broadcast[Map[String, Map[Int, Array[String]]]]] = None
-) extends GraftBlockReaderBase(file, f, visibleBins, docFilter, inlineDeleted, fileCommitSnap, inlineDeletesBc)
+    fileCommitSnap: Long = -1L
+) extends GraftBlockReaderBase(file, f, visibleBins, docFilter, fileCommitSnap)
     with PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
@@ -2921,29 +2779,33 @@ private[sources] object GraftPartitionReader {
   private val schemaCache =
     scala.collection.concurrent.TrieMap[String, MessageType]()
 
-  /** JVM-wide cache for FULL delete-set loads (no bin filter): many
-    * partitions per executor would otherwise each re-stream the same delete
-    * files. Sound because delete files are write-once under unique names.
-    * Bounded by entry COUNT at a small cap — each entry can be large (a
-    * full live delete set), which is exactly why it must be shared.
+  /** JVM-wide cache of FULL delete-file loads (no bin filter), keyed per
+    * delete file: many partitions per executor would otherwise each
+    * re-stream the same files, and partitions whose applicable file lists
+    * differ (sequence scoping after append→delete rounds) still share each
+    * file's load. Sound because delete files are write-once under unique
+    * names. Bounded by entry count, cleared on overflow: an entry can be
+    * large, and a table past the cap in live delete files is due a purge.
     */
-  private val DeleteSetCacheCap = 4
+  private val DeleteSetCacheCap = 64
   private val deleteSetCache =
     scala.collection.concurrent.TrieMap[String, Set[String]]()
 
-  /** The deleted doc_ids a partition must hide. With a small bin set, the
-    * parquet bin filter skips foreign row groups (delete files are written
-    * bin-sorted) and the filtered result is NOT cached (it is proportional
-    * to the partition's own bins); a full load is cached JVM-wide.
+  /** The deleted doc_ids a partition must hide, as one set per loaded unit
+    * (a row is hidden when any set holds its doc_id). With a small bin set,
+    * the parquet bin filter skips foreign row groups (delete files are
+    * written bin-sorted) and the filtered union is NOT cached (it is
+    * proportional to the partition's own bins); otherwise each file's full
+    * set comes from the JVM-wide cache.
     */
-  def deletedIds(
+  def deletedIdSets(
       files: Array[String],
       conf: SerializableHadoopConf,
       bins: Option[Array[Int]]
-  ): Set[String] = {
-    def load(): Set[String] = {
+  ): Array[Set[String]] = {
+    def load(ps: Array[String]): Set[String] = {
       val out = scala.collection.mutable.HashSet[String]()
-      files.foreach { p =>
+      ps.foreach { p =>
         val r = openProjected(p, conf, Set("bin", "doc_id"), bins)
         try {
           var g = r.read()
@@ -2956,11 +2818,21 @@ private[sources] object GraftPartitionReader {
       out.toSet
     }
     bins match {
-      case Some(_) => load()
+      case Some(_) => Array(load(files))
       case None =>
         if (deleteSetCache.size > DeleteSetCacheCap) deleteSetCache.clear()
-        deleteSetCache.getOrElseUpdate(files.mkString("|"), load())
+        files.map(p => deleteSetCache.getOrElseUpdate(p, load(Array(p))))
     }
+  }
+
+  /** Does any of `sets` hold `docId`? (the per-row delete check) */
+  def anyContains(sets: Array[Set[String]], docId: String): Boolean = {
+    var i = 0
+    while (i < sets.length) {
+      if (sets(i).contains(docId)) return true
+      i += 1
+    }
+    false
   }
 
   /** Full parquet schema of a block file, cached JVM-wide — block files are

@@ -239,35 +239,21 @@ object BenchExtra {
       def morScan(): Long =
         spark.read.format("graft").load(encDir)
           .agg(sum(size(col("tokens")))).collect()(0).getLong(0)
-      // three reps per tier, interleaved, to see warmup vs steady state
+      // three reps to see warmup vs steady state
       for (r <- 1 to 3) {
-        time(s"deletes: inline scan r$r", spark) {
+        time(s"deletes: merge-on-read scan r$r", spark) {
           val t = morScan(); require(t == expect, s"$t != $expect")
         }
-        spark.conf.set("spark.graft.deleteInlineCap", "0")
-        time(s"deletes: streamed scan r$r", spark) {
-          val t = morScan(); require(t == expect, s"$t != $expect")
-        }
-        spark.conf.unset("spark.graft.deleteInlineCap")
       }
-      // split planning from execution for both tiers
+      // split planning from execution
       for (r <- 1 to 2) {
         val df = spark.read.format("graft").load(encDir).agg(sum(size(col("tokens"))))
-        time(s"deletes: inline PLAN only r$r", spark) {
+        time(s"deletes: PLAN only r$r", spark) {
           df.queryExecution.executedPlan.toString.length
         }
-        time(s"deletes: inline EXEC after plan r$r", spark) {
+        time(s"deletes: EXEC after plan r$r", spark) {
           val t = df.collect()(0).getLong(0); require(t == expect)
         }
-        spark.conf.set("spark.graft.deleteInlineCap", "0")
-        val df2 = spark.read.format("graft").load(encDir).agg(sum(size(col("tokens"))))
-        time(s"deletes: streamed PLAN only r$r", spark) {
-          df2.queryExecution.executedPlan.toString.length
-        }
-        time(s"deletes: streamed EXEC after plan r$r", spark) {
-          val t = df2.collect()(0).getLong(0); require(t == expect)
-        }
-        spark.conf.unset("spark.graft.deleteInlineCap")
       }
       val fsEnc = new org.apache.hadoop.fs.Path(encDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -8,10 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Row-level equality deletes ([[graft.pipeline.Deletes]]): merge-on-read
-  * application in the DSv2 scan (inline and executor-streamed), metadata
-  * aggregate gating, snapshot time travel, the physical purge + retirement
-  * lifecycle, vacuum reclamation, lineage folding through expiry, and the
-  * streaming read.
+  * application in the DSv2 scan (readers stream the applicable delete
+  * files), metadata aggregate gating, snapshot time travel, the physical
+  * purge + retirement lifecycle, vacuum reclamation, lineage folding
+  * through expiry, and the streaming read.
   */
 class DeleteSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -121,16 +121,67 @@ class DeleteSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(dir).where($"doc_id" === dead).count() == 1L)
   }
 
-  test("executor-streamed delete files (inline cap 0) apply identically") {
+  test("five append→delete rounds: scans, point reads and snapshots match the model") {
     import spark.implicits._
-    val dir = freshDeletedDir("stream-ids")
-    spark.conf.set("spark.graft.deleteInlineCap", "0")
-    try {
-      val decoded = spark.read.format("graft").load(dir).as[TokenRow]
-      assert(GraftPipeline.verify(kept, decoded) == 0L)
-      val dead = doomed.select($"doc_id").head().getString(0)
-      assert(spark.read.format("graft").load(dir).where($"doc_id" === dead).count() == 0L)
-    } finally spark.conf.unset("spark.graft.deleteInlineCap")
+    val dir = Files.createTempDirectory("graft-del-rounds").toString
+    EncodeJob.run(all, dir, cfg) // snapshot 0
+    val base = (0L until 640L).map(TokenTables.syntheticRow(33L, _))
+    var model: Map[String, TokenRow] = base.map(r => r.doc_id -> r).toMap
+    val models = scala.collection.mutable.LinkedHashMap[Long, Map[String, TokenRow]](0L -> model)
+    var deleted = Vector.empty[String]
+    var reappended = Vector.empty[String]
+    def snapId: Long = EncodeJob.loadSnapshotRecords(dir, conf).map(_.id).max
+    def check(ds: org.apache.spark.sql.Dataset[TokenRow], want: Iterable[TokenRow]): Unit =
+      assert(GraftPipeline.verify(want.toSeq.toDS(), ds) == 0L)
+    def scan = spark.read.format("graft").load(dir)
+
+    var prevNew = Seq.empty[TokenRow]
+    var prevBaseVictim: Option[TokenRow] = None
+    for (k <- 1 to 5) {
+      // append: fresh docs plus the previous round's deleted base doc with
+      // new content — files committed this round see only deletes from
+      // this round on, so each round adds a distinct applicable delete set
+      val fresh = (0L until 12L).map { i =>
+        val r = TokenTables.syntheticRow(100L + k, i)
+        r.copy(doc_id = s"r$k-${r.doc_id}")
+      }
+      val back = prevBaseVictim.map(r => r.copy(tokens = r.tokens.map(t => (t * 7 + k) & 0x7fff))).toSeq
+      (fresh ++ back).toDS().toDF().write.format("graft").mode("append").save(dir)
+      model ++= (fresh ++ back).map(r => r.doc_id -> r)
+      reappended ++= back.map(_.doc_id)
+      models(snapId) = model
+
+      // delete: two base docs, one doc appended last round, one appended now
+      val baseVictims = Seq(base(k * 7), base(k * 7 + 300))
+      val victims = (baseVictims ++ prevNew.take(1) :+ fresh.head).map(_.doc_id)
+      Deletes.deleteDocs(spark, dir, victims.toDS())
+      model --= victims
+      deleted ++= victims
+      models(snapId) = model
+      prevNew = fresh
+      prevBaseVictim = Some(baseVictims.head)
+
+      check(scan.as[TokenRow], model.values)
+      (deleted ++ reappended).distinct.foreach { id =>
+        check(scan.where($"doc_id" === id).as[TokenRow], model.get(id))
+      }
+    }
+    // the rounds left the table's partitions with ≥5 distinct applicable
+    // delete-file lists (what the per-file reader cache must absorb)
+    val gscan = new GraftTable(dir)
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build()
+      .asInstanceOf[GraftScan]
+    val deleteFiles = gscan.createReaderFactory().asInstanceOf[GraftReaderFactory].deleteFiles
+    val lists = gscan.planInputPartitions().map { p =>
+      val snap = p.asInstanceOf[GraftInputPartition].fileCommitSnap
+      deleteFiles.collect { case (f, s) if s > snap => f }.toSeq
+    }
+    assert(lists.distinct.length >= 5, lists.distinct.mkString("\n"))
+    assert(models.size == 11)
+    models.foreach { case (s, m) =>
+      check(spark.read.format("graft").option("snapshot", s.toString).load(dir).as[TokenRow], m.values)
+    }
   }
 
   test("time travel: deletes apply only at snapshots >= their commit; purge coarsens history") {
@@ -226,11 +277,6 @@ class DeleteSpec extends AnyFunSuite {
     // current read: originals for untouched docs, NEW content for replaced
     val want = kept.union(newRows)
     assert(GraftPipeline.verify(want, spark.read.format("graft").load(dir).as[TokenRow]) == 0L)
-    // executor-streamed tier applies the same sequence scoping
-    spark.conf.set("spark.graft.deleteInlineCap", "0")
-    try
-      assert(GraftPipeline.verify(want, spark.read.format("graft").load(dir).as[TokenRow]) == 0L)
-    finally spark.conf.unset("spark.graft.deleteInlineCap")
 
     // time travel to snapshot 0: the pre-replace originals
     val snap0 = spark.read.format("graft").option("snapshot", "0").load(dir).as[TokenRow]
@@ -331,7 +377,7 @@ class DeleteSpec extends AnyFunSuite {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_deletes/$delName")))
   }
 
-  test("plan audit: point read over a deleted dir keeps O(hit-bins) planning, delete set sliced per file") {
+  test("plan audit: point read over a deleted dir keeps O(hit-bins) planning") {
     import spark.implicits._
     val dir = freshDeletedDir("plan")
     val id = kept.select($"doc_id").orderBy($"doc_id").head().getString(0)
@@ -344,26 +390,6 @@ class DeleteSpec extends AnyFunSuite {
     val parts = builder.build().asInstanceOf[GraftScan].planInputPartitions()
     val total = GraftMeta.listBlockFiles(dir, conf).length
     assert(parts.length < total, s"deletes broke pruning: planned ${parts.length} of $total files")
-    // the inlined delete set is SLICED per planned file (its own bins' ids):
-    // a bin-claimed file carries its own proper subset; a file with UNKNOWN
-    // bins shares ONE broadcast of the (delete file -> bin -> ids) map
-    // instead of shipping the full set per task — every planned partition
-    // must have exactly one of the two mechanisms
-    val nDel = doomed.count()
-    val gparts = parts.map(_.asInstanceOf[GraftInputPartition])
-    val slices = gparts.map(_.deletedIdsOverride)
-    gparts.foreach { p =>
-      assert(
-        p.deletedIdsOverride.isDefined != p.inlineDeletesBc.isDefined,
-        "a planned partition must carry either an inline slice or the shared broadcast"
-      )
-    }
-    // the unknown-bin partitions (if any) all reference the SAME broadcast
-    assert(gparts.flatMap(_.inlineDeletesBc).distinct.length <= 1)
-    assert(
-      slices.flatten.exists(_.length < nDel),
-      s"no partition got a sliced subset (sizes ${slices.flatten.map(_.length).mkString(",")} vs $nDel)"
-    )
   }
 
   test("expiry refuses to fold away delete/file ordering; purge-then-expire works") {
