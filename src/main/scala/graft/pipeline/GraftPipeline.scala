@@ -42,7 +42,7 @@ final case class EncodedBlock(
     payload_bits: Long,
     meta_bytes: Long,
     table_hash: Long
-)
+) extends StoredBlock
 
 /** Per-block encode metrics (the O27 stats surface). */
 final case class BlockMetric(
@@ -269,19 +269,11 @@ object GraftPipeline {
       val flat = encode(ds, bTables, cfg)
         .filter(_.codec == "hybrid")
         .mapPartitions { it =>
-          val hybrid = new HybridCodec(bTables.value, model)
+          val decoder = BlockDecoder(bTables.value, model)
           val hist = new Histograms(nCtx, nSym)
           it.foreach { b =>
-            val nToks = CodecSelector.decodeIntColumn(b.n_toks_codec, b.n_toks_payload, b.n_rows)
-            val rowOffsets = new Array[Int](b.n_rows + 1)
-            var off = 0
-            var i = 0
-            while (i < b.n_rows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-            rowOffsets(b.n_rows) = off
-            val reader = new BitReader(b.payload)
-            if (b.embedded_tables)
-              Huffman.readHeader(reader, bTables.value.maxBits, bTables.value.numContexts)
-            val values = hybrid.decode(reader, off, rowOffsets)
+            val rowOffsets = BlockDecoder.rowOffsets(BlockDecoder.nToks(b))
+            val values = decoder.decodeAll(b, rowOffsets)
             var row = 0
             while (row < b.n_rows) {
               var ctx = model.first(rowOffsets(row + 1) - rowOffsets(row))
@@ -705,48 +697,8 @@ object GraftPipeline {
       tables: Broadcast[SymbolTables],
       cfg: Config
   ): Dataset[TokenRow] = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
     val model = cfg.model
-    blocks.mapPartitions { it =>
-      // one decoder LUT per partition, shared across its blocks
-      val hybrid = new HybridCodec(tables.value, model)
-      it.flatMap { b =>
-        require(
-          b.codec != "hybrid" || b.table_hash == tables.value.tableHash,
-          s"table hash mismatch: block ${b.bin}/${b.block_seq} written with ${b.table_hash}"
-        )
-        val reader = new BitReader(b.payload)
-        val codec =
-          if (b.embedded_tables && b.codec == "hybrid") {
-            // self-describing block: decode through the EMBEDDED header
-            // (proves O7 end-to-end); hash-checked against the job tables
-            val parsed = Huffman.readHeader(reader, tables.value.maxBits, tables.value.numContexts)
-            require(
-              parsed.tableHash == tables.value.tableHash,
-              s"embedded header hash ${parsed.tableHash} != job tables ${tables.value.tableHash}"
-            )
-            new HybridCodec(parsed, model)
-          } else CodecSelector.decoderFor(codecId(b.codec), Some(hybrid))
-        val nToks = CodecSelector
-          .decodeIntColumn(b.n_toks_codec, b.n_toks_payload, b.n_rows)
-          .map(_.toInt)
-        val docIds = StringCodecs.decode(b.doc_ids_codec, b.doc_ids_payload, b.n_rows)
-        val sources = StringCodecs.decode(b.sources_codec, b.sources_payload, b.n_rows)
-        val rowOffsets = new Array[Int](b.n_rows + 1)
-        var off = 0
-        var i = 0
-        while (i < b.n_rows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-        rowOffsets(b.n_rows) = off
-        val values = codec.decode(reader, off, rowOffsets)
-        (0 until b.n_rows).iterator.map { r =>
-          val tokens = new Array[Int](nToks(r))
-          var k = 0
-          while (k < tokens.length) { tokens(k) = values(rowOffsets(r) + k).toInt; k += 1 }
-          TokenRow(docIds(r), tokens, nToks(r), sources(r))
-        }
-      }
-    }
+    decodeRows(blocks, () => BlockDecoder(tables.value, model))
   }
 
   /** Decode WITHOUT job tables — every hybrid block must carry its embedded
@@ -755,34 +707,24 @@ object GraftPipeline {
     * blocks parquet and the config can reconstruct the rows.
     */
   def decodeSelfDescribing(blocks: Dataset[EncodedBlock], cfg: Config): Dataset[TokenRow] = {
+    val (model, maxBits, nCtx) = (cfg.model, cfg.maxBits, cfg.numContexts)
+    decodeRows(blocks, () => BlockDecoder.selfDescribing(model, maxBits, nCtx))
+  }
+
+  /** Every row of every block, through one decoder per partition. */
+  private def decodeRows(blocks: Dataset[EncodedBlock], newDecoder: () => BlockDecoder): Dataset[TokenRow] = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    val model = cfg.model
-    val maxBits = cfg.maxBits
-    val nCtx = cfg.numContexts
     blocks.mapPartitions { it =>
+      val decoder = newDecoder()
       it.flatMap { b =>
-        val reader = new BitReader(b.payload)
-        val codec =
-          if (b.codec == "hybrid") {
-            require(b.embedded_tables, s"block ${b.bin}/${b.block_seq} lacks an embedded header")
-            new HybridCodec(Huffman.readHeader(reader, maxBits, nCtx), model)
-          } else CodecSelector.decoderFor(codecId(b.codec), None)
-        val nToks = CodecSelector
-          .decodeIntColumn(b.n_toks_codec, b.n_toks_payload, b.n_rows)
-          .map(_.toInt)
-        val docIds = StringCodecs.decode(b.doc_ids_codec, b.doc_ids_payload, b.n_rows)
-        val sources = StringCodecs.decode(b.sources_codec, b.sources_payload, b.n_rows)
-        val rowOffsets = new Array[Int](b.n_rows + 1)
-        var off = 0
-        var i = 0
-        while (i < b.n_rows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-        rowOffsets(b.n_rows) = off
-        val values = codec.decode(reader, off, rowOffsets)
+        val nToks = BlockDecoder.nToks(b)
+        val docIds = BlockDecoder.docIds(b)
+        val sources = BlockDecoder.sources(b)
+        val rowOffsets = BlockDecoder.rowOffsets(nToks)
+        val values = decoder.decodeAll(b, rowOffsets)
         (0 until b.n_rows).iterator.map { r =>
-          val tokens = new Array[Int](nToks(r))
-          var k = 0
-          while (k < tokens.length) { tokens(k) = values(rowOffsets(r) + k).toInt; k += 1 }
+          val tokens = java.util.Arrays.copyOfRange(values, rowOffsets(r), rowOffsets(r + 1))
           TokenRow(docIds(r), tokens, nToks(r), sources(r))
         }
       }
@@ -794,11 +736,11 @@ object GraftPipeline {
     * each doc's bin is recomputed from the same salted hash used at encode
     * time, so the scan touches only those bins' blocks (an equality filter
     * that parquet pushes down), decodes the small doc_ids metadata column to
-    * find the owning blocks, and decodes ONLY the hit rows: hybrid blocks
-    * carry per-row bit lengths, so the reader seeks straight to each row's
-    * start bit (the reference's per-node offsets, offsets.rs:19-58) instead
-    * of entropy-decoding the whole block for one hit. Non-hybrid codecs
-    * (fixed-width or run-packed) fall back to a full-block decode.
+    * find the owning blocks, and decodes ONLY the hit rows: hybrid and
+    * delta-hybrid blocks carry per-row bit lengths, so the reader seeks
+    * straight to each sparse hit's start bit (the reference's per-node
+    * offsets, offsets.rs:19-58) instead of entropy-decoding the whole block
+    * for one hit. Other codecs decode the full block.
     */
   def lookupDocs(
       blocks: Dataset[EncodedBlock],
@@ -819,59 +761,18 @@ object GraftPipeline {
     val model = cfg.model
     val candidate = blocks.filter($"bin".isInCollection(bins))
     candidate.mapPartitions { it =>
-      val hybrid = new HybridCodec(tables.value, model)
+      val decoder = BlockDecoder(tables.value, model)
       it.flatMap { b =>
-        val docIdsInBlock = StringCodecs.decode(b.doc_ids_codec, b.doc_ids_payload, b.n_rows)
-        val hits = (0 until b.n_rows).filter(r => wanted.contains(docIdsInBlock(r)))
+        val docIdsInBlock = BlockDecoder.docIds(b)
+        val hits = (0 until b.n_rows).filter(r => wanted.contains(docIdsInBlock(r))).toArray
         if (hits.isEmpty) Iterator.empty
         else {
-          val nToks = CodecSelector.decodeIntColumn(b.n_toks_codec, b.n_toks_payload, b.n_rows)
-          val sources = StringCodecs.decode(b.sources_codec, b.sources_payload, b.n_rows)
-          if (b.codec == "hybrid" && b.row_bits_codec != "none") {
-            // O(row) point decode: prefix-sum the row bit lengths, seek, decode
-            val (blockCodec, dataStart) =
-              if (b.embedded_tables) {
-                val headReader = new BitReader(b.payload)
-                val parsed =
-                  Huffman.readHeader(headReader, tables.value.maxBits, tables.value.numContexts)
-                (new HybridCodec(parsed, model), headReader.bitPos)
-              } else (hybrid, 0L)
-            val rowBits =
-              CodecSelector.decodeIntColumn(b.row_bits_codec, b.row_bits_payload, b.n_rows)
-            val startBit = new Array[Long](b.n_rows)
-            var acc = dataStart
-            var i = 0
-            while (i < b.n_rows) { startBit(i) = acc; acc += rowBits(i); i += 1 }
-            hits.iterator.map { r =>
-              val tokens = blockCodec.decodeRow(new BitReader(b.payload, startBit(r)), nToks(r))
-              TokenRow(docIdsInBlock(r), tokens, nToks(r), sources(r))
-            }
-          } else if (b.codec == "dhybrid" && b.row_bits_codec != "none") {
-            // dhybrid rows are independently seekable too — parse the
-            // block's own residual tables, then per-row bit seek
-            val rows = new graft.codec.DeltaHybrid.RowReader(new BitReader(b.payload))
-            val rowBits =
-              CodecSelector.decodeIntColumn(b.row_bits_codec, b.row_bits_payload, b.n_rows)
-            val startBit = new Array[Long](b.n_rows)
-            var acc = rows.dataStart
-            var i = 0
-            while (i < b.n_rows) { startBit(i) = acc; acc += rowBits(i); i += 1 }
-            hits.iterator.map { r =>
-              val tokens = rows.decodeRow(new BitReader(b.payload, startBit(r)), nToks(r))
-              TokenRow(docIdsInBlock(r), tokens, nToks(r), sources(r))
-            }
-          } else {
-            val codec = CodecSelector.decoderFor(codecId(b.codec), Some(hybrid))
-            val rowOffsets = new Array[Int](b.n_rows + 1)
-            var off = 0
-            var i = 0
-            while (i < b.n_rows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-            rowOffsets(b.n_rows) = off
-            val values = codec.decode(new BitReader(b.payload), off, rowOffsets)
-            hits.iterator.map { r =>
-              val tokens = java.util.Arrays.copyOfRange(values, rowOffsets(r), rowOffsets(r + 1))
-              TokenRow(docIdsInBlock(r), tokens, nToks(r), sources(r))
-            }
+          val nToks = BlockDecoder.nToks(b)
+          val sources = BlockDecoder.sources(b)
+          val d = decoder.decodeHits(b, nToks, hits)
+          hits.indices.iterator.map { j =>
+            val tokens = java.util.Arrays.copyOfRange(d.values, d.starts(j), d.starts(j) + d.lens(j))
+            TokenRow(docIdsInBlock(hits(j)), tokens, nToks(hits(j)), sources(hits(j)))
           }
         }
       }
@@ -901,44 +802,33 @@ object GraftPipeline {
     val nCtx = cfg.numContexts
     val flat = blocks
       .mapPartitions { it =>
-        val hybrid = new HybridCodec(tables.value, model)
+        val decoder = BlockDecoder(tables.value, model)
         val counts = new Array[Long](nCtx)
         val codeBits = new Array[Long](nCtx)
         val rawBits = new Array[Long](nCtx)
         it.foreach { b =>
-          val nToks = CodecSelector.decodeIntColumn(b.n_toks_codec, b.n_toks_payload, b.n_rows)
-          val rowOffsets = new Array[Int](b.n_rows + 1)
-          var off = 0
-          var i = 0
-          while (i < b.n_rows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-          rowOffsets(b.n_rows) = off
-          val reader = new BitReader(b.payload)
-          if (b.codec == "hybrid") {
-            val codec =
-              if (b.embedded_tables) {
-                val parsed =
-                  Huffman.readHeader(reader, tables.value.maxBits, tables.value.numContexts)
-                new HybridCodec(parsed, model)
-              } else hybrid
-            codec.decodeWithStats(reader, off, rowOffsets, counts, codeBits, rawBits)
-          } else {
-            val codec = CodecSelector.decoderFor(codecId(b.codec), Some(hybrid))
-            val values = codec.decode(reader, off, rowOffsets)
-            var row = 0
-            while (row < b.n_rows) {
-              var ctx = model.first(rowOffsets(row + 1) - rowOffsets(row))
-              var k = rowOffsets(row)
-              while (k < rowOffsets(row + 1)) {
-                val v = values(k).toLong
-                val nb = Hybrid.splitNBits(Hybrid.split(v))
-                counts(ctx) += 1
-                codeBits(ctx) += tables.value.bitCost(ctx, v) - nb
-                rawBits(ctx) += nb
-                ctx = model.next(v)
-                k += 1
+          val rowOffsets = BlockDecoder.rowOffsets(BlockDecoder.nToks(b))
+          val off = rowOffsets(b.n_rows)
+          decoder.open(b) match {
+            case (hybrid: HybridCodec, reader) =>
+              hybrid.decodeWithStats(reader, off, rowOffsets, counts, codeBits, rawBits)
+            case (codec, reader) =>
+              val values = codec.decode(reader, off, rowOffsets)
+              var row = 0
+              while (row < b.n_rows) {
+                var ctx = model.first(rowOffsets(row + 1) - rowOffsets(row))
+                var k = rowOffsets(row)
+                while (k < rowOffsets(row + 1)) {
+                  val v = values(k).toLong
+                  val nb = Hybrid.splitNBits(Hybrid.split(v))
+                  counts(ctx) += 1
+                  codeBits(ctx) += tables.value.bitCost(ctx, v) - nb
+                  rawBits(ctx) += nb
+                  ctx = model.next(v)
+                  k += 1
+                }
+                row += 1
               }
-              row += 1
-            }
           }
         }
         Iterator.single(counts ++ codeBits ++ rawBits)
@@ -953,12 +843,9 @@ object GraftPipeline {
     spark.createDataset(rows)
   }
 
-  /** Full-block payload decode given the corpus-level tables: the ONE
-    * codec dispatch (embedded self-describing headers, table-hash guard,
-    * lightweight decoder fallback) shared by the DSv2 dense scan path and
-    * the token-index build — two hand-maintained copies of this dispatch
-    * could drift on a new codec or header change, and a mis-decoded index
-    * build would break its no-false-negative contract silently.
+  /** Full-block payload decode given the corpus-level tables, through
+    * [[BlockDecoder]] (table-hash guard, embedded-header check, codec
+    * dispatch) for callers holding the block's columns one by one.
     */
   def decodeBlockPayload(
       payload: Array[Byte],
@@ -971,18 +858,14 @@ object GraftPipeline {
       nValues: Int,
       rowOffsets: Array[Int]
   ): Array[Int] = {
-    val r = new BitReader(payload)
-    val codec =
-      if (codecName == "hybrid") {
-        require(
-          blockTableHash == tables.tableHash,
-          s"block written with tables $blockTableHash, reader has ${tables.tableHash}"
-        )
-        if (embeddedTables)
-          new HybridCodec(Huffman.readHeader(r, tables.maxBits, tables.numContexts), model)
-        else hybrid
-      } else CodecSelector.decoderFor(codecId(codecName), Some(hybrid))
-    codec.decode(r, nValues, rowOffsets)
+    val b = EncodedBlock(
+      bin = -1, block_seq = -1, doc_ids_codec = null, doc_ids_payload = null,
+      sources_codec = null, sources_payload = null, n_toks_codec = null, n_toks_payload = null,
+      row_bits_codec = "none", row_bits_payload = null, embedded_tables = embeddedTables,
+      codec = codecName, n_rows = rowOffsets.length - 1, n_values = nValues.toLong,
+      payload = payload, payload_bits = 0L, meta_bytes = 0L, table_hash = blockTableHash
+    )
+    BlockDecoder(tables, model, hybrid).decodeAll(b, rowOffsets)
   }
 
   def codecId(name: String): Byte = name match {

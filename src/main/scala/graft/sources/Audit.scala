@@ -1,21 +1,19 @@
 package graft.sources
 
-import graft.core.{BitReader, ContextModel, Huffman}
-import graft.codec.{CodecSelector, HybridCodec}
-import graft.pipeline.{GraftPipeline, Maintenance}
+import graft.pipeline.{BlockDecoder, Maintenance}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Corpus integrity audit (`CALL graft.system.audit(path)`) — the fsck an
   * operator runs before trusting a 100 TB table that has lived through
   * months of appends, deletes, compactions and adopts: decode EVERY live
-  * block through the scan's own codec dispatch (embedded-table parse and
-  * hash check included) and cross-check the decoded value count against
+  * block through the scan's own [[BlockDecoder]] (table-hash guard and
+  * embedded-header check included) and cross-check the decoded value count against
   * the block's recorded `n_values`, reporting one row per file. Shaped like
   * [[TokenIndex.build]]: one task per live file (a corrupt byte is
   * attributed to its file, and the job parallelizes to the file count), a
-  * per-file sequential projected read (doc_id/source metadata never
-  * touched), and O(files) driver rows — the `files` procedure's scale.
+  * per-file sequential projected read, and O(files) driver rows — the
+  * `files` procedure's scale.
   *
   * A clean audit proves the entropy payloads decode and the per-block
   * accounting agrees; it does NOT prove the content matches the original
@@ -70,77 +68,41 @@ object Audit {
     var rows = 0L
     var values = 0L
     try {
-      val tables = Huffman.readHeader(new BitReader(headerBytes), maxBits, numContexts)
-      val model = ContextModel(modelName, numContexts)
-      val hybrid = new HybridCodec(tables, model)
+      val decoder = BlockDecoder.fromHeader(headerBytes, maxBits, numContexts, modelName)
       val wanted = Set(
         "bin", "block_seq", "codec", "n_rows", "n_values", "n_toks_codec",
         "n_toks_payload", "payload", "embedded_tables", "table_hash",
         "doc_ids_codec", "doc_ids_payload", "sources_codec", "sources_payload"
       )
-      val reader = GraftPartitionReader.openProjected(file, sConf, wanted, None)
+      val reader = GraftFiles.openProjected(file, sConf, wanted, None)
       try {
         var g = reader.read()
         while (g != null) {
-          val nRows = g.getInteger("n_rows", 0)
+          val b = new ParquetBlock(g, file)
+          val nRows = b.n_rows
           val recorded = g.getLong("n_values", 0)
-          val nToks = CodecSelector.decodeIntColumn(
-            g.getString("n_toks_codec", 0),
-            g.getBinary("n_toks_payload", 0).getBytes,
-            nRows
-          )
-          val rowOffsets = new Array[Int](nRows + 1)
-          var off = 0
-          var i = 0
-          while (i < nRows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-          rowOffsets(nRows) = off
+          def where = s"block (bin=${b.bin}, seq=${b.block_seq})"
+          val rowOffsets = BlockDecoder.rowOffsets(BlockDecoder.nToks(b))
+          val off = rowOffsets(nRows)
           if (off.toLong != recorded)
-            throw new IllegalStateException(
-              s"block (bin=${g.getInteger("bin", 0)}, seq=${g.getInteger("block_seq", 0)}): " +
-                s"n_toks sum $off != recorded n_values $recorded"
-            )
+            throw new IllegalStateException(s"$where: n_toks sum $off != recorded n_values $recorded")
           // All four per-block payloads are covered: decode the doc_id and
           // source string streams too (cheap next to the entropy payload) so
           // a corrupt metadata stream reports ok=false here instead of
           // crashing the first scan that projects doc_id.
-          val docIds = graft.codec.StringCodecs.decode(
-            g.getString("doc_ids_codec", 0),
-            g.getBinary("doc_ids_payload", 0).getBytes,
-            nRows
-          )
+          val docIds = BlockDecoder.docIds(b)
           if (docIds.length != nRows)
             throw new IllegalStateException(
-              s"block (bin=${g.getInteger("bin", 0)}, seq=${g.getInteger("block_seq", 0)}): " +
-                s"doc_ids stream decoded ${docIds.length} entries, expected $nRows"
+              s"$where: doc_ids stream decoded ${docIds.length} entries, expected $nRows"
             )
-          val srcs = graft.codec.StringCodecs.decode(
-            g.getString("sources_codec", 0),
-            g.getBinary("sources_payload", 0).getBytes,
-            nRows
-          )
+          val srcs = BlockDecoder.sources(b)
           if (srcs.length != nRows)
             throw new IllegalStateException(
-              s"block (bin=${g.getInteger("bin", 0)}, seq=${g.getInteger("block_seq", 0)}): " +
-                s"sources stream decoded ${srcs.length} entries, expected $nRows"
+              s"$where: sources stream decoded ${srcs.length} entries, expected $nRows"
             )
-          if (off > 0) {
-            val decoded = GraftPipeline.decodeBlockPayload(
-              g.getBinary("payload", 0).getBytes,
-              g.getString("codec", 0),
-              g.getBoolean("embedded_tables", 0),
-              g.getLong("table_hash", 0),
-              tables,
-              model,
-              hybrid,
-              off,
-              rowOffsets
-            )
-            if (decoded.length != off)
-              throw new IllegalStateException(
-                s"block (bin=${g.getInteger("bin", 0)}, seq=${g.getInteger("block_seq", 0)}): " +
-                  s"decoded ${decoded.length} values, expected $off"
-              )
-          }
+          val decoded = decoder.decodeAll(b, rowOffsets)
+          if (decoded.length != off)
+            throw new IllegalStateException(s"$where: decoded ${decoded.length} values, expected $off")
           blocks += 1L
           rows += nRows
           values += off

@@ -1,13 +1,11 @@
 package graft.sources
 
-import graft.codec.{CodecSelector, HybridCodec, StringCodecs}
-import graft.core.{BitReader, ContextModel, Huffman}
-import graft.pipeline.GraftPipeline
+import graft.pipeline.BlockDecoder
 
 /** Shared executor-side kernel for the per-file sidecar builders
   * ([[ContentIndex]], [[SignatureIndex]]): decode ONE block parquet file
   * fully — doc_id string stream, n_tok column, token payload through the
-  * scan's own codec dispatch (embedded tables included) — and stream every
+  * scan's own [[BlockDecoder]] (embedded tables included) — and stream every
   * row to the caller. One task per file is the callers' contract (a sidecar
   * entry is attributed to its file).
   */
@@ -33,14 +31,12 @@ private[sources] object BlockFileScan {
       numContexts: Int,
       modelName: String
   ): Iterator[DecodedRow] = new Iterator[DecodedRow] {
-    private val tables = Huffman.readHeader(new BitReader(headerBytes), maxBits, numContexts)
-    private val model = ContextModel(modelName, numContexts)
-    private val hybrid = new HybridCodec(tables, model)
+    private val decoder = BlockDecoder.fromHeader(headerBytes, maxBits, numContexts, modelName)
     private val wanted = Set(
-      "codec", "n_rows", "doc_ids_codec", "doc_ids_payload", "n_toks_codec",
+      "bin", "block_seq", "codec", "n_rows", "doc_ids_codec", "doc_ids_payload", "n_toks_codec",
       "n_toks_payload", "payload", "embedded_tables", "table_hash"
     )
-    private var reader = GraftPartitionReader.openProjected(file, sConf, wanted, None)
+    private var reader = GraftFiles.openProjected(file, sConf, wanted, None)
 
     // close on every exit path: normal drain (advance hits EOF), a decode
     // exception (closeQuietly + rethrow), AND abandonment — a killed or
@@ -71,37 +67,13 @@ private[sources] object BlockFileScan {
           reader.close()
           reader = null
         } else {
-          val n = g.getInteger("n_rows", 0)
+          val b = new ParquetBlock(g, file)
+          val n = b.n_rows
           if (n > 0) {
-            docIds = StringCodecs.decode(
-              g.getString("doc_ids_codec", 0),
-              g.getBinary("doc_ids_payload", 0).getBytes,
-              n
-            )
-            nToks = CodecSelector.decodeIntColumn(
-              g.getString("n_toks_codec", 0),
-              g.getBinary("n_toks_payload", 0).getBytes,
-              n
-            )
-            rowOffsets = new Array[Int](n + 1)
-            var off = 0
-            var r = 0
-            while (r < n) { rowOffsets(r) = off; off += nToks(r); r += 1 }
-            rowOffsets(n) = off
-            values =
-              if (off == 0) Array.emptyIntArray
-              else
-                GraftPipeline.decodeBlockPayload(
-                  g.getBinary("payload", 0).getBytes,
-                  g.getString("codec", 0),
-                  g.getBoolean("embedded_tables", 0),
-                  g.getLong("table_hash", 0),
-                  tables,
-                  model,
-                  hybrid,
-                  off,
-                  rowOffsets
-                )
+            docIds = BlockDecoder.docIds(b)
+            nToks = BlockDecoder.nToks(b)
+            rowOffsets = BlockDecoder.rowOffsets(nToks)
+            values = decoder.decodeAll(b, rowOffsets)
             nRows = n
             i = 0
           }

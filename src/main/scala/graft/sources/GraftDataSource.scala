@@ -1,8 +1,6 @@
 package graft.sources
 
-import graft.codec.{CodecSelector, HybridCodec, StringCodecs}
-import graft.core.{BitReader, ContextModel, Huffman}
-import graft.pipeline.GraftPipeline
+import graft.pipeline.{BlockDecoder, GraftPipeline, StoredBlock}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -15,8 +13,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, XXH64}
-import org.apache.spark.unsafe.Platform
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate
@@ -1350,9 +1347,6 @@ private[sources] class GraftScan(
       deleteFiles =
         if (deleteState.isEmpty) Array.empty
         else deleteState.live.map(d => (s"$path/_deletes/${d.name}", d.snapshotId)).toArray,
-      columnar = SparkSession.active.conf
-        .getOption("spark.graft.columnarScan")
-        .forall(_.toBoolean),
       containsToken = containsToken,
       sample = sample,
       tablePath = path,
@@ -1830,12 +1824,6 @@ private[sources] final case class GraftReaderFactory(
       * drives per-partition sequence scoping in the readers.
       */
     deleteFiles: Array[(String, Long)] = Array.empty,
-    /** Emit ColumnarBatches of zero-copy vectors over the decoded blocks
-      * (the default); `spark.graft.columnarScan=false` at planning time
-      * falls back to the row-shaped reader. Pushed metadata aggregates are
-      * always row-shaped (one partial row per file — nothing to vectorize).
-      */
-    columnar: Boolean = true,
     /** Exact content filter: emit only rows whose tokens satisfy the
       * needles. Readers consult the [[TokenIndex]] sidecar (when present
       * and complete for their file) to skip blocks that provably cannot.
@@ -1866,32 +1854,32 @@ private[sources] final case class GraftReaderFactory(
     GraftDataSource.intersectOpt(p.docIdsOverride.map(_.toSet), docIdFilter)
   )
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && aggKinds.isEmpty
+  /** Scans emit ColumnarBatches of zero-copy vectors over the decoded
+    * blocks; pushed metadata aggregates are row-shaped (one partial row per
+    * file — nothing to vectorize).
+    */
+  override def supportColumnarReads(partition: InputPartition): Boolean = aggKinds.isEmpty
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    val (bins, docs) = effectiveSets(p)
-    aggKinds match {
-      case Some(kinds) =>
-        // tripwire: the builder disables aggregate pushdown under live
-        // deletes (metadata counts would include hidden rows)
-        require(
-          deleteFiles.isEmpty,
-          "internal error: metadata aggregate planned over a table with live deletes"
-        )
-        require(
-          containsToken.isEmpty,
-          "internal error: metadata aggregate planned under a containsToken filter"
-        )
-        require(
-          sample.isEmpty,
-          "internal error: metadata aggregate planned under a sampleDocs filter"
-        )
-        new GraftAggReader(p.file, kinds, bins, conf, aggBySource)
-      case None =>
-        new GraftPartitionReader(p.file, this, bins, docs, p.fileCommitSnap)
-    }
+    val kinds = aggKinds.getOrElse(
+      throw new IllegalStateException("internal error: row reader requested for a columnar scan")
+    )
+    // tripwire: the builder disables aggregate pushdown under live
+    // deletes (metadata counts would include hidden rows)
+    require(
+      deleteFiles.isEmpty,
+      "internal error: metadata aggregate planned over a table with live deletes"
+    )
+    require(
+      containsToken.isEmpty,
+      "internal error: metadata aggregate planned under a containsToken filter"
+    )
+    require(
+      sample.isEmpty,
+      "internal error: metadata aggregate planned under a sampleDocs filter"
+    )
+    new GraftAggReader(p.file, kinds, effectiveSets(p)._1, conf, aggBySource)
   }
 
   override def createColumnarReader(
@@ -1945,14 +1933,14 @@ private[sources] class GraftAggReader(
   private val needSum = kinds.contains(GraftAgg.SumTokens)
 
   private val reader: ParquetReader[Group] = {
-    val base = Set("bin", "n_rows", "n_values")
+    val base = Set("bin", "block_seq", "n_rows", "n_values")
     val cols =
       base ++
         (if (needNtoks || (groupBySource && needSum))
            Set("n_toks_codec", "n_toks_payload")
          else Set.empty[String]) ++
         (if (groupBySource) Set("sources_codec", "sources_payload") else Set.empty[String])
-    GraftPartitionReader.openProjected(file, sConf, cols, None)
+    GraftFiles.openProjected(file, sConf, cols, None)
   }
 
   private def aggFor(source: String): Agg = {
@@ -1970,11 +1958,7 @@ private[sources] class GraftAggReader(
           total.rows += nRows
           total.values += g.getLong("n_values", 0)
           if (needNtoks && nRows > 0) {
-            val nToks = CodecSelector.decodeIntColumn(
-              g.getString("n_toks_codec", 0),
-              g.getBinary("n_toks_payload", 0).getBytes,
-              nRows
-            )
+            val nToks = BlockDecoder.nToks(new ParquetBlock(g, file))
             var j = 0
             while (j < nToks.length) {
               if (nToks(j) < total.minNtok) total.minNtok = nToks(j)
@@ -1983,11 +1967,8 @@ private[sources] class GraftAggReader(
             }
           }
         } else if (nRows > 0) {
-          val sources = StringCodecs.decode(
-            g.getString("sources_codec", 0),
-            g.getBinary("sources_payload", 0).getBytes,
-            nRows
-          )
+          val block = new ParquetBlock(g, file)
+          val sources = BlockDecoder.sources(block)
           var homogeneous = true
           var j = 1
           while (homogeneous && j < nRows) {
@@ -1995,14 +1976,7 @@ private[sources] class GraftAggReader(
             j += 1
           }
           val decodeNtoks = needNtoks || (needSum && !homogeneous)
-          val nToks =
-            if (decodeNtoks)
-              CodecSelector.decodeIntColumn(
-                g.getString("n_toks_codec", 0),
-                g.getBinary("n_toks_payload", 0).getBytes,
-                nRows
-              )
-            else null
+          val nToks = if (decodeNtoks) BlockDecoder.nToks(block) else null
           if (homogeneous) {
             val a = aggFor(sources(0))
             a.rows += nRows
@@ -2081,12 +2055,12 @@ private[sources] class GraftAggReader(
 }
 
 /** One decoded, filter-applied block: the surviving row indices plus the
-  * column arrays both reader shapes (row and columnar) materialize from.
-  * `tokenValues` is a single contiguous buffer — the full block decode in
-  * dense mode, the concatenated hit rows in sparse point-read mode — with
-  * `tokenStarts(j)` the start of hit `j`'s slice and `emitLens(j)` its
-  * length (`nToks(hits(j))`, or its truncation under tokenPrefix). Column
-  * arrays are null when the query doesn't need them.
+  * column arrays the scan's column vectors view. `tokenValues` is a single
+  * contiguous buffer — the full block decode in dense mode, the
+  * concatenated hit rows in sparse point-read mode — with `tokenStarts(j)`
+  * the start of hit `j`'s slice and `emitLens(j)` its length
+  * (`nToks(hits(j))`, or its truncation under tokenPrefix). Column arrays
+  * are null when the query doesn't need them.
   */
 private[sources] final class DecodedBlock(
     val bin: Int,
@@ -2108,23 +2082,32 @@ private[sources] final class DecodedBlock(
     val rowBits: Array[Int]
 )
 
-/** Executor-side block reader for one blocks parquet file — the shared
-  * engine under both the row and the columnar [[PartitionReader]]s. Projects
-  * the parquet scan down to the block columns the query needs (the entropy
-  * `payload` column is only materialized when `tokens` is required), pushes
-  * the bin predicate into parquet (row-group stats + record-level
-  * filtering), and decodes hit rows — via the per-row bit index for sparse
-  * doc_id hits on hybrid blocks, full-block decode otherwise. Merge-on-read
-  * deletes apply here and only here: the reader loads the delete files
-  * committed after its data file and drops the rows whose doc_id they hold.
+/** The scan's executor-side reader for one blocks parquet file: one
+  * [[ColumnarBatch]] per decoded block, with every column a ZERO-COPY
+  * [[ColumnVector]] view over the [[DecodedBlock]]'s arrays — the `tokens`
+  * child vector IS the decoded block buffer, and Spark's codegen'd
+  * ColumnarToRow (or any vector-aware operator above) reads elements
+  * straight out of it. `sum(size(tokens))` never touches elements, and
+  * element access is an int-array load. Block caps (maxBlockValues ≈ 256k
+  * tokens) keep each batch ~1 MB.
+  *
+  * Projects the parquet scan down to the block columns the query needs (the
+  * entropy `payload` column is only materialized when `tokens` is
+  * required), pushes the bin predicate into parquet (row-group stats +
+  * record-level filtering), and decodes hit rows through [[BlockDecoder]]
+  * (a per-row seek for sparse hits on seekable blocks, full-block decode
+  * otherwise). Merge-on-read deletes apply here and only here: the reader
+  * loads the delete files committed after its data file and drops the rows
+  * whose doc_id they hold.
   */
-private[sources] abstract class GraftBlockReaderBase(
+private[sources] class GraftColumnarReader(
     file: String,
     f: GraftReaderFactory,
     visibleBins: Option[Set[Int]],
     docFilter: Option[Set[String]],
     fileCommitSnap: Long
-) {
+) extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   /** Delete files that APPLY to this partition's data file under sequence
     * scoping: only those committed after the file itself.
@@ -2144,10 +2127,10 @@ private[sources] abstract class GraftBlockReaderBase(
     .map(_.toArray.sorted)
 
   /** The deleted ids this partition must hide, streamed from its
-    * applicable delete files ([[GraftPartitionReader.deletedIdSets]]).
+    * applicable delete files ([[GraftFiles.deletedIdSets]]).
     */
   private lazy val deletedSets: Array[Set[String]] =
-    GraftPartitionReader.deletedIdSets(applicableDeleteFiles, f.conf, pushedBins)
+    GraftFiles.deletedIdSets(applicableDeleteFiles, f.conf, pushedBins)
 
   private val needDocIds =
     f.requiredFields.contains("doc_id") || docFilter.isDefined || deletesPossible ||
@@ -2172,24 +2155,22 @@ private[sources] abstract class GraftBlockReaderBase(
     if (f.containsToken.isEmpty || f.tablePath.isEmpty) None
     else TokenIndex.entriesForFile(f.tablePath, GraftScan.nameOf(file), f.conf.value)
 
-  private lazy val tables =
-    Huffman.readHeader(new BitReader(f.headerBytes), f.maxBits, f.numContexts)
-  private lazy val model = ContextModel(f.contextModel, f.numContexts)
-  private lazy val hybrid = new HybridCodec(tables, model)
+  private lazy val decoder =
+    BlockDecoder.fromHeader(f.headerBytes, f.maxBits, f.numContexts, f.contextModel)
 
-  protected var blocksDecoded = 0L
-  protected var tokenValuesDecoded = 0L
-  protected var rowsEmitted = 0L
-  protected var blocksIndexSkipped = 0L
+  private var blocksDecoded = 0L
+  private var tokenValuesDecoded = 0L
+  private var rowsEmitted = 0L
+  private var blocksIndexSkipped = 0L
 
   /** The `_file` metadata value: this partition's file NAME, interned once. */
-  protected lazy val fileNameUtf8: UTF8String =
+  private lazy val fileNameUtf8: UTF8String =
     UTF8String.fromString(GraftScan.nameOf(file))
 
   private val reader: ParquetReader[Group] = {
-    // project the parquet scan down to the needed block columns
-    val wanted = scala.collection.mutable.LinkedHashSet[String]("bin", "codec", "n_rows")
-    if (f.containsToken.isDefined) wanted += "block_seq" // the index lookup key
+    // project the parquet scan down to the needed block columns; block_seq
+    // is the token-index lookup key and names a corrupt block
+    val wanted = scala.collection.mutable.LinkedHashSet[String]("bin", "block_seq", "codec", "n_rows")
     if (needDocIds) { wanted += "doc_ids_codec"; wanted += "doc_ids_payload" }
     if (needSources) { wanted += "sources_codec"; wanted += "sources_payload" }
     if (needNToks) { wanted += "n_toks_codec"; wanted += "n_toks_payload" }
@@ -2198,339 +2179,10 @@ private[sources] abstract class GraftBlockReaderBase(
       wanted += "payload"; wanted += "row_bits_codec"; wanted += "row_bits_payload"
       wanted += "embedded_tables"; wanted += "table_hash"
     }
-    GraftPartitionReader.openProjected(file, f.conf, wanted.toSet, pushedBins)
+    GraftFiles.openProjected(file, f.conf, wanted.toSet, pushedBins)
   }
 
   private var exhausted = false
-
-  /** Read forward to the next block with surviving rows; null when the file
-    * is exhausted. Honors the per-partition limit (stop opening/decoding
-    * blocks once satisfied — Spark applies the global LIMIT above the scan).
-    */
-  protected final def readBlock(): DecodedBlock = {
-    if (f.limit.exists(rowsEmitted >= _)) return null
-    while (!exhausted) {
-      val g = reader.read()
-      if (g == null) exhausted = true
-      else {
-        val blk = decodeBlockData(g)
-        if (blk != null) return blk
-      }
-    }
-    null
-  }
-
-  def close(): Unit = reader.close()
-
-  // PartitionReader.currentMetricsValues is a Java default method, so the
-  // concrete readers override it explicitly and delegate here
-  protected final def metricsValues(): Array[CustomTaskMetric] = Array(
-    GraftTaskMetric(GraftMetrics.BlocksDecoded, blocksDecoded),
-    GraftTaskMetric(GraftMetrics.TokenValuesDecoded, tokenValuesDecoded),
-    GraftTaskMetric(GraftMetrics.RowsEmitted, rowsEmitted),
-    GraftTaskMetric(GraftMetrics.BlocksIndexSkipped, blocksIndexSkipped)
-  )
-
-  private def bytesOf(g: Group, field: String): Array[Byte] =
-    g.getBinary(field, 0).getBytes
-  private def stringOf(g: Group, field: String): String =
-    g.getString(field, 0)
-
-  private def decodeBlockData(g: Group): DecodedBlock = {
-    // exact snapshot visibility: only bins committed by the requested
-    // snapshot's lineage exist for this scan
-    val bin = g.getInteger("bin", 0)
-    if (!visibleBins.forall(_.contains(bin))) return null
-    // token-index block skipping: consult the sidecar BEFORE any decode.
-    // Multi-valued lookup (compaction can co-locate equal keys): an entry
-    // group rejects only when NO entry can satisfy the needles. A key with
-    // no entries (e.g. an all-empty-rows block) decodes normally — the
-    // exact containment filter below still applies.
-    f.containsToken.foreach { t =>
-      tokenIndexEntries.foreach { ix =>
-        val es = ix.getOrElse((bin, g.getInteger("block_seq", 0)), Nil)
-        if (!t.blockMayMatch(es)) {
-          blocksIndexSkipped += 1
-          return null
-        }
-      }
-    }
-    blocksDecoded += 1
-    val nRows = g.getInteger("n_rows", 0)
-    val codecName = stringOf(g, "codec")
-
-    val docIds: Array[String] =
-      if (needDocIds) StringCodecs.decode(stringOf(g, "doc_ids_codec"), bytesOf(g, "doc_ids_payload"), nRows)
-      else null
-    val sources: Array[String] =
-      if (needSources) StringCodecs.decode(stringOf(g, "sources_codec"), bytesOf(g, "sources_payload"), nRows)
-      else null
-
-    def decodeNToks(): Array[Int] =
-      CodecSelector.decodeIntColumn(stringOf(g, "n_toks_codec"), bytesOf(g, "n_toks_payload"), nRows)
-
-    // decode n_toks BEFORE hit selection only when a pushed n_tok predicate
-    // needs it — otherwise keep it after the empty-hits early return, so
-    // point reads don't pay an O(n_rows) decode for blocks they discard
-    var nToks: Array[Int] = if (f.ntokPred.isDefined) decodeNToks() else null
-
-    // row predicate from the pushed doc_id/source/n_tok filters + the
-    // merge-on-read equality-delete set; n_tok predicates evaluate on the
-    // metadata stream, so length-filtered scans pay the payload decode only
-    // for matching rows (sparse hits take the row-seek path below)
-    val hits: Array[Int] = {
-      val del = if (deletesPossible) deletedSets else null
-      val b = Array.newBuilder[Int]
-      var r = 0
-      while (r < nRows) {
-        val ok =
-          docFilter.forall(s => s.contains(docIds(r))) &&
-            f.sourceFilter.forall(s => s.contains(sources(r))) &&
-            f.ntokPred.forall(_.ok(nToks(r))) &&
-            f.sample.forall(sp => sp.keep(docIds(r), if (sp.needsSource) sources(r) else null)) &&
-            (del == null || !GraftPartitionReader.anyContains(del, docIds(r)))
-        if (ok) b += r
-        r += 1
-      }
-      b.result()
-    }
-    if (hits.isEmpty) return null
-    if (nToks == null && needNToks) nToks = decodeNToks()
-
-    // _row_bits projection: the stored per-row bit index, payload untouched
-    var metaRowBits: Array[Int] = null
-    if (needRowBits) {
-      val rbc = stringOf(g, "row_bits_codec")
-      if (rbc != "none")
-        metaRowBits = CodecSelector.decodeIntColumn(rbc, bytesOf(g, "row_bits_payload"), nRows)
-    }
-
-    var tokenValues: Array[Int] = null
-    var tokenStarts: Array[Int] = null
-    var emitLens: Array[Int] = null
-    if (needTokens) {
-      val payload = bytesOf(g, "payload")
-      val rowBitsCodec = stringOf(g, "row_bits_codec")
-      val embedded = g.getBoolean("embedded_tables", 0)
-      def checkTableHash(): Unit = require(
-        g.getLong("table_hash", 0) == tables.tableHash,
-        s"block written with tables ${g.getLong("table_hash", 0)}, reader has ${tables.tableHash}"
-      )
-      tokenStarts = new Array[Int](hits.length)
-      // per-hit emitted length: the full row normally, min(n_tok, k) under
-      // option("tokenPrefix", k) — context-window truncation at the source
-      emitLens = new Array[Int](hits.length)
-      val prefix = f.tokenPrefix.getOrElse(Int.MaxValue)
-      var truncates = false
-      var h = 0
-      while (h < hits.length) {
-        val full = nToks(hits(h))
-        val m = if (full < prefix) full else prefix
-        emitLens(h) = m
-        if (m < full) truncates = true
-        h += 1
-      }
-      val sparse = hits.length * 4 < nRows // point-seek pays off on sparse hits
-      // a truncating prefix routes seekable blocks through the row-seek path
-      // even when hits are dense: entropy-decoding exactly k values per row
-      // (the row chain starts at the seeked bit, so a prefix is decodable
-      // without the tail) beats a full-block decode as soon as tails skip
-      val seek = sparse || truncates
-      if (codecName == "dhybrid" && rowBitsCodec != "none" && seek) {
-        // dhybrid seek path: parse the block's own residual tables, then
-        // bit-seek each hit row (same shape as the hybrid path below)
-        val rows = new graft.codec.DeltaHybrid.RowReader(new BitReader(payload))
-        val rowBits =
-          CodecSelector.decodeIntColumn(rowBitsCodec, bytesOf(g, "row_bits_payload"), nRows)
-        val startBit = new Array[Long](nRows)
-        var acc = rows.dataStart
-        var i = 0
-        while (i < nRows) { startBit(i) = acc; acc += rowBits(i); i += 1 }
-        var total = 0
-        i = 0
-        while (i < hits.length) { total += emitLens(i); i += 1 }
-        tokenValues = new Array[Int](total)
-        var off = 0
-        i = 0
-        while (i < hits.length) {
-          val r = hits(i)
-          tokenStarts(i) = off
-          rows.decodeRow(new BitReader(payload, startBit(r)), tokenValues, off, off + emitLens(i))
-          off += emitLens(i)
-          i += 1
-        }
-        tokenValuesDecoded += total
-      } else if (codecName == "hybrid" && rowBitsCodec != "none" && seek) {
-        // random-access path: prefix-sum the per-row bit index, seek per
-        // hit, decoding each hit row straight into one contiguous buffer
-        checkTableHash()
-        val (codec, dataStart) =
-          if (embedded) {
-            val head = new BitReader(payload)
-            val parsed = Huffman.readHeader(head, tables.maxBits, tables.numContexts)
-            (new HybridCodec(parsed, model), head.bitPos)
-          } else (hybrid, 0L)
-        val rowBits =
-          CodecSelector.decodeIntColumn(rowBitsCodec, bytesOf(g, "row_bits_payload"), nRows)
-        val startBit = new Array[Long](nRows)
-        var acc = dataStart
-        var i = 0
-        while (i < nRows) { startBit(i) = acc; acc += rowBits(i); i += 1 }
-        var total = 0
-        i = 0
-        while (i < hits.length) { total += emitLens(i); i += 1 }
-        tokenValues = new Array[Int](total)
-        var off = 0
-        i = 0
-        while (i < hits.length) {
-          val r = hits(i)
-          tokenStarts(i) = off
-          codec.decodeRow(new BitReader(payload, startBit(r)), emitLens(i), tokenValues, off)
-          off += emitLens(i)
-          i += 1
-        }
-        tokenValuesDecoded += total
-      } else {
-        // full-block decode (dense hits on a non-seekable codec); hit rows
-        // are zero-copy slices of the block buffer — under a prefix the
-        // emitted slice is the row's HEAD, which starts at the row start,
-        // so truncation is pure emitLens bookkeeping here
-        val rowOffsets = new Array[Int](nRows + 1)
-        var off = 0
-        var i = 0
-        while (i < nRows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-        rowOffsets(nRows) = off
-        tokenValues = GraftPipeline.decodeBlockPayload(
-          payload, codecName, embedded, g.getLong("table_hash", 0),
-          tables, model, hybrid, off, rowOffsets)
-        tokenValuesDecoded += off
-        var j = 0
-        while (j < hits.length) { tokenStarts(j) = rowOffsets(hits(j)); j += 1 }
-      }
-    }
-
-    // exact containment filter for pushed needles: keep only hit rows
-    // whose decoded slice satisfies them. Evaluated on the emitted window
-    // (truncate-then-filter under tokenPrefix — the scan behaves as a table
-    // whose tokens column IS the prefix). tokenStarts entries keep
-    // pointing into the SAME decoded buffer, so the surviving subset is a
-    // plain (hits, starts, lens) re-pack — no copies.
-    var outHits = hits
-    var outStarts = tokenStarts
-    var outLens = emitLens
-    f.containsToken.foreach { t =>
-      val keepH = Array.newBuilder[Int]
-      val keepS = Array.newBuilder[Int]
-      val keepL = Array.newBuilder[Int]
-      var i = 0
-      while (i < hits.length) {
-        val start = tokenStarts(i)
-        if (t.rowMatches(tokenValues, start, start + emitLens(i))) {
-          keepH += hits(i); keepS += start; keepL += emitLens(i)
-        }
-        i += 1
-      }
-      outHits = keepH.result()
-      outStarts = keepS.result()
-      outLens = keepL.result()
-    }
-    if (outHits.isEmpty) return null
-
-    new DecodedBlock(bin, outHits, docIds, sources, nToks, tokenValues, outStarts, outLens, metaRowBits)
-  }
-}
-
-/** Row-shaped reader: materializes each surviving row as an InternalRow.
-  * Kept for pushed-aggregate scans and as the `spark.graft.columnarScan=
-  * false` escape hatch; the columnar reader below is the default fast path.
-  */
-private[sources] class GraftPartitionReader(
-    file: String,
-    f: GraftReaderFactory,
-    visibleBins: Option[Set[Int]],
-    docFilter: Option[Set[String]],
-    fileCommitSnap: Long = -1L
-) extends GraftBlockReaderBase(file, f, visibleBins, docFilter, fileCommitSnap)
-    with PartitionReader[InternalRow] {
-
-  private var blk: DecodedBlock = null
-  private var j = 0
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (f.limit.exists(rowsEmitted >= _)) return false
-    while (blk == null || j >= blk.hits.length) {
-      blk = readBlock()
-      j = 0
-      if (blk == null) return false
-    }
-    row = materialize(blk, j)
-    j += 1
-    rowsEmitted += 1
-    true
-  }
-
-  override def get(): InternalRow = row
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] = metricsValues()
-
-  private def materialize(b: DecodedBlock, j: Int): InternalRow = {
-    val r = b.hits(j)
-    val fields = f.requiredFields
-    val out = new GenericInternalRow(fields.length)
-    var i = 0
-    while (i < fields.length) {
-      fields(i) match {
-        case "doc_id" => out.update(i, UTF8String.fromString(b.docIds(r)))
-        case "tokens" =>
-          // UnsafeArrayData sliced straight out of the decoded block buffer:
-          // no per-row copyOfRange, no boxing (GenericArrayData would box
-          // every token — at a full scan's 10^8-token scale the boxing
-          // dominates row materialization). toIntExact guards the byte-
-          // offset math — a block would need >512M values to overflow, far
-          // past maxBlockValues.
-          out.update(
-            i,
-            UnsafeArrayData.fromPrimitiveArray(
-              b.tokenValues,
-              Math.toIntExact(Platform.INT_ARRAY_OFFSET + 4L * b.tokenStarts(j)),
-              b.emitLens(j),
-              4)
-          )
-        case "n_tok"  => out.setInt(i, b.nToks(r))
-        case "source" => out.update(i, UTF8String.fromString(b.sources(r)))
-        case "_bin"   => out.setInt(i, b.bin) // metadata column
-        case "_row_bits" =>
-          if (b.rowBits == null) out.setNullAt(i) else out.setLong(i, b.rowBits(r).toLong)
-        case "_file"  => out.update(i, fileNameUtf8)
-        case other    => throw new IllegalArgumentException(s"unknown column $other")
-      }
-      i += 1
-    }
-    out
-  }
-}
-
-/** Columnar reader: one [[ColumnarBatch]] per decoded block, with every
-  * column a ZERO-COPY [[ColumnVector]] view over the [[DecodedBlock]]'s
-  * arrays — the `tokens` child vector IS the decoded block buffer, and
-  * Spark's codegen'd ColumnarToRow (or any vector-aware operator above)
-  * reads elements straight out of it. Row materialization — the dominant
-  * cost of a full decode scan after the entropy kernel — disappears from
-  * the scan entirely: `sum(size(tokens))` never touches elements, and
-  * element access is an int-array load. Block caps (maxBlockValues ≈ 256k
-  * tokens) keep each batch ~1 MB.
-  */
-private[sources] class GraftColumnarReader(
-    file: String,
-    f: GraftReaderFactory,
-    visibleBins: Option[Set[Int]],
-    docFilter: Option[Set[String]],
-    fileCommitSnap: Long = -1L
-) extends GraftBlockReaderBase(file, f, visibleBins, docFilter, fileCommitSnap)
-    with PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
   private var batch: ColumnarBatch = _
 
   override def next(): Boolean = {
@@ -2562,9 +2214,127 @@ private[sources] class GraftColumnarReader(
     true
   }
 
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
+  override def get(): ColumnarBatch = batch
 
-  override def currentMetricsValues(): Array[CustomTaskMetric] = metricsValues()
+  override def close(): Unit = reader.close()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    GraftTaskMetric(GraftMetrics.BlocksDecoded, blocksDecoded),
+    GraftTaskMetric(GraftMetrics.TokenValuesDecoded, tokenValuesDecoded),
+    GraftTaskMetric(GraftMetrics.RowsEmitted, rowsEmitted),
+    GraftTaskMetric(GraftMetrics.BlocksIndexSkipped, blocksIndexSkipped)
+  )
+
+  /** Read forward to the next block with surviving rows; null when the file
+    * is exhausted. Honors the per-partition limit (stop opening/decoding
+    * blocks once satisfied — Spark applies the global LIMIT above the scan).
+    */
+  private def readBlock(): DecodedBlock = {
+    if (f.limit.exists(rowsEmitted >= _)) return null
+    while (!exhausted) {
+      val g = reader.read()
+      if (g == null) exhausted = true
+      else {
+        val blk = decodeBlockData(g)
+        if (blk != null) return blk
+      }
+    }
+    null
+  }
+
+  private def decodeBlockData(g: Group): DecodedBlock = {
+    // exact snapshot visibility: only bins committed by the requested
+    // snapshot's lineage exist for this scan
+    val b = new ParquetBlock(g, file)
+    val bin = b.bin
+    if (!visibleBins.forall(_.contains(bin))) return null
+    // token-index block skipping: consult the sidecar BEFORE any decode.
+    // Multi-valued lookup (compaction can co-locate equal keys): an entry
+    // group rejects only when NO entry can satisfy the needles. A key with
+    // no entries (e.g. an all-empty-rows block) decodes normally — the
+    // exact containment filter below still applies.
+    f.containsToken.foreach { t =>
+      tokenIndexEntries.foreach { ix =>
+        val es = ix.getOrElse((bin, b.block_seq), Nil)
+        if (!t.blockMayMatch(es)) {
+          blocksIndexSkipped += 1
+          return null
+        }
+      }
+    }
+    blocksDecoded += 1
+    val nRows = b.n_rows
+    val docIds = if (needDocIds) BlockDecoder.docIds(b) else null
+    val sources = if (needSources) BlockDecoder.sources(b) else null
+
+    // decode n_toks BEFORE hit selection only when a pushed n_tok predicate
+    // needs it — otherwise keep it after the empty-hits early return, so
+    // point reads don't pay an O(n_rows) decode for blocks they discard
+    var nToks: Array[Int] = if (f.ntokPred.isDefined) BlockDecoder.nToks(b) else null
+
+    // row predicate from the pushed doc_id/source/n_tok filters + the
+    // merge-on-read equality-delete set; n_tok predicates evaluate on the
+    // metadata stream, so length-filtered scans pay the payload decode only
+    // for matching rows (sparse hits take the decoder's row-seek path)
+    val hits: Array[Int] = {
+      val del = if (deletesPossible) deletedSets else null
+      val hb = Array.newBuilder[Int]
+      var r = 0
+      while (r < nRows) {
+        val ok =
+          docFilter.forall(s => s.contains(docIds(r))) &&
+            f.sourceFilter.forall(s => s.contains(sources(r))) &&
+            f.ntokPred.forall(_.ok(nToks(r))) &&
+            f.sample.forall(sp => sp.keep(docIds(r), if (sp.needsSource) sources(r) else null)) &&
+            (del == null || !GraftFiles.anyContains(del, docIds(r)))
+        if (ok) hb += r
+        r += 1
+      }
+      hb.result()
+    }
+    if (hits.isEmpty) return null
+    if (nToks == null && needNToks) nToks = BlockDecoder.nToks(b)
+
+    // _row_bits projection: the stored per-row bit index, payload untouched
+    val metaRowBits = if (needRowBits) BlockDecoder.rowBits(b) else null
+
+    // per-hit token slices; under option("tokenPrefix", k) each is the
+    // row's first min(n_tok, k) values — context-window truncation at the
+    // source
+    if (!needTokens)
+      return new DecodedBlock(bin, hits, docIds, sources, nToks, null, null, null, metaRowBits)
+    val tok = decoder.decodeHits(b, nToks, hits, f.tokenPrefix.getOrElse(Int.MaxValue))
+    tokenValuesDecoded += tok.values.length
+
+    // exact containment filter for pushed needles: keep only hit rows
+    // whose decoded slice satisfies them. Evaluated on the emitted window
+    // (truncate-then-filter under tokenPrefix — the scan behaves as a table
+    // whose tokens column IS the prefix). Starts keep pointing into the
+    // SAME decoded buffer, so the surviving subset is a plain
+    // (hits, starts, lens) re-pack — no copies.
+    var outHits = hits
+    var outStarts = tok.starts
+    var outLens = tok.lens
+    f.containsToken.foreach { t =>
+      val keepH = Array.newBuilder[Int]
+      val keepS = Array.newBuilder[Int]
+      val keepL = Array.newBuilder[Int]
+      var i = 0
+      while (i < hits.length) {
+        val start = tok.starts(i)
+        if (t.rowMatches(tok.values, start, start + tok.lens(i))) {
+          keepH += hits(i); keepS += start; keepL += tok.lens(i)
+        }
+        i += 1
+      }
+      outHits = keepH.result()
+      outStarts = keepS.result()
+      outLens = keepL.result()
+    }
+    if (outHits.isEmpty) return null
+
+    new DecodedBlock(bin, outHits, docIds, sources, nToks, tok.values, outStarts, outLens, metaRowBits)
+  }
 }
 
 /** Base for the scan's read-only, null-free column vectors: views over the
@@ -2774,7 +2544,34 @@ private[sources] class GraftMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-private[sources] object GraftPartitionReader {
+/** A block-parquet record as a [[StoredBlock]]: each column is read from the
+  * record once, on first use, so a reader touches only the columns it
+  * projected and decodes.
+  */
+private[sources] final class ParquetBlock(g: Group, path: String) extends StoredBlock {
+  private def bytes(field: String): Array[Byte] = g.getBinary(field, 0).getBytes
+  lazy val bin: Int = g.getInteger("bin", 0)
+  lazy val block_seq: Int = g.getInteger("block_seq", 0)
+  lazy val codec: String = g.getString("codec", 0)
+  lazy val n_rows: Int = g.getInteger("n_rows", 0)
+  lazy val doc_ids_codec: String = g.getString("doc_ids_codec", 0)
+  lazy val doc_ids_payload: Array[Byte] = bytes("doc_ids_payload")
+  lazy val sources_codec: String = g.getString("sources_codec", 0)
+  lazy val sources_payload: Array[Byte] = bytes("sources_payload")
+  lazy val n_toks_codec: String = g.getString("n_toks_codec", 0)
+  lazy val n_toks_payload: Array[Byte] = bytes("n_toks_payload")
+  lazy val row_bits_codec: String = g.getString("row_bits_codec", 0)
+  lazy val row_bits_payload: Array[Byte] = bytes("row_bits_payload")
+  lazy val embedded_tables: Boolean = g.getBoolean("embedded_tables", 0)
+  lazy val payload: Array[Byte] = bytes("payload")
+  lazy val table_hash: Long = g.getLong("table_hash", 0)
+  override def file: Option[String] = Some(path)
+}
+
+/** Parquet access shared by the table's readers: projected opens of block
+  * files, their cached schemas, and the merge-on-read delete-set loads.
+  */
+private[sources] object GraftFiles {
   private val SchemaCacheCap = 1 << 16
   private val schemaCache =
     scala.collection.concurrent.TrieMap[String, MessageType]()
@@ -2863,7 +2660,7 @@ private[sources] object GraftPartitionReader {
       bins: Option[Array[Int]]
   ): ParquetReader[Group] = {
     val conf = new Configuration(sConf.value)
-    val fileSchema = GraftPartitionReader.fileSchema(file, conf)
+    val fileSchema = GraftFiles.fileSchema(file, conf)
     val projection = new MessageType(
       fileSchema.getName,
       fileSchema.getFields.asScala.filter(t => wanted.contains(t.getName)).asJava

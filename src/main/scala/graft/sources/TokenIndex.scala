@@ -1,9 +1,7 @@
 package graft.sources
 
-import graft.codec.{CodecSelector, HybridCodec}
-import graft.core.{BitReader, ContextModel, Huffman}
 import graft.ops.XHash
-import graft.pipeline.{GraftPipeline, Maintenance}
+import graft.pipeline.{BlockDecoder, Maintenance}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
@@ -370,9 +368,9 @@ object TokenIndex {
       .fold(0L)(_ + _)
   }
 
-  /** Decode one block file sequentially and emit its index rows. The decode
-    * mirrors the scan's dense path (per-block codec dispatch incl. embedded
-    * tables); doc_id/source metadata is never touched.
+  /** Decode one block file sequentially and emit its index rows, through
+    * the scan's own [[BlockDecoder]]; doc_id/source metadata is never
+    * touched.
     */
   private def indexOneFile(
       file: String,
@@ -382,41 +380,26 @@ object TokenIndex {
       numContexts: Int,
       modelName: String
   ): Seq[TokenIndexRow] = {
-    val tables = Huffman.readHeader(new BitReader(headerBytes), maxBits, numContexts)
-    val model = ContextModel(modelName, numContexts)
-    val hybrid = new HybridCodec(tables, model)
+    val decoder = BlockDecoder.fromHeader(headerBytes, maxBits, numContexts, modelName)
     val wanted = Set(
       "bin", "block_seq", "codec", "n_rows", "n_toks_codec", "n_toks_payload",
       "payload", "embedded_tables", "table_hash"
     )
-    val reader = GraftPartitionReader.openProjected(file, sConf, wanted, None)
+    val reader = GraftFiles.openProjected(file, sConf, wanted, None)
     val out = Array.newBuilder[TokenIndexRow]
     val name = nameOf(file)
     try {
       var g = reader.read()
       while (g != null) {
-        val nRows = g.getInteger("n_rows", 0)
-        val nToks = CodecSelector.decodeIntColumn(
-          g.getString("n_toks_codec", 0),
-          g.getBinary("n_toks_payload", 0).getBytes,
-          nRows
-        )
-        val rowOffsets = new Array[Int](nRows + 1)
-        var off = 0
-        var i = 0
-        while (i < nRows) { rowOffsets(i) = off; off += nToks(i); i += 1 }
-        rowOffsets(nRows) = off
-        if (off > 0) {
-          val payload = g.getBinary("payload", 0).getBytes
-          val codecName = g.getString("codec", 0)
-          val values = GraftPipeline.decodeBlockPayload(
-            payload, codecName, g.getBoolean("embedded_tables", 0),
-            g.getLong("table_hash", 0), tables, model, hybrid, off, rowOffsets)
+        val b = new ParquetBlock(g, file)
+        val rowOffsets = BlockDecoder.rowOffsets(BlockDecoder.nToks(b))
+        if (rowOffsets(b.n_rows) > 0) {
+          val values = decoder.decodeAll(b, rowOffsets)
           val (mn, mx, nd, bloom) = entryFor(values)
           out += TokenIndexRow(
             name,
-            g.getInteger("bin", 0),
-            g.getInteger("block_seq", 0),
+            b.bin,
+            b.block_seq,
             0, // patched below once the file's block count is known
             mn, mx, nd, bloom
           )

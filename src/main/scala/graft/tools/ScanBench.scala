@@ -58,30 +58,17 @@ object ScanBench {
       val expectedValSum = input
         .select(expr("aggregate(tokens, 0L, (a, x) -> a + x)").as("s"))
         .agg(sum($"s")).collect()(0).getLong(0)
-      // warmup both shapes in both reader modes
-      for (mode <- Seq("true", "false")) {
-        spark.conf.set("spark.graft.columnarScan", mode)
-        scan.agg(sum(size($"tokens"))).collect()
-        scan.select(expr("aggregate(tokens, 0L, (a, x) -> a + x)").as("s")).agg(sum($"s")).collect()
-      }
+      // warmup both shapes
+      scan.agg(sum(size($"tokens"))).collect()
+      scan.select(expr("aggregate(tokens, 0L, (a, x) -> a + x)").as("s")).agg(sum($"s")).collect()
 
-      // interleave the columnar/row reader modes rep by rep so host drift
-      // hits both alike (the conf is read at planning time, so flipping it
-      // between queries is a true A/B within one JVM)
       def rep(name: String, want: Long)(q: => Long): Unit = {
-        val times = Array.fill(2)(Vector.empty[Double])
-        (1 to reps).foreach { _ =>
-          for (m <- 0 to 1) {
-            spark.conf.set("spark.graft.columnarScan", (m == 0).toString)
-            val (v, t) = Bench.time(q)
-            require(v == want, s"$name returned $v, expected $want")
-            times(m) :+= t
-          }
+        val ts = (1 to reps).map { _ =>
+          val (v, t) = Bench.time(q)
+          require(v == want, s"$name returned $v, expected $want")
+          t
         }
-        for ((label, m) <- Seq("col" -> 0, "row" -> 1)) {
-          val ts = times(m)
-          println(f"SCANBENCH $name%-10s [$label] best=${ts.min}%7.3f s  median=${ts.sorted.apply(reps / 2)}%7.3f s  (${ts.map(t => f"$t%.3f").mkString(", ")})")
-        }
+        println(f"SCANBENCH $name%-10s best=${ts.min}%7.3f s  median=${ts.sorted.apply(reps / 2)}%7.3f s  (${ts.map(t => f"$t%.3f").mkString(", ")})")
       }
       rep("scan_size", expected)(scan.agg(sum(size($"tokens"))).collect()(0).getLong(0))
       rep("scan_sum", expectedValSum)(

@@ -265,9 +265,9 @@ class GraftSourceSpec extends AnyFunSuite {
     // the pruned partition set still yields exactly the hit rows
     val factory = scan.toBatch.createReaderFactory()
     val rows = scan.toBatch.planInputPartitions().iterator.flatMap { p =>
-      val r = factory.createReader(p)
+      val r = factory.createColumnarReader(p)
       val buf = scala.collection.mutable.ArrayBuffer[String]()
-      while (r.next()) buf += r.get().getUTF8String(0).toString
+      while (r.next()) r.get().rowIterator().forEachRemaining(row => buf += row.getUTF8String(0).toString)
       r.close()
       buf
     }.toSeq
@@ -710,26 +710,18 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
-  test("columnar scan is the default, carries metrics, and matches the row reader exactly") {
+  test("columnar scan carries metrics and returns the source corpus exactly") {
     import spark.implicits._
     // no orderBy here: a global sort's range-partitioner SAMPLING pass
     // executes the scan a second time and doubles the rows-emitted metric
-    val df = spark.read.format("graft").load(dirA)
-    val colRows = df.collect().sortBy(_.getAs[String]("doc_id"))
-    val scan = findScan(df.queryExecution.executedPlan)
-    assert(scan.supportsColumnar, "default graft scan should emit ColumnarBatches")
+    val ds = spark.read.format("graft").load(dirA).as[graft.pipeline.TokenRow]
+    val rows = ds.collect()
+    val scan = findScan(ds.queryExecution.executedPlan)
+    assert(scan.supportsColumnar, "graft scan should emit ColumnarBatches")
     // DSv2 custom metrics must flow through the columnar reader too
     assert(metric(scan, GraftMetrics.RowsEmitted) == input.count())
     assert(metric(scan, GraftMetrics.TokenValuesDecoded) > 0L)
-
-    // escape hatch: row-shaped reader, byte-identical results
-    spark.conf.set("spark.graft.columnarScan", "false")
-    try {
-      val rowDf = spark.read.format("graft").load(dirA)
-      val rowRows = rowDf.collect().sortBy(_.getAs[String]("doc_id"))
-      assert(!findScan(rowDf.queryExecution.executedPlan).supportsColumnar)
-      assert(colRows.toSeq == rowRows.toSeq)
-    } finally spark.conf.unset("spark.graft.columnarScan")
+    assert(GraftPipeline.verify(input, spark.createDataset(rows.toSeq)) == 0L)
   }
 
   test("columnar point read decodes only the hit rows (sparse seek path)") {
@@ -946,19 +938,6 @@ class GraftSourceSpec extends AnyFunSuite {
       // length while tokens is the 7-element head
       assert(GraftPipeline.verify(prefixExpected(7), got) == 0L, s"prefix mismatch under $dir")
     }
-  }
-
-  test("tokenPrefix through the row-shaped reader (columnarScan=false)") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.columnarScan", "false")
-    try {
-      val got = spark.read
-        .format("graft")
-        .option("tokenPrefix", 7)
-        .load(dirA)
-        .as[graft.pipeline.TokenRow]
-      assert(GraftPipeline.verify(prefixExpected(7), got) == 0L)
-    } finally spark.conf.unset("spark.graft.columnarScan")
   }
 
   test("tokenPrefix >= every n_tok is a no-op (dense full-block path)") {
