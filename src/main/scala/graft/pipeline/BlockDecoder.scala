@@ -94,9 +94,17 @@ final class BlockDecoder private (
   /** Decode the rows `hits` (ascending) of `b`, each cut to its first
     * `prefix` values. Seekable blocks decode only those values when hits
     * are sparse or truncated; otherwise the whole block decodes once and
-    * hits are slices of it.
+    * hits are slices of it. A caller that already holds `b`'s
+    * [[BlockDecoder.rowBits]] passes them, so a seek does not decode the
+    * stream again.
     */
-  def decodeHits(b: StoredBlock, nToks: Array[Int], hits: Array[Int], prefix: Int = Int.MaxValue): DecodedHits = {
+  def decodeHits(
+      b: StoredBlock,
+      nToks: Array[Int],
+      hits: Array[Int],
+      prefix: Int = Int.MaxValue,
+      rowBits: Array[Int] = null
+  ): DecodedHits = {
     val lens = new Array[Int](hits.length)
     val starts = new Array[Int](hits.length)
     var truncates = false
@@ -125,7 +133,7 @@ final class BlockDecoder private (
             val rows = new DeltaHybrid.RowReader(new BitReader(payload))
             (rows.dataStart, (in: BitReader, out: Array[Int], from: Int, until: Int) => rows.decodeRow(in, out, from, until))
         }
-        val startBit = BlockDecoder.startBits(b, dataStart)
+        val startBit = BlockDecoder.startBits(b, dataStart, if (rowBits != null) rowBits else BlockDecoder.rowBits(b))
         val out = new Array[Int](total)
         var off = 0
         j = 0
@@ -202,8 +210,7 @@ object BlockDecoder {
   }
 
   /** Each row's first payload bit: `dataStart` plus the preceding row bits. */
-  private def startBits(b: StoredBlock, dataStart: Long): Array[Long] = {
-    val rb = rowBits(b)
+  private def startBits(b: StoredBlock, dataStart: Long, rb: Array[Int]): Array[Long] = {
     val out = new Array[Long](b.n_rows)
     var acc = dataStart
     var i = 0

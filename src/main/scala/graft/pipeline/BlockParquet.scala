@@ -10,12 +10,17 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.Dataset
 
-/** Hand-rolled parquet IO for block and manifest files — the ONE block-file
-  * writer shared by the batch encode ([[EncodeJob.run]]) and the DSv2
-  * append. Writer tasks run without a SparkSession, so files are written
-  * through parquet-hadoop directly, in EXACTLY the schemas Spark's own
-  * parquet writer produces for [[EncodedBlock]] and
+/** Hand-rolled parquet IO for block and manifest files — the ONE writer of
+  * files under `blocks/`, `_compacted/` and `_manifest/`. [[stage]] is the
+  * task half of every Spark-side block write: the batch encode
+  * ([[EncodeJob.run]]), the [[Maintenance]] rewrites (compact, recompress,
+  * rebin, purge) and [[Deletes.replaceDocs]]; the DSv2 append's data
+  * writers call [[open]]/[[toGroup]] directly, and every manifest file goes
+  * through [[writeManifest]]. Writer tasks run without a SparkSession, so
+  * files are written through parquet-hadoop directly, in EXACTLY the
+  * schemas Spark's own parquet writer produces for [[EncodedBlock]] and
   * [[EncodeJob.BinManifest]] — files from either writer are
   * indistinguishable to every reader (Spark scans, the DSv2 readers'
   * projected GroupReadSupport, footer bin-stat pruning, compaction, the
@@ -45,7 +50,7 @@ private[graft] object BlockParquet {
       |}""".stripMargin
   )
 
-  /** The schema Spark writes for the manifest aggregation in
+  /** The schema Spark writes for the manifest aggregation of
     * [[EncodeJob.appendManifest]] (nullability included).
     */
   val ManifestSchema: MessageType = MessageTypeParser.parseMessageType(
@@ -92,6 +97,63 @@ private[graft] object BlockParquet {
     g.add("table_hash", b.table_hash)
     g
   }
+
+  /** Stage `blocks` as block files under `stagingDir` with no re-read of
+    * what was written: each task writes its partition as at most ONE file,
+    * `<prefix>-p<partition>-t<attempt>.parquet` (a retried or speculative
+    * attempt never collides; an empty partition writes nothing), and
+    * reports one manifest row per bin it wrote, claiming that file (its
+    * `snapshot_id` is 0: the committing caller assigns the id). Callers
+    * publish exactly the files the returned rows name — a failed attempt's
+    * file is named by none.
+    */
+  def stage(blocks: Dataset[EncodedBlock], stagingDir: String, prefix: String): Array[EncodeJob.BinManifest] = {
+    val spark = blocks.sparkSession
+    import spark.implicits._
+    val conf = new graft.sources.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    blocks.mapPartitions(it => writeFile(it, stagingDir, prefix, conf)).collect()
+  }
+
+  /** One task's side of [[stage]]. */
+  private def writeFile(
+      blocks: Iterator[EncodedBlock],
+      stagingDir: String,
+      prefix: String,
+      conf: graft.sources.SerializableHadoopConf
+  ): Iterator[EncodeJob.BinManifest] = {
+    if (!blocks.hasNext) return Iterator.empty
+    val task = org.apache.spark.TaskContext.get()
+    val name = f"$prefix-p${task.partitionId()}%05d-t${task.taskAttemptId()}.parquet"
+    val groups = new SimpleGroupFactory(Schema)
+    val perBin = scala.collection.mutable.TreeMap[Int, EncodeJob.BinManifest]()
+    val w = open(new Path(stagingDir, name), conf.value)
+    try
+      blocks.foreach { b =>
+        w.write(toGroup(b, groups))
+        val row = EncodeJob.BinManifest(
+          0L, b.bin, 1L, b.n_rows.toLong, b.n_values,
+          b.payload.length.toLong + b.meta_bytes, b.payload_bits, b.table_hash, name
+        )
+        perBin(b.bin) = perBin.get(b.bin).fold(row)(mergeManifest(_, row))
+      }
+    finally w.close()
+    perBin.valuesIterator
+  }
+
+  /** Sum two manifest rows of one bin (the aggregation of
+    * [[EncodeJob.appendManifest]]).
+    */
+  def mergeManifest(a: EncodeJob.BinManifest, b: EncodeJob.BinManifest): EncodeJob.BinManifest =
+    a.copy(
+      n_blocks = a.n_blocks + b.n_blocks,
+      n_rows = a.n_rows + b.n_rows,
+      n_values = a.n_values + b.n_values,
+      payload_bytes = a.payload_bytes + b.payload_bytes,
+      payload_bits = a.payload_bits + b.payload_bits,
+      files =
+        if (a.files == b.files) a.files
+        else (a.files.split(',') ++ b.files.split(',')).distinct.sorted.mkString(",")
+    )
 
   /** Write `rows` as one manifest parquet file at `file`. */
   def writeManifest(file: Path, conf: Configuration, rows: Seq[EncodeJob.BinManifest]): Unit = {

@@ -300,14 +300,17 @@ object Deletes {
       val bTables = spark.sparkContext.broadcast(tables)
       val uuid = java.util.UUID.randomUUID().toString
       val staging = new Path(s"$outDir/_write_staging/replace-$uuid")
-      GraftPipeline
-        .encode(cached, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, binsTouched.length))))
-        .write
-        .parquet(staging.toString)
-      val parts = fs
-        .listStatus(staging)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
+      // only the staged file names are used: the manifest is re-derived
+      // after the commit (the touched bins keep their older files too)
+      val parts = BlockParquet
+        .stage(
+          GraftPipeline.encode(cached, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, binsTouched.length)))),
+          staging.toString,
+          s"replace-$uuid"
+        )
+        .map(_.files)
+        .distinct
+        .sorted
 
       // Rollback handlers are scoped to END at the commit point: once the
       // snapshot references the delete file and the renamed blocks, deleting
@@ -318,10 +321,10 @@ object Deletes {
       val renamed = scala.collection.mutable.ArrayBuffer[String]()
       var committed = false
       try {
-        parts.zipWithIndex.foreach { case (st, k) =>
+        parts.zipWithIndex.foreach { case (part, k) =>
           val name = s"w-replace-$uuid-$k.parquet"
           val dest = new Path(s"$outDir/blocks/$name")
-          require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
+          require(fs.rename(new Path(staging, part), dest), s"rename $part -> $dest failed")
           renamed += name
         }
         val delParts = writeDeleteFiles(

@@ -4,10 +4,14 @@ import graft.core._
 import graft.core.MiniJson.ObjOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** Resumable, lineage-tracked encode job (the generalization of the
   * reference's properties/metadata surface, /root/reference/src/graphs/
@@ -281,7 +285,7 @@ object EncodeJob {
   /** The known block schema: passing it skips parquet schema inference (a
     * one-task footer-reading job per read).
     */
-  private lazy val BlockSchema = Encoders.product[EncodedBlock].schema
+  private[pipeline] lazy val BlockSchema = Encoders.product[EncodedBlock].schema
 
   /** Bins already committed to blocks/ (empty if no output yet). */
   def doneBins(spark: SparkSession, outDir: String): Set[Int] = {
@@ -552,17 +556,7 @@ object EncodeJob {
     // self-repair: a crash between a block file's rename (the unit of
     // progress) and the manifest commit leaves a done bin with no manifest
     // row forever — resume re-derives those rows from the committed blocks.
-    val manifested: Set[Int] =
-      if (!exists(spark, s"$outDir/_manifest")) Set.empty
-      else
-        spark.read
-          .parquet(s"$outDir/_manifest")
-          .select("bin")
-          .distinct()
-          .as[Int]
-          .collect()
-          .toSet
-    val repair = done -- manifested
+    val repair = done -- manifestedBins(spark, outDir)
 
     if (todo.nonEmpty) {
       // 3. encode only the missing bins: the bin predicate prunes before the
@@ -641,15 +635,15 @@ object EncodeJob {
   }
 
   /** Commit one run's encoded blocks with no re-read of what was written.
-    * Each encode task writes its partition's blocks as ONE file under
-    * `_write_staging/encode-<run>/` (named by task attempt, so a retried or
-    * speculative attempt never collides) and reports one manifest row per
-    * bin it wrote. The driver then
+    * The encode tasks stage their partitions under
+    * `_write_staging/encode-<run>/` through [[BlockParquet.stage]] (one
+    * file per partition, holding whole bins) and report one manifest row
+    * per bin. The driver then
     *   1. renames the files of the collected attempts into `blocks/` —
     *      a partition holds whole bins, so every rename publishes complete
     *      bins and is the unit of progress a resume skips;
-    *   2. writes the reported rows as ONE manifest file, staged and then
-    *      renamed into `_manifest/` (all-or-none, like [[appendManifest]]).
+    *   2. publishes the reported rows as ONE manifest file
+    *      ([[publishManifest]]).
     * A kill between the two leaves renamed bins with no manifest row; the
     * next run's repair re-derives them with [[appendManifest]].
     */
@@ -659,17 +653,11 @@ object EncodeJob {
       snapshotId: Long
   ): Unit = {
     val spark = blocks.sparkSession
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
     val f = fs(spark, outDir)
     val runId = java.util.UUID.randomUUID().toString
     val staging = new Path(s"$outDir/_write_staging/$StagingPrefix$runId")
-    val stagingDir = staging.toString
-    val sConf = new graft.sources.SerializableHadoopConf(conf)
     try {
-      val reported = blocks
-        .mapPartitions(it => writeBlockFile(it, stagingDir, runId, snapshotId, sConf))
-        .collect()
+      val reported = BlockParquet.stage(blocks, staging.toString, s"$StagingPrefix$runId")
       val blocksDir = new Path(s"$outDir/blocks")
       f.mkdirs(blocksDir)
       reported.map(_.files).distinct.sorted.foreach { name =>
@@ -677,72 +665,92 @@ object EncodeJob {
         require(f.rename(src, new Path(blocksDir, name)), s"rename $src -> $blocksDir failed")
       }
       if (reported.nonEmpty) {
-        val rows = reported.groupBy(_.bin).values.map(_.reduce(mergeManifest)).toSeq.sortBy(_.bin)
-        val staged = new Path(staging, "manifest.parquet")
-        BlockParquet.writeManifest(staged, conf, rows)
-        val manifestDir = new Path(s"$outDir/_manifest")
-        f.mkdirs(manifestDir)
-        val dest = new Path(manifestDir, s"$StagingPrefix$runId.parquet")
-        require(f.rename(staged, dest), s"rename $staged -> $dest failed")
+        val id = manifestId(spark, outDir, snapshotId)
+        val rows = reported.groupBy(_.bin).values.map(_.reduce(BlockParquet.mergeManifest).copy(snapshot_id = id))
+        publishManifest(spark, outDir, s"$StagingPrefix$runId.parquet", rows.toSeq.sortBy(_.bin))
       }
     } finally f.delete(staging, true): Unit
   }
 
-  /** One encode task's side of [[commitBlocks]]: write the partition's
-    * blocks to one staged file and return its per-bin manifest rows.
+  /** The id of a new manifest commit's rows: `requested`, raised past the
+    * newest row of every committed manifest file (read from the footers'
+    * `snapshot_id` statistics, no row is read). The manifest index
+    * resolves each bin to its highest-id row, and maintenance rows carry
+    * ids in [[Maintenance.MaintenanceEpochBase]]'s epoch — a data commit's
+    * re-derivation after a compaction must still supersede them.
     */
-  private def writeBlockFile(
-      blocks: Iterator[EncodedBlock],
-      stagingDir: String,
-      runId: String,
-      snapshotId: Long,
-      conf: graft.sources.SerializableHadoopConf
-  ): Iterator[BinManifest] = {
-    if (!blocks.hasNext) return Iterator.empty
-    val task = org.apache.spark.TaskContext.get()
-    val name = f"$StagingPrefix$runId-p${task.partitionId}%05d-t${task.taskAttemptId}.parquet"
-    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(BlockParquet.Schema)
-    val perBin = scala.collection.mutable.TreeMap[Int, BinManifest]()
-    val w = BlockParquet.open(new Path(stagingDir, name), conf.value)
-    try
-      blocks.foreach { b =>
-        w.write(BlockParquet.toGroup(b, groups))
-        val row = BinManifest(
-          snapshotId, b.bin, 1L, b.n_rows.toLong, b.n_values,
-          b.payload.length.toLong + b.meta_bytes, b.payload_bits, b.table_hash, name
-        )
-        perBin(b.bin) = perBin.get(b.bin).fold(row)(mergeManifest(_, row))
-      }
-    finally w.close()
-    perBin.valuesIterator
+  private def manifestId(spark: SparkSession, outDir: String, requested: Long): Long = {
+    val f = fs(spark, outDir)
+    val dir = new Path(s"$outDir/_manifest")
+    if (!f.exists(dir)) return requested
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ids = f.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try
+        r.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).map { rg =>
+          val stats: org.apache.parquet.column.statistics.Statistics[_] =
+            rg.getColumns.asScala.find(_.getPath.toDotString == "snapshot_id").get.getStatistics
+          require(stats.hasNonNullValue, s"${st.getPath}: no snapshot_id statistics in its footer")
+          stats.genericGetMax.asInstanceOf[java.lang.Long].longValue
+        }
+      finally r.close()
+    }
+    math.max(requested, ids.maxOption.fold(0L)(_ + 1))
   }
 
-  /** Sum two manifest rows of one bin (the aggregation of [[appendManifest]]). */
-  private def mergeManifest(a: BinManifest, b: BinManifest): BinManifest =
-    a.copy(
-      n_blocks = a.n_blocks + b.n_blocks,
-      n_rows = a.n_rows + b.n_rows,
-      n_values = a.n_values + b.n_values,
-      payload_bytes = a.payload_bytes + b.payload_bytes,
-      payload_bits = a.payload_bits + b.payload_bits,
-      files =
-        if (a.files == b.files) a.files
-        else (a.files.split(',') ++ b.files.split(',')).distinct.sorted.mkString(",")
-    )
+  /** Bins any committed manifest row names (empty when none). */
+  private[pipeline] def manifestedBins(spark: SparkSession, outDir: String): Set[Int] = {
+    import spark.implicits._
+    if (!exists(spark, s"$outDir/_manifest")) Set.empty
+    else spark.read.parquet(s"$outDir/_manifest").select("bin").distinct().as[Int].collect().toSet
+  }
+
+  /** Publish `rows` as ONE manifest file: written under
+    * `_write_staging/manifest-<uuid>/`, then renamed to `_manifest/<name>`.
+    * The single rename makes a commit's claims visible all-or-none — a
+    * multi-file manifest commit could crash halfway and leave a block file
+    * claimed by only SOME of its bins' rows, making the scan's claims-based
+    * pruning silently drop committed data for the missing bins.
+    */
+  private[pipeline] def publishManifest(
+      spark: SparkSession,
+      outDir: String,
+      name: String,
+      rows: Seq[BinManifest]
+  ): Unit = {
+    val f = fs(spark, outDir)
+    val staging = new Path(s"$outDir/_write_staging/manifest-${java.util.UUID.randomUUID()}")
+    try {
+      val staged = new Path(staging, "manifest.parquet")
+      BlockParquet.writeManifest(staged, spark.sparkContext.hadoopConfiguration, rows)
+      val manifestDir = new Path(s"$outDir/_manifest")
+      f.mkdirs(manifestDir)
+      val dest = new Path(manifestDir, name)
+      require(f.rename(staged, dest), s"rename $staged -> $dest failed")
+    } finally f.delete(staging, true): Unit
+  }
 
   /** Derive + append manifest rows for `bins` from the COMMITTED blocks
-    * (a distributed scan that reads every payload for its length). The
-    * manifest rows of a [[run]]'s own bins come from its encode tasks
+    * (a distributed scan that reads every payload for its length): one row
+    * per requested bin, a zero row (no blocks, no files) for a bin no live
+    * block holds — so a bin a purge or rebin emptied stops counting its
+    * stale winner, and the manifest index's numRows stays exact. The rows
+    * carry `snapshotId`, raised past every earlier manifest row
+    * ([[manifestId]]), and land as one staged-then-renamed file
+    * ([[publishManifest]]).
+    *
+    * The manifest rows of a [[run]]'s own bins come from its encode tasks
     * instead ([[commitBlocks]]); [[run]] calls this only to repair bins a
-    * killed run renamed into blocks/ but never manifested. `files` records which
-    * block parquet files hold each bin — the driver-side bin→file index
-    * the DSv2 scan prunes from at any file count (the file-level analog of
-    * the reference's random-access index, huffman_graph_decoder.rs:151-205).
-    * Bins are write-once, so a bin's file set never changes after its
-    * manifest row lands; a file whose bins crashed out of the manifest is
-    * claimed by NO row and the scan keeps it conservatively. Also the
-    * manifesting step for blocks written OUTSIDE [[run]] (benchmarks, the
-    * Verify corpus dirs).
+    * killed run renamed into blocks/ but never manifested. Writers whose
+    * bins keep files they did not write — appends, replaces, adopts and
+    * the [[Maintenance]] rewrites — call it to re-derive those bins over
+    * every surviving file. `files` records which block parquet files hold
+    * each bin — the driver-side bin→file index the DSv2 scan prunes from at
+    * any file count (the file-level analog of the reference's random-access
+    * index, huffman_graph_decoder.rs:151-205). A file whose bins crashed
+    * out of the manifest is claimed by NO row and the scan keeps it
+    * conservatively. Also the manifesting step for blocks written OUTSIDE
+    * [[run]] (benchmarks, the Verify corpus dirs).
     */
   def appendManifest(
       spark: SparkSession,
@@ -750,8 +758,10 @@ object EncodeJob {
       bins: Set[Int],
       snapshotId: Long
   ): Unit = {
+    if (bins.isEmpty) return
     import spark.implicits._
-    val manifest = liveBlocks(spark, outDir)
+    val id = manifestId(spark, outDir, snapshotId)
+    val derived = liveBlocks(spark, outDir)
       .where(binMembership(col("bin"), bins))
       .withColumn("__file", element_at(split(input_file_name(), "/"), -1))
       .groupBy($"bin")
@@ -764,20 +774,19 @@ object EncodeJob {
         first($"table_hash").as("table_hash"),
         concat_ws(",", sort_array(collect_set($"__file"))).as("files")
       )
-      .withColumn("snapshot_id", lit(snapshotId))
-      .select(
-        $"snapshot_id", $"bin", $"n_blocks", $"n_rows", $"n_values",
-        $"payload_bytes", $"payload_bits", $"table_hash", $"files"
-      )
+      .withColumn("snapshot_id", lit(id))
       .as[BinManifest]
-    // ONE part file per append: the commit of a single file is atomic
-    // (rename), so an append's claims become visible all-or-none — a
-    // multi-part append could crash mid-commit and leave a block file
-    // claimed by only SOME of its bins' rows, making the scan's
-    // claims-based pruning silently drop committed data for the missing
-    // bins. The aggregation above stays distributed; only the tiny
-    // one-row-per-bin result funnels through the single write task.
-    manifest.coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/_manifest")
+      .collect()
+    val empty = bins -- derived.map(_.bin)
+    val zeros =
+      if (empty.isEmpty) Seq.empty
+      else {
+        val tableHash = loadMeta(spark, outDir)
+          .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/meta.json missing"))
+          .long("table_hash")
+        empty.toSeq.map(b => BinManifest(id, b, 0L, 0L, 0L, 0L, 0L, tableHash, ""))
+      }
+    publishManifest(spark, outDir, s"manifest-${java.util.UUID.randomUUID()}.parquet", (derived ++ zeros).sortBy(_.bin))
   }
 
   /** Read the encoded blocks back as a typed Dataset (compaction-aware).

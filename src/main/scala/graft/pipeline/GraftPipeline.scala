@@ -561,6 +561,8 @@ object GraftPipeline {
 
     new Iterator[EncodedBlock] {
           private val hybrid = new HybridCodec(symbolTables, model)
+          // an FNV pass over every table cell: once per partition, not per block
+          private lazy val tableHash = symbolTables.tableHash
           private var pending: (String, Array[Int], Int, String, Int) = null
           private var done = false
           private var seqBin = -1
@@ -683,7 +685,7 @@ object GraftPipeline {
               payload_bits = w.bitsWritten,
               meta_bytes = dPayload.length.toLong + sPayload.length + nPayload.length +
                 rbPayload.length,
-              table_hash = symbolTables.tableHash
+              table_hash = tableHash
             )
           }
         }

@@ -4,7 +4,7 @@ import graft.core.MiniJson
 import graft.core.MiniJson.ObjOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
@@ -38,11 +38,15 @@ import java.nio.charset.StandardCharsets
   * compacted dir and tombstones the input files, so no reader ever sees a
   * state where rows are duplicated or missing:
   *
-  *   1. write compacted parquet to `_compacted/c<cid>-tmp/` (invisible:
-  *      readers only union `_compacted/c<n>/` dirs that have a marker)
-  *   2. rename staged part files to globally unique names `c<cid>-<k>.parquet`
-  *      (manifest claims are keyed by file NAME — uniqueness across blocks/
-  *      and all compactions keeps the claims unambiguous)
+  *   1. stage the rewritten blocks into `_compacted/c<cid>-tmp/` through
+  *      [[BlockParquet.stage]] (invisible: readers only union
+  *      `_compacted/c<n>/` dirs that have a marker); the stage tasks report
+  *      the files they wrote and the bins each holds
+  *   2. rename exactly the reported files to globally unique names
+  *      `c<cid>-<k>.parquet` (manifest claims are keyed by file NAME —
+  *      uniqueness across blocks/ and all compactions keeps the claims
+  *      unambiguous) and delete anything else staged (a failed task
+  *      attempt's file)
   *   3. rename dir `c<cid>-tmp` -> `c<cid>` (still invisible, no marker yet)
   *   4. write `c<cid>.json` via temp + rename — THE commit point
   *   5. append manifest rows for the affected bins claiming the new files
@@ -105,7 +109,9 @@ object Maintenance {
     * far above any real data-snapshot id (snapshots are sequential from 0),
     * monotone in compaction id — so per-bin latest-row resolution in the
     * scan's manifest index always prefers the post-compaction claims, and a
-    * re-compacted bin's newest claims win again.
+    * re-compacted bin's newest claims win again. A later data commit's
+    * re-manifest is raised past these ids in turn
+    * ([[EncodeJob.appendManifest]]).
     */
   val MaintenanceEpochBase = 1000000000L
 
@@ -322,29 +328,20 @@ object Maintenance {
 
     // 1. stage: coalesce (no shuffle — file merge, not redistribution) and
     // re-cluster rows locally so bin row-group stats survive the merge
-    val tmpDir = new Path(compactRoot(outDir), s"c$cid-tmp")
-    spark.read
-      .parquet(victims.map(_._1).toIndexedSeq: _*)
+    import spark.implicits._
+    val blocks = readVictims(spark, victims)
       .coalesce(nOut)
       .sortWithinPartitions(col("bin"), col("block_seq"))
-      .write
-      .mode("overwrite")
-      .parquet(tmpDir.toString)
+      .as[EncodedBlock]
+    val staged = stageRewrite(blocks, outDir, cid)
 
     val (added, addedBytes) =
-      commitRewrite(fs, outDir, cid, tmpDir, victims, victimBytes, extraMarkerFields = Map.empty)
+      commitRewrite(fs, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
 
     // 5. advisory re-manifest: fresh claims for every bin the rewrite moved,
     // derived from the LIVE set (a bin spread across victim and surviving
     // files gets both its new and its untouched files claimed)
-    import spark.implicits._
-    val affected = spark.read
-      .parquet(new Path(compactRoot(outDir), s"c$cid").toString)
-      .select("bin")
-      .distinct()
-      .as[Int]
-      .collect()
-      .toSet
+    val affected = staged.map(_.bin).toSet
     EncodeJob.appendManifest(spark, outDir, affected, MaintenanceEpochBase + cid)
 
     Some(CompactionResult(cid, victims.length, added.length, victimBytes, addedBytes, affected.size))
@@ -382,7 +379,7 @@ object Maintenance {
     val numBins = meta.long("num_bins").toInt
     // one tiny metadata scan: the dir's self-describing convention (keep
     // embedding iff any live block embeds) + the full bin set to re-manifest
-    val blocksDf = spark.read.parquet(victims.map(_._1).toIndexedSeq: _*)
+    val blocksDf = readVictims(spark, victims)
     val metaRow = blocksDf
       .agg(max(col("embedded_tables")), collect_set(col("bin")))
       .head()
@@ -398,30 +395,21 @@ object Maintenance {
     )
     val bTables = spark.sparkContext.broadcast(tables)
     val cid = nextCompactionId(outDir, conf)
-    val tmpDir = new Path(compactRoot(outDir), s"c$cid-tmp")
     val rows = GraftPipeline.decode(blocksDf.as[EncodedBlock], bTables, cfg)
-    GraftPipeline
-      .encode(
-        rows,
-        bTables,
-        cfg,
-        shufflePartitions = Some(math.min(numBins, math.max(32, affected.size)))
-      )
-      .write
-      .mode("overwrite")
-      .parquet(tmpDir.toString)
-    val stagedBytes = fs
-      .listStatus(tmpDir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen)
-      .sum
+    val staged = stageRewrite(
+      GraftPipeline.encode(rows, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, affected.size)))),
+      outDir,
+      cid
+    )
+    val tmpDir = rewriteStaging(outDir, cid)
+    val stagedBytes = staged.map(_.files).distinct.map(n => fs.getFileStatus(new Path(tmpDir, n)).getLen).sum
     val victimBytes = victims.map(_._2).sum
     if (stagedBytes >= victimBytes) {
       fs.delete(tmpDir, true)
       return None
     }
     val (added, addedBytes) =
-      commitRewrite(fs, outDir, cid, tmpDir, victims, victimBytes, extraMarkerFields = Map.empty)
+      commitRewrite(fs, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
     EncodeJob.appendManifest(spark, outDir, affected, MaintenanceEpochBase + cid)
     Some(CompactionResult(cid, victims.length, added.length, victimBytes, addedBytes, affected.size))
   }
@@ -538,26 +526,23 @@ object Maintenance {
 
     val victims = liveBlockFiles(outDir, conf)
     val cid = nextCompactionId(outDir, conf)
-    val tmpDir = new Path(compactRoot(outDir), s"c$cid-tmp")
-    if (victims.nonEmpty) {
-      val blocksDf = spark.read.parquet(victims.map(_._1).toIndexedSeq: _*)
-      val embed = blocksDf.agg(max(col("embedded_tables"))).head().getBoolean(0)
-      val cfg = GraftPipeline.Config(
-        numContexts = tables.numContexts,
-        maxBits = tables.maxBits,
-        numBins = newNumBins,
-        salt = salt,
-        contextModel = meta.strOpt("context_model").getOrElse("simple"),
-        embedTables = embed
-      )
-      val bTables = spark.sparkContext.broadcast(tables)
-      val rows = GraftPipeline.decode(blocksDf.as[EncodedBlock], bTables, cfg)
-      GraftPipeline
-        .encode(rows, bTables, cfg)
-        .write
-        .mode("overwrite")
-        .parquet(tmpDir.toString)
-    } else fs.mkdirs(tmpDir): Unit // fully-purged table: layout-only rebin
+    val staged =
+      if (victims.isEmpty) Array.empty[EncodeJob.BinManifest] // fully-purged table: layout-only rebin
+      else {
+        val blocksDf = readVictims(spark, victims)
+        val embed = blocksDf.agg(max(col("embedded_tables"))).head().getBoolean(0)
+        val cfg = GraftPipeline.Config(
+          numContexts = tables.numContexts,
+          maxBits = tables.maxBits,
+          numBins = newNumBins,
+          salt = salt,
+          contextModel = meta.strOpt("context_model").getOrElse("simple"),
+          embedTables = embed
+        )
+        val bTables = spark.sparkContext.broadcast(tables)
+        val rows = GraftPipeline.decode(blocksDf.as[EncodedBlock], bTables, cfg)
+        stageRewrite(GraftPipeline.encode(rows, bTables, cfg), outDir, cid)
+      }
 
     val extra = Map[String, MiniJson.J](
       "rebin_num_bins" -> MiniJson.JNum(newNumBins.toString),
@@ -571,7 +556,7 @@ object Maintenance {
     )
     // THE commit point: files + routing flip together
     val (added, _) =
-      commitRewrite(fs, outDir, cid, tmpDir, victims, victims.map(_._2).sum, extraMarkerFields = extra)
+      commitRewrite(fs, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = extra)
     if (healAfterCommit) healRebin(spark, outDir)
     Some(RebinResult(cid, base, oldNumBins, newNumBins, victims.length, added.length))
   }
@@ -587,15 +572,15 @@ object Maintenance {
     *      rebin guard;
     *   3. rewrite meta.json's num_bins/salt to match (the marker override
     *      then becomes a no-op);
-    *   4. advisory re-manifest: fresh claims for every data-bearing bin in
-    *      the new layout plus explicit zero rows for every other bin either
-    *      layout ever manifested — point-read planning returns to
-    *      O(hit-bins) and the manifest index's numRows stays exact.
+    *   4. advisory re-manifest of every new-layout bin and every bin either
+    *      layout ever manifested: fresh claims for the data-bearing ones,
+    *      [[EncodeJob.appendManifest]]'s zero rows for the rest — point-read
+    *      planning returns to O(hit-bins) and the manifest index's numRows
+    *      stays exact.
     * A `c<cid>.rebin-healed` marker (written last) gates re-entry so vacuum
     * can call this unconditionally without re-running the spark jobs.
     */
   private[graft] def healRebin(spark: SparkSession, outDir: String): Unit = {
-    import spark.implicits._
     import graft.core.MiniJson.ObjOps
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(outDir, conf)
@@ -696,105 +681,55 @@ object Maintenance {
     }
 
     // 4. advisory re-manifest in the new bin space
-    val live = liveBlockFiles(outDir, conf)
-    val dataBins: Set[Int] =
-      if (live.isEmpty) Set.empty
-      else
-        spark.read
-          .parquet(live.map(_._1).toIndexedSeq: _*)
-          .select("bin")
-          .distinct()
-          .as[Int]
-          .collect()
-          .toSet
-    if (dataBins.nonEmpty)
-      EncodeJob.appendManifest(spark, outDir, dataBins, MaintenanceEpochBase + r.cid)
-    val manifestDir = new Path(s"$outDir/_manifest")
-    val manifested: Set[Int] =
-      if (!fs.exists(manifestDir)) Set.empty
-      else
-        spark.read
-          .parquet(manifestDir.toString)
-          .select("bin")
-          .distinct()
-          .as[Int]
-          .collect()
-          .toSet
-    val toZero = ((0 until r.numBins).toSet ++ manifested) -- dataBins
-    if (toZero.nonEmpty) {
-      toZero.toSeq.sorted
-        .map { b =>
-          EncodeJob.BinManifest(
-            snapshot_id = MaintenanceEpochBase + r.cid,
-            bin = b,
-            n_blocks = 0L,
-            n_rows = 0L,
-            n_values = 0L,
-            payload_bytes = 0L,
-            payload_bits = 0L,
-            table_hash = r.tableHash,
-            files = ""
-          )
-        }
-        .toDS()
-        .coalesce(1)
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(manifestDir.toString)
-    }
+    val bins = (0 until r.numBins).toSet ++ EncodeJob.manifestedBins(spark, outDir)
+    EncodeJob.appendManifest(spark, outDir, bins, MaintenanceEpochBase + r.cid)
 
     writeAtomic(fs, healedMarker, s"""{"cid":${r.cid}}""")
   }
 
-  /** Steps 2–4 of the marker commit protocol, shared by [[compact]] and
-    * [[purgeDeletes]]: rename staged parts to globally unique names, publish
-    * the dir, then flip visibility with ONE atomic marker write (tombstoning
-    * `victims`, publishing the renamed parts, plus any operation-specific
-    * marker fields). Returns (published names, their total bytes).
+  /** The staging dir of compaction `cid` (step 1 of the protocol). */
+  private def rewriteStaging(outDir: String, cid: Long): Path = new Path(compactRoot(outDir), s"c$cid-tmp")
+
+  /** Live block files as a block frame (known schema: no inference job). */
+  private def readVictims(spark: SparkSession, victims: Array[(String, Long)]) =
+    spark.read.schema(EncodeJob.BlockSchema).parquet(victims.map(_._1).toIndexedSeq: _*)
+
+  /** Step 1 of the marker commit protocol: stage `blocks` for compaction
+    * `cid`; returns the stage tasks' reported rows (one per file and bin).
+    */
+  private def stageRewrite(blocks: Dataset[EncodedBlock], outDir: String, cid: Long): Array[EncodeJob.BinManifest] =
+    BlockParquet.stage(blocks, rewriteStaging(outDir, cid).toString, s"c$cid")
+
+  /** Steps 2–4 of the marker commit protocol, shared by every rewrite:
+    * rename the files the stage tasks reported (`staged`) to globally unique
+    * names, publish the dir, then flip visibility with ONE atomic marker
+    * write (tombstoning `victims`, publishing the renamed files, plus any
+    * operation-specific marker fields). Returns (published names, their
+    * total bytes).
     */
   private def commitRewrite(
       fs: FileSystem,
       outDir: String,
       cid: Long,
-      tmpDir: Path,
+      staged: Array[EncodeJob.BinManifest],
       victims: Array[(String, Long)],
       victimBytes: Long,
       extraMarkerFields: Map[String, MiniJson.J]
   ): (Seq[String], Long) = {
     // 2. unique, stable names for the manifest's file-name-keyed claims.
-    // Zero-row staged parts (empty shuffle partitions — e.g. a rebin whose
-    // new bin count exceeds the populated bins) are dropped, not published:
-    // an empty file is claimed by no manifest row, so every later pruned
-    // plan would keep it conservatively forever — one wasted task per empty
-    // file per point read.
-    val stagedAll = fs
-      .listStatus(tmpDir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-      .sortBy(_.getName)
-    // footer reads in parallel (a corpus-wide rebin stages thousands of
-    // parts; serial opens would widen the pre-commit window by O(files)
-    // round-trips on an object store)
-    val emptyFlags = java.util.Arrays
-      .stream(stagedAll.asInstanceOf[Array[AnyRef]])
-      .parallel()
-      .map { p =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p.asInstanceOf[Path], fs.getConf)
-        )
-        val n = try r.getRecordCount finally r.close()
-        java.lang.Boolean.valueOf(n == 0L): AnyRef
-      }
-      .toArray
-      .map(_.asInstanceOf[java.lang.Boolean].booleanValue())
-    val staged = stagedAll.zip(emptyFlags).filter { case (p, empty) =>
-      if (empty) { fs.delete(p, false): Unit; false } else true
-    }.map(_._1)
-    val added = staged.zipWithIndex.map { case (p, k) =>
+    // Every reported file holds blocks (a stage task writes no file for an
+    // empty partition), so each published file is claimed by the
+    // re-manifest; anything else staged is a failed attempt's leftover.
+    val tmpDir = rewriteStaging(outDir, cid)
+    fs.mkdirs(tmpDir)
+    val added = staged.map(_.files).distinct.sorted.zipWithIndex.map { case (name, k) =>
       val dest = new Path(tmpDir, s"c$cid-$k.parquet")
-      require(fs.rename(p, dest), s"rename $p -> $dest failed")
+      require(fs.rename(new Path(tmpDir, name), dest), s"rename $name -> $dest failed")
       dest.getName
     }
+    fs.listStatus(tmpDir)
+      .filterNot(st => added.contains(st.getPath.getName))
+      .foreach(st => fs.delete(st.getPath, true): Unit)
 
     // 3. publish the dir (still invisible: no marker yet)
     val finalDir = new Path(compactRoot(outDir), s"c$cid")
@@ -927,97 +862,50 @@ object Maintenance {
       "applied_deletes" -> MiniJson.JArr(state.live.toVector.map(d => MiniJson.JStr(d.name)))
     )
 
-    var added = Seq.empty[String]
-    if (victims.nonEmpty) {
-      val cfg = GraftPipeline.Config(
-        numContexts = tables.numContexts,
-        maxBits = tables.maxBits,
-        numBins = numBins,
-        salt = meta.long("salt"),
-        contextModel = meta.strOpt("context_model").getOrElse("simple"),
-        embedTables = embed
+    val cfg = GraftPipeline.Config(
+      numContexts = tables.numContexts,
+      maxBits = tables.maxBits,
+      numBins = numBins,
+      salt = meta.long("salt"),
+      contextModel = meta.strOpt("context_model").getOrElse("simple"),
+      embedTables = embed
+    )
+    val bTables = spark.sparkContext.broadcast(tables)
+    val liveByName = live.map(f => (f._1.substring(f._1.lastIndexOf('/') + 1), f._1)).toMap
+
+    // 1. stage the re-encoded survivors (same kernel as the batch encoder),
+    // one rewrite per applicable-delete-set group so each file loses
+    // exactly the rows its OWN deletes hide. The routing exchange is sized
+    // to the AFFECTED bins, not the table's bin count — purging 1k docs of
+    // an 800k-bin corpus must not launch 800k near-empty shuffle tasks.
+    // Deleted ids that hit no live bins (already-purged dirs, unknown ids)
+    // stage nothing: the empty rewrite still retires the delete files.
+    val staged = victimsMeta.groupBy(_._4).toArray.flatMap { case (delNames, members) =>
+      val groupFiles = members.map(m => (liveByName(m._1), 0L))
+      val groupBins = members.iterator.flatMap(_._2).toSet
+      val rows = GraftPipeline.decode(readVictims(spark, groupFiles).as[EncodedBlock], bTables, cfg)
+      val ids = spark.read
+        .parquet(delNames.map(n => s"$outDir/_deletes/$n"): _*)
+        .select($"doc_id")
+      val kept = rows
+        .join(ids, Seq("doc_id"), "left_anti")
+        .select($"doc_id", $"tokens", $"n_tok", $"source")
+        .as[TokenRow]
+      stageRewrite(
+        GraftPipeline.encode(kept, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, groupBins.size)))),
+        outDir,
+        cid
       )
-      val bTables = spark.sparkContext.broadcast(tables)
-      val liveByName = live.map(f => (f._1.substring(f._1.lastIndexOf('/') + 1), f._1)).toMap
-
-      // 1. stage the re-encoded survivors (same kernel as the batch
-      // encoder), one rewrite per applicable-delete-set group so each file
-      // loses exactly the rows its OWN deletes hide. The routing exchange
-      // is sized to the AFFECTED bins, not the table's bin count — purging
-      // 1k docs of an 800k-bin corpus must not launch 800k near-empty
-      // shuffle tasks.
-      val tmpDir = new Path(compactRoot(outDir), s"c$cid-tmp")
-      fs.mkdirs(tmpDir)
-      victimsMeta.groupBy(_._4).foreach { case (delNames, members) =>
-        val groupFiles = members.map(m => liveByName(m._1)).toIndexedSeq
-        val groupBins = members.iterator.flatMap(_._2).toSet
-        val blocksDf = spark.read.parquet(groupFiles: _*)
-        val rows = GraftPipeline.decode(blocksDf.as[EncodedBlock], bTables, cfg)
-        val ids = spark.read
-          .parquet(delNames.map(n => s"$outDir/_deletes/$n"): _*)
-          .select($"doc_id")
-        val kept = rows
-          .join(ids, Seq("doc_id"), "left_anti")
-          .select($"doc_id", $"tokens", $"n_tok", $"source")
-          .as[TokenRow]
-        GraftPipeline
-          .encode(kept, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, groupBins.size))))
-          .write
-          .mode("append")
-          .parquet(tmpDir.toString)
-      }
-
-      val (addedNames, _) = commitRewrite(
-        fs, outDir, cid, tmpDir, victims, victims.map(_._2).sum, extraMarkerFields = appliedField
-      )
-      added = addedNames
-    } else {
-      // deleted ids hit no live bins (already-purged dirs, unknown ids):
-      // commit an empty rewrite so the delete files still retire
-      val tmpDir = new Path(compactRoot(outDir), s"c$cid-tmp")
-      fs.mkdirs(tmpDir)
-      commitRewrite(fs, outDir, cid, tmpDir, Array.empty, 0L, extraMarkerFields = appliedField): Unit
     }
+    val (added, _) = commitRewrite(
+      fs, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = appliedField
+    )
 
-    // 5. advisory re-manifest: fresh claims for every rewritten bin, PLUS
-    // explicit zero rows for bins the purge emptied entirely — the manifest
-    // index's numRows must stop counting their stale winners
-    if (affected.nonEmpty)
-      EncodeJob.appendManifest(spark, outDir, affected, MaintenanceEpochBase + cid)
-    val postLive = liveBlockFiles(outDir, conf)
-    val remaining: Set[Int] =
-      if (affected.isEmpty || postLive.isEmpty) Set.empty
-      else
-        spark.read
-          .parquet(postLive.map(_._1).toIndexedSeq: _*)
-          .where(EncodeJob.binMembership(col("bin"), affected))
-          .select("bin")
-          .distinct()
-          .as[Int]
-          .collect()
-          .toSet
-    val emptied = affected -- remaining
-    if (emptied.nonEmpty) {
-      val zeroRows = emptied.toSeq.sorted.map { b =>
-        EncodeJob.BinManifest(
-          snapshot_id = MaintenanceEpochBase + cid,
-          bin = b,
-          n_blocks = 0L,
-          n_rows = 0L,
-          n_values = 0L,
-          payload_bytes = 0L,
-          payload_bits = 0L,
-          table_hash = tables.tableHash,
-          files = ""
-        )
-      }
-      zeroRows
-        .toDS()
-        .coalesce(1)
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$outDir/_manifest")
-    }
+    // 5. advisory re-manifest: fresh claims for every rewritten bin, and
+    // (appendManifest's zero-fill) a zero row for each bin the purge emptied
+    // entirely — the manifest index's numRows must stop counting its stale
+    // winner
+    EncodeJob.appendManifest(spark, outDir, affected, MaintenanceEpochBase + cid)
 
     Some(
       PurgeResult(cid, victims.length, added.length, state.live.size, state.totalIds, affected.size)
@@ -1283,20 +1171,13 @@ object Maintenance {
       .withColumn("__rk", row_number().over(w))
       .where($"__rk" === 1)
       .drop("__rk")
-    val staging = new Path(s"$outDir/.manifest-rewrite-tmp")
-    winners.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val part = fs
-      .listStatus(staging)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-    require(part.length == 1, s"expected one staged manifest part, got ${part.length}")
-    // unique name: never collides with spark part files or prior rewrites
-    val dest = new Path(dir, s"consolidated-${System.nanoTime()}.parquet")
-    require(fs.rename(part.head, dest), s"rename ${part.head} -> $dest failed")
-    fs.delete(staging, true): Unit
+      .as[EncodeJob.BinManifest]
+      .collect()
+      .sortBy(_.bin)
+    // unique name: never collides with other manifest files or prior rewrites
+    EncodeJob.publishManifest(spark, outDir, s"consolidated-${System.nanoTime()}.parquet", winners)
     before.foreach(p => fs.delete(p, false): Unit)
-    val bins = spark.read.parquet(dest.toString).count()
-    RewriteManifestsResult(before.length, 1, bins)
+    RewriteManifestsResult(before.length, 1, winners.length.toLong)
   }
 
   /** Expire all but the newest `keepLast` snapshots. The oldest RETAINED

@@ -1,7 +1,11 @@
 package graft.sources
 
 import graft.pipeline.{BlockDecoder, Maintenance}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** Corpus integrity audit (`CALL graft.system.audit(path)`) — the fsck an
@@ -9,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   * months of appends, deletes, compactions and adopts: decode EVERY live
   * block through the scan's own [[BlockDecoder]] (table-hash guard and
   * embedded-header check included) and cross-check the decoded value count against
-  * the block's recorded `n_values`, reporting one row per file. Shaped like
+  * the block's recorded `n_values`, reporting one row per file. Under the
+  * blocks, the parquet layer is checked too: every page against the CRC
+  * its writer stored, and the column and offset indexes that bin-filtered
+  * reads skip pages by (a corrupt index could make such a read drop live
+  * rows silently). Shaped like
   * [[TokenIndex.build]]: one task per live file (a corrupt byte is
   * attributed to its file, and the job parallelizes to the file count), a
   * per-file sequential projected read, and O(files) driver rows — the
@@ -54,6 +62,18 @@ object Audit {
       .toSeq
   }
 
+  private def verifyPages(file: String, conf: Configuration): Unit = {
+    val options = HadoopReadOptions.builder(conf).usePageChecksumVerification(true).build()
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf), options)
+    try {
+      r.getFooter.getBlocks.forEach(_.getColumns.forEach { c =>
+        r.readColumnIndex(c)
+        r.readOffsetIndex(c): Unit
+      })
+      while (r.readNextRowGroup() != null) {}
+    } finally r.close()
+  }
+
   private def auditOneFile(
       file: String,
       bytes: Long,
@@ -68,6 +88,7 @@ object Audit {
     var rows = 0L
     var values = 0L
     try {
+      verifyPages(file, sConf.value)
       val decoder = BlockDecoder.fromHeader(headerBytes, maxBits, numContexts, modelName)
       val wanted = Set(
         "bin", "block_seq", "codec", "n_rows", "n_values", "n_toks_codec",

@@ -1535,7 +1535,10 @@ private[sources] object GraftScan {
     * write-once for data snapshots, but [[graft.pipeline.Maintenance]]
     * re-manifests a bin after compaction with fresh claims in the
     * maintenance epoch — the newest row supersedes the stale claims on
-    * tombstoned files and keeps `numRows` exact (not double-counted).
+    * tombstoned files and keeps `numRows` exact (not double-counted). A
+    * manifest commit's rows always carry an id above every earlier row
+    * ([[graft.pipeline.EncodeJob.appendManifest]]), so a data commit after
+    * a compaction supersedes its epoch rows in turn.
     */
   final case class ManifestIndex(numRows: Long, fileBins: Map[String, Array[Int]])
 
@@ -2303,7 +2306,7 @@ private[sources] class GraftColumnarReader(
     // source
     if (!needTokens)
       return new DecodedBlock(bin, hits, docIds, sources, nToks, null, null, null, metaRowBits)
-    val tok = decoder.decodeHits(b, nToks, hits, f.tokenPrefix.getOrElse(Int.MaxValue))
+    val tok = decoder.decodeHits(b, nToks, hits, f.tokenPrefix.getOrElse(Int.MaxValue), metaRowBits)
     tokenValuesDecoded += tok.values.length
 
     // exact containment filter for pushed needles: keep only hit rows

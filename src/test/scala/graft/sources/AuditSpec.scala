@@ -27,9 +27,8 @@ class AuditSpec extends AnyFunSuite {
     assert(rows.forall(_.ok) && rows.forall(_.error.isEmpty))
     assert(rows.map(_.nRows).sum == 300L)
     assert(rows.map(_.nValues).sum == input.collect().map(_.n_tok.toLong).sum)
-    // empty part files (zero-row write tasks) legitimately audit as 0-block
-    // ok rows; at least one real file must carry blocks
-    assert(rows.exists(_.nBlocks > 0L))
+    // every block writer skips empty partitions: no live file is 0-block
+    assert(rows.forall(_.nBlocks > 0L))
   }
 
   test("a corrupted payload is attributed to its file; the rest still report ok") {
@@ -52,6 +51,9 @@ class AuditSpec extends AnyFunSuite {
     val mid = bytes.length / 2
     (0 until 64).foreach(i => bytes(mid + i) = (~bytes(mid + i)).toByte)
     Files.write(p, bytes, StandardOpenOption.TRUNCATE_EXISTING)
+    // drop the checksummed local FS's sidecar, so the flipped bytes reach
+    // parquet and the decoder instead of failing Hadoop's checksum check
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
 
     val rows = Audit.audit(spark, dir)
     val name = new org.apache.hadoop.fs.Path(victim).getName
@@ -59,6 +61,28 @@ class AuditSpec extends AnyFunSuite {
     assert(bad.map(_.file) == Seq(name), s"expected exactly $name flagged, got $bad")
     assert(bad.head.error.nonEmpty)
     assert(rows.filter(_.ok).size == rows.size - 1)
+
+    // one bit inside a second file's `payload` page: the page's CRC names it
+    val second = live(1)
+    val p2 = Paths.get(new java.net.URI(second).getPath)
+    val chunk = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(second), spark.sparkContext.hadoopConfiguration)
+      )
+      try r.getFooter.getBlocks.get(0).getColumns.toArray
+        .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
+        .find(_.getPath.toDotString == "payload").get
+      finally r.close()
+    }
+    val bytes2 = Files.readAllBytes(p2)
+    val at = (chunk.getStartingPos + chunk.getTotalSize / 2).toInt
+    bytes2(at) = (bytes2(at) ^ 1).toByte
+    Files.write(p2, bytes2, StandardOpenOption.TRUNCATE_EXISTING)
+    Files.deleteIfExists(p2.resolveSibling(s".${p2.getFileName}.crc"))
+    val bad2 = Audit.audit(spark, dir).filter(!_.ok)
+    assert(bad2.map(_.file).toSet == Set(name, new org.apache.hadoop.fs.Path(second).getName))
+    assert(bad2.exists(_.error.exists(_.contains("CRC"))), s"no page-CRC failure in $bad2")
   }
 
   test("CALL graft.system.audit returns the same rows through SQL") {

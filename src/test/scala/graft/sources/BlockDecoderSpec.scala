@@ -110,6 +110,17 @@ class BlockDecoderSpec extends AnyFunSuite {
         input.filter(r => point.contains(r.doc_id)),
         spark.read.format("graft").load(dir).where($"doc_id".isin(point.toSeq: _*)).as[TokenRow]
       )
+      // `_row_bits` beside tokens on the sparse point read: the row seek
+      // reuses the stream decoded for the column; both match the full scan
+      val withBits = spark.read.format("graft").load(dir).select($"doc_id", $"tokens", $"_row_bits")
+      val fullBits = withBits.select($"doc_id", $"_row_bits").collect().map(r => r.getString(0) -> r.get(1)).toMap
+      val wantTokens = input.filter(r => point.contains(r.doc_id)).collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
+      val pointRows = withBits.where($"doc_id".isin(point.toSeq: _*)).collect() // one scan reads both
+      assert(pointRows.length == point.size && pointRows.exists(!_.isNullAt(2)), s"embedTables=$embed")
+      pointRows.foreach { r =>
+        val id = r.getString(0)
+        assert(r.getSeq[Int](1) == wantTokens(id) && r.get(2) == fullBits(id), s"$id, embedTables=$embed")
+      }
       check(
         "tokenPrefix = 7",
         input.select($"doc_id", slice($"tokens", 1, 7).as("tokens"), $"n_tok", $"source").as[TokenRow],
