@@ -13,7 +13,9 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.Dataset
 
 /** Hand-rolled parquet IO for block and manifest files — the ONE writer of
-  * files under `blocks/`, `_compacted/` and `_manifest/`. [[stage]] is the
+  * files under `blocks/`, `_compacted/` and `_manifest/` in the batch and
+  * maintenance paths (the streaming encode still writes
+  * `blocks/batch=<id>/` through Spark's parquet writer). [[stage]] is the
   * task half of every Spark-side block write: the batch encode
   * ([[EncodeJob.run]]), the [[Maintenance]] rewrites (compact, recompress,
   * rebin, purge) and [[Deletes.replaceDocs]]; the DSv2 append's data

@@ -7,11 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-
 import java.nio.charset.StandardCharsets
-import scala.jdk.CollectionConverters._
 
 /** Resumable, lineage-tracked encode job (the generalization of the
   * reference's properties/metadata surface, /root/reference/src/graphs/
@@ -665,37 +661,11 @@ object EncodeJob {
         require(f.rename(src, new Path(blocksDir, name)), s"rename $src -> $blocksDir failed")
       }
       if (reported.nonEmpty) {
-        val id = manifestId(spark, outDir, snapshotId)
-        val rows = reported.groupBy(_.bin).values.map(_.reduce(BlockParquet.mergeManifest).copy(snapshot_id = id))
+        val rows =
+          reported.groupBy(_.bin).values.map(_.reduce(BlockParquet.mergeManifest).copy(snapshot_id = snapshotId))
         publishManifest(spark, outDir, s"$StagingPrefix$runId.parquet", rows.toSeq.sortBy(_.bin))
       }
     } finally f.delete(staging, true): Unit
-  }
-
-  /** The id of a new manifest commit's rows: `requested`, raised past the
-    * newest row of every committed manifest file (read from the footers'
-    * `snapshot_id` statistics, no row is read). The manifest index
-    * resolves each bin to its highest-id row, and maintenance rows carry
-    * ids in [[Maintenance.MaintenanceEpochBase]]'s epoch — a data commit's
-    * re-derivation after a compaction must still supersede them.
-    */
-  private def manifestId(spark: SparkSession, outDir: String, requested: Long): Long = {
-    val f = fs(spark, outDir)
-    val dir = new Path(s"$outDir/_manifest")
-    if (!f.exists(dir)) return requested
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ids = f.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try
-        r.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).map { rg =>
-          val stats: org.apache.parquet.column.statistics.Statistics[_] =
-            rg.getColumns.asScala.find(_.getPath.toDotString == "snapshot_id").get.getStatistics
-          require(stats.hasNonNullValue, s"${st.getPath}: no snapshot_id statistics in its footer")
-          stats.genericGetMax.asInstanceOf[java.lang.Long].longValue
-        }
-      finally r.close()
-    }
-    math.max(requested, ids.maxOption.fold(0L)(_ + 1))
   }
 
   /** Bins any committed manifest row names (empty when none). */
@@ -735,9 +705,9 @@ object EncodeJob {
     * per requested bin, a zero row (no blocks, no files) for a bin no live
     * block holds — so a bin a purge or rebin emptied stops counting its
     * stale winner, and the manifest index's numRows stays exact. The rows
-    * carry `snapshotId`, raised past every earlier manifest row
-    * ([[manifestId]]), and land as one staged-then-renamed file
-    * ([[publishManifest]]).
+    * carry `snapshotId` (a data commit's claimed snapshot id, or a
+    * maintenance epoch id — see [[Maintenance.MaintenanceEpochBase]]) and
+    * land as one staged-then-renamed file ([[publishManifest]]).
     *
     * The manifest rows of a [[run]]'s own bins come from its encode tasks
     * instead ([[commitBlocks]]); [[run]] calls this only to repair bins a
@@ -760,7 +730,6 @@ object EncodeJob {
   ): Unit = {
     if (bins.isEmpty) return
     import spark.implicits._
-    val id = manifestId(spark, outDir, snapshotId)
     val derived = liveBlocks(spark, outDir)
       .where(binMembership(col("bin"), bins))
       .withColumn("__file", element_at(split(input_file_name(), "/"), -1))
@@ -774,7 +743,7 @@ object EncodeJob {
         first($"table_hash").as("table_hash"),
         concat_ws(",", sort_array(collect_set($"__file"))).as("files")
       )
-      .withColumn("snapshot_id", lit(id))
+      .withColumn("snapshot_id", lit(snapshotId))
       .as[BinManifest]
       .collect()
     val empty = bins -- derived.map(_.bin)
@@ -784,7 +753,7 @@ object EncodeJob {
         val tableHash = loadMeta(spark, outDir)
           .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/meta.json missing"))
           .long("table_hash")
-        empty.toSeq.map(b => BinManifest(id, b, 0L, 0L, 0L, 0L, 0L, tableHash, ""))
+        empty.toSeq.map(b => BinManifest(snapshotId, b, 0L, 0L, 0L, 0L, 0L, tableHash, ""))
       }
     publishManifest(spark, outDir, s"manifest-${java.util.UUID.randomUUID()}.parquet", (derived ++ zeros).sortBy(_.bin))
   }

@@ -42,12 +42,14 @@ import java.nio.charset.StandardCharsets
   *      [[BlockParquet.stage]] (invisible: readers only union
   *      `_compacted/c<n>/` dirs that have a marker); the stage tasks report
   *      the files they wrote and the bins each holds
-  *   2. rename exactly the reported files to globally unique names
-  *      `c<cid>-<k>.parquet` (manifest claims are keyed by file NAME —
-  *      uniqueness across blocks/ and all compactions keeps the claims
-  *      unambiguous) and delete anything else staged (a failed task
-  *      attempt's file)
-  *   3. rename dir `c<cid>-tmp` -> `c<cid>` (still invisible, no marker yet)
+  *   2. rename exactly the reported files into `_compacted/c<cid>/` under
+  *      globally unique names `c<cid>-<k>.parquet` (manifest claims are
+  *      keyed by file NAME — uniqueness across blocks/ and all compactions
+  *      keeps the claims unambiguous); still invisible, no marker yet
+  *   3. delete `c<cid>-tmp` with whatever a failed or zombie task attempt
+  *      staged there (one that stages later recreates the dir, and
+  *      [[vacuum]] sweeps it) — never published, because `c<cid>/` only
+  *      ever receives the reported files
   *   4. write `c<cid>.json` via temp + rename — THE commit point
   *   5. append manifest rows for the affected bins claiming the new files
   *      (advisory: a crash before this leaves the new files unclaimed, which
@@ -105,15 +107,35 @@ object Maintenance {
 
   final case class ExpireResult(snapshotsExpired: Seq[Long], rebasedInto: Option[Long])
 
-  /** Manifest rows written by maintenance carry snapshot ids in this epoch:
-    * far above any real data-snapshot id (snapshots are sequential from 0),
-    * monotone in compaction id — so per-bin latest-row resolution in the
-    * scan's manifest index always prefers the post-compaction claims, and a
-    * re-compacted bin's newest claims win again. A later data commit's
-    * re-manifest is raised past these ids in turn
-    * ([[EncodeJob.appendManifest]]).
+  /** Manifest rows written by maintenance carry ids in this epoch, far
+    * above any real data-snapshot id (snapshots are sequential from 0). Each
+    * encodes the newest snapshot id S taken when the rewrite re-derived its
+    * rows, and the compaction id ([[maintenanceManifestId]]); a data
+    * commit's rows carry its own CAS-claimed snapshot id. The scan's
+    * manifest index resolves each bin to its highest [[manifestRank]]: by
+    * snapshot, maintenance after data at the same snapshot, then by
+    * compaction id. So the post-compaction claims supersede the rows of
+    * every snapshot ≤ S (those files were renamed before S was claimed, so
+    * the re-derivation saw them), a re-compacted bin's newest claims win
+    * again, and the rows of every later snapshot supersede them in turn
+    * (those commits derive after the marker commit).
     */
   val MaintenanceEpochBase = 1000000000L
+
+  /** Compaction ids per snapshot in the epoch encoding. */
+  private val CidSpan = 1L << 24
+
+  /** The id of compaction `cid`'s manifest rows, derived while
+    * `newestSnapshot` was the newest snapshot id taken (−1: none).
+    */
+  def maintenanceManifestId(newestSnapshot: Long, cid: Long): Long = {
+    require(cid < CidSpan - 1, s"compaction id $cid exceeds the manifest id encoding")
+    MaintenanceEpochBase + (newestSnapshot + 1) * CidSpan + cid
+  }
+
+  /** The order a bin's manifest rows resolve by ([[MaintenanceEpochBase]]). */
+  def manifestRank(id: Long): Long =
+    if (id < MaintenanceEpochBase) (id + 1) * CidSpan else id - MaintenanceEpochBase + 1
 
   private def fsOf(outDir: String, conf: Configuration): FileSystem =
     new Path(outDir).getFileSystem(conf)
@@ -329,7 +351,7 @@ object Maintenance {
     // 1. stage: coalesce (no shuffle — file merge, not redistribution) and
     // re-cluster rows locally so bin row-group stats survive the merge
     import spark.implicits._
-    val blocks = readVictims(spark, victims)
+    val blocks = readVictims(spark, victims.map(_._1))
       .coalesce(nOut)
       .sortWithinPartitions(col("bin"), col("block_seq"))
       .as[EncodedBlock]
@@ -342,7 +364,7 @@ object Maintenance {
     // derived from the LIVE set (a bin spread across victim and surviving
     // files gets both its new and its untouched files claimed)
     val affected = staged.map(_.bin).toSet
-    EncodeJob.appendManifest(spark, outDir, affected, MaintenanceEpochBase + cid)
+    remanifest(spark, outDir, affected, cid)
 
     Some(CompactionResult(cid, victims.length, added.length, victimBytes, addedBytes, affected.size))
   }
@@ -379,7 +401,7 @@ object Maintenance {
     val numBins = meta.long("num_bins").toInt
     // one tiny metadata scan: the dir's self-describing convention (keep
     // embedding iff any live block embeds) + the full bin set to re-manifest
-    val blocksDf = readVictims(spark, victims)
+    val blocksDf = readVictims(spark, victims.map(_._1))
     val metaRow = blocksDf
       .agg(max(col("embedded_tables")), collect_set(col("bin")))
       .head()
@@ -410,7 +432,7 @@ object Maintenance {
     }
     val (added, addedBytes) =
       commitRewrite(fs, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
-    EncodeJob.appendManifest(spark, outDir, affected, MaintenanceEpochBase + cid)
+    remanifest(spark, outDir, affected, cid)
     Some(CompactionResult(cid, victims.length, added.length, victimBytes, addedBytes, affected.size))
   }
 
@@ -529,7 +551,7 @@ object Maintenance {
     val staged =
       if (victims.isEmpty) Array.empty[EncodeJob.BinManifest] // fully-purged table: layout-only rebin
       else {
-        val blocksDf = readVictims(spark, victims)
+        val blocksDf = readVictims(spark, victims.map(_._1))
         val embed = blocksDf.agg(max(col("embedded_tables"))).head().getBoolean(0)
         val cfg = GraftPipeline.Config(
           numContexts = tables.numContexts,
@@ -682,7 +704,7 @@ object Maintenance {
 
     // 4. advisory re-manifest in the new bin space
     val bins = (0 until r.numBins).toSet ++ EncodeJob.manifestedBins(spark, outDir)
-    EncodeJob.appendManifest(spark, outDir, bins, MaintenanceEpochBase + r.cid)
+    remanifest(spark, outDir, bins, r.cid)
 
     writeAtomic(fs, healedMarker, s"""{"cid":${r.cid}}""")
   }
@@ -691,8 +713,8 @@ object Maintenance {
   private def rewriteStaging(outDir: String, cid: Long): Path = new Path(compactRoot(outDir), s"c$cid-tmp")
 
   /** Live block files as a block frame (known schema: no inference job). */
-  private def readVictims(spark: SparkSession, victims: Array[(String, Long)]) =
-    spark.read.schema(EncodeJob.BlockSchema).parquet(victims.map(_._1).toIndexedSeq: _*)
+  private def readVictims(spark: SparkSession, files: Array[String]) =
+    spark.read.schema(EncodeJob.BlockSchema).parquet(files.toIndexedSeq: _*)
 
   /** Step 1 of the marker commit protocol: stage `blocks` for compaction
     * `cid`; returns the stage tasks' reported rows (one per file and bin).
@@ -700,12 +722,21 @@ object Maintenance {
   private def stageRewrite(blocks: Dataset[EncodedBlock], outDir: String, cid: Long): Array[EncodeJob.BinManifest] =
     BlockParquet.stage(blocks, rewriteStaging(outDir, cid).toString, s"c$cid")
 
+  /** Step 5 of the marker commit protocol: re-derive `bins`' manifest rows
+    * under compaction `cid`'s epoch id, keyed by the newest snapshot id
+    * taken now — after the marker commit, before the derivation.
+    */
+  private def remanifest(spark: SparkSession, outDir: String, bins: Set[Int], cid: Long): Unit =
+    EncodeJob.appendManifest(
+      spark, outDir, bins, maintenanceManifestId(EncodeJob.nextSnapshotId(spark, outDir)._2, cid)
+    )
+
   /** Steps 2–4 of the marker commit protocol, shared by every rewrite:
-    * rename the files the stage tasks reported (`staged`) to globally unique
-    * names, publish the dir, then flip visibility with ONE atomic marker
-    * write (tombstoning `victims`, publishing the renamed files, plus any
-    * operation-specific marker fields). Returns (published names, their
-    * total bytes).
+    * rename the files the stage tasks reported (`staged`) into the
+    * compaction's dir under globally unique names, drop the staging dir,
+    * then flip visibility with ONE atomic marker write (tombstoning
+    * `victims`, publishing the renamed files, plus any operation-specific
+    * marker fields). Returns (published names, their total bytes).
     */
   private def commitRewrite(
       fs: FileSystem,
@@ -718,23 +749,19 @@ object Maintenance {
   ): (Seq[String], Long) = {
     // 2. unique, stable names for the manifest's file-name-keyed claims.
     // Every reported file holds blocks (a stage task writes no file for an
-    // empty partition), so each published file is claimed by the
-    // re-manifest; anything else staged is a failed attempt's leftover.
+    // empty partition), so each published file is claimed by the re-manifest.
     val tmpDir = rewriteStaging(outDir, cid)
-    fs.mkdirs(tmpDir)
+    val finalDir = new Path(compactRoot(outDir), s"c$cid")
+    fs.mkdirs(finalDir)
     val added = staged.map(_.files).distinct.sorted.zipWithIndex.map { case (name, k) =>
-      val dest = new Path(tmpDir, s"c$cid-$k.parquet")
+      val dest = new Path(finalDir, s"c$cid-$k.parquet")
       require(fs.rename(new Path(tmpDir, name), dest), s"rename $name -> $dest failed")
       dest.getName
     }
-    fs.listStatus(tmpDir)
-      .filterNot(st => added.contains(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, true): Unit)
-
-    // 3. publish the dir (still invisible: no marker yet)
-    val finalDir = new Path(compactRoot(outDir), s"c$cid")
-    require(fs.rename(tmpDir, finalDir), s"rename $tmpDir -> $finalDir failed")
     val addedBytes = added.map(n => fs.getFileStatus(new Path(finalDir, n)).getLen).sum
+
+    // 3. anything still staged is a failed or zombie attempt's file
+    fs.delete(tmpDir, true): Unit
 
     // 4. THE commit point: one atomic marker rename flips tombstones + adds
     val marker = MiniJson.render(
@@ -881,7 +908,7 @@ object Maintenance {
     // Deleted ids that hit no live bins (already-purged dirs, unknown ids)
     // stage nothing: the empty rewrite still retires the delete files.
     val staged = victimsMeta.groupBy(_._4).toArray.flatMap { case (delNames, members) =>
-      val groupFiles = members.map(m => (liveByName(m._1), 0L))
+      val groupFiles = members.map(m => liveByName(m._1))
       val groupBins = members.iterator.flatMap(_._2).toSet
       val rows = GraftPipeline.decode(readVictims(spark, groupFiles).as[EncodedBlock], bTables, cfg)
       val ids = spark.read
@@ -905,7 +932,7 @@ object Maintenance {
     // (appendManifest's zero-fill) a zero row for each bin the purge emptied
     // entirely — the manifest index's numRows must stop counting its stale
     // winner
-    EncodeJob.appendManifest(spark, outDir, affected, MaintenanceEpochBase + cid)
+    remanifest(spark, outDir, affected, cid)
 
     Some(
       PurgeResult(cid, victims.length, added.length, state.live.size, state.totalIds, affected.size)
@@ -1137,7 +1164,7 @@ object Maintenance {
   }
 
   /** Consolidate the append-only `_manifest` into ONE parquet file holding
-    * the current per-bin winners (highest snapshot_id — the same resolution
+    * the current per-bin winners (highest [[manifestRank]] — the same resolution
     * rule the scan's index applies). Every commit appends a manifest file,
     * so a year of daily deltas plus compactions is hundreds of driver-side
     * parquet opens per index build; after consolidation it is one.
@@ -1165,7 +1192,7 @@ object Maintenance {
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"bin")
-      .orderBy($"snapshot_id".desc)
+      .orderBy(udf((id: Long) => manifestRank(id)).apply($"snapshot_id").desc)
     val winners = spark.read
       .parquet(before.map(_.toString).toIndexedSeq: _*)
       .withColumn("__rk", row_number().over(w))

@@ -1,12 +1,13 @@
 package graft.sources
 
-import graft.pipeline.{BlockDecoder, Maintenance}
+import graft.pipeline.{BlockDecoder, BlockParquet, Maintenance}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
 
 /** Corpus integrity audit (`CALL graft.system.audit(path)`) — the fsck an
   * operator runs before trusting a 100 TB table that has lived through
@@ -20,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   * rows silently). Shaped like
   * [[TokenIndex.build]]: one task per live file (a corrupt byte is
   * attributed to its file, and the job parallelizes to the file count), a
-  * per-file sequential projected read, and O(files) driver rows — the
+  * per-file sequential read, and O(files) driver rows — the
   * `files` procedure's scale.
   *
   * A clean audit proves the entropy payloads decode and the per-block
@@ -31,6 +32,8 @@ import org.apache.spark.sql.SparkSession
   * error message, and every other file still reports.
   */
 object Audit {
+
+  private val AllColumns = BlockParquet.Schema.getFields.asScala.map(_.getName).toSet
 
   final case class FileAudit(
       file: String,
@@ -50,7 +53,11 @@ object Audit {
     val bMeta = spark.sparkContext.broadcast(
       (meta.headerBytes, meta.maxBits, meta.numContexts, meta.contextModel)
     )
-    val sConf = new SerializableHadoopConf(conf)
+    // the decode pass reads every column with page CRC checks on: each page
+    // is read and verified once
+    val verified = new Configuration(conf)
+    verified.setBoolean(ParquetInputFormat.PAGE_VERIFY_CHECKSUM_ENABLED, true)
+    val sConf = new SerializableHadoopConf(verified)
     spark.sparkContext
       .parallelize(live.toIndexedSeq, live.length)
       .map { case (file, bytes) =>
@@ -62,16 +69,15 @@ object Audit {
       .toSeq
   }
 
-  private def verifyPages(file: String, conf: Configuration): Unit = {
-    val options = HadoopReadOptions.builder(conf).usePageChecksumVerification(true).build()
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf), options)
-    try {
+  /** Parse every column and offset index of `file` (no page is read). */
+  private def verifyPageIndexes(file: String, conf: Configuration): Unit = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    try
       r.getFooter.getBlocks.forEach(_.getColumns.forEach { c =>
         r.readColumnIndex(c)
         r.readOffsetIndex(c): Unit
       })
-      while (r.readNextRowGroup() != null) {}
-    } finally r.close()
+    finally r.close()
   }
 
   private def auditOneFile(
@@ -88,14 +94,9 @@ object Audit {
     var rows = 0L
     var values = 0L
     try {
-      verifyPages(file, sConf.value)
+      verifyPageIndexes(file, sConf.value)
       val decoder = BlockDecoder.fromHeader(headerBytes, maxBits, numContexts, modelName)
-      val wanted = Set(
-        "bin", "block_seq", "codec", "n_rows", "n_values", "n_toks_codec",
-        "n_toks_payload", "payload", "embedded_tables", "table_hash",
-        "doc_ids_codec", "doc_ids_payload", "sources_codec", "sources_payload"
-      )
-      val reader = GraftFiles.openProjected(file, sConf, wanted, None)
+      val reader = GraftFiles.openProjected(file, sConf, AllColumns, None)
       try {
         var g = reader.read()
         while (g != null) {
@@ -133,9 +134,12 @@ object Audit {
       FileAudit(name, bytes, blocks, rows, values, ok = true, None)
     } catch {
       case e: Throwable =>
+        // the root cause names the fault (a record reader wraps a page's
+        // CRC failure in a generic "can not read value" error)
+        val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
         FileAudit(
           name, bytes, blocks, rows, values, ok = false,
-          Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(500))
+          Some(s"${root.getClass.getSimpleName}: ${Option(root.getMessage).getOrElse("")}".take(500))
         )
     }
   }

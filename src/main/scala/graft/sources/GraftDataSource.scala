@@ -1531,14 +1531,13 @@ private[sources] object GraftScan {
     * [[pruneFiles]] keeps unclaimed files, so the index can only skip files
     * the manifest explicitly accounts for.
     *
-    * Resolution is LATEST-ROW-PER-BIN (highest snapshot_id): bins are
-    * write-once for data snapshots, but [[graft.pipeline.Maintenance]]
+    * Resolution is LATEST-ROW-PER-BIN (highest
+    * [[graft.pipeline.Maintenance.manifestRank]] of its snapshot_id): bins
+    * are write-once for data snapshots, but [[graft.pipeline.Maintenance]]
     * re-manifests a bin after compaction with fresh claims in the
     * maintenance epoch — the newest row supersedes the stale claims on
-    * tombstoned files and keeps `numRows` exact (not double-counted). A
-    * manifest commit's rows always carry an id above every earlier row
-    * ([[graft.pipeline.EncodeJob.appendManifest]]), so a data commit after
-    * a compaction supersedes its epoch rows in turn.
+    * tombstoned files and keeps `numRows` exact (not double-counted), and a
+    * later data snapshot's re-manifest supersedes the epoch rows in turn.
     */
   final case class ManifestIndex(numRows: Long, fileBins: Map[String, Array[Int]])
 
@@ -1563,7 +1562,7 @@ private[sources] object GraftScan {
     manifestIndexCache.getOrElseUpdate(
       key, {
         var seen = false
-        // per-bin winner: (snapshot_id, n_rows, claimed file names)
+        // per-bin winner: (manifest rank, n_rows, claimed file names)
         val perBin =
           scala.collection.mutable.HashMap[Int, (Long, Long, Array[String])]()
         files.foreach { st =>
@@ -1576,15 +1575,15 @@ private[sources] object GraftScan {
             while (g != null) {
               seen = true
               val bin = g.getInteger("bin", 0)
-              val snap = g.getLong("snapshot_id", 0)
+              val rank = graft.pipeline.Maintenance.manifestRank(g.getLong("snapshot_id", 0))
               val nRows = g.getLong("n_rows", 0)
               val claimed: Array[String] =
                 if (g.getType.containsField("files") && g.getFieldRepetitionCount("files") > 0)
                   g.getString("files", 0).split(',').filter(_.nonEmpty)
                 else Array.empty
               perBin.get(bin) match {
-                case Some((s, _, _)) if s >= snap => ()
-                case _                            => perBin(bin) = (snap, nRows, claimed)
+                case Some((best, _, _)) if best >= rank => ()
+                case _                                  => perBin(bin) = (rank, nRows, claimed)
               }
               g = r.read()
             }

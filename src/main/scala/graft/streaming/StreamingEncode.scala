@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.core.SymbolTables
-import graft.pipeline.{BlockParquet, EncodedBlock, GraftPipeline, TokenRow}
-import org.apache.hadoop.fs.Path
+import graft.pipeline.{GraftPipeline, TokenRow}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -29,36 +28,23 @@ object StreamingEncode {
     stream.writeStream
       .option("checkpointLocation", s"$outDir/_stream_checkpoint")
       .foreachBatch { (batch: Dataset[TokenRow], batchId: Long) =>
-        commitBatch(GraftPipeline.encode(batch, tables, cfg), outDir, batchId)
+        GraftPipeline
+          .encode(batch, tables, cfg)
+          .write
+          .mode(SaveMode.Overwrite) // idempotent per-batch commit
+          .parquet(s"$outDir/blocks/batch=$batchId")
       }
       .start()
-  }
-
-  /** Stage one micro-batch's blocks ([[BlockParquet.stage]]), then replace
-    * `blocks/batch=<id>/` with exactly the staged files — the idempotent
-    * per-batch commit: a replayed batch overwrites its earlier attempt.
-    */
-  private def commitBatch(blocks: Dataset[EncodedBlock], outDir: String, batchId: Long): Unit = {
-    val f = new Path(outDir).getFileSystem(blocks.sparkSession.sparkContext.hadoopConfiguration)
-    val staging = new Path(s"$outDir/_write_staging/stream-${java.util.UUID.randomUUID()}")
-    val dest = new Path(s"$outDir/blocks/batch=$batchId")
-    try {
-      val names = BlockParquet.stage(blocks, staging.toString, s"batch-$batchId").map(_.files).distinct
-      f.delete(dest, true)
-      f.mkdirs(dest)
-      names.foreach(n => require(f.rename(new Path(staging, n), new Path(dest, n)), s"rename $n -> $dest failed"))
-    } finally f.delete(staging, true): Unit
   }
 
   /** Read everything committed so far (all batches) as one blocks dataset. */
   def readBlocks(spark: org.apache.spark.sql.SparkSession, outDir: String) = {
     import spark.implicits._
     spark.read
-      .schema(Encoders.product[EncodedBlock].schema) // an empty batch stages no file
       .option("basePath", s"$outDir/blocks")
       .parquet(s"$outDir/blocks/batch=*")
       .drop("batch")
-      .as[EncodedBlock]
+      .as[graft.pipeline.EncodedBlock]
   }
 
   /** Streaming exact dedup over an event-timestamped document stream

@@ -14,7 +14,8 @@ import java.nio.file.Files
 /** The one block-file writer ([[graft.pipeline.BlockParquet.stage]]) under
   * every engine writer: no writer publishes an empty or unclaimed block
   * file, the manifest's row count stays exact, and the manifest rows the
-  * maintenance rewrites leave are exactly what the live blocks derive.
+  * maintenance rewrites leave are exactly what the live blocks derive; a
+  * manifest commit published late never outranks a later commit's rows.
   */
 class BlockWriterSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -78,7 +79,7 @@ class BlockWriterSpec extends AnyFunSuite {
     checkFiles(dir, "replaceDocs")
   }
 
-  /** Per bin, the newest manifest row. */
+  /** Per bin, the winning manifest row. */
   private def latestRows(dir: String): Map[Int, BinManifest] = {
     import spark.implicits._
     spark.read
@@ -86,7 +87,7 @@ class BlockWriterSpec extends AnyFunSuite {
       .as[BinManifest]
       .collect()
       .groupBy(_.bin)
-      .map { case (b, rows) => b -> rows.maxBy(_.snapshot_id) }
+      .map { case (b, rows) => b -> rows.maxBy(r => Maintenance.manifestRank(r.snapshot_id)) }
   }
 
   /** Per bin of `bins`, the row the live blocks derive (appendManifest's
@@ -114,9 +115,9 @@ class BlockWriterSpec extends AnyFunSuite {
     }.toMap
   }
 
-  /** Every manifested bin's newest row equals the live derivation (the
+  /** Every manifested bin's winning row equals the live derivation (the
     * snapshot id aside); the bins in `epochBins` carry compaction `cid`'s
-    * maintenance epoch.
+    * maintenance epoch id, keyed by the newest snapshot.
     */
   private def checkManifest(dir: String, step: String, cid: Long, epochBins: Set[Int]): Unit = {
     val latest = latestRows(dir)
@@ -124,8 +125,9 @@ class BlockWriterSpec extends AnyFunSuite {
     latest.foreach { case (b, row) =>
       assert(row.copy(snapshot_id = 0L) == want(b), s"$step: bin $b")
     }
+    val epochId = Maintenance.maintenanceManifestId(EncodeJob.nextSnapshotId(spark, dir)._2, cid)
     epochBins.foreach { b =>
-      assert(latest(b).snapshot_id == Maintenance.MaintenanceEpochBase + cid, s"$step: bin $b")
+      assert(latest(b).snapshot_id == epochId, s"$step: bin $b")
     }
   }
 
@@ -154,5 +156,43 @@ class BlockWriterSpec extends AnyFunSuite {
     val r = Maintenance.rebin(spark, dir, newNumBins = 3).get
     assert((3 until cfg.numBins).forall(b => latestRows(dir)(b).n_rows == 0L))
     checkManifest(dir, "rebin", r.cid, (0 until cfg.numBins).toSet)
+  }
+
+  test("a manifest commit that lands late never shadows a later commit's claims") {
+    import spark.implicits._
+    val input = TokenTables.synthetic(spark, 400L, seed = 53L).cache()
+    val idx = expr("cast(substring(doc_id, -10, 10) as long)")
+    val dir = Files.createTempDirectory("graft-writers-late").toString
+    EncodeJob.run(input.where(idx < 300), dir, cfg, onlyBins = Some(Set(0, 1, 2, 3)))
+    EncodeJob.run(input.where(idx < 300), dir, cfg)
+    // maintenance rows in the manifest: the appends below follow a compaction
+    assert(Maintenance.compact(spark, dir, Long.MaxValue / 2, Long.MaxValue / 2).isDefined)
+
+    // append A holds bin 1; append B holds bins 1 and 2 in ONE file, which
+    // stays claimed (by bin 2) even where bin 1's winning row omits it
+    val binOf = GraftPipeline.binCol(cfg.numBins, cfg.salt)
+    val extra = input.where(idx >= 300)
+    val bin1 = extra.where(binOf === 1).orderBy($"doc_id").collect().toSeq
+    assert(bin1.length > 2)
+    val (a, b) = (bin1.take(2), bin1.drop(2) ++ extra.where(binOf === 2).collect())
+    val fs = new Path(dir).getFileSystem(conf)
+    val manifestDir = new Path(s"$dir/_manifest")
+    def manifestFiles = fs.listStatus(manifestDir).map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
+
+    // two appends racing: A commits its snapshot and derives its rows before
+    // B's file lands, but A's manifest publish lands only after B's whole
+    // commit — under the name that sorts first, whatever the tie rule
+    val beforeA = manifestFiles
+    a.toDS().coalesce(1).write.format("graft").mode("append").save(dir)
+    val heldName = (manifestFiles -- beforeA).toSeq match { case Seq(n) => n }
+    val held = new Path(dir, heldName)
+    assert(fs.rename(new Path(manifestDir, heldName), held))
+    b.toDS().coalesce(1).write.format("graft").mode("append").save(dir)
+    assert(fs.rename(held, new Path(manifestDir, "manifest-00000000-0000-0000-0000-000000000000.parquet")))
+
+    // a bin-1 point read returns both appends' rows
+    val ids = bin1.map(_.doc_id)
+    assert(spark.read.format("graft").load(dir).where($"doc_id".isin(ids: _*)).count() == ids.length)
+    checkFiles(dir, "appends")
   }
 }
