@@ -4,13 +4,16 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.util.SerializableConfiguration
 
 /** Hand-rolled parquet IO for block and manifest files — the ONE writer of
   * files under `blocks/`, `_compacted/` and `_manifest/` in the batch and
@@ -69,13 +72,29 @@ private[graft] object BlockParquet {
       |}""".stripMargin
   )
 
-  def open(file: Path, conf: Configuration, schema: MessageType = Schema): ParquetWriter[Group] =
-    ExampleParquetWriter
+  /** The opaque byte columns of [[Schema]]. No reader filters on them, so
+    * their footer statistics (min/max payload prefixes, size histograms)
+    * are dead bytes; `bin` keeps its statistics for the parquet bin filter
+    * and the scan's bin-range pruning.
+    */
+  private val PayloadColumns =
+    Seq("doc_ids_payload", "sources_payload", "n_toks_payload", "row_bits_payload", "payload")
+
+  def open(file: Path, conf: Configuration, schema: MessageType = Schema): ParquetWriter[Group] = {
+    val builder = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(file, conf))
       .withType(schema)
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    val noStats = if (schema == Schema) PayloadColumns else Nil
+    noStats.foldLeft(builder)((b, c) => b.withStatisticsEnabled(c, false).withSizeStatisticsEnabled(c, false)).build()
+  }
+
+  /** Open a parquet file's footer reader with `conf`'s read options (the
+    * options-less overload builds a fresh default Configuration per open).
+    */
+  def openFile(file: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), HadoopReadOptions.builder(conf).build())
 
   def toGroup(b: EncodedBlock, f: SimpleGroupFactory): Group = {
     val g = f.newGroup()
@@ -110,10 +129,24 @@ private[graft] object BlockParquet {
     * file is named by none.
     */
   def stage(blocks: Dataset[EncodedBlock], stagingDir: String, prefix: String): Array[EncodeJob.BinManifest] = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val conf = new graft.sources.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    blocks.mapPartitions(it => writeFile(it, stagingDir, prefix, conf)).collect()
+    val rdd = blocks.rdd
+    stage(rdd, rdd.partitions.indices, stagingDir, prefix)
+  }
+
+  /** [[stage]] over the given partitions of `blocks` only. */
+  def stage(
+      blocks: RDD[EncodedBlock],
+      partitions: Seq[Int],
+      stagingDir: String,
+      prefix: String
+  ): Array[EncodeJob.BinManifest] = {
+    val sc = blocks.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    sc.runJob(
+      blocks,
+      (it: Iterator[EncodedBlock]) => writeFile(it, stagingDir, prefix, conf.value.value).toArray,
+      partitions
+    ).flatten
   }
 
   /** One task's side of [[stage]]. */
@@ -121,14 +154,14 @@ private[graft] object BlockParquet {
       blocks: Iterator[EncodedBlock],
       stagingDir: String,
       prefix: String,
-      conf: graft.sources.SerializableHadoopConf
+      conf: Configuration
   ): Iterator[EncodeJob.BinManifest] = {
     if (!blocks.hasNext) return Iterator.empty
     val task = org.apache.spark.TaskContext.get()
     val name = f"$prefix-p${task.partitionId()}%05d-t${task.taskAttemptId()}.parquet"
     val groups = new SimpleGroupFactory(Schema)
     val perBin = scala.collection.mutable.TreeMap[Int, EncodeJob.BinManifest]()
-    val w = open(new Path(stagingDir, name), conf.value)
+    val w = open(new Path(stagingDir, name), conf)
     try
       blocks.foreach { b =>
         w.write(toGroup(b, groups))

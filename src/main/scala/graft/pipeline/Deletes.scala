@@ -166,9 +166,7 @@ object Deletes {
       val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
       parts.zipWithIndex.foreach { case (st, k) =>
         val cnt = {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf)
-          )
+          val r = BlockParquet.openFile(st.getPath, conf)
           try r.getRecordCount
           finally r.close()
         }

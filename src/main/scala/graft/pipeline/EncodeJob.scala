@@ -4,6 +4,7 @@ import graft.core._
 import graft.core.MiniJson.ObjOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -468,6 +469,15 @@ object EncodeJob {
 
   /** Run (or resume) the full encode into `outDir`.
     *
+    * The reference's two passes: histograms, shared tables, then the
+    * block encode. A fresh run (no persisted tables, `rounds == 1`) scans
+    * its input ONCE: pass 1 rides the map side of pass 2's routing shuffle
+    * ([[GraftPipeline.route]]), one small job merges the histogram
+    * partials, the tables are built, saved and broadcast, and the
+    * encode-and-stage job reads the same shuffle output. Resumes over
+    * persisted tables and `rounds > 1` encode through [[GraftPipeline.encode]]
+    * (the latter after its analysis rounds).
+    *
     * @param onlyBins  restrict this run to a subset of bins — the test hook
     *                  for simulating a job killed mid-encode.
     */
@@ -487,8 +497,42 @@ object EncodeJob {
     // a killed run's staged files were never published; nothing reads them
     sweepStaging(spark, outDir)
 
-    // 1. shared symbol tables: reuse persisted ones (byte-identical resume),
-    // else pass-1 analyze + build + persist.
+    // 1. skip bins whose blocks are already committed.
+    val done = doneBins(spark, outDir)
+    val requested = onlyBins.getOrElse((0 until cfg.numBins).toSet)
+    val todo = requested -- done
+    // a fresh run's todo is EVERY bin (800k at 100 TB) — skip the bin
+    // predicate rather than build a membership test over the full range
+    val keep = if (todo.size == cfg.numBins) None else Some(todo)
+    val (snapshotId, parentId) = nextSnapshotId(spark, outDir)
+
+    // self-repair: a crash between a block file's rename (the unit of
+    // progress) and the manifest commit leaves a done bin with no manifest
+    // row forever — resume re-derives those rows from the committed blocks.
+    val repair = done -- manifestedBins(spark, outDir)
+
+    def fresh(t: SymbolTables): SymbolTables = {
+      saveTables(spark, outDir, t, cfg.contextModel, layout = Some(cfg))
+      t
+    }
+    // encode only the missing bins: the bin predicate prunes before the
+    // shuffle, so resumed runs shuffle only the remaining data. The encode
+    // tasks write their own block files and report their manifest rows;
+    // the driver publishes both.
+    def encodeTodo(t: SymbolTables): Unit =
+      if (todo.nonEmpty) {
+        val pending = keep.fold(input) { bins =>
+          input
+            .withColumn("__bin", GraftPipeline.binCol(cfg.numBins, cfg.salt))
+            .where(binMembership(col("__bin"), bins))
+            .drop("__bin")
+            .as[TokenRow]
+        }
+        val blocks = GraftPipeline.encode(pending, spark.sparkContext.broadcast(t), cfg).rdd
+        commitBlocks(spark, blocks, blocks.partitions.indices, outDir, snapshotId)
+      }
+    // 2. shared symbol tables: reuse persisted ones (byte-identical
+    // resume), else pass 1 + build + persist; then 3. encode.
     val tables = loadTables(spark, outDir) match {
       case Some(t) =>
         require(
@@ -524,6 +568,14 @@ object EncodeJob {
           recordedSalt.forall(_ == cfg.salt),
           s"persisted bin salt ${recordedSalt.getOrElse(-1L)} != config ${cfg.salt}"
         )
+        encodeTodo(t)
+        t
+      case None if cfg.rounds == 1 && todo.nonEmpty =>
+        // pass 1 on the routing shuffle's map side: one input scan
+        val routed = GraftPipeline.route(input, cfg, keep)
+        val t = fresh(GraftPipeline.buildTables(routed.histograms(), cfg))
+        val blocks = routed.blocks(spark.sparkContext.broadcast(t), cfg)
+        commitBlocks(spark, blocks, routed.dataPartitions, outDir, snapshotId)
         t
       case None =>
         // cfg.rounds > 1 runs the reference-style iterative re-estimation,
@@ -531,45 +583,15 @@ object EncodeJob {
         // estimator, no bit-writing — an extra round costs ~one analyze
         // scan, the reference's actual design, convert.rs:95-152);
         // estimatedRounds=false selects the exact dry-run-encode variant
-        // with the monotone-size guarantee. rounds=1 is always the plain
-        // full-corpus analyze.
+        // with the monotone-size guarantee.
         require(cfg.rounds == 1 || cfg.autoSelect, "rounds > 1 requires autoSelect")
-        val t =
+        val t = fresh(
           if (cfg.rounds > 1 && cfg.estimatedRounds)
             GraftPipeline.analyzeRoundsEstimated(input, cfg, cfg.rounds)
           else GraftPipeline.analyzeRounds(input, cfg, cfg.rounds)
-        saveTables(spark, outDir, t, cfg.contextModel, layout = Some(cfg))
+        )
+        encodeTodo(t)
         t
-    }
-    val bTables = spark.sparkContext.broadcast(tables)
-
-    // 2. skip bins whose blocks are already committed.
-    val done = doneBins(spark, outDir)
-    val requested = onlyBins.getOrElse((0 until cfg.numBins).toSet)
-    val todo = requested -- done
-    val (snapshotId, parentId) = nextSnapshotId(spark, outDir)
-
-    // self-repair: a crash between a block file's rename (the unit of
-    // progress) and the manifest commit leaves a done bin with no manifest
-    // row forever — resume re-derives those rows from the committed blocks.
-    val repair = done -- manifestedBins(spark, outDir)
-
-    if (todo.nonEmpty) {
-      // 3. encode only the missing bins: the bin predicate prunes before the
-      // shuffle, so resumed runs shuffle only the remaining data. A fresh
-      // run's todo is EVERY bin (800k at 100 TB) — skip the predicate
-      // rather than build a membership test over the full range.
-      val pending =
-        if (todo.size == cfg.numBins) input
-        else
-          input
-            .withColumn("__bin", GraftPipeline.binCol(cfg.numBins, cfg.salt))
-            .where(binMembership(col("__bin"), todo))
-            .drop("__bin")
-            .as[TokenRow]
-      // 4. the encode tasks write their own block files and report their
-      // manifest rows; the driver publishes both.
-      commitBlocks(GraftPipeline.encode(pending, bTables, cfg), outDir, snapshotId)
     }
 
     if (repair.nonEmpty) {
@@ -578,7 +600,7 @@ object EncodeJob {
       appendManifest(spark, outDir, repair, snapshotId)
     }
 
-    // 5. snapshot lineage record. Self-repair mirrors the manifest's: a
+    // 4. snapshot lineage record. Self-repair mirrors the manifest's: a
     // crash after the blocks commit but before the snapshot write leaves
     // bins that are `done` on resume yet absent from every snapshot's
     // bins_added — snapshot time travel and the streaming source (which
@@ -644,16 +666,17 @@ object EncodeJob {
     * next run's repair re-derives them with [[appendManifest]].
     */
   private def commitBlocks(
-      blocks: Dataset[EncodedBlock],
+      spark: SparkSession,
+      blocks: RDD[EncodedBlock],
+      partitions: Seq[Int],
       outDir: String,
       snapshotId: Long
   ): Unit = {
-    val spark = blocks.sparkSession
     val f = fs(spark, outDir)
     val runId = java.util.UUID.randomUUID().toString
     val staging = new Path(s"$outDir/_write_staging/$StagingPrefix$runId")
     try {
-      val reported = BlockParquet.stage(blocks, staging.toString, s"$StagingPrefix$runId")
+      val reported = BlockParquet.stage(blocks, partitions, staging.toString, s"$StagingPrefix$runId")
       val blocksDir = new Path(s"$outDir/blocks")
       f.mkdirs(blocksDir)
       reported.map(_.files).distinct.sorted.foreach { name =>

@@ -3,8 +3,11 @@ package graft.pipeline
 import graft.codec._
 import graft.core._
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, StringType, StructField, StructType}
 
 /** One row of the input table (BASELINE input_hint shape). */
 final case class TokenRow(doc_id: String, tokens: Array[Int], n_tok: Int, source: String)
@@ -150,11 +153,15 @@ object GraftPipeline {
   def binCol(numBins: Int, salt: Long) =
     pmod(xxhash64(col("doc_id"), lit(salt)), lit(numBins)).cast("int")
 
-  /** Pass 1: per-context token histograms. Reads only the `tokens` column
-    * (column-pruned scan), builds per-partition partial histograms in a tight
-    * primitive loop, merges them with an element-wise-sum reduce — Spark's
-    * partial+final aggregation, the same algebra as the reference's per-thread
-    * `add_all` merge (/root/reference/src/graphs/convert.rs:156-262).
+  /** Pass 1 as a standalone job: per-context token histograms. Reads only
+    * the `tokens` column (column-pruned scan), builds per-partition partial
+    * histograms with [[histogramKernel]], merges them with an
+    * element-wise-sum reduce — Spark's partial+final aggregation, the same
+    * algebra as the reference's per-thread `add_all` merge
+    * (src/graphs/convert.rs:156-262). A fresh
+    * [[EncodeJob.run]] does not call it: its pass 1 rides the routing
+    * shuffle of pass 2 ([[route]]); this is the pass for callers that want
+    * histograms or tables on their own.
     *
     * Partials merge via [[reduceFlat]]: one partial is
     * numContexts×numSymbols longs (128 KiB at 64×256); at 100 TB (~1e5
@@ -165,54 +172,15 @@ object GraftPipeline {
   def analyze(ds: Dataset[TokenRow], cfg: Config): Histograms = {
     val nCtx = cfg.numContexts
     val nSym = 1 << cfg.maxBits
-    val model = cfg.model
-    // prev-token fast path (mirrors HybridCodec's simpleNCtx loops): one
-    // Hybrid.token per value feeds BOTH the histogram cell and the next
-    // context, with no virtual first/next dispatch in the per-token loop
-    val simpleN = model match {
-      case s: SimpleContextModel => s.numContexts
-      case _ => 0
-    }
+    val kernel = histogramKernel(cfg)
     // the column is read as InternalRow arrays (bulk toIntArray), not
     // through the typed Array[Int] deserializer
     val tokens = ds.select(col("tokens"))
-    val elemNullable = tokens.schema.head.dataType match {
-      case org.apache.spark.sql.types.ArrayType(_, containsNull) => containsNull
-      case _ => true
-    }
+    val elemNullable = containsNull(tokens.schema.head.dataType)
     val flat = tokens.queryExecution.toRdd
       .mapPartitions { rows =>
         val hist = new Histograms(nCtx, nSym)
-        def next(): Array[Int] = tokenArray(rows.next(), elemNullable)
-        if (simpleN > 0) {
-          val ctxMax = simpleN - 1
-          while (rows.hasNext) {
-            val tokens = next()
-            var ctx = 0
-            var i = 0
-            while (i < tokens.length) {
-              val v = tokens(i).toLong
-              if (v < 0) throw new IllegalArgumentException(s"negative token $v unsupported")
-              val tok = Hybrid.token(v)
-              hist.addToken(ctx, tok)
-              ctx = if (tok < ctxMax) tok else ctxMax
-              i += 1
-            }
-          }
-        } else {
-          while (rows.hasNext) {
-            val tokens = next()
-            var ctx = model.first(tokens.length)
-            var i = 0
-            while (i < tokens.length) {
-              val v = tokens(i).toLong
-              if (v < 0) throw new IllegalArgumentException(s"negative token $v unsupported")
-              hist.add(ctx, v)
-              ctx = model.next(v)
-              i += 1
-            }
-          }
-        }
+        while (rows.hasNext) kernel(hist, tokenArray(rows.next(), 0, elemNullable))
         Iterator.single(hist.flat)
       }
     // every partition yields one partial, so only a partition-less input
@@ -222,12 +190,54 @@ object GraftPipeline {
     else Histograms.fromFlat(reduceFlat(flat), nCtx, nSym)
   }
 
-  /** The `tokens` array of a one-column row, rejecting nulls by name (the
+  /** Pass 1's per-row kernel, shared by [[analyze]] and the map side of
+    * [[route]]: folds one row's tokens into `hist` under the context model.
+    * The prev-token model takes a fast path (mirrors HybridCodec's
+    * simpleNCtx loops): one Hybrid.token per value feeds BOTH the histogram
+    * cell and the next context, with no virtual first/next dispatch in the
+    * per-token loop.
+    */
+  private def histogramKernel(cfg: Config): (Histograms, Array[Int]) => Unit =
+    cfg.model match {
+      case s: SimpleContextModel =>
+        val ctxMax = s.numContexts - 1
+        (hist, tokens) => {
+          var ctx = 0
+          var i = 0
+          while (i < tokens.length) {
+            val v = tokens(i).toLong
+            if (v < 0) throw new IllegalArgumentException(s"negative token $v unsupported")
+            val tok = Hybrid.token(v)
+            hist.addToken(ctx, tok)
+            ctx = if (tok < ctxMax) tok else ctxMax
+            i += 1
+          }
+        }
+      case model =>
+        (hist, tokens) => {
+          var ctx = model.first(tokens.length)
+          var i = 0
+          while (i < tokens.length) {
+            val v = tokens(i).toLong
+            if (v < 0) throw new IllegalArgumentException(s"negative token $v unsupported")
+            hist.add(ctx, v)
+            ctx = model.next(v)
+            i += 1
+          }
+        }
+    }
+
+  private def containsNull(t: DataType): Boolean = t match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  }
+
+  /** The `tokens` array at `ordinal` of a row, rejecting nulls by name (the
     * bulk copy would read a null element as 0).
     */
-  private def tokenArray(row: org.apache.spark.sql.catalyst.InternalRow, elemNullable: Boolean): Array[Int] = {
-    if (row.isNullAt(0)) throw new IllegalArgumentException("null tokens array unsupported")
-    val arr = row.getArray(0)
+  private def tokenArray(row: InternalRow, ordinal: Int, elemNullable: Boolean): Array[Int] = {
+    if (row.isNullAt(ordinal)) throw new IllegalArgumentException("null tokens array unsupported")
+    val arr = row.getArray(ordinal)
     if (elemNullable) {
       var i = 0
       while (i < arr.numElements()) {
@@ -444,8 +454,14 @@ object GraftPipeline {
     * domain packs ~3x smaller than fixed int32; pack/unpack CPU rides the
     * scaling compute path. The kernel sees the identical Array[Int], so
     * block bytes are unchanged (bin-keyed determinism intact).
-    */
-  /** @param shufflePartitions override for the routing exchange's partition
+    *
+    * This is pass 2 for callers that already hold tables: resumes over
+    * persisted tables, `rounds > 1`, and the maintenance and replace
+    * re-encodes. A fresh [[EncodeJob.run]] takes [[route]] instead, which
+    * computes pass 1 on this shuffle's map side and routes rows to the same
+    * partitions.
+    *
+    * @param shufflePartitions override for the routing exchange's partition
     *   count (default: one partition per bin). The kernel only needs bins
     *   CONTIGUOUS within a partition (repartition on bin + within-partition
     *   sort gives that at any count), so small inputs over a table-scale bin
@@ -474,27 +490,165 @@ object GraftPipeline {
       .select($"doc_id", $"packed", $"n_tok", $"source", $"bin")
       .as[(String, Array[Byte], Int, String, Int)]
 
-    binned.mapPartitions { rows =>
-      blockIterator(
-        rows.map { case (d, p, n, s, b) =>
-          // n_tok is untrusted input (EncodeCli accepts arbitrary parquet)
-          // and unpack sizes the row by it; a mismatch cannot pass silently —
-          // VarInt.unpack checks exact byte consumption — but wrap it so the
-          // error names the row instead of the varint stream
-          val toks =
-            try VarInt.unpack(p, n)
-            catch {
-              case e: Exception =>
-                throw new IllegalArgumentException(
-                  s"row $d: n_tok=$n inconsistent with its token array (${e.getMessage})"
-                )
-            }
-          (d, toks, n, s, b)
-        },
-        tables.value,
-        cfg
-      )
+    binned.mapPartitions(rows => blockIterator(unpacked(rows), tables.value, cfg))
+  }
+
+  /** Routed rows with their token arrays unpacked, for [[blockIterator]]. */
+  private def unpacked(
+      rows: Iterator[(String, Array[Byte], Int, String, Int)]
+  ): Iterator[(String, Array[Int], Int, String, Int)] =
+    rows.map { case (d, p, n, s, b) =>
+      // n_tok is untrusted input (EncodeCli accepts arbitrary parquet)
+      // and unpack sizes the row by it; a mismatch cannot pass silently —
+      // VarInt.unpack checks exact byte consumption — but wrap it so the
+      // error names the row instead of the varint stream
+      val toks =
+        try VarInt.unpack(p, n)
+        catch {
+          case e: Exception =>
+            throw new IllegalArgumentException(
+              s"row $d: n_tok=$n inconsistent with its token array (${e.getMessage})"
+            )
+        }
+      (d, toks, n, s, b)
     }
+
+  /** The routing shuffle of [[encode]] with pass 1 on its map side — the
+    * reference's two passes (parallel histograms, driver-built tables,
+    * parallel encode) over ONE input scan. Each map task reads a row's
+    * `tokens` once: [[histogramKernel]] folds them into the task's partial
+    * and the same array is varint-packed for the exchange. Data rows go to
+    * partition `pmod(hash(bin), numBins)` — what `repartition(numBins,
+    * $"bin")` in [[encode]] computes — so block files are those [[encode]]
+    * writes. After its last row each map task emits its partial as one row
+    * (a negative `bin` marks it) to one of [[Routed.numPartials]] extra
+    * partitions past the data partitions.
+    *
+    * Driver ingress stays bounded without a tree reduce: the partials meet
+    * in those extra partitions, so the driver receives numPartials merged
+    * histograms — 1 up to 64 map tasks, about √tasks above (the
+    * [[reduceFlat]] sizing). A re-run map task's output replaces its
+    * earlier attempt's, so each partial counts once under retries.
+    *
+    * @param keep the bins to encode (None: all). Only data rows are
+    *             filtered; the histograms see every input row.
+    */
+  def route(ds: Dataset[TokenRow], cfg: Config, keep: Option[Set[Int]]): Routed = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    val numBins = cfg.numBins
+    val nCtx = cfg.numContexts
+    val nSym = 1 << cfg.maxBits
+    val kernel = histogramKernel(cfg)
+    val input = ds.select(
+      col("doc_id").cast(StringType),
+      col("tokens"),
+      col("n_tok").cast(IntegerType),
+      col("source").cast(StringType),
+      binCol(numBins, cfg.salt)
+    )
+    val elemNullable = containsNull(input.schema(1).dataType)
+    // a partition-less (empty) input still runs one map task: its empty
+    // partial keeps the shuffle non-empty, so the routed partition count
+    // holds under AQE too
+    val inputRows = input.queryExecution.toRdd
+    val scan =
+      if (inputRows.getNumPartitions > 0) inputRows
+      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    val numPartials = if (scan.getNumPartitions <= 64) 1 else math.ceil(math.sqrt(scan.getNumPartitions)).toInt
+    val tagged = scan.mapPartitionsWithIndex { (task, rows) =>
+      val hist = new Histograms(nCtx, nSym)
+      val data = rows.flatMap { r =>
+        val tokens = tokenArray(r, 1, elemNullable)
+        kernel(hist, tokens)
+        val bin = r.getInt(4)
+        if (keep.exists(!_.contains(bin))) None
+        else {
+          val docId = r.getUTF8String(0)
+          if (r.isNullAt(2)) throw new IllegalArgumentException(s"row $docId: null n_tok unsupported")
+          val source = r.getUTF8String(3)
+          Some(InternalRow(
+            if (docId == null) null else docId.clone(),
+            VarInt.pack(tokens),
+            r.getInt(2),
+            if (source == null) null else source.clone(),
+            bin
+          ))
+        }
+      }
+      data ++ Iterator.single(InternalRow(null, partialBytes(hist), 0, null, -1 - task % numPartials))
+    }
+    val schema = StructType(Seq(
+      StructField("doc_id", StringType),
+      StructField("packed", BinaryType),
+      StructField("n_tok", IntegerType, nullable = false),
+      StructField("source", StringType),
+      StructField("bin", IntegerType, nullable = false)
+    ))
+    val rows = GraftSqlBridge
+      .internalCreateDataFrame(spark, tagged, schema)
+      .repartitionById(
+        numBins + numPartials,
+        when($"bin" >= 0, pmod(hash($"bin"), lit(numBins))).otherwise(lit(numBins - 1) - $"bin")
+      )
+      .sortWithinPartitions($"bin", $"source", $"doc_id")
+      .as[(String, Array[Byte], Int, String, Int)]
+      .rdd
+    new Routed(rows, numBins, numPartials, nCtx, nSym)
+  }
+
+  /** The output of [[route]]'s shuffle: partitions `0 until numData` hold
+    * the data rows, the `numPartials` after them the histogram partials.
+    * Both jobs read the same shuffle output; the map stage runs once.
+    */
+  final class Routed private[GraftPipeline] (
+      rows: RDD[(String, Array[Byte], Int, String, Int)],
+      numData: Int,
+      val numPartials: Int,
+      numContexts: Int,
+      numSymbols: Int
+  ) {
+    require(rows.getNumPartitions == numData + numPartials, s"${rows.getNumPartitions} routed partitions")
+
+    def dataPartitions: Seq[Int] = 0 until numData
+
+    /** Pass 1's result: one small job merges the partial partitions. */
+    def histograms(): Histograms = {
+      val size = numContexts * numSymbols
+      val merged = rows.sparkContext.runJob(
+        rows,
+        (it: Iterator[(String, Array[Byte], Int, String, Int)]) =>
+          it.foldLeft(new Array[Long](size))((sum, r) => addPartial(sum, r._2)),
+        numData until numData + numPartials
+      )
+      Histograms.fromFlat(merged.reduce(Histograms.mergeFlat), numContexts, numSymbols)
+    }
+
+    /** Pass 2: the encoded blocks. Run it over [[dataPartitions]] only; a
+      * partial partition's rows are not token rows.
+      */
+    def blocks(tables: Broadcast[SymbolTables], cfg: Config): RDD[EncodedBlock] =
+      rows.mapPartitions(it => blockIterator(unpacked(it), tables.value, cfg))
+  }
+
+  /** A histogram partial as (flat cell index, count) pairs of its non-zero
+    * cells: its size is bounded by the task's tokens, not by the
+    * numContexts × 2^maxBits table.
+    */
+  private def partialBytes(hist: Histograms): Array[Byte] = {
+    val buf = java.nio.ByteBuffer.allocate(12 * hist.counts.map(_.count(_ != 0L)).sum)
+    for (c <- 0 until hist.numContexts; s <- 0 until hist.numSymbols if hist.counts(c)(s) != 0L)
+      buf.putInt(c * hist.numSymbols + s).putLong(hist.counts(c)(s))
+    buf.array()
+  }
+
+  private def addPartial(sum: Array[Long], bytes: Array[Byte]): Array[Long] = {
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+    while (buf.hasRemaining) {
+      val cell = buf.getInt()
+      sum(cell) += buf.getLong()
+    }
+    sum
   }
 
   /** Persist the bin-routed, sorted layout (the Spark stand-in for an

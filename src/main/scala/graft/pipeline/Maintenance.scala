@@ -1500,11 +1500,11 @@ object Maintenance {
 
     // distributed byte copy — the only data movement of the whole merge
     val stagingStr = stagingDir.toString
-    val sConf = new graft.sources.SerializableHadoopConf(conf)
+    val sConf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(conf))
     spark.sparkContext
       .parallelize(plan.toIndexedSeq, math.min(plan.length, spark.sparkContext.defaultParallelism * 2))
       .foreach { case (src, name, _) =>
-        val c = sConf.value
+        val c = sConf.value.value
         val from = new Path(src)
         val to = new Path(stagingStr, name)
         val ok = org.apache.hadoop.fs.FileUtil

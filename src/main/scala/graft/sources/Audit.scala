@@ -3,11 +3,12 @@ package graft.sources
 import graft.pipeline.{BlockDecoder, BlockParquet, Maintenance}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.util.SerializableConfiguration
 
 /** Corpus integrity audit (`CALL graft.system.audit(path)`) — the fsck an
   * operator runs before trusting a 100 TB table that has lived through
@@ -57,7 +58,7 @@ object Audit {
     // is read and verified once
     val verified = new Configuration(conf)
     verified.setBoolean(ParquetInputFormat.PAGE_VERIFY_CHECKSUM_ENABLED, true)
-    val sConf = new SerializableHadoopConf(verified)
+    val sConf = spark.sparkContext.broadcast(new SerializableConfiguration(verified))
     spark.sparkContext
       .parallelize(live.toIndexedSeq, live.length)
       .map { case (file, bytes) =>
@@ -71,7 +72,7 @@ object Audit {
 
   /** Parse every column and offset index of `file` (no page is read). */
   private def verifyPageIndexes(file: String, conf: Configuration): Unit = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    val r = BlockParquet.openFile(new Path(file), conf)
     try
       r.getFooter.getBlocks.forEach(_.getColumns.forEach { c =>
         r.readColumnIndex(c)
@@ -83,7 +84,7 @@ object Audit {
   private def auditOneFile(
       file: String,
       bytes: Long,
-      sConf: SerializableHadoopConf,
+      sConf: Broadcast[SerializableConfiguration],
       headerBytes: Array[Byte],
       maxBits: Int,
       numContexts: Int,
@@ -94,7 +95,7 @@ object Audit {
     var rows = 0L
     var values = 0L
     try {
-      verifyPageIndexes(file, sConf.value)
+      verifyPageIndexes(file, sConf.value.value)
       val decoder = BlockDecoder.fromHeader(headerBytes, maxBits, numContexts, modelName)
       val reader = GraftFiles.openProjected(file, sConf, AllColumns, None)
       try {

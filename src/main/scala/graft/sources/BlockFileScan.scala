@@ -1,6 +1,8 @@
 package graft.sources
 
 import graft.pipeline.BlockDecoder
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.util.SerializableConfiguration
 
 /** Shared executor-side kernel for the per-file sidecar builders
   * ([[ContentIndex]], [[SignatureIndex]]): decode ONE block parquet file
@@ -25,7 +27,7 @@ private[sources] object BlockFileScan {
     */
   def rowIterator(
       file: String,
-      sConf: SerializableHadoopConf,
+      sConf: Broadcast[SerializableConfiguration],
       headerBytes: Array[Byte],
       maxBits: Int,
       numContexts: Int,

@@ -4,6 +4,7 @@ import graft.ops.XHash
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** One per-document row of the content index
   * (`_content_index/cix-<uuid>/part-*.parquet`). Top-level for the Dataset
@@ -137,7 +138,7 @@ object ContentIndex {
     val bMeta = spark.sparkContext.broadcast(
       (meta.headerBytes, meta.maxBits, meta.numContexts, meta.contextModel)
     )
-    val sConf = new SerializableHadoopConf(conf)
+    val sConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     val p = protocol(outDir)
     val entries = spark.sparkContext
       .parallelize(todo.toIndexedSeq, todo.length)

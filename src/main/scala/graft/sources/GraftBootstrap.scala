@@ -16,6 +16,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.util.SerializableConfiguration
 
 /** The DSv2 BOOTSTRAP write — `df.write.format("graft").save(newDir)` or
   * `CREATE TABLE graft.`dir`` AS SELECT …` on a FRESH directory, closing the
@@ -109,7 +111,7 @@ private[sources] final class GraftBootstrapWrite(
     queryId: String,
     colOrds: Array[Int],
     opts: GraftBootstrap.Options,
-    conf: SerializableHadoopConf
+    conf: Broadcast[SerializableConfiguration]
 ) extends Write {
 
   private def stagingDir = s"$path/${GraftBootstrap.StagingRoot}/$queryId"
@@ -140,7 +142,7 @@ private[sources] final case class BootstrapWriterFactory(
     stagingDir: String,
     queryId: String,
     colOrds: Array[Int],
-    conf: SerializableHadoopConf
+    conf: Broadcast[SerializableConfiguration]
 ) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new BootstrapDataWriter(
@@ -158,7 +160,7 @@ private[sources] final class BootstrapDataWriter(
     stagingDir: String,
     fileName: String,
     colOrds: Array[Int],
-    sConf: SerializableHadoopConf
+    sConf: Broadcast[SerializableConfiguration]
 ) extends DataWriter[InternalRow] {
 
   private val Array(docOrd, tokOrd, ntokOrd, srcOrd) = colOrds
@@ -190,9 +192,9 @@ private[sources] final class BootstrapDataWriter(
 
     if (writer == null)
       writer = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(new Path(stagingDir, fileName), sConf.value))
+        .builder(HadoopOutputFile.fromPath(new Path(stagingDir, fileName), sConf.value.value))
         .withType(GraftBootstrap.StagingSchema)
-        .withConf(sConf.value)
+        .withConf(sConf.value.value)
         .withCompressionCodec(CompressionCodecName.SNAPPY)
         .build()
     val g = groups.newGroup()
@@ -213,7 +215,7 @@ private[sources] final class BootstrapDataWriter(
   override def abort(): Unit = {
     if (writer != null) {
       writer.close()
-      val fs = new Path(stagingDir).getFileSystem(sConf.value)
+      val fs = new Path(stagingDir).getFileSystem(sConf.value.value)
       fs.delete(new Path(stagingDir, fileName), false): Unit
     }
   }

@@ -1,13 +1,13 @@
 package graft.sources
 
-import graft.pipeline.{BlockDecoder, GraftPipeline, StoredBlock}
+import graft.pipeline.{BlockDecoder, BlockParquet, GraftPipeline, StoredBlock}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
@@ -26,6 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.util.SerializableConfiguration
 
 /** `spark.read.format("graft").load(outDir)` — a DataSource V2 batch-read
   * surface over an [[graft.pipeline.EncodeJob]] output directory. This is the
@@ -131,23 +133,6 @@ object GraftDataSource {
       case (Some(x), Some(y)) => Some(x intersect y)
       case (x, y)             => x.orElse(y)
     }
-}
-
-/** Hadoop `Configuration` is not `java.io.Serializable`; this wrapper ships
-  * the driver's fs settings (spark.hadoop.*, credentials, endpoints) to the
-  * executor-side readers, which would otherwise see only classpath defaults.
-  */
-private[graft] final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
 }
 
 /** Job-level metadata read once at planning from `_tables/`: the shared
@@ -1340,7 +1325,7 @@ private[sources] class GraftScan(
       aggKinds = agg.map(_.toArray),
       aggBySource = aggGroupBySource,
       visibleBins = snapshotBins.map(_.toArray.sorted),
-      conf = new SerializableHadoopConf(hadoopConf),
+      conf = SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)),
       limit = limit,
       // the live delete files with their commit snapshots: every reader
       // loads the ones that apply to its file (sequence scoping)
@@ -1717,7 +1702,7 @@ private[sources] object GraftScan {
     if (rowCountCache.size > CacheCap) rowCountCache.clear()
     rowCountCache.getOrElseUpdate(
       (file, len), {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+        val r = BlockParquet.openFile(new Path(file), conf)
         try r.getRecordCount
         finally r.close()
       }
@@ -1725,7 +1710,7 @@ private[sources] object GraftScan {
   }
 
   private def readBinRange(file: String, conf: Configuration): Option[(Int, Int)] = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    val r = BlockParquet.openFile(new Path(file), conf)
     try {
       val ranges = r.getRowGroups.asScala.flatMap { rg =>
         rg.getColumns.asScala
@@ -1820,7 +1805,7 @@ private[sources] final case class GraftReaderFactory(
     aggKinds: Option[Array[String]] = None,
     aggBySource: Boolean = false,
     visibleBins: Option[Array[Int]] = None,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     limit: Option[Int] = None,
     /** Live delete files as (path, commit snapshot id) — the snapshot
       * drives per-partition sequence scoping in the readers.
@@ -1914,7 +1899,7 @@ private[sources] class GraftAggReader(
     file: String,
     kinds: Array[String],
     visibleBins: Option[Set[Int]],
-    sConf: SerializableHadoopConf,
+    sConf: Broadcast[SerializableConfiguration],
     groupBySource: Boolean = false
 ) extends PartitionReader[InternalRow] {
 
@@ -2155,7 +2140,7 @@ private[sources] class GraftColumnarReader(
     */
   private lazy val tokenIndexEntries: Option[Map[(Int, Int), List[TokenIndex.Entry]]] =
     if (f.containsToken.isEmpty || f.tablePath.isEmpty) None
-    else TokenIndex.entriesForFile(f.tablePath, GraftScan.nameOf(file), f.conf.value)
+    else TokenIndex.entriesForFile(f.tablePath, GraftScan.nameOf(file), f.conf.value.value)
 
   private lazy val decoder =
     BlockDecoder.fromHeader(f.headerBytes, f.maxBits, f.numContexts, f.contextModel)
@@ -2599,7 +2584,7 @@ private[sources] object GraftFiles {
     */
   def deletedIdSets(
       files: Array[String],
-      conf: SerializableHadoopConf,
+      conf: Broadcast[SerializableConfiguration],
       bins: Option[Array[Int]]
   ): Array[Set[String]] = {
     def load(ps: Array[String]): Set[String] = {
@@ -2642,7 +2627,7 @@ private[sources] object GraftFiles {
     if (schemaCache.size > SchemaCacheCap) schemaCache.clear()
     schemaCache.getOrElseUpdate(
       file, {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+        val r = BlockParquet.openFile(new Path(file), conf)
         try r.getFileMetaData.getSchema
         finally r.close()
       }
@@ -2652,23 +2637,27 @@ private[sources] object GraftFiles {
   /** Open a block file projected to `wanted` columns (exact types from the
     * cached footer schema, so the projection can never disagree with the
     * writer), optionally with a `bin` membership filter pushed to parquet.
-    * Each call copies the serialized driver conf — the projection setting
+    * Each call copies the broadcast driver conf — the projection setting
     * must not leak into sibling readers.
     */
   def openProjected(
       file: String,
-      sConf: SerializableHadoopConf,
+      sConf: Broadcast[SerializableConfiguration],
       wanted: Set[String],
       bins: Option[Array[Int]]
   ): ParquetReader[Group] = {
-    val conf = new Configuration(sConf.value)
+    val conf = new Configuration(sConf.value.value)
     val fileSchema = GraftFiles.fileSchema(file, conf)
     val projection = new MessageType(
       fileSchema.getName,
       fileSchema.getFields.asScala.filter(t => wanted.contains(t.getName)).asJava
     )
     conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val builder = ParquetReader.builder(new GroupReadSupport(), new Path(file)).withConf(conf)
+    // the InputFile builder reads with `conf`; the Path builder would first
+    // parse Hadoop's default XML into a fresh Configuration on every open
+    val builder = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(new Path(file), conf)) {
+      override protected def getReadSupport(): org.apache.parquet.hadoop.api.ReadSupport[Group] = new GroupReadSupport()
+    }
     bins.foreach { bs =>
       val pred: FilterPredicate = bs
         .map(b => FilterApi.eq(FilterApi.intColumn("bin"), Int.box(b)))

@@ -14,6 +14,8 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.util.SerializableConfiguration
 
 /** `df.write.format("graft").mode("append").save(outDir)` — the DSv2 WRITE
   * path over an [[graft.pipeline.EncodeJob]] output directory, plus the
@@ -106,7 +108,7 @@ private[sources] final class GraftWriteBuilder(
         info.queryId(),
         ords,
         GraftBootstrap.Options.from(info.options()),
-        new SerializableHadoopConf(conf)
+        spark.sparkContext.broadcast(new SerializableConfiguration(conf))
       )
     }
     val meta = metaOpt.get
@@ -178,7 +180,7 @@ private[sources] final class GraftWriteBuilder(
       headerBytes = headerBytes,
       colOrds = Array(docOrd, tokOrd, ntokOrd, srcOrd),
       maxBufferedValues = longOpt("maxBufferedValues", 32L * 1024 * 1024),
-      conf = new SerializableHadoopConf(conf),
+      conf = spark.sparkContext.broadcast(new SerializableConfiguration(conf)),
       clustered = boolOpt("clusteredWrite", clustered)
     )
   }
@@ -224,7 +226,7 @@ private[sources] final class GraftWrite(
     headerBytes: Array[Byte],
     colOrds: Array[Int],
     maxBufferedValues: Long,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableConfiguration],
     clustered: Boolean
 ) extends Write
     with RequiresDistributionAndOrdering {
@@ -545,7 +547,7 @@ private[sources] final case class GraftWriterFactory(
     cfg: GraftPipeline.Config,
     maxBufferedValues: Long,
     colOrds: Array[Int],
-    conf: SerializableHadoopConf
+    conf: Broadcast[SerializableConfiguration]
 ) extends DataWriterFactory
     with StreamingDataWriterFactory {
 
@@ -598,7 +600,7 @@ private[sources] final class GraftDataWriter(
     cfg: GraftPipeline.Config,
     colOrds: Array[Int],
     maxBufferedValues: Long,
-    sConf: SerializableHadoopConf
+    sConf: Broadcast[SerializableConfiguration]
 ) extends DataWriter[InternalRow] {
 
   private val tables =
@@ -662,7 +664,7 @@ private[sources] final class GraftDataWriter(
       cfg
     )
     it.foreach { b =>
-      if (writer == null) writer = BlockParquet.open(new Path(stagingDir, fileName), sConf.value)
+      if (writer == null) writer = BlockParquet.open(new Path(stagingDir, fileName), sConf.value.value)
       writer.write(BlockParquet.toGroup(b, groups))
       binsTouched += bin
       nRows += b.n_rows
@@ -696,7 +698,7 @@ private[sources] final class GraftDataWriter(
   override def abort(): Unit = {
     if (writer != null) {
       writer.close()
-      val fs = new Path(stagingDir).getFileSystem(sConf.value)
+      val fs = new Path(stagingDir).getFileSystem(sConf.value.value)
       fs.delete(new Path(stagingDir, fileName), false): Unit
     }
   }

@@ -4,6 +4,7 @@ import graft.ops.{Decontaminate, Dedup, XHash}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** One per-document row of the signature index
   * (`_sig_index_n{N}_k{K}/six-<uuid>/part-*.parquet`). `doc_id = null` is
@@ -151,7 +152,7 @@ object SignatureIndex {
     val bMeta = spark.sparkContext.broadcast(
       (meta.headerBytes, meta.maxBits, meta.numContexts, meta.contextModel)
     )
-    val sConf = new SerializableHadoopConf(conf)
+    val sConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     val salts = Array.tabulate(k)(Dedup.minhashSalt)
     val p = protocol(outDir, shingleN, k)
     val entries = spark.sparkContext
@@ -218,7 +219,7 @@ object SignatureIndex {
     val bMeta = spark.sparkContext.broadcast(
       (meta.headerBytes, meta.maxBits, meta.numContexts, meta.contextModel)
     )
-    val sConf = new SerializableHadoopConf(conf)
+    val sConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     val salts = Array.tabulate(k)(Dedup.minhashSalt)
     val p = sketchProtocol(outDir, shingleN, k, bands)
     val entries = spark.sparkContext

@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
 
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.util.SerializableConfiguration
 
 /** One per-block row of the token index as written to tix-*.parquet.
   * Top-level (and public in bytecode) because Spark's Dataset encoder
@@ -227,7 +229,7 @@ object TokenIndex {
     val bMeta = spark.sparkContext.broadcast(
       (meta.headerBytes, meta.maxBits, meta.numContexts, meta.contextModel)
     )
-    val sConf = new SerializableHadoopConf(conf)
+    val sConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
 
     import spark.implicits._
     // ONE distributed job: the decode pass feeds the bucketed entry write
@@ -358,7 +360,7 @@ object TokenIndex {
     val bMeta = spark.sparkContext.broadcast(
       (meta.headerBytes, meta.maxBits, meta.numContexts, meta.contextModel)
     )
-    val sConf = new SerializableHadoopConf(conf)
+    val sConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     spark.sparkContext
       .parallelize(live.toIndexedSeq, live.length)
       .map { file =>
@@ -374,7 +376,7 @@ object TokenIndex {
     */
   private def indexOneFile(
       file: String,
-      sConf: SerializableHadoopConf,
+      sConf: Broadcast[SerializableConfiguration],
       headerBytes: Array[Byte],
       maxBits: Int,
       numContexts: Int,

@@ -24,4 +24,14 @@ object GraftSqlBridge {
   ): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(name, info, builder)
+
+  /** A DataFrame over catalyst rows an RDD already holds (no Row
+    * conversion); `internalCreateDataFrame` is private[sql].
+    */
+  def internalCreateDataFrame(
+      spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType
+  ): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -339,4 +339,39 @@ class EncodeJobSpec extends AnyFunSuite {
     info(s"${jobs.get()} jobs")
     assert(jobs.get() >= 1 && jobs.get() <= 3, s"${jobs.get()} jobs")
   }
+
+  test("a fresh EncodeJob.run reads each input row once") {
+    val sc = spark.sparkContext
+    val group = "encode-records-read"
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val groupOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+          e.stageIds.foreach(groupOf.put(_, g))
+          if (g == "records-marker") marker.countDown()
+        }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (groupOf.get(e.stageId) == group && e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
+    }
+    val path = Files.createTempDirectory("graft-records").toString + "/input"
+    input.write.parquet(path)
+    val parquetInput = spark.read.parquet(path).as[TokenRow](org.apache.spark.sql.Encoders.product[TokenRow])
+    val dir = Files.createTempDirectory("graft-records-out").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "fresh encode")
+      EncodeJob.run(parquetInput, dir, cfg)
+      sc.setJobGroup("records-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      // the run's task-end events precede the marker job's start
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(read.get() == input.count(), s"${read.get()} records read for ${input.count()} input rows")
+  }
 }

@@ -1,11 +1,12 @@
 package graft.sources
 
 import graft.pipeline.GraftPipeline.Config
-import graft.pipeline.{EncodeJob, Maintenance, SparkTestBase, TokenTables}
+import graft.pipeline.{BlockParquet, EncodeJob, Maintenance, SparkTestBase, TokenTables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 /** [[Audit.audit]] — the decode-verify fsck over live block files. */
 class AuditSpec extends AnyFunSuite {
@@ -29,6 +30,17 @@ class AuditSpec extends AnyFunSuite {
     assert(rows.map(_.nValues).sum == input.collect().map(_.n_tok.toLong).sum)
     // every block writer skips empty partitions: no live file is 0-block
     assert(rows.forall(_.nBlocks > 0L))
+    // the payload columns are written without statistics or a column
+    // index, and the audit above accepted them; bin keeps both
+    val r = BlockParquet.openFile(new org.apache.hadoop.fs.Path(live.head._1), spark.sparkContext.hadoopConfiguration)
+    try {
+      val cols = r.getFooter.getBlocks.get(0).getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
+      assert(cols("bin").getStatistics.hasNonNullValue && r.readColumnIndex(cols("bin")) != null)
+      for (c <- Seq("doc_ids_payload", "sources_payload", "n_toks_payload", "row_bits_payload", "payload")) {
+        assert(!cols(c).getStatistics.hasNonNullValue, c)
+        assert(r.readColumnIndex(cols(c)) == null, c)
+      }
+    } finally r.close()
   }
 
   test("a corrupted payload is attributed to its file; the rest still report ok") {

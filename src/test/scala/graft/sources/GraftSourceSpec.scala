@@ -489,16 +489,19 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(stats.sizeInBytes > 0)
   }
 
-  test("SerializableHadoopConf ships custom fs settings through serialization") {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    conf.set("fs.graft.test.key", "v123")
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    oos.writeObject(new SerializableHadoopConf(conf))
-    oos.close()
-    val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bos.toByteArray))
-    val back = in.readObject().asInstanceOf[SerializableHadoopConf]
-    assert(back.value.get("fs.graft.test.key") == "v123")
+  test("custom spark.hadoop.* fs settings reach the executor-side readers") {
+    import spark.implicits._
+    // a scheme only the session's Hadoop conf knows, uncached, so an
+    // executor-side reader resolves it from the conf it was shipped
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.graftprobe.impl" -> classOf[GraftProbeFileSystem].getName, "fs.graftprobe.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      val df = spark.read.format("graft").load(s"graftprobe://$dirA")
+      val got = df.agg(count(lit(1)), sum($"n_tok"), sum(aggregate($"tokens", lit(0L), (a, t) => a + t))).head()
+      val want = input.agg(count(lit(1)), sum($"n_tok"), sum(aggregate($"tokens", lit(0L), (a, t) => a + t))).head()
+      assert(got == want)
+    } finally keys.foreach { case (k, _) => conf.unset(k) }
   }
 
   test("limit pushdown stops decoding after the per-partition quota") {
@@ -1024,4 +1027,10 @@ class GraftSourceSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("tokenPrefix"), e.getMessage)
   }
+}
+
+/** The local file system under the `graftprobe` scheme. */
+class GraftProbeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftprobe:///")
+  override def getScheme: String = "graftprobe"
 }
