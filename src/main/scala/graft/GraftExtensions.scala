@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.LongType
   *                             (reference encode split, common.rs:38-53),
   *                             codegen'd; argument widened to BIGINT.
   *   - `graft_pack_varint(a)`— varint-pack an array<int> to binary (the
-  *                             exchange-compaction kernel).
+  *                             codec the routing exchange packs tokens with).
   *   - `graft_token_sum(a)`  — sum an array<int> to bigint (nulls ignored,
   *                             DuckDB list_sum semantics), codegen'd: the
   *                             unboxed form of

@@ -1,18 +1,17 @@
 package graft.functions
 
 import graft.codec.VarInt
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** Catalyst expression packing an array<int> column to LEB128 varint bytes
-  * ([[graft.codec.VarInt]]) for the encode exchange. A native expression
-  * rather than a typed map: the pre-shuffle projection
-  * (scan → pack → hash-partition) stays inside ONE whole-stage-codegen
-  * span, instead of paying a DeserializeToObject/SerializeFromObject
-  * boundary that re-materializes every row's strings around the pack call.
+  * ([[graft.codec.VarInt]]), the `graft_pack_varint` SQL function
+  * ([[graft.GraftExtensions]]). A native expression rather than a typed
+  * map: a projection that packs stays inside one whole-stage-codegen span
+  * instead of paying a DeserializeToObject/SerializeFromObject boundary
+  * that re-materializes every row's strings around the pack call.
   */
 case class PackVarInt(child: Expression) extends UnaryExpression {
 
@@ -43,8 +42,3 @@ case class PackVarInt(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object PackVarInt {
-  /** Column API: graft.functions.PackVarInt.pack_varint($"tokens"). */
-  def pack_varint(c: Column): Column =
-    GraftSqlBridge.column(PackVarInt(GraftSqlBridge.expression(c)))
-}

@@ -12,7 +12,6 @@ import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Dataset
 import org.apache.spark.util.SerializableConfiguration
 
 /** Hand-rolled parquet IO for block and manifest files — the ONE writer of
@@ -128,25 +127,10 @@ private[graft] object BlockParquet {
     * publish exactly the files the returned rows name — a failed attempt's
     * file is named by none.
     */
-  def stage(blocks: Dataset[EncodedBlock], stagingDir: String, prefix: String): Array[EncodeJob.BinManifest] = {
-    val rdd = blocks.rdd
-    stage(rdd, rdd.partitions.indices, stagingDir, prefix)
-  }
-
-  /** [[stage]] over the given partitions of `blocks` only. */
-  def stage(
-      blocks: RDD[EncodedBlock],
-      partitions: Seq[Int],
-      stagingDir: String,
-      prefix: String
-  ): Array[EncodeJob.BinManifest] = {
+  def stage(blocks: RDD[EncodedBlock], stagingDir: String, prefix: String): Array[EncodeJob.BinManifest] = {
     val sc = blocks.sparkContext
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    sc.runJob(
-      blocks,
-      (it: Iterator[EncodedBlock]) => writeFile(it, stagingDir, prefix, conf.value.value).toArray,
-      partitions
-    ).flatten
+    sc.runJob(blocks, (it: Iterator[EncodedBlock]) => writeFile(it, stagingDir, prefix, conf.value.value).toArray).flatten
   }
 
   /** One task's side of [[stage]]. */

@@ -288,24 +288,17 @@ object Deletes {
         .as[Int]
         .collect()
 
-      val cfg = GraftPipeline.Config(
-        numContexts = tables.numContexts,
-        maxBits = tables.maxBits,
-        numBins = numBins,
-        salt = salt,
-        contextModel = meta.strOpt("context_model").getOrElse("simple")
-      )
+      // the new blocks keep the dir's self-describing convention: embed
+      // when any live block embeds its tables
+      val embed = !EncodeJob.readBlocks(spark, outDir).select($"embedded_tables").where($"embedded_tables").isEmpty
+      val cfg = EncodeJob.reencodeConfig(meta, tables, embed)
       val bTables = spark.sparkContext.broadcast(tables)
       val uuid = java.util.UUID.randomUUID().toString
       val staging = new Path(s"$outDir/_write_staging/replace-$uuid")
       // only the staged file names are used: the manifest is re-derived
       // after the commit (the touched bins keep their older files too)
       val parts = BlockParquet
-        .stage(
-          GraftPipeline.encode(cached, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, binsTouched.length)))),
-          staging.toString,
-          s"replace-$uuid"
-        )
+        .stage(GraftPipeline.route(cached, cfg, Some(binsTouched.toSet)).blocks(bTables), staging.toString, s"replace-$uuid")
         .map(_.files)
         .distinct
         .sorted

@@ -239,6 +239,21 @@ object EncodeJob {
     Some(overridden)
   }
 
+  /** The Config that re-encodes rows into a committed dir: its `tables`,
+    * the bin layout and context model of its `meta` ([[loadMeta]]), and
+    * `embed` — a rewrite keeps the self-describing convention when any
+    * block it replaces or joins embeds its tables.
+    */
+  def reencodeConfig(meta: MiniJson.JObj, tables: SymbolTables, embed: Boolean): GraftPipeline.Config =
+    GraftPipeline.Config(
+      numContexts = tables.numContexts,
+      maxBits = tables.maxBits,
+      numBins = meta.long("num_bins").toInt,
+      salt = meta.long("salt"),
+      contextModel = meta.strOpt("context_model").getOrElse("simple"),
+      embedTables = embed
+    )
+
   def loadTables(spark: SparkSession, outDir: String): Option[SymbolTables] = {
     val meta = loadMeta(spark, outDir).getOrElse(return None)
     val maxBits = meta.long("max_bits").toInt
@@ -470,13 +485,13 @@ object EncodeJob {
   /** Run (or resume) the full encode into `outDir`.
     *
     * The reference's two passes: histograms, shared tables, then the
-    * block encode. A fresh run (no persisted tables, `rounds == 1`) scans
-    * its input ONCE: pass 1 rides the map side of pass 2's routing shuffle
-    * ([[GraftPipeline.route]]), one small job merges the histogram
-    * partials, the tables are built, saved and broadcast, and the
-    * encode-and-stage job reads the same shuffle output. Resumes over
-    * persisted tables and `rounds > 1` encode through [[GraftPipeline.encode]]
-    * (the latter after its analysis rounds).
+    * block encode. Every run routes its input once through
+    * [[GraftPipeline.route]], keeping the bins not yet committed, and
+    * commits that shuffle's blocks ([[commitBlocks]]). The tables are the
+    * persisted ones on a resume (byte-identical output); a fresh run with
+    * `rounds == 1` folds pass 1 into the routing shuffle's map side (one
+    * input scan, one small merge job), and `rounds > 1` runs its analysis
+    * rounds first.
     *
     * @param onlyBins  restrict this run to a subset of bins — the test hook
     *                  for simulating a job killed mid-encode.
@@ -488,7 +503,6 @@ object EncodeJob {
       onlyBins: Option[Set[Int]] = None
   ): EncodeResult = {
     val spark = input.sparkSession
-    import spark.implicits._
 
     // complete any interrupted rebin before reading layout or lineage — a
     // routine encode entering the commit-to-heal crash window must not run
@@ -511,28 +525,11 @@ object EncodeJob {
     // row forever — resume re-derives those rows from the committed blocks.
     val repair = done -- manifestedBins(spark, outDir)
 
-    def fresh(t: SymbolTables): SymbolTables = {
-      saveTables(spark, outDir, t, cfg.contextModel, layout = Some(cfg))
-      t
-    }
-    // encode only the missing bins: the bin predicate prunes before the
-    // shuffle, so resumed runs shuffle only the remaining data. The encode
-    // tasks write their own block files and report their manifest rows;
-    // the driver publishes both.
-    def encodeTodo(t: SymbolTables): Unit =
-      if (todo.nonEmpty) {
-        val pending = keep.fold(input) { bins =>
-          input
-            .withColumn("__bin", GraftPipeline.binCol(cfg.numBins, cfg.salt))
-            .where(binMembership(col("__bin"), bins))
-            .drop("__bin")
-            .as[TokenRow]
-        }
-        val blocks = GraftPipeline.encode(pending, spark.sparkContext.broadcast(t), cfg).rdd
-        commitBlocks(spark, blocks, blocks.partitions.indices, outDir, snapshotId)
-      }
     // 2. shared symbol tables: reuse persisted ones (byte-identical
-    // resume), else pass 1 + build + persist; then 3. encode.
+    // resume), else pass 1 + build + persist; then 3. encode the missing
+    // bins. The routing shuffle drops committed bins on its map side, so a
+    // resume shuffles only the remaining data.
+    val routed = GraftPipeline.route(input, cfg, keep)
     val tables = loadTables(spark, outDir) match {
       case Some(t) =>
         require(
@@ -568,14 +565,6 @@ object EncodeJob {
           recordedSalt.forall(_ == cfg.salt),
           s"persisted bin salt ${recordedSalt.getOrElse(-1L)} != config ${cfg.salt}"
         )
-        encodeTodo(t)
-        t
-      case None if cfg.rounds == 1 && todo.nonEmpty =>
-        // pass 1 on the routing shuffle's map side: one input scan
-        val routed = GraftPipeline.route(input, cfg, keep)
-        val t = fresh(GraftPipeline.buildTables(routed.histograms(), cfg))
-        val blocks = routed.blocks(spark.sparkContext.broadcast(t), cfg)
-        commitBlocks(spark, blocks, routed.dataPartitions, outDir, snapshotId)
         t
       case None =>
         // cfg.rounds > 1 runs the reference-style iterative re-estimation,
@@ -583,16 +572,20 @@ object EncodeJob {
         // estimator, no bit-writing — an extra round costs ~one analyze
         // scan, the reference's actual design, convert.rs:95-152);
         // estimatedRounds=false selects the exact dry-run-encode variant
-        // with the monotone-size guarantee.
+        // with the monotone-size guarantee. One round folds pass 1 into the
+        // routing shuffle's map side: one input scan.
         require(cfg.rounds == 1 || cfg.autoSelect, "rounds > 1 requires autoSelect")
-        val t = fresh(
-          if (cfg.rounds > 1 && cfg.estimatedRounds)
-            GraftPipeline.analyzeRoundsEstimated(input, cfg, cfg.rounds)
+        val t =
+          if (cfg.rounds == 1) GraftPipeline.buildTables(routed.histograms(), cfg)
+          else if (cfg.estimatedRounds) GraftPipeline.analyzeRoundsEstimated(input, cfg, cfg.rounds)
           else GraftPipeline.analyzeRounds(input, cfg, cfg.rounds)
-        )
-        encodeTodo(t)
+        saveTables(spark, outDir, t, cfg.contextModel, layout = Some(cfg))
         t
     }
+    // the encode tasks write their own block files and report their
+    // manifest rows; the driver publishes both
+    if (todo.nonEmpty)
+      commitBlocks(spark, routed.blocks(spark.sparkContext.broadcast(tables)), outDir, snapshotId)
 
     if (repair.nonEmpty) {
       // manifest entries for the repaired bins, derived from their
@@ -668,7 +661,6 @@ object EncodeJob {
   private def commitBlocks(
       spark: SparkSession,
       blocks: RDD[EncodedBlock],
-      partitions: Seq[Int],
       outDir: String,
       snapshotId: Long
   ): Unit = {
@@ -676,7 +668,7 @@ object EncodeJob {
     val runId = java.util.UUID.randomUUID().toString
     val staging = new Path(s"$outDir/_write_staging/$StagingPrefix$runId")
     try {
-      val reported = BlockParquet.stage(blocks, partitions, staging.toString, s"$StagingPrefix$runId")
+      val reported = BlockParquet.stage(blocks, staging.toString, s"$StagingPrefix$runId")
       val blocksDir = new Path(s"$outDir/blocks")
       f.mkdirs(blocksDir)
       reported.map(_.files).distinct.sorted.foreach { name =>

@@ -3,8 +3,8 @@ package graft.pipeline
 import graft.codec._
 import graft.core._
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, GraftSqlBridge, SparkSession}
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, StringType, StructField, StructType}
@@ -442,55 +442,17 @@ object GraftPipeline {
     buildTables(hist, cfg)
   }
 
-  /** Pass 2: deterministic block encode. Rows are routed to their bin
-    * (salted hash of doc_id), sorted within partitions by (bin, doc_id), and
-    * packed greedily into blocks capped by rows AND values — the value cap is
-    * the skew guard: long token arrays fill a block alone instead of bloating
-    * one task's unit of work.
-    *
-    * Token arrays travel through the exchange VARINT-PACKED ([[graft.codec.VarInt]]):
-    * shuffle bytes are the parallelism-independent cost (network at cluster
-    * scale, page-faulted shuffle files locally), and the zipf-heavy token
-    * domain packs ~3x smaller than fixed int32; pack/unpack CPU rides the
-    * scaling compute path. The kernel sees the identical Array[Int], so
-    * block bytes are unchanged (bin-keyed determinism intact).
-    *
-    * This is pass 2 for callers that already hold tables: resumes over
-    * persisted tables, `rounds > 1`, and the maintenance and replace
-    * re-encodes. A fresh [[EncodeJob.run]] takes [[route]] instead, which
-    * computes pass 1 on this shuffle's map side and routes rows to the same
-    * partitions.
-    *
-    * @param shufflePartitions override for the routing exchange's partition
-    *   count (default: one partition per bin). The kernel only needs bins
-    *   CONTIGUOUS within a partition (repartition on bin + within-partition
-    *   sort gives that at any count), so small inputs over a table-scale bin
-    *   layout — e.g. [[Maintenance.purgeDeletes]] rewriting a few bins of an
-    *   800k-bin corpus — can shuffle into proportionally few partitions
-    *   instead of launching one near-empty task per bin.
+  /** Pass 2: deterministic block encode of `ds` under `tables` through
+    * [[route]]'s bin-routing shuffle, every bin routed. Rows reach their
+    * bin's partition sorted by (bin, source, doc_id) and are packed greedily
+    * into blocks capped by rows AND values — the value cap is the skew
+    * guard: long token arrays fill a block alone instead of bloating one
+    * task's unit of work. The caller holds its tables, so no histograms are
+    * folded; unlike [[Routed.blocks]], the Dataset is lazy like any other.
     */
-  def encode(
-      ds: Dataset[TokenRow],
-      tables: Broadcast[SymbolTables],
-      cfg: Config,
-      shufflePartitions: Option[Int] = None
-  ): Dataset[EncodedBlock] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-
-    // Sorting by (bin, source, doc_id) keeps blocks source-homogeneous, so
-    // per-block codec selection sees the source's token distribution rather
-    // than an average over sources. pack_varint is a native expression, so
-    // scan → pack → bin stays one whole-stage-codegen span into the exchange.
-    val binned = ds
-      .withColumn("packed", graft.functions.PackVarInt.pack_varint($"tokens"))
-      .withColumn("bin", binCol(cfg.numBins, cfg.salt))
-      .repartition(shufflePartitions.getOrElse(cfg.numBins), $"bin")
-      .sortWithinPartitions($"bin", $"source", $"doc_id")
-      .select($"doc_id", $"packed", $"n_tok", $"source", $"bin")
-      .as[(String, Array[Byte], Int, String, Int)]
-
-    binned.mapPartitions(rows => blockIterator(unpacked(rows), tables.value, cfg))
+  def encode(ds: Dataset[TokenRow], tables: Broadcast[SymbolTables], cfg: Config): Dataset[EncodedBlock] = {
+    import ds.sparkSession.implicits._
+    route(ds, cfg, None).shuffle(0).mapPartitions(rows => blockIterator(unpacked(rows), tables.value, cfg))
   }
 
   /** Routed rows with their token arrays unpacked, for [[blockIterator]]. */
@@ -513,123 +475,149 @@ object GraftPipeline {
       (d, toks, n, s, b)
     }
 
-  /** The routing shuffle of [[encode]] with pass 1 on its map side — the
-    * reference's two passes (parallel histograms, driver-built tables,
-    * parallel encode) over ONE input scan. Each map task reads a row's
-    * `tokens` once: [[histogramKernel]] folds them into the task's partial
-    * and the same array is varint-packed for the exchange. Data rows go to
-    * partition `pmod(hash(bin), numBins)` — what `repartition(numBins,
-    * $"bin")` in [[encode]] computes — so block files are those [[encode]]
-    * writes. After its last row each map task emits its partial as one row
-    * (a negative `bin` marks it) to one of [[Routed.numPartials]] extra
-    * partitions past the data partitions.
+  /** Pass 2's bin-routing shuffle: the one exchange under every encode —
+    * [[encode]], [[EncodeJob.run]], and the [[Maintenance]] and
+    * [[Deletes.replaceDocs]] re-encodes. Each map task reads a row once as
+    * an `InternalRow` and varint-packs its `tokens` for the exchange
+    * ([[graft.codec.VarInt]]: shuffle bytes are the parallelism-independent
+    * cost, and the zipf-heavy token domain packs ~3x smaller than int32; the
+    * kernel sees the identical Array[Int], so block bytes are unchanged).
+    * A data row of bin b goes to partition `pmod(hash(b), n)` — what
+    * `repartition(n, $"bin")` computes — sorted by (bin, source, doc_id), so
+    * a bin is contiguous in one partition and its blocks source-homogeneous.
+    * n is numBins when every bin is routed; a subset is routed into
+    * min(numBins, max(32, |keep|)) partitions, so rewriting a few bins of an
+    * 800k-bin table does not launch one near-empty task per bin.
     *
-    * Driver ingress stays bounded without a tree reduce: the partials meet
-    * in those extra partitions, so the driver receives numPartials merged
-    * histograms — 1 up to 64 map tasks, about √tasks above (the
-    * [[reduceFlat]] sizing). A re-run map task's output replaces its
-    * earlier attempt's, so each partial counts once under retries.
+    * Nothing runs until [[Routed.histograms]] or [[Routed.blocks]] is
+    * called (or an action on [[encode]]'s Dataset), and the first call
+    * decides the map side: a caller with no tables yet asks for
+    * [[Routed.histograms]] first, and pass 1 then rides this shuffle — the
+    * reference's two passes (parallel histograms, driver-built tables,
+    * parallel encode) over ONE input scan.
     *
     * @param keep the bins to encode (None: all). Only data rows are
-    *             filtered; the histograms see every input row.
+    *             filtered; folded histograms see every input row.
     */
   def route(ds: Dataset[TokenRow], cfg: Config, keep: Option[Set[Int]]): Routed = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val numBins = cfg.numBins
-    val nCtx = cfg.numContexts
-    val nSym = 1 << cfg.maxBits
-    val kernel = histogramKernel(cfg)
     val input = ds.select(
       col("doc_id").cast(StringType),
       col("tokens"),
       col("n_tok").cast(IntegerType),
       col("source").cast(StringType),
-      binCol(numBins, cfg.salt)
+      binCol(cfg.numBins, cfg.salt)
     )
-    val elemNullable = containsNull(input.schema(1).dataType)
-    // a partition-less (empty) input still runs one map task: its empty
-    // partial keeps the shuffle non-empty, so the routed partition count
-    // holds under AQE too
-    val inputRows = input.queryExecution.toRdd
-    val scan =
-      if (inputRows.getNumPartitions > 0) inputRows
-      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
-    val numPartials = if (scan.getNumPartitions <= 64) 1 else math.ceil(math.sqrt(scan.getNumPartitions)).toInt
-    val tagged = scan.mapPartitionsWithIndex { (task, rows) =>
-      val hist = new Histograms(nCtx, nSym)
-      val data = rows.flatMap { r =>
-        val tokens = tokenArray(r, 1, elemNullable)
-        kernel(hist, tokens)
-        val bin = r.getInt(4)
-        if (keep.exists(!_.contains(bin))) None
-        else {
-          val docId = r.getUTF8String(0)
-          if (r.isNullAt(2)) throw new IllegalArgumentException(s"row $docId: null n_tok unsupported")
-          val source = r.getUTF8String(3)
-          Some(InternalRow(
-            if (docId == null) null else docId.clone(),
-            VarInt.pack(tokens),
-            r.getInt(2),
-            if (source == null) null else source.clone(),
-            bin
-          ))
-        }
-      }
-      data ++ Iterator.single(InternalRow(null, partialBytes(hist), 0, null, -1 - task % numPartials))
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", StringType),
-      StructField("packed", BinaryType),
-      StructField("n_tok", IntegerType, nullable = false),
-      StructField("source", StringType),
-      StructField("bin", IntegerType, nullable = false)
-    ))
-    val rows = GraftSqlBridge
-      .internalCreateDataFrame(spark, tagged, schema)
-      .repartitionById(
-        numBins + numPartials,
-        when($"bin" >= 0, pmod(hash($"bin"), lit(numBins))).otherwise(lit(numBins - 1) - $"bin")
-      )
-      .sortWithinPartitions($"bin", $"source", $"doc_id")
-      .as[(String, Array[Byte], Int, String, Int)]
-      .rdd
-    new Routed(rows, numBins, numPartials, nCtx, nSym)
+    new Routed(input, cfg, keep)
   }
 
-  /** The output of [[route]]'s shuffle: partitions `0 until numData` hold
-    * the data rows, the `numPartials` after them the histogram partials.
-    * Both jobs read the same shuffle output; the map stage runs once.
+  /** [[route]]'s shuffle. Partitions `0 until numData` hold the data rows;
+    * a shuffle built by [[histograms]] has [[numPartials]] more after them,
+    * one histogram partial row (a negative `bin`) per map task, and
+    * [[blocks]] then reads that same shuffle output — the map stage runs
+    * once. Driver ingress stays bounded without a tree reduce: the partials
+    * meet in those partitions, so the driver receives numPartials merged
+    * histograms. A re-run map task's output replaces its earlier attempt's,
+    * so each partial counts once under retries.
     */
-  final class Routed private[GraftPipeline] (
-      rows: RDD[(String, Array[Byte], Int, String, Int)],
-      numData: Int,
-      val numPartials: Int,
-      numContexts: Int,
-      numSymbols: Int
-  ) {
-    require(rows.getNumPartitions == numData + numPartials, s"${rows.getNumPartitions} routed partitions")
+  final class Routed private[GraftPipeline] (input: DataFrame, cfg: Config, keep: Option[Set[Int]]) {
+    private val spark = input.sparkSession
+    private val numData: Int = keep.fold(cfg.numBins)(k => math.min(cfg.numBins, math.max(32, k.size)))
 
-    def dataPartitions: Seq[Int] = 0 until numData
+    // the input's rows; a partition-less (empty) input still runs one map
+    // task: its empty partial keeps a folding shuffle non-empty, so the
+    // routed partition count holds under AQE too
+    private lazy val scan: RDD[InternalRow] = {
+      val rows = input.queryExecution.toRdd
+      if (rows.getNumPartitions > 0) rows else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    }
 
-    /** Pass 1's result: one small job merges the partial partitions. */
+    /** Partial partitions of a folding shuffle: 1 up to 64 map tasks,
+      * about √tasks above (the [[reduceFlat]] sizing).
+      */
+    lazy val numPartials: Int =
+      if (scan.getNumPartitions <= 64) 1 else math.ceil(math.sqrt(scan.getNumPartitions)).toInt
+
+    private var folded: Option[RDD[(String, Array[Byte], Int, String, Int)]] = None
+
+    /** Pass 1's result: the map side folds each task's `tokens` with
+      * [[histogramKernel]], and one small job merges the partial partitions.
+      */
     def histograms(): Histograms = {
-      val size = numContexts * numSymbols
-      val merged = rows.sparkContext.runJob(
+      require(folded.isEmpty, "histograms() already ran on this route")
+      val rows = shuffle(numPartials).rdd
+      require(rows.getNumPartitions == numData + numPartials, s"${rows.getNumPartitions} routed partitions")
+      folded = Some(rows)
+      val (nCtx, nSym) = (cfg.numContexts, 1 << cfg.maxBits)
+      val merged = spark.sparkContext.runJob(
         rows,
         (it: Iterator[(String, Array[Byte], Int, String, Int)]) =>
-          it.foldLeft(new Array[Long](size))((sum, r) => addPartial(sum, r._2)),
+          it.foldLeft(new Array[Long](nCtx * nSym))((sum, r) => addPartial(sum, r._2)),
         numData until numData + numPartials
       )
-      Histograms.fromFlat(merged.reduce(Histograms.mergeFlat), numContexts, numSymbols)
+      Histograms.fromFlat(merged.reduce(Histograms.mergeFlat), nCtx, nSym)
     }
 
-    /** Pass 2: the encoded blocks. Run it over [[dataPartitions]] only; a
-      * partial partition's rows are not token rows.
+    /** Pass 2: the encoded blocks of the data partitions; the partitions
+      * of histogram partial rows are skipped. Unless [[histograms]] ran it
+      * already, the routing map stage runs here under AQE.
       */
-    def blocks(tables: Broadcast[SymbolTables], cfg: Config): RDD[EncodedBlock] =
-      rows.mapPartitions(it => blockIterator(unpacked(it), tables.value, cfg))
+    def blocks(tables: Broadcast[SymbolTables]): RDD[EncodedBlock] = {
+      val (c, n) = (cfg, numData)
+      val rows = folded.fold(shuffle(0).rdd)(PartitionPruningRDD.create(_, _ < n))
+      rows.mapPartitions(it => blockIterator(unpacked(it), tables.value, c))
+    }
+
+    /** The routed, sorted rows, with `partials` histogram partitions after
+      * the data partitions (0: no histograms are folded).
+      */
+    private[GraftPipeline] def shuffle(partials: Int): Dataset[(String, Array[Byte], Int, String, Int)] = {
+      import spark.implicits._
+      val (n, bins, nullable) = (numData, keep, containsNull(input.schema(1).dataType))
+      val (nCtx, nSym, kernel) = (cfg.numContexts, 1 << cfg.maxBits, histogramKernel(cfg))
+      val tagged = scan.mapPartitionsWithIndex { (task, rows) =>
+        val hist = if (partials > 0) Some(new Histograms(nCtx, nSym)) else None
+        val data = rows.flatMap { r =>
+          val bin = r.getInt(4)
+          val kept = bins.forall(_.contains(bin))
+          if (!kept && hist.isEmpty) None
+          else {
+            val tokens = tokenArray(r, 1, nullable)
+            hist.foreach(kernel(_, tokens))
+            if (!kept) None
+            else {
+              val docId = r.getUTF8String(0)
+              if (r.isNullAt(2)) throw new IllegalArgumentException(s"row $docId: null n_tok unsupported")
+              val source = r.getUTF8String(3)
+              Some(InternalRow(
+                if (docId == null) null else docId.clone(),
+                VarInt.pack(tokens),
+                r.getInt(2),
+                if (source == null) null else source.clone(),
+                bin
+              ))
+            }
+          }
+        }
+        data ++ hist.map(h => InternalRow(null, partialBytes(h), 0, null, -1 - task % partials))
+      }
+      GraftSqlBridge
+        .internalCreateDataFrame(spark, tagged, RoutedSchema)
+        .repartitionById(
+          n + partials,
+          when($"bin" >= 0, pmod(hash($"bin"), lit(n))).otherwise(lit(n - 1) - $"bin")
+        )
+        .sortWithinPartitions($"bin", $"source", $"doc_id")
+        .as[(String, Array[Byte], Int, String, Int)]
+    }
   }
+
+  private val RoutedSchema = StructType(Seq(
+    StructField("doc_id", StringType),
+    StructField("packed", BinaryType),
+    StructField("n_tok", IntegerType, nullable = false),
+    StructField("source", StringType),
+    StructField("bin", IntegerType, nullable = false)
+  ))
 
   /** A histogram partial as (flat cell index, count) pairs of its non-zero
     * cells: its size is bounded by the task's tokens, not by the
@@ -680,27 +668,17 @@ object GraftPipeline {
       cfg: Config
   ): Dataset[EncodedBlock] = {
     import spark.implicits._
-    val binned = spark.read
+    spark.read
       .parquet(path)
       .as[(String, Array[Int], Int, String, Int)]
-    encodeBinned(binned, tables, cfg)
-  }
-
-  private def encodeBinned(
-      binned: Dataset[(String, Array[Int], Int, String, Int)],
-      tables: Broadcast[SymbolTables],
-      cfg: Config
-  ): Dataset[EncodedBlock] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    binned.mapPartitions(rows => blockIterator(rows, tables.value, cfg))
+      .mapPartitions(rows => blockIterator(rows, tables.value, cfg))
   }
 
   /** Greedy block builder over bin-contiguous sorted rows — the shared
-    * kernel of the packed-shuffle path ([[encode]]), the staged no-shuffle
-    * path ([[encodeStaged]]), and the DSv2 append writer (which feeds it one
-    * fully-buffered bin at a time, so the bin-contiguity precondition holds
-    * trivially).
+    * kernel of the routed path ([[route]]: every [[encode]] and
+    * [[EncodeJob.run]]), the staged no-shuffle path ([[encodeStaged]]), and
+    * the DSv2 append writer (which feeds it one fully-buffered bin at a
+    * time, so the bin-contiguity precondition holds trivially).
     */
   private[graft] def blockIterator(
       rows: Iterator[(String, Array[Int], Int, String, Int)],

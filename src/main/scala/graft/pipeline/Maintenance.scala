@@ -4,7 +4,8 @@ import graft.core.MiniJson
 import graft.core.MiniJson.ObjOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
@@ -355,7 +356,7 @@ object Maintenance {
       .coalesce(nOut)
       .sortWithinPartitions(col("bin"), col("block_seq"))
       .as[EncodedBlock]
-    val staged = stageRewrite(blocks, outDir, cid)
+    val staged = stageRewrite(blocks.rdd, outDir, cid)
 
     val (added, addedBytes) =
       commitRewrite(fs, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
@@ -398,31 +399,18 @@ object Maintenance {
     val tables = EncodeJob
       .loadTables(spark, outDir)
       .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/header.bin missing"))
-    val numBins = meta.long("num_bins").toInt
     // one tiny metadata scan: the dir's self-describing convention (keep
     // embedding iff any live block embeds) + the full bin set to re-manifest
     val blocksDf = readVictims(spark, victims.map(_._1))
     val metaRow = blocksDf
       .agg(max(col("embedded_tables")), collect_set(col("bin")))
       .head()
-    val embed = metaRow.getBoolean(0)
     val affected = metaRow.getSeq[Int](1).toSet
-    val cfg = GraftPipeline.Config(
-      numContexts = tables.numContexts,
-      maxBits = tables.maxBits,
-      numBins = numBins,
-      salt = meta.long("salt"),
-      contextModel = meta.strOpt("context_model").getOrElse("simple"),
-      embedTables = embed
-    )
+    val cfg = EncodeJob.reencodeConfig(meta, tables, embed = metaRow.getBoolean(0))
     val bTables = spark.sparkContext.broadcast(tables)
     val cid = nextCompactionId(outDir, conf)
     val rows = GraftPipeline.decode(blocksDf.as[EncodedBlock], bTables, cfg)
-    val staged = stageRewrite(
-      GraftPipeline.encode(rows, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, affected.size)))),
-      outDir,
-      cid
-    )
+    val staged = stageRewrite(GraftPipeline.route(rows, cfg, Some(affected)).blocks(bTables), outDir, cid)
     val tmpDir = rewriteStaging(outDir, cid)
     val stagedBytes = staged.map(_.files).distinct.map(n => fs.getFileStatus(new Path(tmpDir, n)).getLen).sum
     val victimBytes = victims.map(_._2).sum
@@ -553,17 +541,10 @@ object Maintenance {
       else {
         val blocksDf = readVictims(spark, victims.map(_._1))
         val embed = blocksDf.agg(max(col("embedded_tables"))).head().getBoolean(0)
-        val cfg = GraftPipeline.Config(
-          numContexts = tables.numContexts,
-          maxBits = tables.maxBits,
-          numBins = newNumBins,
-          salt = salt,
-          contextModel = meta.strOpt("context_model").getOrElse("simple"),
-          embedTables = embed
-        )
+        val cfg = EncodeJob.reencodeConfig(meta, tables, embed).copy(numBins = newNumBins, salt = salt)
         val bTables = spark.sparkContext.broadcast(tables)
         val rows = GraftPipeline.decode(blocksDf.as[EncodedBlock], bTables, cfg)
-        stageRewrite(GraftPipeline.encode(rows, bTables, cfg), outDir, cid)
+        stageRewrite(GraftPipeline.route(rows, cfg, None).blocks(bTables), outDir, cid)
       }
 
     val extra = Map[String, MiniJson.J](
@@ -719,7 +700,7 @@ object Maintenance {
   /** Step 1 of the marker commit protocol: stage `blocks` for compaction
     * `cid`; returns the stage tasks' reported rows (one per file and bin).
     */
-  private def stageRewrite(blocks: Dataset[EncodedBlock], outDir: String, cid: Long): Array[EncodeJob.BinManifest] =
+  private def stageRewrite(blocks: RDD[EncodedBlock], outDir: String, cid: Long): Array[EncodeJob.BinManifest] =
     BlockParquet.stage(blocks, rewriteStaging(outDir, cid).toString, s"c$cid")
 
   /** Step 5 of the marker commit protocol: re-derive `bins`' manifest rows
@@ -884,19 +865,11 @@ object Maintenance {
     val tables = EncodeJob
       .loadTables(spark, outDir)
       .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/header.bin missing"))
-    val numBins = meta.long("num_bins").toInt
     val appliedField = Map(
       "applied_deletes" -> MiniJson.JArr(state.live.toVector.map(d => MiniJson.JStr(d.name)))
     )
 
-    val cfg = GraftPipeline.Config(
-      numContexts = tables.numContexts,
-      maxBits = tables.maxBits,
-      numBins = numBins,
-      salt = meta.long("salt"),
-      contextModel = meta.strOpt("context_model").getOrElse("simple"),
-      embedTables = embed
-    )
+    val cfg = EncodeJob.reencodeConfig(meta, tables, embed)
     val bTables = spark.sparkContext.broadcast(tables)
     val liveByName = live.map(f => (f._1.substring(f._1.lastIndexOf('/') + 1), f._1)).toMap
 
@@ -918,11 +891,7 @@ object Maintenance {
         .join(ids, Seq("doc_id"), "left_anti")
         .select($"doc_id", $"tokens", $"n_tok", $"source")
         .as[TokenRow]
-      stageRewrite(
-        GraftPipeline.encode(kept, bTables, cfg, shufflePartitions = Some(math.min(numBins, math.max(32, groupBins.size)))),
-        outDir,
-        cid
-      )
+      stageRewrite(GraftPipeline.route(kept, cfg, Some(groupBins)).blocks(bTables), outDir, cid)
     }
     val (added, _) = commitRewrite(
       fs, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = appliedField

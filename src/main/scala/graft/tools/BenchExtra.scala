@@ -76,13 +76,6 @@ object BenchExtra {
       // e2e encode components at 32 cores
       val hist = time("encode: analyze", spark)(GraftPipeline.analyze(input, cfg))
       val tables = spark.sparkContext.broadcast(GraftPipeline.buildTables(hist, cfg))
-      time("encode: scan+pack_varint+bin (noop, no shuffle)", spark) {
-        input.toDF
-          .withColumn("packed", graft.functions.PackVarInt.pack_varint(col("tokens")))
-          .withColumn("bin", GraftPipeline.binCol(cfg.numBins, cfg.salt))
-          .select("doc_id", "packed", "n_tok", "source", "bin")
-          .write.format("noop").mode("overwrite").save()
-      }
       for (r <- 1 to 3)
         time(s"encode: full (shuffle+select+encode) r$r", spark) {
           val blocks = GraftPipeline.encode(input, tables, cfg)

@@ -340,7 +340,8 @@ class EncodeJobSpec extends AnyFunSuite {
     assert(jobs.get() >= 1 && jobs.get() <= 3, s"${jobs.get()} jobs")
   }
 
-  test("a fresh EncodeJob.run reads each input row once") {
+  /** Records the tasks of `body`'s Spark jobs read (their input metrics). */
+  private def recordsRead(body: => Unit): Long = {
     val sc = spark.sparkContext
     val group = "encode-records-read"
     val read = new java.util.concurrent.atomic.AtomicLong()
@@ -356,22 +357,39 @@ class EncodeJobSpec extends AnyFunSuite {
         if (groupOf.get(e.stageId) == group && e.taskMetrics != null)
           read.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
     }
-    val path = Files.createTempDirectory("graft-records").toString + "/input"
-    input.write.parquet(path)
-    val parquetInput = spark.read.parquet(path).as[TokenRow](org.apache.spark.sql.Encoders.product[TokenRow])
-    val dir = Files.createTempDirectory("graft-records-out").toString
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "fresh encode")
-      EncodeJob.run(parquetInput, dir, cfg)
+      sc.setJobGroup(group, "counted")
+      body
       sc.setJobGroup("records-marker", "marker")
       sc.parallelize(Seq(1), 1).count()
-      // the run's task-end events precede the marker job's start
+      // the body's task-end events precede the marker job's start
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    assert(read.get() == input.count(), s"${read.get()} records read for ${input.count()} input rows")
+    read.get()
+  }
+
+  test("a fresh EncodeJob.run reads each input row once") {
+    val path = Files.createTempDirectory("graft-records").toString + "/input"
+    input.write.parquet(path)
+    val parquetInput = spark.read.parquet(path).as[TokenRow](org.apache.spark.sql.Encoders.product[TokenRow])
+    val n = input.count()
+    val dir = Files.createTempDirectory("graft-records-out").toString
+    val fresh = recordsRead(EncodeJob.run(parquetInput, dir, cfg))
+    assert(fresh == n, s"$fresh records read for $n input rows")
+
+    // a resume over the persisted tables reads its input once too; besides
+    // the input it reads only the committed blocks' bins and manifest rows
+    val resumeDir = Files.createTempDirectory("graft-records-resume").toString
+    EncodeJob.run(parquetInput, resumeDir, cfg, onlyBins = Some(Set(0, 1, 2)))
+    val lookups = recordsRead {
+      EncodeJob.doneBins(spark, resumeDir)
+      EncodeJob.manifestedBins(spark, resumeDir): Unit
+    }
+    val resume = recordsRead(EncodeJob.run(parquetInput, resumeDir, cfg))
+    assert(resume - lookups == n, s"$resume records read ($lookups by the bin lookups) for $n input rows")
   }
 }

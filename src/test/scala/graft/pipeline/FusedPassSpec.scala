@@ -2,15 +2,17 @@ package graft.pipeline
 
 import graft.pipeline.GraftPipeline.Config
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.input_file_name
+import org.apache.spark.sql.functions.{input_file_name, min, spark_partition_id}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 
 /** A fresh [[EncodeJob.run]] computes pass 1 on the routing shuffle's map
   * side ([[GraftPipeline.route]]). Its tables must be byte-identical to the
-  * standalone pass's, `buildTables(analyze(input))`, and its blocks those
-  * [[GraftPipeline.encode]] writes under the same tables.
+  * standalone pass's, `buildTables(analyze(input))`, and its blocks those a
+  * resume over the standalone tables writes. Every encode routes bins as
+  * Spark's own `repartition(n, $"bin")` does, so the block-file layout is
+  * checked against that reference.
   */
 class FusedPassSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -61,7 +63,7 @@ class FusedPassSpec extends AnyFunSuite {
 
   /** Encode `input` fresh, and again through the standalone pass: tables
     * saved from `buildTables(analyze(input))`, then a run that resumes over
-    * them (and so encodes through [[GraftPipeline.encode]]).
+    * them (and so folds no histograms).
     */
   private def differential(input: Dataset[TokenRow], onlyBins: Option[Set[Int]]): Unit = {
     val fused = Files.createTempDirectory("graft-fused").toString
@@ -76,6 +78,32 @@ class FusedPassSpec extends AnyFunSuite {
     assert(blocks(fused) == blocks(standalone))
     val inputBins = input.select(GraftPipeline.binCol(cfg.numBins, cfg.salt)).distinct().as[Int].collect().toSet
     assert(blocks(fused).keySet.map(_._1) == onlyBins.fold(inputBins)(inputBins & _))
+  }
+
+  /** The partition Spark's own `repartition(n, $"bin")` gives each bin. */
+  private def sparkPartition(n: Int, bins: Set[Int]): Map[Int, Int] =
+    bins.toSeq.toDF("bin").repartition(n, $"bin").select($"bin", spark_partition_id()).as[(Int, Int)].collect().toMap
+
+  /** (file name, bin) of every live block. */
+  private def fileBins(dir: String): Set[(String, Int)] =
+    EncodeJob
+      .readBlocks(spark, dir)
+      .select(input_file_name(), $"bin")
+      .as[(String, Int)]
+      .collect()
+      .map { case (f, b) => (f.substring(f.lastIndexOf('/') + 1), b) }
+      .toSet
+
+  /** Each file is named by its writing task's partition (`-p<k>-`), which
+    * must be Spark's partition for every bin in it at `n` partitions.
+    */
+  private def assertRoutedLikeSpark(n: Int, files: Set[(String, Int)]): Unit = {
+    assert(files.nonEmpty)
+    val want = sparkPartition(n, files.map(_._2))
+    for ((f, b) <- files) {
+      val k = """-p(\d+)-""".r.findFirstMatchIn(f).get.group(1).toInt
+      assert(k == want(b), s"bin $b written by partition $k ($f); Spark routes it to ${want(b)} of $n")
+    }
   }
 
   private def withAqe(on: Boolean)(f: => Unit): Unit = {
@@ -106,5 +134,54 @@ class FusedPassSpec extends AnyFunSuite {
     test(s"fused pass: a partition-less empty input writes the empty tables and no blocks (AQE $aqe)") {
       withAqe(aqe)(differential(spark.emptyDataset[TokenRow], None))
     }
+  }
+
+  test("layout: a fresh run writes each bin from Spark's repartition(numBins, bin) partition") {
+    val dir = Files.createTempDirectory("graft-layout").toString
+    EncodeJob.run(corpus(4), dir, cfg)
+    assertRoutedLikeSpark(cfg.numBins, fileBins(dir))
+  }
+
+  test("layout: an onlyBins run and its resume route bins as Spark's repartition does") {
+    val input = corpus(4)
+    val dir = Files.createTempDirectory("graft-layout-resume").toString
+    EncodeJob.run(input, dir, cfg, Some(Set(1, 2, 5)))
+    val first = fileBins(dir)
+    assert(first.map(_._2) == Set(1, 2, 5))
+    EncodeJob.run(input, dir, cfg)
+    val resumed = fileBins(dir) -- first
+    assert(resumed.nonEmpty && (resumed.map(_._2) & Set(1, 2, 5)).isEmpty)
+    assertRoutedLikeSpark(cfg.numBins, first)
+    assertRoutedLikeSpark(cfg.numBins, resumed)
+  }
+
+  test("layout: a purge rewrite of a few bins routes them into 32 partitions as Spark's repartition does") {
+    val wide = cfg.copy(numBins = 64)
+    val input = corpus(4)
+    val dir = Files.createTempDirectory("graft-layout-purge").toString
+    EncodeJob.run(input, dir, wide)
+    val before = fileBins(dir).map(_._1)
+    // one doc of each of three bins: the rewrite touches a few files' bins,
+    // far fewer than 32, so it routes into min(numBins, 32) = 32 partitions
+    val ids = input
+      .select($"doc_id", GraftPipeline.binCol(wide.numBins, wide.salt).as("bin"))
+      .where($"bin".isin(3, 17, 40))
+      .groupBy($"bin")
+      .agg(min($"doc_id").as("doc_id"))
+      .select($"doc_id")
+      .as[String]
+    assert(Deletes.deleteDocs(spark, dir, ids).isDefined)
+    assert(Maintenance.purgeDeletes(spark, dir).isDefined)
+    val rewritten = fileBins(dir).filterNot(fb => before(fb._1))
+    assert(rewritten.map(_._2).size < 32)
+    // published rewrite files are renamed c<cid>-<k>, k numbering the
+    // staged files (named by partition) in partition order
+    val got = rewritten
+      .groupMap(fb => """-(\d+)\.parquet""".r.findFirstMatchIn(fb._1).get.group(1).toInt)(_._2)
+      .toSeq
+      .sortBy(_._1)
+      .map(_._2)
+    val want = sparkPartition(32, rewritten.map(_._2)).toSeq.groupMap(_._2)(_._1).toSeq.sortBy(_._1).map(_._2.toSet)
+    assert(got == want)
   }
 }

@@ -294,6 +294,24 @@ class DeleteSpec extends AnyFunSuite {
     assert(GraftPipeline.verify(want, spark.read.format("graft").load(dir).as[TokenRow]) == 0L)
   }
 
+  test("replaceDocs into an embedded-table dir keeps its blocks self-describing") {
+    import spark.implicits._
+    val ecfg = cfg.copy(autoSelect = false, embedTables = true)
+    val dir = Files.createTempDirectory("graft-replace-embed").toString
+    EncodeJob.run(all, dir, ecfg) // snapshot 0
+    // new content from the corpus's own token distribution, so the
+    // replace's blocks can pick the hybrid codec
+    val newRows = doomed.map(r => TokenRow(r.doc_id, r.tokens.reverse, r.n_tok, r.source))
+    assert(Deletes.replaceDocs(spark, dir, newRows).isDefined) // snapshot 1
+    assert(EncodeJob.readBlocks(spark, dir).where($"codec" === "hybrid" && !$"embedded_tables").isEmpty)
+    // the purge drops the replaced originals physically (it leaves the
+    // replace's own blocks as written); every block must then decode with
+    // no external tables
+    assert(Maintenance.purgeDeletes(spark, dir).isDefined)
+    val decoded = GraftPipeline.decodeSelfDescribing(EncodeJob.readBlocks(spark, dir), ecfg)
+    assert(GraftPipeline.verify(kept.union(newRows), decoded) == 0L)
+  }
+
   test("compact refuses while deletes are live (per-file scoping cannot survive a merge)") {
     val dir = freshDeletedDir("compactgate")
     val e = intercept[IllegalArgumentException] {
