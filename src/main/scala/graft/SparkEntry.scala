@@ -426,7 +426,7 @@ object SparkEntry {
     * .mode("append")`. q_graft_append then point-reads both original and
     * appended docs from the result, so the writer's whole chain (per-task
     * bin routing, the shared block kernel, hand-rolled block parquet,
-    * snapshot commit with file lineage, manifest heal) sits under the hard
+    * manifest rows, snapshot commit with file lineage) sits under the hard
     * DuckDB oracle: one mis-encoded or dropped appended row fails the hash.
     */
   private def graftAppendDir(s: SparkSession, dir: String): String =
@@ -450,7 +450,7 @@ object SparkEntry {
     * adopted blocks cross dirs as verbatim bytes (no decode, no re-encode),
     * so q_adopt_scan's point reads of both original and adopted docs pin
     * the whole chain (second encode → layout validation → distributed copy
-    * → files_added snapshot commit → manifest heal → DSv2 decode of the
+    * → manifest rows → files_added snapshot commit → DSv2 decode of the
     * adopted blocks) under the hard DuckDB oracle.
     */
   private def graftAdoptDir(s: SparkSession, dir: String): String =

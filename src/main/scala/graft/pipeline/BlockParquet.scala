@@ -1,12 +1,12 @@
 package graft.pipeline
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.Binary
@@ -15,13 +15,12 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.util.SerializableConfiguration
 
 /** Hand-rolled parquet IO for block and manifest files — the ONE writer of
-  * files under `blocks/`, `_compacted/` and `_manifest/` in the batch and
-  * maintenance paths (the streaming encode still writes
-  * `blocks/batch=<id>/` through Spark's parquet writer). [[stage]] is the
+  * files under `blocks/`, `_compacted/` and `_manifest/`. [[stage]] is the
   * task half of every Spark-side block write: the batch encode
   * ([[EncodeJob.run]]), the [[Maintenance]] rewrites (compact, recompress,
   * rebin, purge) and [[Deletes.replaceDocs]]; the DSv2 append's data
-  * writers call [[open]]/[[toGroup]] directly, and every manifest file goes
+  * writers call [[open]]/[[toGroup]] directly. Every writer reports its
+  * files' manifest rows through [[FileRows]], and every manifest file goes
   * through [[writeManifest]]. Writer tasks run without a SparkSession, so
   * files are written through parquet-hadoop directly, in EXACTLY the
   * schemas Spark's own parquet writer produces for [[EncodedBlock]] and
@@ -54,20 +53,20 @@ private[graft] object BlockParquet {
       |}""".stripMargin
   )
 
-  /** The schema Spark writes for the manifest aggregation of
-    * [[EncodeJob.appendManifest]] (nullability included).
+  /** The manifest row schema: one row per (block file, bin), the
+    * [[EncodeJob.BinManifest]] fields (nullability as Spark's own writer
+    * produces for that case class).
     */
   val ManifestSchema: MessageType = MessageTypeParser.parseMessageType(
     """message spark_schema {
-      |  required int64 snapshot_id;
-      |  optional int32 bin;
+      |  required int32 bin;
       |  required int64 n_blocks;
-      |  optional int64 n_rows;
-      |  optional int64 n_values;
-      |  optional int64 payload_bytes;
-      |  optional int64 payload_bits;
-      |  optional int64 table_hash;
-      |  required binary files (UTF8);
+      |  required int64 n_rows;
+      |  required int64 n_values;
+      |  required int64 payload_bytes;
+      |  required int64 payload_bits;
+      |  required int64 table_hash;
+      |  optional binary file (UTF8);
       |}""".stripMargin
   )
 
@@ -122,15 +121,14 @@ private[graft] object BlockParquet {
     * what was written: each task writes its partition as at most ONE file,
     * `<prefix>-p<partition>-t<attempt>.parquet` (a retried or speculative
     * attempt never collides; an empty partition writes nothing), and
-    * reports one manifest row per bin it wrote, claiming that file (its
-    * `snapshot_id` is 0: the committing caller assigns the id). Callers
-    * publish exactly the files the returned rows name — a failed attempt's
-    * file is named by none.
+    * reports that file's manifest rows, one per bin it holds ([[FileRows]]).
+    * Callers publish exactly the files the returned rows name — a failed
+    * attempt's file is named by none.
     */
   def stage(blocks: RDD[EncodedBlock], stagingDir: String, prefix: String): Array[EncodeJob.BinManifest] = {
     val sc = blocks.sparkContext
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    sc.runJob(blocks, (it: Iterator[EncodedBlock]) => writeFile(it, stagingDir, prefix, conf.value.value).toArray).flatten
+    sc.runJob(blocks, (it: Iterator[EncodedBlock]) => writeFile(it, stagingDir, prefix, conf.value.value)).flatten
   }
 
   /** One task's side of [[stage]]. */
@@ -139,40 +137,47 @@ private[graft] object BlockParquet {
       stagingDir: String,
       prefix: String,
       conf: Configuration
-  ): Iterator[EncodeJob.BinManifest] = {
-    if (!blocks.hasNext) return Iterator.empty
+  ): Array[EncodeJob.BinManifest] = {
+    if (!blocks.hasNext) return Array.empty
     val task = org.apache.spark.TaskContext.get()
     val name = f"$prefix-p${task.partitionId()}%05d-t${task.taskAttemptId()}.parquet"
     val groups = new SimpleGroupFactory(Schema)
-    val perBin = scala.collection.mutable.TreeMap[Int, EncodeJob.BinManifest]()
+    val rows = new FileRows(name)
     val w = open(new Path(stagingDir, name), conf)
     try
       blocks.foreach { b =>
         w.write(toGroup(b, groups))
-        val row = EncodeJob.BinManifest(
-          0L, b.bin, 1L, b.n_rows.toLong, b.n_values,
-          b.payload.length.toLong + b.meta_bytes, b.payload_bits, b.table_hash, name
-        )
-        perBin(b.bin) = perBin.get(b.bin).fold(row)(mergeManifest(_, row))
+        rows.add(b)
       }
     finally w.close()
-    perBin.valuesIterator
+    rows.result
   }
 
-  /** Sum two manifest rows of one bin (the aggregation of
-    * [[EncodeJob.appendManifest]]).
+  /** The manifest rows of one block file, accumulated block by block as
+    * its writer writes them: per bin, the block count and the sums of
+    * rows, values, stored bytes and payload bits.
     */
-  def mergeManifest(a: EncodeJob.BinManifest, b: EncodeJob.BinManifest): EncodeJob.BinManifest =
-    a.copy(
-      n_blocks = a.n_blocks + b.n_blocks,
-      n_rows = a.n_rows + b.n_rows,
-      n_values = a.n_values + b.n_values,
-      payload_bytes = a.payload_bytes + b.payload_bytes,
-      payload_bits = a.payload_bits + b.payload_bits,
-      files =
-        if (a.files == b.files) a.files
-        else (a.files.split(',') ++ b.files.split(',')).distinct.sorted.mkString(",")
-    )
+  final class FileRows(file: String) {
+    private val perBin = scala.collection.mutable.TreeMap[Int, EncodeJob.BinManifest]()
+
+    def add(b: EncodedBlock): Unit = {
+      val bytes = b.payload.length.toLong + b.meta_bytes
+      perBin(b.bin) = perBin.get(b.bin) match {
+        case None =>
+          EncodeJob.BinManifest(b.bin, 1L, b.n_rows.toLong, b.n_values, bytes, b.payload_bits, b.table_hash, file)
+        case Some(r) =>
+          r.copy(
+            n_blocks = r.n_blocks + 1,
+            n_rows = r.n_rows + b.n_rows,
+            n_values = r.n_values + b.n_values,
+            payload_bytes = r.payload_bytes + bytes,
+            payload_bits = r.payload_bits + b.payload_bits
+          )
+      }
+    }
+
+    def result: Array[EncodeJob.BinManifest] = perBin.valuesIterator.toArray
+  }
 
   /** Write `rows` as one manifest parquet file at `file`. */
   def writeManifest(file: Path, conf: Configuration, rows: Seq[EncodeJob.BinManifest]): Unit = {
@@ -181,7 +186,6 @@ private[graft] object BlockParquet {
     try
       rows.foreach { m =>
         val g = f.newGroup()
-        g.add("snapshot_id", m.snapshot_id)
         g.add("bin", m.bin)
         g.add("n_blocks", m.n_blocks)
         g.add("n_rows", m.n_rows)
@@ -189,9 +193,71 @@ private[graft] object BlockParquet {
         g.add("payload_bytes", m.payload_bytes)
         g.add("payload_bits", m.payload_bits)
         g.add("table_hash", m.table_hash)
-        g.add("files", m.files)
+        g.add("file", m.file)
         w.write(g)
       }
     finally w.close()
+  }
+
+  /** The manifest files under `outDir/_manifest`, sorted by path. */
+  def manifestFiles(outDir: String, conf: Configuration): Array[FileStatus] = {
+    val dir = new Path(s"$outDir/_manifest")
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) Array.empty
+    else
+      fs.listStatus(dir)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.toString)
+  }
+
+  /** What a set of manifest files says: the rows of the current format,
+    * and the claims of pre-v5 rows. A pre-v5 row aggregates one bin over
+    * the comma-separated `files` that held it when it was derived, so it
+    * tells which files hold the bin but not how many rows each holds.
+    */
+  final case class Manifest(rows: Array[EncodeJob.BinManifest], legacyClaims: Map[String, Set[Int]])
+
+  /** Read `files` with parquet page-CRC checks on (a flipped `bin` would
+    * otherwise become a false claim, and a point read would skip the file
+    * that holds the doc). Any unreadable file fails by name.
+    */
+  def readManifest(files: Seq[FileStatus], conf: Configuration): Manifest = {
+    val verified = new Configuration(conf)
+    verified.setBoolean(ParquetInputFormat.PAGE_VERIFY_CHECKSUM_ENABLED, true)
+    val rows = Array.newBuilder[EncodeJob.BinManifest]
+    val legacy = scala.collection.mutable.HashMap[String, Set[Int]]()
+    // one String per file name: an 800k-bin manifest repeats each name per bin
+    val names = scala.collection.mutable.HashMap[String, String]()
+    files.foreach { st =>
+      try {
+        val r = ParquetReader.builder(new GroupReadSupport(), st.getPath).withConf(verified).build()
+        try {
+          var g = r.read()
+          while (g != null) {
+            def long(c: String) = g.getLong(c, 0)
+            val bin = g.getInteger("bin", 0)
+            if (g.getType.containsField("file")) {
+              val file = g.getString("file", 0)
+              rows += EncodeJob.BinManifest(
+                bin, long("n_blocks"), long("n_rows"), long("n_values"), long("payload_bytes"),
+                long("payload_bits"), long("table_hash"), names.getOrElseUpdate(file, file)
+              )
+            } else if (g.getFieldRepetitionCount("files") > 0)
+              g.getString("files", 0).split(',').filter(_.nonEmpty).foreach { f =>
+                legacy(f) = legacy.getOrElse(f, Set.empty[Int]) + bin
+              }
+            g = r.read()
+          }
+        } finally r.close()
+      } catch {
+        case e: Exception if !e.isInstanceOf[java.io.FileNotFoundException] =>
+          throw new IllegalStateException(
+            s"corrupt manifest file ${st.getPath} (${e.getMessage}) — delete it and run rewrite_manifests " +
+              "to re-derive the claims of the files it named",
+            e
+          )
+      }
+    }
+    Manifest(rows.result(), legacy.toMap)
   }
 }

@@ -295,13 +295,11 @@ object Deletes {
       val bTables = spark.sparkContext.broadcast(tables)
       val uuid = java.util.UUID.randomUUID().toString
       val staging = new Path(s"$outDir/_write_staging/replace-$uuid")
-      // only the staged file names are used: the manifest is re-derived
-      // after the commit (the touched bins keep their older files too)
-      val parts = BlockParquet
+      val reported = BlockParquet
         .stage(GraftPipeline.route(cached, cfg, Some(binsTouched.toSet)).blocks(bTables), staging.toString, s"replace-$uuid")
-        .map(_.files)
-        .distinct
-        .sorted
+      val names = reported.map(_.file).distinct.sorted.zipWithIndex.map { case (part, k) =>
+        part -> s"w-replace-$uuid-$k.parquet"
+      }.toMap
 
       // Rollback handlers are scoped to END at the commit point: once the
       // snapshot references the delete file and the renamed blocks, deleting
@@ -312,8 +310,10 @@ object Deletes {
       val renamed = scala.collection.mutable.ArrayBuffer[String]()
       var committed = false
       try {
-        parts.zipWithIndex.foreach { case (part, k) =>
-          val name = s"w-replace-$uuid-$k.parquet"
+        EncodeJob.publishManifest(
+          conf, outDir, s"replace-$uuid.parquet", reported.map(r => r.copy(file = names(r.file)))
+        )
+        names.foreach { case (part, name) =>
           val dest = new Path(s"$outDir/blocks/$name")
           require(fs.rename(new Path(staging, part), dest), s"rename $part -> $dest failed")
           renamed += name
@@ -346,14 +346,7 @@ object Deletes {
               delNames.foreach(n => scala.util.Try(fs.delete(new Path(s"$outDir/_deletes/$n"), false)))
               throw err
           }
-        // committed — everything below is advisory and must not fail the replace
-        try EncodeJob.appendManifest(spark, outDir, binsTouched.toSet, snapId)
-        catch {
-          case e: Exception =>
-            System.err.println(
-              s"graft replace: snapshot $snapId committed but re-manifest failed (${e.getMessage})"
-            )
-        }
+        // committed — cleanup below is best-effort and must not fail the replace
         scala.util.Try(fs.delete(staging, true)): Unit
         Some(ReplaceResult(snapId, nDocs, renamed.toSeq.sorted, delNames))
       } catch {

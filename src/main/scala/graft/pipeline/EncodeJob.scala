@@ -19,17 +19,17 @@ import java.nio.charset.StandardCharsets
   *   _tables/header.bin   shared symbol tables in the reference's
   *                        self-describing header bit format
   *   _tables/meta.json    maxBits / numContexts / tableHash / config
-  *   _manifest/       parquet of per-bin manifests (one file per commit)
+  *   _manifest/       parquet of (block file, bin) rows (one file per commit)
   *   _snapshots/snap-<n>.json   snapshot lineage (parent pointer, bins added)
   *
-  * Commit order of a run: block files → manifest file → snapshot. The
+  * Commit order of a run: manifest file → block files → snapshot. The
   * encode tasks write their blocks (one file per partition, holding whole
-  * bins) into `_write_staging/` and report each bin's manifest row, so
+  * bins) into `_write_staging/` and report each file's manifest rows, so
   * nothing is read back ([[commitBlocks]]).
   *
   * Resume correctness: a bin is "done" iff its blocks are in blocks/ — the
   * rename of one block file into blocks/ is the unit of progress; the
-  * manifest and snapshot are derived metadata a resume repairs. Blocks are
+  * snapshot is derived metadata a resume repairs. Blocks are
   * a deterministic function of (bin row set, symbol tables, config), so a
   * resumed run is byte-identical to an uninterrupted one; the recorded
   * table hash guards against resuming with different tables.
@@ -41,15 +41,23 @@ object EncodeJob {
     * row_bits_payload/embedded_tables; v3 added the manifest `files`
     * column — the bin→block-file index the DSv2 scan prunes from at any
     * file count; v4 added the delta codec to auto-selection, so v4 dirs
-    * can hold codec-id-6 blocks a v3 reader would reject): resuming into
+    * can hold codec-id-6 blocks a v3 reader would reject; v5 made a
+    * manifest row a fact about one file — [[BinManifest]]): resuming into
     * an outDir written by a different version would fail or mix schemas
     * silently at the parquet layer, so [[run]] rejects the mismatch
     * explicitly instead.
     */
-  val FormatVersion = 4
+  val FormatVersion = 5
 
+  /** One manifest row: the blocks of `bin` inside the block file `file`
+    * (counts and sums over those blocks). Block files are write-once, so a
+    * row is never superseded: the writer that adds a file publishes its
+    * rows before the commit point that makes the file live, and readers
+    * keep exactly the rows whose file is live. A file is named by rows for
+    * every bin it holds, or by none (then scans keep it conservatively).
+    * This is the `add(file, bins, …)` fact of an ordered commit log.
+    */
   final case class BinManifest(
-      snapshot_id: Long,
       bin: Int,
       n_blocks: Long,
       n_rows: Long,
@@ -57,7 +65,7 @@ object EncodeJob {
       payload_bytes: Long,
       payload_bits: Long,
       table_hash: Long,
-      files: String
+      file: String
   )
 
   final case class EncodeResult(
@@ -286,7 +294,6 @@ object EncodeJob {
       // a purge that deleted every doc can tombstone ALL files —
       // spark.read.parquet of an empty path list cannot infer a schema, so
       // answer with an empty typed frame instead of crashing callers
-      // (appendManifest's zero-fill is how numRows then stays exact)
       if (files.isEmpty) {
         import spark.implicits._
         spark.emptyDataset[EncodedBlock].toDF()
@@ -520,11 +527,6 @@ object EncodeJob {
     val keep = if (todo.size == cfg.numBins) None else Some(todo)
     val (snapshotId, parentId) = nextSnapshotId(spark, outDir)
 
-    // self-repair: a crash between a block file's rename (the unit of
-    // progress) and the manifest commit leaves a done bin with no manifest
-    // row forever — resume re-derives those rows from the committed blocks.
-    val repair = done -- manifestedBins(spark, outDir)
-
     // 2. shared symbol tables: reuse persisted ones (byte-identical
     // resume), else pass 1 + build + persist; then 3. encode the missing
     // bins. The routing shuffle drops committed bins on its map side, so a
@@ -585,13 +587,11 @@ object EncodeJob {
     // the encode tasks write their own block files and report their
     // manifest rows; the driver publishes both
     if (todo.nonEmpty)
-      commitBlocks(spark, routed.blocks(spark.sparkContext.broadcast(tables)), outDir, snapshotId)
+      commitBlocks(spark, routed.blocks(spark.sparkContext.broadcast(tables)), outDir)
 
-    if (repair.nonEmpty) {
-      // manifest entries for the repaired bins, derived from their
-      // committed blocks.
-      appendManifest(spark, outDir, repair, snapshotId)
-    }
+    // self-repair: claim done files no manifest row names (a lost manifest
+    // file, or blocks written outside this job) — no job when none exists
+    appendManifest(spark, outDir, done, snapshotId)
 
     // 4. snapshot lineage record. Self-repair mirrors the manifest's: a
     // crash after the blocks commit but before the snapshot write leaves
@@ -604,9 +604,10 @@ object EncodeJob {
     val recordedInSnapshots: Set[Int] =
       loadSnapshots(outDir, spark.sparkContext.hadoopConfiguration).flatMap(_._2).toSet
     val binsJson = (todo ++ (done -- recordedInSnapshots)).toSeq.sorted.mkString("[", ",", "]")
-    // single-shot claim (maxAttempts = 1): the manifest rows above already
-    // carry THIS id, so a collision must fail loudly, not retry under a new
-    // one — it means a concurrent encode is running against the contract
+    // single-shot claim (maxAttempts = 1): the bins this run skipped were
+    // decided against THIS id's parent, so a collision must fail loudly,
+    // not retry under a new one — it means a concurrent encode is running
+    // against the contract
     casWriteSnapshot(
       spark,
       outDir,
@@ -620,15 +621,6 @@ object EncodeJob {
 
     EncodeResult(snapshotId, todo.toSeq.sorted, done.toSeq.sorted, tables.tableHash)
   }
-
-  /** Bin-membership predicate that stays cheap at 100 TB bin counts: a
-    * literal IN list for small sets (codegen'd, parquet-pushable), a
-    * set-lookup UDF past that — building 800k `Literal` nodes per plan is
-    * driver work the filter itself never pays back.
-    */
-  private[pipeline] def binMembership(c: org.apache.spark.sql.Column, bins: Set[Int]): org.apache.spark.sql.Column =
-    if (bins.size <= 4096) c.isInCollection(bins)
-    else udf((b: Int) => bins.contains(b)).apply(c)
 
   /** Staging dirs of [[commitBlocks]] live under `_write_staging/` with
     * this prefix; nothing reads them, and the next run (or vacuum's grace
@@ -648,66 +640,52 @@ object EncodeJob {
   /** Commit one run's encoded blocks with no re-read of what was written.
     * The encode tasks stage their partitions under
     * `_write_staging/encode-<run>/` through [[BlockParquet.stage]] (one
-    * file per partition, holding whole bins) and report one manifest row
-    * per bin. The driver then
-    *   1. renames the files of the collected attempts into `blocks/` —
+    * file per partition, holding whole bins) and report each file's
+    * manifest rows. The driver then
+    *   1. publishes the reported rows as ONE manifest file
+    *      ([[publishManifest]]) — rows of a file that never becomes live
+    *      are ignored by every reader;
+    *   2. renames the files of the collected attempts into `blocks/` —
     *      a partition holds whole bins, so every rename publishes complete
-    *      bins and is the unit of progress a resume skips;
-    *   2. publishes the reported rows as ONE manifest file
-    *      ([[publishManifest]]).
-    * A kill between the two leaves renamed bins with no manifest row; the
-    * next run's repair re-derives them with [[appendManifest]].
+    *      bins and is the unit of progress a resume skips.
     */
-  private def commitBlocks(
-      spark: SparkSession,
-      blocks: RDD[EncodedBlock],
-      outDir: String,
-      snapshotId: Long
-  ): Unit = {
+  private def commitBlocks(spark: SparkSession, blocks: RDD[EncodedBlock], outDir: String): Unit = {
     val f = fs(spark, outDir)
     val runId = java.util.UUID.randomUUID().toString
     val staging = new Path(s"$outDir/_write_staging/$StagingPrefix$runId")
     try {
       val reported = BlockParquet.stage(blocks, staging.toString, s"$StagingPrefix$runId")
+      if (reported.nonEmpty)
+        publishManifest(spark.sparkContext.hadoopConfiguration, outDir, s"$StagingPrefix$runId.parquet", reported)
       val blocksDir = new Path(s"$outDir/blocks")
       f.mkdirs(blocksDir)
-      reported.map(_.files).distinct.sorted.foreach { name =>
+      reported.map(_.file).distinct.sorted.foreach { name =>
         val src = new Path(staging, name)
         require(f.rename(src, new Path(blocksDir, name)), s"rename $src -> $blocksDir failed")
-      }
-      if (reported.nonEmpty) {
-        val rows =
-          reported.groupBy(_.bin).values.map(_.reduce(BlockParquet.mergeManifest).copy(snapshot_id = snapshotId))
-        publishManifest(spark, outDir, s"$StagingPrefix$runId.parquet", rows.toSeq.sortBy(_.bin))
       }
     } finally f.delete(staging, true): Unit
   }
 
-  /** Bins any committed manifest row names (empty when none). */
-  private[pipeline] def manifestedBins(spark: SparkSession, outDir: String): Set[Int] = {
-    import spark.implicits._
-    if (!exists(spark, s"$outDir/_manifest")) Set.empty
-    else spark.read.parquet(s"$outDir/_manifest").select("bin").distinct().as[Int].collect().toSet
-  }
-
   /** Publish `rows` as ONE manifest file: written under
     * `_write_staging/manifest-<uuid>/`, then renamed to `_manifest/<name>`.
-    * The single rename makes a commit's claims visible all-or-none — a
-    * multi-file manifest commit could crash halfway and leave a block file
-    * claimed by only SOME of its bins' rows, making the scan's claims-based
-    * pruning silently drop committed data for the missing bins.
+    * Every writer calls this BEFORE the commit point that makes the rows'
+    * files live, so a failure here fails (and rolls back) the commit. The
+    * single rename makes a commit's rows visible all-or-none: a file is
+    * claimed for every bin it holds or for none, never for some — a
+    * partial claim would let the scan's pruning drop committed data for
+    * the missing bins.
     */
-  private[pipeline] def publishManifest(
-      spark: SparkSession,
+  private[graft] def publishManifest(
+      conf: Configuration,
       outDir: String,
       name: String,
       rows: Seq[BinManifest]
   ): Unit = {
-    val f = fs(spark, outDir)
+    val f = new Path(outDir).getFileSystem(conf)
     val staging = new Path(s"$outDir/_write_staging/manifest-${java.util.UUID.randomUUID()}")
     try {
       val staged = new Path(staging, "manifest.parquet")
-      BlockParquet.writeManifest(staged, spark.sparkContext.hadoopConfiguration, rows)
+      BlockParquet.writeManifest(staged, conf, rows.sortBy(r => (r.file, r.bin)))
       val manifestDir = new Path(s"$outDir/_manifest")
       f.mkdirs(manifestDir)
       val dest = new Path(manifestDir, name)
@@ -715,27 +693,19 @@ object EncodeJob {
     } finally f.delete(staging, true): Unit
   }
 
-  /** Derive + append manifest rows for `bins` from the COMMITTED blocks
-    * (a distributed scan that reads every payload for its length): one row
-    * per requested bin, a zero row (no blocks, no files) for a bin no live
-    * block holds — so a bin a purge or rebin emptied stops counting its
-    * stale winner, and the manifest index's numRows stays exact. The rows
-    * carry `snapshotId` (a data commit's claimed snapshot id, or a
-    * maintenance epoch id — see [[Maintenance.MaintenanceEpochBase]]) and
-    * land as one staged-then-renamed file ([[publishManifest]]).
+  /** Claim the live block files no manifest row names: write the rows of
+    * every such file that holds any of `bins`, derived from its blocks (a
+    * distributed scan of those files only, reading each payload for its
+    * length), as one file ([[publishManifest]]). A claimed file gets rows
+    * for ALL its bins, never only the requested ones. No job runs when
+    * every live file is named. `snapshotId` is unused: rows are facts
+    * about files, not about snapshots.
     *
-    * The manifest rows of a [[run]]'s own bins come from its encode tasks
-    * instead ([[commitBlocks]]); [[run]] calls this only to repair bins a
-    * killed run renamed into blocks/ but never manifested. Writers whose
-    * bins keep files they did not write — appends, replaces, adopts and
-    * the [[Maintenance]] rewrites — call it to re-derive those bins over
-    * every surviving file. `files` records which block parquet files hold
-    * each bin — the driver-side bin→file index the DSv2 scan prunes from at
-    * any file count (the file-level analog of the reference's random-access
-    * index, huffman_graph_decoder.rs:151-205). A file whose bins crashed
-    * out of the manifest is claimed by NO row and the scan keeps it
-    * conservatively. Also the manifesting step for blocks written OUTSIDE
-    * [[run]] (benchmarks, the Verify corpus dirs).
+    * Callers: [[run]]'s resume repair (a lost manifest file),
+    * [[Maintenance.rewriteManifests]] (files a streaming epoch or an
+    * older format left unclaimed), and blocks written outside the engine's
+    * writers (benchmarks, the Verify corpus dirs), which call it right
+    * after writing their files.
     */
   def appendManifest(
       spark: SparkSession,
@@ -744,33 +714,42 @@ object EncodeJob {
       snapshotId: Long
   ): Unit = {
     if (bins.isEmpty) return
+    val conf = spark.sparkContext.hadoopConfiguration
+    val named = BlockParquet.readManifest(BlockParquet.manifestFiles(outDir, conf), conf).rows.map(_.file).toSet
+    val unnamed = Maintenance.liveBlockFiles(outDir, conf).map(_._1).filterNot(f => named(new Path(f).getName))
+    if (unnamed.isEmpty) return
+    val rows = deriveManifest(spark, unnamed.toIndexedSeq)
+    val hit = rows.filter(r => bins.contains(r.bin)).map(_.file).toSet
+    val claimed = rows.filter(r => hit(r.file))
+    if (claimed.nonEmpty)
+      publishManifest(conf, outDir, s"manifest-${java.util.UUID.randomUUID()}.parquet", claimed)
+  }
+
+  /** The manifest rows the blocks of `files` derive, one per (file, bin):
+    * one distributed scan that reads each payload for its length. A
+    * (file, bin) whose blocks disagree on `table_hash` fails by name.
+    */
+  private[pipeline] def deriveManifest(spark: SparkSession, files: Seq[String]): Array[BinManifest] = {
     import spark.implicits._
-    val derived = liveBlocks(spark, outDir)
-      .where(binMembership(col("bin"), bins))
-      .withColumn("__file", element_at(split(input_file_name(), "/"), -1))
-      .groupBy($"bin")
+    spark.read
+      .schema(BlockSchema)
+      .parquet(files: _*)
+      .groupBy(element_at(split(input_file_name(), "/"), -1).as("file"), $"bin")
       .agg(
-        count(lit(1)).as("n_blocks"),
-        sum($"n_rows").cast("long").as("n_rows"),
-        sum($"n_values").as("n_values"),
-        (sum(expr("length(payload)")) + sum($"meta_bytes")).as("payload_bytes"),
-        sum($"payload_bits").as("payload_bits"),
-        first($"table_hash").as("table_hash"),
-        concat_ws(",", sort_array(collect_set($"__file"))).as("files")
+        count(lit(1)),
+        sum($"n_rows").cast("long"),
+        sum($"n_values"),
+        sum(expr("length(payload)")) + sum($"meta_bytes"),
+        sum($"payload_bits"),
+        min($"table_hash"),
+        max($"table_hash")
       )
-      .withColumn("snapshot_id", lit(snapshotId))
-      .as[BinManifest]
+      .as[(String, Int, Long, Long, Long, Long, Long, Long, Long)]
       .collect()
-    val empty = bins -- derived.map(_.bin)
-    val zeros =
-      if (empty.isEmpty) Seq.empty
-      else {
-        val tableHash = loadMeta(spark, outDir)
-          .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/meta.json missing"))
-          .long("table_hash")
-        empty.toSeq.map(b => BinManifest(snapshotId, b, 0L, 0L, 0L, 0L, 0L, tableHash, ""))
+      .map { case (file, bin, blocks, rows, values, bytes, bits, hash, maxHash) =>
+        require(hash == maxHash, s"block file $file records table hashes $hash and $maxHash for bin $bin")
+        BinManifest(bin, blocks, rows, values, bytes, bits, hash, file)
       }
-    publishManifest(spark, outDir, s"manifest-${java.util.UUID.randomUUID()}.parquet", (derived ++ zeros).sortBy(_.bin))
   }
 
   /** Read the encoded blocks back as a typed Dataset (compaction-aware).

@@ -51,13 +51,15 @@ import java.nio.charset.StandardCharsets
   *      staged there (one that stages later recreates the dir, and
   *      [[vacuum]] sweeps it) — never published, because `c<cid>/` only
   *      ever receives the reported files
-  *   4. write `c<cid>.json` via temp + rename — THE commit point
-  *   5. append manifest rows for the affected bins claiming the new files
-  *      (advisory: a crash before this leaves the new files unclaimed, which
-  *      the scan keeps conservatively — correctness never depends on step 5)
+  *   4. publish the stage tasks' manifest rows under the renamed names as
+  *      `_manifest/c<cid>.parquet` — rows of files that are not live yet,
+  *      so every reader ignores them until step 5 (the file name also
+  *      keeps `cid` reserved, so a crashed rewrite's rows can never name a
+  *      later rewrite's files)
+  *   5. write `c<cid>.json` via temp + rename — THE commit point
   *
-  * A crash before step 4 leaves invisible garbage that [[vacuum]] removes;
-  * a crash after step 4 is a committed compaction whose dead input files
+  * A crash before step 5 leaves invisible garbage that [[vacuum]] removes;
+  * a crash after step 5 is a committed compaction whose dead input files
   * [[vacuum]] removes. Tombstoned files stay on disk until vacuum so that
   * in-flight readers planned against the old listing finish correctly.
   */
@@ -107,36 +109,6 @@ object Maintenance {
   final case class RewriteManifestsResult(filesBefore: Int, filesAfter: Int, bins: Long)
 
   final case class ExpireResult(snapshotsExpired: Seq[Long], rebasedInto: Option[Long])
-
-  /** Manifest rows written by maintenance carry ids in this epoch, far
-    * above any real data-snapshot id (snapshots are sequential from 0). Each
-    * encodes the newest snapshot id S taken when the rewrite re-derived its
-    * rows, and the compaction id ([[maintenanceManifestId]]); a data
-    * commit's rows carry its own CAS-claimed snapshot id. The scan's
-    * manifest index resolves each bin to its highest [[manifestRank]]: by
-    * snapshot, maintenance after data at the same snapshot, then by
-    * compaction id. So the post-compaction claims supersede the rows of
-    * every snapshot ≤ S (those files were renamed before S was claimed, so
-    * the re-derivation saw them), a re-compacted bin's newest claims win
-    * again, and the rows of every later snapshot supersede them in turn
-    * (those commits derive after the marker commit).
-    */
-  val MaintenanceEpochBase = 1000000000L
-
-  /** Compaction ids per snapshot in the epoch encoding. */
-  private val CidSpan = 1L << 24
-
-  /** The id of compaction `cid`'s manifest rows, derived while
-    * `newestSnapshot` was the newest snapshot id taken (−1: none).
-    */
-  def maintenanceManifestId(newestSnapshot: Long, cid: Long): Long = {
-    require(cid < CidSpan - 1, s"compaction id $cid exceeds the manifest id encoding")
-    MaintenanceEpochBase + (newestSnapshot + 1) * CidSpan + cid
-  }
-
-  /** The order a bin's manifest rows resolve by ([[MaintenanceEpochBase]]). */
-  def manifestRank(id: Long): Long =
-    if (id < MaintenanceEpochBase) (id + 1) * CidSpan else id - MaintenanceEpochBase + 1
 
   private def fsOf(outDir: String, conf: Configuration): FileSystem =
     new Path(outDir).getFileSystem(conf)
@@ -289,20 +261,27 @@ object Maintenance {
       .sortBy(_._1)
   }
 
+  /** The next unused compaction id: past every marker, (staging) dir and
+    * published manifest file of a compaction, committed or not.
+    */
   private def nextCompactionId(outDir: String, conf: Configuration): Long = {
     val fs = fsOf(outDir, conf)
     val root = compactRoot(outDir)
-    if (!fs.exists(root)) return 0L
-    val ids = fs.listStatus(root).flatMap { st =>
+    val ids = (if (fs.exists(root)) fs.listStatus(root) else Array.empty[FileStatus]).flatMap { st =>
       val n = st.getPath.getName
       val core =
         if (st.isFile && n.matches("c\\d+\\.json")) Some(n.stripPrefix("c").stripSuffix(".json"))
         else if (st.isDirectory && n.matches("c\\d+(-tmp)?")) Some(n.stripPrefix("c").stripSuffix("-tmp"))
         else None
       core.map(_.toLong)
+    } ++ BlockParquet.manifestFiles(outDir, conf).map(_.getPath.getName).collect {
+      case ManifestNameRe(n) => n.toLong
     }
     if (ids.isEmpty) 0L else ids.max + 1
   }
+
+  /** The manifest file a rewrite publishes ([[commitRewrite]] step 4). */
+  private val ManifestNameRe = raw"c(\d+)\.parquet".r
 
   private def writeAtomic(fs: FileSystem, dest: Path, content: String): Unit = {
     val tmp = new Path(dest.getParent, s".tmp-${dest.getName}")
@@ -332,7 +311,6 @@ object Maintenance {
       minInputFiles: Int = 2
   ): Option[CompactionResult] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(outDir, conf)
     // sequence-scoped deletes apply per FILE (committed before/after the
     // delete); compacting files from both sides of a live delete into one
     // rewrite would lose that attribution and mis-apply the delete. Iceberg
@@ -359,15 +337,9 @@ object Maintenance {
     val staged = stageRewrite(blocks.rdd, outDir, cid)
 
     val (added, addedBytes) =
-      commitRewrite(fs, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
-
-    // 5. advisory re-manifest: fresh claims for every bin the rewrite moved,
-    // derived from the LIVE set (a bin spread across victim and surviving
-    // files gets both its new and its untouched files claimed)
-    val affected = staged.map(_.bin).toSet
-    remanifest(spark, outDir, affected, cid)
-
-    Some(CompactionResult(cid, victims.length, added.length, victimBytes, addedBytes, affected.size))
+      commitRewrite(conf, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
+    val moved = staged.map(_.bin).distinct.length
+    Some(CompactionResult(cid, victims.length, added.length, victimBytes, addedBytes, moved))
   }
 
   /** Rewrite EVERY live block through the CURRENT codec auto-selector with
@@ -400,7 +372,7 @@ object Maintenance {
       .loadTables(spark, outDir)
       .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/header.bin missing"))
     // one tiny metadata scan: the dir's self-describing convention (keep
-    // embedding iff any live block embeds) + the full bin set to re-manifest
+    // embedding iff any live block embeds) + the full bin set to re-encode
     val blocksDf = readVictims(spark, victims.map(_._1))
     val metaRow = blocksDf
       .agg(max(col("embedded_tables")), collect_set(col("bin")))
@@ -412,15 +384,14 @@ object Maintenance {
     val rows = GraftPipeline.decode(blocksDf.as[EncodedBlock], bTables, cfg)
     val staged = stageRewrite(GraftPipeline.route(rows, cfg, Some(affected)).blocks(bTables), outDir, cid)
     val tmpDir = rewriteStaging(outDir, cid)
-    val stagedBytes = staged.map(_.files).distinct.map(n => fs.getFileStatus(new Path(tmpDir, n)).getLen).sum
+    val stagedBytes = staged.map(_.file).distinct.map(n => fs.getFileStatus(new Path(tmpDir, n)).getLen).sum
     val victimBytes = victims.map(_._2).sum
     if (stagedBytes >= victimBytes) {
       fs.delete(tmpDir, true)
       return None
     }
     val (added, addedBytes) =
-      commitRewrite(fs, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
-    remanifest(spark, outDir, affected, cid)
+      commitRewrite(conf, outDir, cid, staged, victims, victimBytes, extraMarkerFields = Map.empty)
     Some(CompactionResult(cid, victims.length, added.length, victimBytes, addedBytes, affected.size))
   }
 
@@ -483,7 +454,6 @@ object Maintenance {
     import graft.core.MiniJson.ObjOps
     require(newNumBins >= 1, "newNumBins must be >= 1")
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(outDir, conf)
     // complete any interrupted prior rebin before folding history again
     healRebin(spark, outDir)
     require(
@@ -559,7 +529,7 @@ object Maintenance {
     )
     // THE commit point: files + routing flip together
     val (added, _) =
-      commitRewrite(fs, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = extra)
+      commitRewrite(conf, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = extra)
     if (healAfterCommit) healRebin(spark, outDir)
     Some(RebinResult(cid, base, oldNumBins, newNumBins, victims.length, added.length))
   }
@@ -574,14 +544,11 @@ object Maintenance {
     *      old-id time travel fails with "not found" instead of the explicit
     *      rebin guard;
     *   3. rewrite meta.json's num_bins/salt to match (the marker override
-    *      then becomes a no-op);
-    *   4. advisory re-manifest of every new-layout bin and every bin either
-    *      layout ever manifested: fresh claims for the data-bearing ones,
-    *      [[EncodeJob.appendManifest]]'s zero rows for the rest — point-read
-    *      planning returns to O(hit-bins) and the manifest index's numRows
-    *      stays exact.
+    *      then becomes a no-op).
+    * The rebin's new files were claimed in the new bin space before its
+    * marker committed ([[commitRewrite]]), so no step touches the manifest.
     * A `c<cid>.rebin-healed` marker (written last) gates re-entry so vacuum
-    * can call this unconditionally without re-running the spark jobs.
+    * can call this unconditionally.
     */
   private[graft] def healRebin(spark: SparkSession, outDir: String): Unit = {
     import graft.core.MiniJson.ObjOps
@@ -683,10 +650,6 @@ object Maintenance {
       require(fs.rename(tmp, metaPath), s"rename $tmp -> $metaPath failed")
     }
 
-    // 4. advisory re-manifest in the new bin space
-    val bins = (0 until r.numBins).toSet ++ EncodeJob.manifestedBins(spark, outDir)
-    remanifest(spark, outDir, bins, r.cid)
-
     writeAtomic(fs, healedMarker, s"""{"cid":${r.cid}}""")
   }
 
@@ -703,24 +666,16 @@ object Maintenance {
   private def stageRewrite(blocks: RDD[EncodedBlock], outDir: String, cid: Long): Array[EncodeJob.BinManifest] =
     BlockParquet.stage(blocks, rewriteStaging(outDir, cid).toString, s"c$cid")
 
-  /** Step 5 of the marker commit protocol: re-derive `bins`' manifest rows
-    * under compaction `cid`'s epoch id, keyed by the newest snapshot id
-    * taken now — after the marker commit, before the derivation.
-    */
-  private def remanifest(spark: SparkSession, outDir: String, bins: Set[Int], cid: Long): Unit =
-    EncodeJob.appendManifest(
-      spark, outDir, bins, maintenanceManifestId(EncodeJob.nextSnapshotId(spark, outDir)._2, cid)
-    )
-
-  /** Steps 2–4 of the marker commit protocol, shared by every rewrite:
+  /** Steps 2–5 of the marker commit protocol, shared by every rewrite:
     * rename the files the stage tasks reported (`staged`) into the
     * compaction's dir under globally unique names, drop the staging dir,
-    * then flip visibility with ONE atomic marker write (tombstoning
-    * `victims`, publishing the renamed files, plus any operation-specific
-    * marker fields). Returns (published names, their total bytes).
+    * publish the reported rows under those names, then flip visibility
+    * with ONE atomic marker write (tombstoning `victims`, publishing the
+    * renamed files, plus any operation-specific marker fields). Returns
+    * (published names, their total bytes).
     */
   private def commitRewrite(
-      fs: FileSystem,
+      conf: Configuration,
       outDir: String,
       cid: Long,
       staged: Array[EncodeJob.BinManifest],
@@ -730,21 +685,27 @@ object Maintenance {
   ): (Seq[String], Long) = {
     // 2. unique, stable names for the manifest's file-name-keyed claims.
     // Every reported file holds blocks (a stage task writes no file for an
-    // empty partition), so each published file is claimed by the re-manifest.
+    // empty partition), so each published file is claimed by its rows.
+    val fs = fsOf(outDir, conf)
     val tmpDir = rewriteStaging(outDir, cid)
     val finalDir = new Path(compactRoot(outDir), s"c$cid")
     fs.mkdirs(finalDir)
-    val added = staged.map(_.files).distinct.sorted.zipWithIndex.map { case (name, k) =>
+    val renamed = staged.map(_.file).distinct.sorted.zipWithIndex.map { case (name, k) =>
       val dest = new Path(finalDir, s"c$cid-$k.parquet")
       require(fs.rename(new Path(tmpDir, name), dest), s"rename $name -> $dest failed")
-      dest.getName
-    }
+      name -> dest.getName
+    }.toMap
+    val added = renamed.values.toSeq.sorted
     val addedBytes = added.map(n => fs.getFileStatus(new Path(finalDir, n)).getLen).sum
 
     // 3. anything still staged is a failed or zombie attempt's file
     fs.delete(tmpDir, true): Unit
 
-    // 4. THE commit point: one atomic marker rename flips tombstones + adds
+    // 4. the new files' rows, ignored by readers until the marker lands
+    if (staged.nonEmpty)
+      EncodeJob.publishManifest(conf, outDir, s"c$cid.parquet", staged.map(r => r.copy(file = renamed(r.file))))
+
+    // 5. THE commit point: one atomic marker rename flips tombstones + adds
     val marker = MiniJson.render(
       MiniJson.JObj(
         Map(
@@ -757,7 +718,7 @@ object Maintenance {
       )
     )
     writeAtomic(fs, new Path(compactRoot(outDir), s"c$cid.json"), marker)
-    (added.toSeq, addedBytes)
+    (added, addedBytes)
   }
 
   final case class PurgeResult(
@@ -797,7 +758,6 @@ object Maintenance {
     import spark.implicits._
     import graft.core.MiniJson.ObjOps
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(outDir, conf)
     val state = Deletes.liveDeletes(outDir, conf, asOf = None)
     if (state.isEmpty) return None
 
@@ -817,9 +777,8 @@ object Maintenance {
 
     // ONE distributed metadata scan over the live files' tiny bin/
     // embedded_tables columns answers everything the rewrite plan needs:
-    // each file's FULL bin set (victim matching + the re-manifest targets,
-    // derived BEFORE the commit point so the advisory repair never depends
-    // on re-reading tombstoned files) and whether any victim block embeds
+    // each file's FULL bin set (victim matching and the bins to re-encode)
+    // and whether any victim block embeds
     // its tables (the rewrite then preserves the dir's self-describing
     // convention). Driver memory is one row per live file — the
     // manifest-index scale.
@@ -894,14 +853,8 @@ object Maintenance {
       stageRewrite(GraftPipeline.route(kept, cfg, Some(groupBins)).blocks(bTables), outDir, cid)
     }
     val (added, _) = commitRewrite(
-      fs, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = appliedField
+      conf, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = appliedField
     )
-
-    // 5. advisory re-manifest: fresh claims for every rewritten bin, and
-    // (appendManifest's zero-fill) a zero row for each bin the purge emptied
-    // entirely — the manifest index's numRows must stop counting its stale
-    // winner
-    remanifest(spark, outDir, affected, cid)
 
     Some(
       PurgeResult(cid, victims.length, added.length, state.live.size, state.totalIds, affected.size)
@@ -1133,47 +1086,46 @@ object Maintenance {
   }
 
   /** Consolidate the append-only `_manifest` into ONE parquet file holding
-    * the current per-bin winners (highest [[manifestRank]] — the same resolution
-    * rule the scan's index applies). Every commit appends a manifest file,
-    * so a year of daily deltas plus compactions is hundreds of driver-side
-    * parquet opens per index build; after consolidation it is one.
+    * the rows of the live files. Every commit appends a manifest file, so a
+    * year of daily deltas plus compactions is hundreds of driver-side
+    * parquet opens per index build; after consolidation it is one. First,
+    * live files no row names (streaming epochs, files claimed only by a
+    * pre-v5 manifest) get their rows ([[EncodeJob.appendManifest]]).
     *
     * Reader-safe without coordination: the consolidated file REPEATS the
-    * winning rows verbatim (same snapshot_ids), so a reader that lists old
-    * files, new file, or both resolves identical winners. Order: write the
-    * consolidated file in (atomic single-file rename), then delete the
-    * files listed BEFORE the write — a crash mid-delete leaves duplicate
-    * rows, which the resolution rule makes harmless, and the next rewrite
-    * retires them. Returns a no-op result when the manifest already is a
-    * single file.
+    * live files' rows verbatim, and readers key rows by (file, bin), so a
+    * reader that lists old files, new file, or both sees the same claims.
+    * Order: write the consolidated file in (atomic single-file rename),
+    * then delete the files listed BEFORE the write — a crash mid-delete
+    * leaves repeated rows, which count once, and the next rewrite retires
+    * them. Rows of files that are not live are dropped, so, like every
+    * maintenance op, run it with no writer mid-commit (a commit publishes
+    * its rows before its files go live). Returns a no-op result when the
+    * manifest already is a single file.
     */
   def rewriteManifests(spark: SparkSession, outDir: String): RewriteManifestsResult = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(outDir, conf)
-    val dir = new Path(s"$outDir/_manifest")
-    if (!fs.exists(dir)) return RewriteManifestsResult(0, 0, 0L)
-    val before = fs
-      .listStatus(dir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
+    if (!fs.exists(new Path(s"$outDir/blocks"))) return RewriteManifestsResult(0, 0, 0L)
+    val numBins = EncodeJob
+      .loadMeta(spark, outDir)
+      .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/meta.json missing"))
+      .long("num_bins")
+      .toInt
+    EncodeJob.appendManifest(spark, outDir, (0 until numBins).toSet, 0L)
+    val before = BlockParquet.manifestFiles(outDir, conf)
     if (before.length <= 1) return RewriteManifestsResult(before.length, before.length, -1L)
 
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"bin")
-      .orderBy(udf((id: Long) => manifestRank(id)).apply($"snapshot_id").desc)
-    val winners = spark.read
-      .parquet(before.map(_.toString).toIndexedSeq: _*)
-      .withColumn("__rk", row_number().over(w))
-      .where($"__rk" === 1)
-      .drop("__rk")
-      .as[EncodeJob.BinManifest]
-      .collect()
-      .sortBy(_.bin)
+    val live = liveBlockFiles(outDir, conf).map(f => new Path(f._1).getName).toSet
+    val kept = BlockParquet
+      .readManifest(before.toSeq, conf)
+      .rows
+      .filter(r => live(r.file))
+      .distinctBy(r => (r.file, r.bin))
     // unique name: never collides with other manifest files or prior rewrites
-    EncodeJob.publishManifest(spark, outDir, s"consolidated-${System.nanoTime()}.parquet", winners)
-    before.foreach(p => fs.delete(p, false): Unit)
-    RewriteManifestsResult(before.length, 1, winners.length.toLong)
+    EncodeJob.publishManifest(conf, outDir, s"consolidated-${System.nanoTime()}.parquet", kept)
+    before.foreach(st => fs.delete(st.getPath, false): Unit)
+    RewriteManifestsResult(before.length, 1, kept.map(_.bin).distinct.length.toLong)
   }
 
   /** Expire all but the newest `keepLast` snapshots. The oldest RETAINED
@@ -1356,10 +1308,10 @@ object Maintenance {
     * (belt-and-braces against a source whose meta lies), rename into
     * `blocks/`, then ONE CAS-claimed snapshot with the adopted names as
     * `files_added` (consumed by time travel, incremental reads and the
-    * streaming source) and the source dir recorded as `adopted_from`.
-    * A pre-snapshot failure rolls the renames back; post-snapshot manifest
-    * claims are advisory (healed by the next append/compaction). The
-    * source dir is never written. Adopted files carry no token-index
+    * streaming source) and the source dir recorded as `adopted_from`. The
+    * adopted files' manifest rows come from the verification pass and are
+    * published before the renames. A pre-snapshot failure rolls the
+    * renames back. The source dir is never written. Adopted files carry no token-index
     * entries until the next `build_token_index` run (needle scans keep
     * them conservatively — `token_stats` shows them as indexed=false).
     */
@@ -1481,30 +1433,22 @@ object Maintenance {
         require(ok, s"adopt: copy $from -> $to failed")
       }
 
-    // staged-content check + the snapshot's exact row/value/bin accounting,
-    // in one column-pruned metadata pass over the staged files
+    // staged-content check + the snapshot's exact row/value accounting +
+    // the adopted files' manifest rows, in one pass over the staged files
     val staged = plan.map(p => s"$stagingStr/${p._2}").toIndexedSeq
-    val stats = spark.read
-      .parquet(staged: _*)
-      .agg(
-        sum($"n_rows").cast("long"),
-        sum($"n_values").cast("long"),
-        min($"table_hash"),
-        max($"table_hash"),
-        collect_set($"bin")
-      )
-      .head()
-    val (rowsAdopted, valuesAdopted) = (stats.getLong(0), stats.getLong(1))
+    val rows = EncodeJob.deriveManifest(spark, staged)
+    val bad = rows.map(_.table_hash).filter(_ != expectedHash)
     require(
-      stats.getLong(2) == expectedHash && stats.getLong(3) == expectedHash,
-      s"adopt: staged blocks record table_hash ${stats.getLong(2)}/${stats.getLong(3)} but the " +
+      bad.isEmpty,
+      s"adopt: staged blocks record table_hash ${bad.headOption.getOrElse("")} but the " +
         s"shared tables hash to $expectedHash — $srcDir's meta.json does not match its blocks"
     )
-    val binsTouched = stats.getSeq[Int](4).toSet
+    val (rowsAdopted, valuesAdopted) = (rows.map(_.n_rows).sum, rows.map(_.n_values).sum)
 
     val renamed = scala.collection.mutable.ArrayBuffer[String]()
     val snapshotId =
       try {
+        EncodeJob.publishManifest(conf, dstDir, s"adopt-$uid.parquet", rows)
         plan.foreach { case (_, name, _) =>
           val dst = new Path(s"$dstDir/blocks", name)
           require(dstFs.rename(new Path(stagingDir, name), dst), s"adopt: rename to $dst failed")
@@ -1531,15 +1475,6 @@ object Maintenance {
           throw err
       }
 
-    // advisory claims — committed already, a failure here must not fail it
-    try EncodeJob.appendManifest(spark, dstDir, binsTouched, snapshotId)
-    catch {
-      case e: Exception =>
-        System.err.println(
-          s"adopt: snapshot $snapshotId committed but re-manifest failed (${e.getMessage}) — " +
-            "claims for the adopted files stay pending until the next append heals them"
-        )
-    }
     dstFs.delete(stagingDir, true): Unit
 
     Some(AdoptResult(snapshotId, renamed.size, plan.map(_._3).sum, rowsAdopted, valuesAdopted, docIdOverlap))

@@ -531,8 +531,8 @@ private object GraftCatalog {
     * block file, from pure driver-side metadata (file listing + manifest
     * index + snapshot lineage — no data file is opened). The ops queries
     * this answers: unclaimed files (bins_claimed NULL → point reads keep
-    * them conservatively; run rewrite_manifests or the next append heals
-    * them), small-file buildup (bytes distribution → schedule compact),
+    * them conservatively; rewrite_manifests claims them), small-file
+    * buildup (bytes distribution → schedule compact),
     * and append attribution (commit_snapshot NULL = bootstrap/compacted,
     * subject to every delete). One row per file is the same driver scale
     * the manifest index already carries.
@@ -550,7 +550,7 @@ private object GraftCatalog {
       val path = pathOf(input)
       val live = Maintenance.liveBlockFiles(path, conf)
       val claims: Map[String, Array[Int]] =
-        GraftScan.manifestIndex(path, conf).map(_.fileBins).getOrElse(Map.empty)
+        GraftScan.manifestIndex(path, conf, live).map(_.fileBins).getOrElse(Map.empty)
       val commitOf: Map[String, Long] = graft.pipeline.EncodeJob
         .loadSnapshotRecords(path, conf)
         .flatMap(r => r.filesAdded.map(_ -> r.id))
@@ -801,7 +801,7 @@ private object GraftCatalog {
     ))
   ) {
     override def description(): String =
-      "consolidate the append-only manifest into one file of current winners"
+      "consolidate the manifest into one file of the live files' rows"
     override def run(spark: SparkSession, input: InternalRow): InternalRow = {
       val r = Maintenance.rewriteManifests(spark, pathOf(input))
       InternalRow(r.filesBefore, r.filesAfter, r.bins)

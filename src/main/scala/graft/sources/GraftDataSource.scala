@@ -1101,39 +1101,38 @@ private[sources] class GraftScan(
       .getOption("spark.graft.binPartitionedScan")
       .exists(_.toBoolean)
     if (!wantKeyed || agg.nonEmpty || limit.nonEmpty || fromSnapshot.nonEmpty) None
-    else
-      GraftScan.manifestIndex(path, hadoopConf).map(_.fileBins).filter(_.nonEmpty).flatMap {
-        claims =>
-          val live = blockFiles
-            .filterNot { case (f, _) => excludedAppendFiles.contains(GraftScan.nameOf(f)) }
-          val (claimed, unclaimed) =
-            live.partition { case (f, _) => claims.contains(GraftScan.nameOf(f)) }
-          // a shuffle write task with no bins still commits a ZERO-ROW part
-          // file; no manifest row claims it, but it also holds nothing —
-          // verify by footer record count (cached, and bounded like every
-          // other driver-side footer pass) rather than give up on keyed
-          // planning. An unclaimed file WITH rows is genuinely outside the
-          // manifest (crashed claim) → fall back to per-file planning.
-          val files = claimed.map(_._1)
-          val emptiesOnly = unclaimed.length <= GraftScan.sessionFooterPruneCap &&
-            unclaimed.forall { case (f, len) =>
-              GraftScan.parquetRowCount(f, len, hadoopConf) == 0L
-            }
-          if (!emptiesOnly) None
-          else {
-            // ALL visible bins stay (no doc_id pruning here): the reported
-            // partitioning must be stable, and the readers still apply the
-            // exact doc filters from the factory
-            val byBin = scala.collection.mutable.TreeMap[Int, scala.collection.mutable.ArrayBuffer[String]]()
-            for {
-              f <- files
-              b <- claims(GraftScan.nameOf(f))
-              if snapshotBins.forall(_.contains(b))
-            } byBin.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer[String]()) += f
-            if (byBin.isEmpty) None
-            else Some(byBin.iterator.map { case (b, fs) => (b, fs.toArray) }.toArray)
+    else {
+      val live = blockFiles.filterNot { case (f, _) => excludedAppendFiles.contains(GraftScan.nameOf(f)) }
+      GraftScan.manifestIndex(path, hadoopConf, live).map(_.fileBins).filter(_.nonEmpty).flatMap { claims =>
+        val (claimed, unclaimed) =
+          live.partition { case (f, _) => claims.contains(GraftScan.nameOf(f)) }
+        // a shuffle write task with no bins still commits a ZERO-ROW part
+        // file; no manifest row claims it, but it also holds nothing —
+        // verify by footer record count (cached, and bounded like every
+        // other driver-side footer pass) rather than give up on keyed
+        // planning. An unclaimed file WITH rows is genuinely outside the
+        // manifest (a streamed epoch's file) → fall back to per-file planning.
+        val files = claimed.map(_._1)
+        val emptiesOnly = unclaimed.length <= GraftScan.sessionFooterPruneCap &&
+          unclaimed.forall { case (f, len) =>
+            GraftScan.parquetRowCount(f, len, hadoopConf) == 0L
           }
+        if (!emptiesOnly) None
+        else {
+          // ALL visible bins stay (no doc_id pruning here): the reported
+          // partitioning must be stable, and the readers still apply the
+          // exact doc filters from the factory
+          val byBin = scala.collection.mutable.TreeMap[Int, scala.collection.mutable.ArrayBuffer[String]]()
+          for {
+            f <- files
+            b <- claims(GraftScan.nameOf(f))
+            if snapshotBins.forall(_.contains(b))
+          } byBin.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer[String]()) += f
+          if (byBin.isEmpty) None
+          else Some(byBin.iterator.map { case (b, fs) => (b, fs.toArray) }.toArray)
+        }
       }
+    }
   }
 
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
@@ -1346,15 +1345,15 @@ private[sources] class GraftScan(
       // needle hides rows the same way (without this gate, CBO would size a
       // 1-row needle result at the full corpus and e.g. refuse to broadcast
       // it in a join).
-      // EncodeJob self-repairs a manifest that lost rows to a crash between
-      // block commit and manifest append, so for a completed/resumed job
-      // the manifest total is exact.
+      // Every batch writer publishes a file's rows before the file goes
+      // live, so the live files' rows sum to the table's rows.
       // fromSnapshot sees a snapshot-range subset, like the other gates
       if (filters.isEmpty && snapshot.isEmpty && deleteState.isEmpty && containsToken.isEmpty &&
         sample.isEmpty && fromSnapshot.isEmpty)
         GraftScan
-          .manifestIndex(path, hadoopConf)
-          .fold(OptionalLong.empty())(ix => OptionalLong.of(ix.numRows))
+          .manifestIndex(path, hadoopConf, blockFiles)
+          .flatMap(_.numRows)
+          .fold(OptionalLong.empty())(n => OptionalLong.of(n))
       else OptionalLong.empty()
   }
 
@@ -1503,91 +1502,61 @@ private[sources] object GraftScan {
   private val footerCache =
     scala.collection.concurrent.TrieMap[(String, Long), Option[(Int, Int)]]()
 
-  /** Driver-side index derived from the `_manifest` parquet (tiny: one row
-    * per bin), read without a Spark job and cached JVM-wide per
-    * manifest-listing fingerprint (any append invalidates). Carries the
-    * exact corpus row count (broadcast decisions) and the inverted
-    * block-file→bins claims from the per-bin `files` column — the file-level
-    * analog of the reference's random-access offset index
+  /** Driver-side index derived from the `_manifest` parquet, read without
+    * a Spark job. Each row is a fact about one immutable block file (the
+    * blocks of one bin inside it — [[graft.pipeline.EncodeJob.BinManifest]]),
+    * so the index keeps the rows whose file is in `live` and resolves
+    * nothing else: claims key by (file, bin), a repeated row counts once.
+    * Carries the corpus row count over the live claimed files (broadcast
+    * decisions) and the block-file→bins claims — the file-level analog of
+    * the reference's random-access offset index
     * (/root/reference/src/graphs/huffman_graph_decoder.rs:151-205), letting
     * a point read over an 800k-file corpus plan O(hit-bins) partitions with
-    * zero footer opens. Rows written before the `files` column existed (or
-    * lost to a crash before manifest self-repair) simply claim nothing —
+    * zero footer opens. A live file no row names claims nothing —
     * [[pruneFiles]] keeps unclaimed files, so the index can only skip files
-    * the manifest explicitly accounts for.
+    * the manifest explicitly accounts for. Rows of a pre-v5 manifest claim
+    * too, but count no rows per file: numRows is then unknown.
     *
-    * Resolution is LATEST-ROW-PER-BIN (highest
-    * [[graft.pipeline.Maintenance.manifestRank]] of its snapshot_id): bins
-    * are write-once for data snapshots, but [[graft.pipeline.Maintenance]]
-    * re-manifests a bin after compaction with fresh claims in the
-    * maintenance epoch — the newest row supersedes the stale claims on
-    * tombstoned files and keeps `numRows` exact (not double-counted), and a
-    * later data snapshot's re-manifest supersedes the epoch rows in turn.
+    * The parsed manifest is cached JVM-wide per manifest-listing
+    * fingerprint (any commit invalidates); None when no manifest row exists.
     */
-  final case class ManifestIndex(numRows: Long, fileBins: Map[String, Array[Int]])
+  final case class ManifestIndex(numRows: Option[Long], fileBins: Map[String, Array[Int]])
+
+  /** All rows of one manifest listing: file → bin → n_rows (pre-v5 claims
+    * carry no count), and whether every row is of the current format.
+    */
+  private final case class ManifestRows(byFile: Map[String, Map[Int, Long]], exact: Boolean)
 
   /** Few entries, but each can be large (an 800k-bin corpus's index is
     * ~100 MB of file→bins claims) — so this cache is bounded by INDEX
     * count, not entry count like the footer cache.
     */
   private val ManifestCacheCap = 64
-  private val manifestIndexCache =
-    scala.collection.concurrent.TrieMap[String, Option[ManifestIndex]]()
+  private val manifestRowsCache =
+    scala.collection.concurrent.TrieMap[String, Option[ManifestRows]]()
 
-  def manifestIndex(path: String, conf: Configuration): Option[ManifestIndex] = {
-    val fs = new Path(path).getFileSystem(conf)
-    val dir = new Path(s"$path/_manifest")
-    if (!fs.exists(dir)) return None
-    val files = fs
-      .listStatus(dir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.toString)
+  def manifestIndex(path: String, conf: Configuration, live: Array[(String, Long)]): Option[ManifestIndex] = {
+    val files = graft.pipeline.BlockParquet.manifestFiles(path, conf)
+    if (files.isEmpty) return None
     val key = files.map(st => s"${st.getPath}:${st.getLen}").mkString(path, "|", "")
-    if (manifestIndexCache.size > ManifestCacheCap) manifestIndexCache.clear()
-    manifestIndexCache.getOrElseUpdate(
-      key, {
-        var seen = false
-        // per-bin winner: (manifest rank, n_rows, claimed file names)
-        val perBin =
-          scala.collection.mutable.HashMap[Int, (Long, Long, Array[String])]()
-        files.foreach { st =>
-          val r = ParquetReader
-            .builder(new GroupReadSupport(), st.getPath)
-            .withConf(conf)
-            .build()
-          try {
-            var g = r.read()
-            while (g != null) {
-              seen = true
-              val bin = g.getInteger("bin", 0)
-              val rank = graft.pipeline.Maintenance.manifestRank(g.getLong("snapshot_id", 0))
-              val nRows = g.getLong("n_rows", 0)
-              val claimed: Array[String] =
-                if (g.getType.containsField("files") && g.getFieldRepetitionCount("files") > 0)
-                  g.getString("files", 0).split(',').filter(_.nonEmpty)
-                else Array.empty
-              perBin.get(bin) match {
-                case Some((best, _, _)) if best >= rank => ()
-                case _                                  => perBin(bin) = (rank, nRows, claimed)
-              }
-              g = r.read()
-            }
-          } finally r.close()
+    if (manifestRowsCache.size > ManifestCacheCap) manifestRowsCache.clear()
+    manifestRowsCache
+      .getOrElseUpdate(
+        key, {
+          val m = graft.pipeline.BlockParquet.readManifest(files.toSeq, conf)
+          val counted = m.rows.groupMapReduce(_.file)(r => Map(r.bin -> r.n_rows))(_ ++ _)
+          // a file named by current rows too keeps those (they name all its bins)
+          val byFile = m.legacyClaims.map { case (f, bins) => f -> bins.map(_ -> 0L).toMap } ++ counted
+          if (byFile.isEmpty) None else Some(ManifestRows(byFile, m.legacyClaims.isEmpty))
         }
-        if (!seen) None
-        else {
-          val total = perBin.valuesIterator.map(_._2).sum
-          val claims =
-            scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-          perBin.foreach { case (bin, (_, _, fsNames)) =>
-            fsNames.foreach { f =>
-              claims.getOrElseUpdate(f, scala.collection.mutable.ArrayBuffer[Int]()) += bin
-            }
-          }
-          Some(ManifestIndex(total, claims.view.mapValues(_.toArray).toMap))
-        }
+      )
+      .map { rows =>
+        val claimed = live.iterator.map(f => nameOf(f._1)).flatMap(n => rows.byFile.get(n).map(n -> _)).toMap
+        ManifestIndex(
+          if (rows.exact) Some(claimed.valuesIterator.map(_.valuesIterator.sum).sum) else None,
+          claimed.view.mapValues(_.keys.toArray.sorted).toMap
+        )
       }
-    )
   }
 
   /** The block files a scan restricted to `bins` must read. Preference
@@ -1596,9 +1565,8 @@ private[sources] object GraftScan {
     * dirs, driver work capped at `cap` files), else every file. File-level
     * pruning is NOT advisory — a wrongly dropped file loses rows — so both
     * prunings rest on authoritative metadata: footer stats are parquet's
-    * own, and a manifest row claims exactly the files holding its
-    * write-once bin (a file whose bins never reached the manifest is
-    * claimed by no row and always kept).
+    * own, and a file's manifest rows name every bin it holds (a file no
+    * row names is always kept).
     */
   /** What is known about a planned file's bin membership. */
   sealed trait FileBins
@@ -1642,7 +1610,7 @@ private[sources] object GraftScan {
   ): Array[(String, FileBins)] = bins match {
     case None => blockFiles.map(f => (f._1, UnknownBins))
     case Some(b) =>
-      manifestIndex(path, conf).map(_.fileBins).filter(_.nonEmpty) match {
+      manifestIndex(path, conf, blockFiles).map(_.fileBins).filter(_.nonEmpty) match {
         case Some(claims) =>
           blockFiles.flatMap { case (f, _) =>
             claims.get(nameOf(f)) match {

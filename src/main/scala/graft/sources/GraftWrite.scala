@@ -37,17 +37,14 @@ import org.apache.spark.util.SerializableConfiguration
   * existing compressed table without re-encoding it.
   *
   * Commit protocol (driver, after every task committed):
-  *   1. staged task files are renamed into `blocks/` (same visibility
+  *   1. a batch append publishes the manifest rows its tasks reported (one
+  *      per file and bin); readers ignore them until the files are live;
+  *   2. staged task files are renamed into `blocks/` (same visibility
   *      semantics as EncodeJob's blocks-before-snapshot ordering);
-  *   2. THE commit point: one atomic snapshot write recording the appended
+  *   3. THE commit point: one atomic snapshot write recording the appended
   *      file names as `files_added` (bins are NOT write-once for appends, so
   *      the file set — not the bin set — is the lineage delta; snapshot
-  *      time travel and the streaming read source consume it);
-  *   3. advisory re-manifest of the touched bins (fresh claims derived from
-  *      the live block set — heals stale claims, keeps file-level pruning
-  *      and `numRows` exact). A crash between 2 and 3 leaves the new files
-  *      unclaimed: scans keep unclaimed files conservatively, so results
-  *      stay correct and the next append's re-manifest heals the claims.
+  *      time travel and the streaming read source consume it).
   *
   * Crash/abort safety: a failure before the snapshot write rolls back the
   * renames (the driver deletes the renamed files and rethrows, then Spark's
@@ -289,7 +286,7 @@ private[sources] final class GraftWrite(
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DataWriterFactory = factory
     override def commit(messages: Array[WriterCommitMessage]): Unit =
-      GraftAppendCommit.commit(path, stagingDir, messages, queryId, cfg.numBins, epoch = None)
+      GraftAppendCommit.commit(path, stagingDir, messages, queryId, epoch = None)
     override def abort(messages: Array[WriterCommitMessage]): Unit =
       GraftAppendCommit.cleanStaging(path, stagingDir, epoch = None)
   }
@@ -298,7 +295,7 @@ private[sources] final class GraftWrite(
     override def createStreamingWriterFactory(pinfo: PhysicalWriteInfo): StreamingDataWriterFactory =
       factory
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      GraftAppendCommit.commit(path, stagingDir, messages, queryId, cfg.numBins, epoch = Some(epochId))
+      GraftAppendCommit.commit(path, stagingDir, messages, queryId, epoch = Some(epochId))
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
       GraftAppendCommit.cleanStaging(path, stagingDir, epoch = Some(epochId))
   }
@@ -356,7 +353,6 @@ private[sources] object GraftAppendCommit {
       stagingDir: String,
       messages: Array[WriterCommitMessage],
       writerId: String,
-      numBins: Int,
       epoch: Option[Long]
   ): Unit = {
     val spark = SparkSession.active
@@ -449,9 +445,17 @@ private[sources] object GraftAppendCommit {
     if (msgs.isEmpty) { cleanStaging(path, stagingDir, epoch); return }
 
     val renamed = mutable.ArrayBuffer[String]()
-    var snapshotId = -1L
     try {
-      // 1. publish the task files (visible to full scans from here, exactly
+      // 1. the task files' manifest rows, ignored by readers until the
+      // files go live. Streaming epochs skip them: a manifest file per
+      // epoch would grow the manifest with stream age; scans keep the
+      // unclaimed files conservatively, and rewrite_manifests claims them.
+      if (epoch.isEmpty)
+        EncodeJob.publishManifest(
+          conf, path, s"append-${java.util.UUID.randomUUID()}.parquet", msgs.toSeq.flatMap(_.rows)
+        )
+
+      // 2. publish the task files (visible to full scans from here, exactly
       // like EncodeJob's block-file renames before its snapshot write)
       msgs.foreach { m =>
         val src = new Path(stagingDir, m.fileName)
@@ -460,7 +464,7 @@ private[sources] object GraftAppendCommit {
         renamed += m.fileName
       }
 
-      // 2. THE commit point: CAS-claimed snapshot with the exact file
+      // 3. THE commit point: CAS-claimed snapshot with the exact file
       // delta. The id is claimed with an atomic exclusive create and
       // re-allocated on collision (see EncodeJob.casWriteSnapshot), so two
       // appends racing on one dir both commit, under distinct ids — the
@@ -472,7 +476,7 @@ private[sources] object GraftAppendCommit {
       val filesJson =
         renamed.sorted.map(n => MiniJson.render(MiniJson.JStr(n))).mkString("[", ",", "]")
       val epochFields = epoch.map(e => s""","writer_epoch":$e""").getOrElse("")
-      snapshotId = EncodeJob
+      EncodeJob
         .casWriteSnapshot(
           spark,
           path,
@@ -481,8 +485,7 @@ private[sources] object GraftAppendCommit {
             s"""{"snapshot_id":$id,"parent_id":$parent,"bins_added":[],
                |"files_added":$filesJson,"writer_id":${MiniJson.render(MiniJson.JStr(writerId))}$epochFields,
                |"n_rows_added":${msgs.map(_.nRows).sum},"n_values_added":${msgs.map(_.nValues).sum}}""".stripMargin
-        )
-        ._1
+        ): Unit
       epoch.foreach(e => maxCommittedEpoch(cacheKey) = (incarnation.get, e))
     } catch {
       case err: Throwable =>
@@ -496,49 +499,23 @@ private[sources] object GraftAppendCommit {
         throw err
     }
 
-    // 3. advisory claims for the touched bins (file-level pruning + exact
-    // numRows). Committed already — a failure here degrades stats until the
-    // next append re-manifests these bins, it must not fail the write.
-    // Streaming epochs SKIP it: a per-epoch metadata scan + manifest part
-    // file would grow commit latency and manifest size with stream age;
-    // unclaimed appended files are kept conservatively by every scan, and
-    // the next batch append or compaction re-manifests them.
-    if (epoch.isEmpty) {
-      // a task that overflowed its inline bin list reports allBins — the
-      // union is then table-scale anyway, so re-manifest every bin (the
-      // claims derivation is one distributed metadata scan either way)
-      val touched: Set[Int] =
-        if (msgs.exists(_.allBins)) (0 until numBins).toSet
-        else msgs.iterator.flatMap(_.bins).toSet
-      try EncodeJob.appendManifest(spark, path, touched, snapshotId)
-      catch {
-        case e: Exception =>
-          System.err.println(
-            s"graft append: snapshot $snapshotId committed but re-manifest failed (${e.getMessage}) — " +
-              "claims for the appended files stay pending until the next append heals them"
-          )
-      }
-    }
     cleanStaging(path, stagingDir, epoch)
   }
 }
 
-/** Per-task commit message. `bins` is inlined only while small: a big
-  * append task with random doc_ids touches most of the table's bins
-  * (~800k at 100 TB), and shipping that list from thousands of tasks
-  * would put gigabytes of advisory metadata through the driver. Past
-  * [[GraftDataWriter.BinsInlineCap]] the task sends `allBins = true`
-  * instead and the driver re-manifests every bin — the claims derivation
-  * is a distributed metadata scan either way, and a task that exceeded
-  * the cap genuinely touched table-scale bin counts.
+/** Per-task commit message: the staged file's name and its manifest rows,
+  * one per bin it holds ([[graft.pipeline.BlockParquet.FileRows]]) — the
+  * rows the driver publishes for a batch append. A task whose random
+  * doc_ids touch most of an 800k-bin table sends a row per bin: that file
+  * holds those bins, and its rows are the claims a point read prunes by.
   */
 private[sources] final case class GraftCommitMessage(
     fileName: String,
-    bins: Array[Int],
-    allBins: Boolean,
-    nRows: Long,
-    nValues: Long
-) extends WriterCommitMessage
+    rows: Array[EncodeJob.BinManifest]
+) extends WriterCommitMessage {
+  def nRows: Long = rows.iterator.map(_.n_rows).sum
+  def nValues: Long = rows.iterator.map(_.n_values).sum
+}
 
 private[sources] final case class GraftWriterFactory(
     stagingDir: String,
@@ -615,9 +592,7 @@ private[sources] final class GraftDataWriter(
 
   private var writer: ParquetWriter[Group] = _
   private val groups = new SimpleGroupFactory(BlockParquet.Schema)
-  private val binsTouched = mutable.SortedSet[Int]()
-  private var nRows = 0L
-  private var nValues = 0L
+  private val rows = new BlockParquet.FileRows(fileName)
 
   private val Array(docOrd, tokOrd, ntokOrd, srcOrd) = colOrds
 
@@ -666,9 +641,7 @@ private[sources] final class GraftDataWriter(
     it.foreach { b =>
       if (writer == null) writer = BlockParquet.open(new Path(stagingDir, fileName), sConf.value.value)
       writer.write(BlockParquet.toGroup(b, groups))
-      binsTouched += bin
-      nRows += b.n_rows
-      nValues += b.n_values
+      rows.add(b)
     }
   }
 
@@ -689,10 +662,7 @@ private[sources] final class GraftDataWriter(
   override def commit(): WriterCommitMessage = {
     buffers.keys.toArray.sorted.foreach(flush)
     if (writer != null) writer.close()
-    if (binsTouched.size > GraftDataWriter.BinsInlineCap)
-      GraftCommitMessage(fileName, Array.emptyIntArray, allBins = true, nRows, nValues)
-    else
-      GraftCommitMessage(fileName, binsTouched.toArray, allBins = false, nRows, nValues)
+    GraftCommitMessage(fileName, rows.result)
   }
 
   override def abort(): Unit = {
@@ -704,11 +674,4 @@ private[sources] final class GraftDataWriter(
   }
 
   override def close(): Unit = ()
-}
-
-private[sources] object GraftDataWriter {
-  /** Largest bin list a commit message inlines (64 KB of ids). Tasks over
-    * the cap report `allBins` instead — see [[GraftCommitMessage]].
-    */
-  val BinsInlineCap: Int = 16384
 }

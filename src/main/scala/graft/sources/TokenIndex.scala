@@ -249,13 +249,14 @@ object TokenIndex {
         var mn = Int.MaxValue
         var mx = Int.MinValue
         var nd = 0L
-        var n = 0
         rows.foreach { r =>
           mn = math.min(mn, r.tok_min); mx = math.max(mx, r.tok_max); nd += r.n_distinct
-          if (r.bin >= 0) n += 1
         }
-        sums.add((rows.head.file, mn, mx, n, nd))
-        rows.filter(_.bin >= 0) // coverage sentinels live only in the summaries
+        // a file with no token values still gets its summary (the empty
+        // [MaxValue, MinValue] range prunes it for every needle): it marks
+        // the file covered, so incremental builds skip it
+        sums.add((nameOf(file), mn, mx, rows.length, nd))
+        rows
       }
       .toDS()
 
@@ -285,8 +286,8 @@ object TokenIndex {
     // per-file summaries: the driver's file-pruning view (value range +
     // recorded block count — the completeness anchor for incremental
     // builds), collected by the accumulator above — O(files) tiny rows,
-    // the same driver scale fileSummaries() already loads back. A
-    // sentinel file keeps the [MaxValue, MinValue] empty range.
+    // the same driver scale fileSummaries() already loads back. A file
+    // with no token values keeps the [MaxValue, MinValue] empty range.
     // Deliberately NO per-file bloom: at 800k files the driver could not
     // hold them, and the executor-side per-block blooms do the skipping.
     val sumRows = {
@@ -410,13 +411,7 @@ object TokenIndex {
       }
     } finally reader.close()
     val rows = out.result()
-    if (rows.isEmpty)
-      // sentinel (bin = -1, excluded from tix): marks the file COVERED so
-      // incremental builds skip it, with an empty [MaxValue, MinValue]
-      // range so the driver prunes it for every needle — correct, since
-      // the file holds no token values at all
-      Seq(TokenIndexRow(name, -1, -1, 0, Int.MaxValue, Int.MinValue, 0, Array.emptyByteArray))
-    else rows.map(_.copy(n_blocks_in_file = rows.length)).toSeq
+    rows.map(_.copy(n_blocks_in_file = rows.length)).toSeq
   }
 
   // ---------------------------------------------------------------------

@@ -1,51 +1,17 @@
 package graft.streaming
 
-import graft.core.SymbolTables
-import graft.pipeline.{GraftPipeline, TokenRow}
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import graft.pipeline.TokenRow
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface: encode an unbounded stream of token rows
-  * into the same block layout as the batch job.
-  *
-  * Each micro-batch runs the deterministic bin/block encode and commits to
-  * its own `batch=<id>` directory with overwrite semantics, so replayed
-  * batches (at-least-once foreachBatch) are idempotent — the streaming
-  * analog of the batch job's bin-level checkpointing. Symbol tables are
-  * built once (from a bootstrap corpus) and broadcast; recorded table_hash
-  * guards mixing.
+/** Structured Streaming helpers over token and document streams: bounded-
+  * state dedup, running per-source codec statistics and windowed ingest
+  * counts. Encoding a stream into a table is the DSv2 sink
+  * (`writeStream.format("graft")` into a dir [[graft.pipeline.EncodeJob]]
+  * started), which commits each epoch exactly once with its snapshot.
   */
 object StreamingEncode {
-
-  def start(
-      stream: Dataset[TokenRow],
-      outDir: String,
-      tables: Broadcast[SymbolTables],
-      cfg: GraftPipeline.Config
-  ): StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_stream_checkpoint")
-      .foreachBatch { (batch: Dataset[TokenRow], batchId: Long) =>
-        GraftPipeline
-          .encode(batch, tables, cfg)
-          .write
-          .mode(SaveMode.Overwrite) // idempotent per-batch commit
-          .parquet(s"$outDir/blocks/batch=$batchId")
-      }
-      .start()
-  }
-
-  /** Read everything committed so far (all batches) as one blocks dataset. */
-  def readBlocks(spark: org.apache.spark.sql.SparkSession, outDir: String) = {
-    import spark.implicits._
-    spark.read
-      .option("basePath", s"$outDir/blocks")
-      .parquet(s"$outDir/blocks/batch=*")
-      .drop("batch")
-      .as[graft.pipeline.EncodedBlock]
-  }
 
   /** Streaming exact dedup over an event-timestamped document stream
     * (ts, doc_id, text, ...): keep the first arrival of each content hash,

@@ -133,7 +133,8 @@ class EncodeJobSpec extends AnyFunSuite {
     EncodeJob.run(input, dir, cfg, onlyBins = Some(Set(0, 1, 2)))
     EncodeJob.run(input, dir, cfg) // second append: distinct files
     val manifest = spark.read.parquet(s"$dir/_manifest").as[EncodeJob.BinManifest].collect()
-    assert(manifest.length == cfg.numBins)
+    assert(manifest.map(_.bin).toSet == (0 until cfg.numBins).toSet)
+    assert(manifest.map(m => (m.file, m.bin)).distinct.length == manifest.length, "one row per (file, bin)")
     // every claimed file exists under blocks/, and the claims agree with the
     // blocks' actual file placement (input_file_name ground truth)
     val actual = spark.read.parquet(s"$dir/blocks")
@@ -142,9 +143,8 @@ class EncodeJobSpec extends AnyFunSuite {
       .collect()
       .groupBy(_.getInt(0))
       .view.mapValues(_.map(_.getString(1)).sorted.toSeq).toMap
-    manifest.foreach { m =>
-      assert(m.files.nonEmpty)
-      assert(m.files.split(',').sorted.toSeq == actual(m.bin), s"bin ${m.bin}")
+    manifest.groupBy(_.bin).foreach { case (bin, rows) =>
+      assert(rows.map(_.file).sorted.toSeq == actual(bin), s"bin $bin")
     }
   }
 
@@ -217,18 +217,6 @@ class EncodeJobSpec extends AnyFunSuite {
     assert(GraftPipeline.verify(input, decoded) == 0L)
   }
 
-  test("binMembership: UDF branch (large sets) agrees with the IN branch") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val df = spark.range(0, 200).select($"id".cast("int").as("bin"))
-    val small = Set(3, 17, 42, 199)
-    val large = small ++ (1000 until 6000) // > 4096 forces the set-lookup UDF
-    val gotSmall = df.where(EncodeJob.binMembership(col("bin"), small)).as[Int].collect().sorted
-    val gotLarge = df.where(EncodeJob.binMembership(col("bin"), large)).as[Int].collect().sorted
-    assert(gotSmall.toSeq == small.toSeq.sorted)
-    assert(gotLarge.toSeq == small.toSeq.sorted) // 1000+ don't exist in the data
-  }
-
   test("manifest totals match block totals") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-manifest").toString
@@ -264,11 +252,11 @@ class EncodeJobSpec extends AnyFunSuite {
     val fullDir = Files.createTempDirectory("graft-crash-full").toString
     EncodeJob.run(input, fullDir, cfg)
     val full = manifestRows(fullDir)
-    def binsOf(file: String): Set[Int] = full.filter(_.files.split(',').contains(file)).map(_.bin)
+    def binsOf(file: String): Set[Int] = full.filter(_.file == file).map(_.bin)
     val committed = Set(0, 1)
     // a block file of the uninterrupted run holding none of the committed bins
     val (orphan, orphanBins) = full.toSeq.sortBy(_.bin).iterator
-      .flatMap(_.files.split(','))
+      .map(_.file)
       .map(f => (f, binsOf(f)))
       .find(_._2.intersect(committed).isEmpty)
       .get
@@ -288,8 +276,8 @@ class EncodeJobSpec extends AnyFunSuite {
     Maintenance.vacuum(spark, dir, olderThanMs = 0L)
     assert(!Files.exists(staged.getParent))
 
-    // kill after some renames, before the manifest: the orphan's bins are
-    // committed blocks with no manifest row and no snapshot
+    // a half-renamed run whose manifest file was lost: the orphan's bins
+    // are committed blocks with no manifest row and no snapshot
     Files.createDirectories(staged.getParent)
     Files.copy(java.nio.file.Paths.get(fullDir, "blocks", orphan), staged)
     Files.copy(java.nio.file.Paths.get(fullDir, "blocks", orphan), java.nio.file.Paths.get(dir, "blocks", orphan))
@@ -302,7 +290,7 @@ class EncodeJobSpec extends AnyFunSuite {
     // the repair derived the orphan's manifest rows; every bin is claimed
     val manifest = manifestRows(dir)
     assert(manifest.map(_.bin) == (0 until cfg.numBins).toSet)
-    assert(manifest.filter(m => orphanBins(m.bin)).forall(_.files == orphan))
+    assert(manifest.filter(m => orphanBins(m.bin)).forall(_.file == orphan))
     assert(manifest.toSeq.map(_.n_rows).sum == input.count())
     assert(EncodeJob.loadSnapshots(dir, conf).flatMap(_._2).toSet == (0 until cfg.numBins).toSet)
     assert(spark.read.format("graft").load(dir).count() == input.count())
@@ -382,13 +370,11 @@ class EncodeJobSpec extends AnyFunSuite {
     assert(fresh == n, s"$fresh records read for $n input rows")
 
     // a resume over the persisted tables reads its input once too; besides
-    // the input it reads only the committed blocks' bins and manifest rows
+    // the input it reads only the committed blocks' bins (the manifest is
+    // read on the driver, outside Spark's input metrics)
     val resumeDir = Files.createTempDirectory("graft-records-resume").toString
     EncodeJob.run(parquetInput, resumeDir, cfg, onlyBins = Some(Set(0, 1, 2)))
-    val lookups = recordsRead {
-      EncodeJob.doneBins(spark, resumeDir)
-      EncodeJob.manifestedBins(spark, resumeDir): Unit
-    }
+    val lookups = recordsRead(EncodeJob.doneBins(spark, resumeDir): Unit)
     val resume = recordsRead(EncodeJob.run(parquetInput, resumeDir, cfg))
     assert(resume - lookups == n, s"$resume records read ($lookups by the bin lookups) for $n input rows")
   }

@@ -161,14 +161,14 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(res.filesBefore >= 4 && res.filesAfter == 1)
     assert(res.bins == cfg.numBins.toLong)
     assert(manifestFiles().length == 1)
-    // post-compaction winners survived: every claimed file is the compacted one
+    // only the live files' rows survived: every claimed file is a compacted one
     import spark.implicits._
     val claims = spark.read
       .parquet(s"$dir/_manifest")
-      .select("files")
+      .select("file")
       .as[String]
       .collect()
-    assert(claims.nonEmpty && claims.forall(_.split(',').forall(_.startsWith("c0-"))))
+    assert(claims.nonEmpty && claims.forall(_.startsWith("c0-")))
     assert(decodeMismatches(dir) == 0L)
 
     // idempotent: a single file is already consolidated

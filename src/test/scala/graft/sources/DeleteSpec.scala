@@ -236,7 +236,7 @@ class DeleteSpec extends AnyFunSuite {
     assert(GraftPipeline.verify(doomed.where($"doc_id" === id), back) == 0L)
   }
 
-  test("purging every doc of a bin zero-fills its manifest row (numRows stays exact)") {
+  test("purging every doc of a bin leaves no live claim on it (numRows stays exact)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-del-empty").toString
     EncodeJob.run(all, dir, cfg)
@@ -255,9 +255,10 @@ class DeleteSpec extends AnyFunSuite {
       .drop("bin")
       .as[TokenRow]
     assert(GraftPipeline.verify(survivors, spark.read.format("graft").load(dir).as[TokenRow]) == 0L)
-    // the manifest index must stop counting the emptied bin's stale winner
-    val ix = GraftScan.manifestIndex(dir, conf).get
-    assert(ix.numRows == all.count() - nBin, s"manifest numRows ${ix.numRows}")
+    // the purged files' rows stop counting: no live file claims the bin
+    val ix = GraftScan.manifestIndex(dir, conf, Maintenance.liveBlockFiles(dir, conf)).get
+    assert(ix.numRows.contains(all.count() - nBin), s"manifest numRows ${ix.numRows}")
+    assert(!ix.fileBins.valuesIterator.exists(_.contains(3)))
   }
 
   test("replaceDocs: atomic upsert — one snapshot, new content current, old content at earlier snapshots") {
@@ -331,7 +332,7 @@ class DeleteSpec extends AnyFunSuite {
     // every live file was tombstoned; reads, counts, and the manifest index
     // must all see an EMPTY table, not crash on the empty live set
     assert(spark.read.format("graft").load(dir).count() == 0L)
-    assert(GraftScan.manifestIndex(dir, conf).get.numRows == 0L)
+    assert(GraftScan.manifestIndex(dir, conf, Maintenance.liveBlockFiles(dir, conf)).get.numRows.contains(0L))
     // a fresh append into the emptied table works (tables are still there)
     all.limit(3).toDF().write.format("graft").mode("append").save(dir)
     assert(spark.read.format("graft").load(dir).count() == 3L)

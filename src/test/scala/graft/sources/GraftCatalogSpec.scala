@@ -471,7 +471,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // the clustered write puts WHOLE bins in each task: no bin is split
     // across appended files, so a point read opens exactly one of them —
     // the property that dies when task-shaped appends claim every bin
-    val claims = GraftScan.manifestIndex(dir, conf).get.fileBins
+    val claims = GraftScan.manifestIndex(dir, conf, Maintenance.liveBlockFiles(dir, conf)).get.fileBins
     val perFile = appended.map(f => claims(f).toSet)
     val all = perFile.flatten
     assert(all.size == all.toSet.size, s"a bin is split across appended files: $perFile")

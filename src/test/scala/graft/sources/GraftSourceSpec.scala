@@ -662,7 +662,7 @@ class GraftSourceSpec extends AnyFunSuite {
       // exactly the files the manifest claims for the hit bins (a bin can
       // span >1 file when AQE splits its write partition) plus any file no
       // row claims (empty part files are kept conservatively), nothing more
-      val ix = GraftScan.manifestIndex(dirB, spark.sparkContext.hadoopConfiguration).get
+      val ix = GraftScan.manifestIndex(dirB, spark.sparkContext.hadoopConfiguration, graft.pipeline.Maintenance.liveBlockFiles(dirB, spark.sparkContext.hadoopConfiguration)).get
       val hitClaimed = ix.fileBins.count { case (_, bins) => bins.exists(hitBins.contains) }
       val unclaimed = totalFiles - ix.fileBins.size
       assert(

@@ -25,6 +25,10 @@ class GraftWriteSpec extends AnyFunSuite {
   lazy val base = all.where(idx < 500)
   lazy val extra = all.where(idx >= 500)
 
+  /** A commit message for a staged file holding one row of bin 0. */
+  private def message(name: String, nValues: Long): GraftCommitMessage =
+    GraftCommitMessage(name, Array(EncodeJob.BinManifest(0, 1L, 1L, nValues, 0L, 0L, 0L, name)))
+
   private def freshEncodedDir(tag: String): String = {
     val d = Files.createTempDirectory(s"graft-write-$tag").toString
     EncodeJob.run(base, d, cfg)
@@ -214,36 +218,6 @@ class GraftWriteSpec extends AnyFunSuite {
     fs.delete(dead, false)
   }
 
-  test("a task over the inline bin cap reports allBins; driver re-manifests every bin") {
-    import spark.implicits._
-    val dir = freshEncodedDir("allbins")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    // stage a real block file (contents are not read by the commit path;
-    // the advisory re-manifest derives claims from the live set afterwards)
-    val src = fs
-      .listStatus(new org.apache.hadoop.fs.Path(s"$dir/blocks"))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .head
-      .getPath
-    val staging = s"$dir/_write_staging/qb"
-    val name = "w-qb-p00000-t0.parquet"
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, src, fs, new org.apache.hadoop.fs.Path(staging, name), false, conf)
-    GraftAppendCommit.commit(
-      dir, staging,
-      Array(GraftCommitMessage(name, Array.emptyIntArray, allBins = true, 1L, 1L)),
-      "qb", cfg.numBins, None)
-    // the append committed with file lineage, and the overflow sentinel made
-    // the driver claim EVERY bin at the new snapshot id (not zero bins —
-    // dropping the list must widen the re-manifest, never narrow it)
-    val recs = EncodeJob.loadSnapshotRecords(dir, conf)
-    assert(recs.map(_.id) == Seq(0L, 1L) && recs(1).filesAdded == Seq(name))
-    val claimed = spark.read.parquet(s"$dir/_manifest")
-      .where($"snapshot_id" === 1L).select("bin").distinct().count()
-    assert(claimed == cfg.numBins, s"expected all ${cfg.numBins} bins re-manifested, got $claimed")
-  }
-
   test("append validation fails loudly before any task runs") {
     import spark.implicits._
     val dir = freshEncodedDir("valid")
@@ -353,8 +327,8 @@ class GraftWriteSpec extends AnyFunSuite {
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$scratch/blocks")).count(_.isFile)
 
     stage("w-q1-e5-p00000-t0.parquet")
-    val msg = GraftCommitMessage("w-q1-e5-p00000-t0.parquet", Array(0), allBins = false, 1L, 3L)
-    GraftAppendCommit.commit(scratch, staging, Array(msg), "q1", 16, Some(5L))
+    val msg = message("w-q1-e5-p00000-t0.parquet", nValues = 3L)
+    GraftAppendCommit.commit(scratch, staging, Array(msg), "q1", Some(5L))
     assert(snapCount == 1 && blockCount == 1)
 
     // the retry: same (writer, epoch), freshly staged file — must clean and
@@ -362,8 +336,8 @@ class GraftWriteSpec extends AnyFunSuite {
     // cold-start lineage scan (the cross-restart path), not warm memory.
     GraftAppendCommit.resetWriterCacheForTesting()
     stage("w-q1-e5-p00000-t1.parquet")
-    val retry = GraftCommitMessage("w-q1-e5-p00000-t1.parquet", Array(0), allBins = false, 1L, 3L)
-    GraftAppendCommit.commit(scratch, staging, Array(retry), "q1", 16, Some(5L))
+    val retry = message("w-q1-e5-p00000-t1.parquet", nValues = 3L)
+    GraftAppendCommit.commit(scratch, staging, Array(retry), "q1", Some(5L))
     assert(snapCount == 1, "retried epoch must not commit a second snapshot")
     assert(blockCount == 1, "retried epoch must not publish its staged files")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(staging, "w-q1-e5-p00000-t1.parquet")))
@@ -492,7 +466,7 @@ class GraftWriteSpec extends AnyFunSuite {
       val name = s"w-q2-e$e-p00000-t$e.parquet"
       stage(name)
       GraftAppendCommit.commit(
-        scratch, staging, Array(GraftCommitMessage(name, Array(0), allBins = false, 1L, 1L)), "writer-y", 16, Some(e))
+        scratch, staging, Array(message(name, nValues = 1L)), "writer-y", Some(e))
     }
     commitEpoch(5L) // snap 0
     commitEpoch(6L) // snap 1
@@ -538,7 +512,7 @@ class GraftWriteSpec extends AnyFunSuite {
     finally out.close()
     GraftAppendCommit.commit(
       scratch, staging,
-      Array(GraftCommitMessage("w-qx-p00000-t0.parquet", Array(0), allBins = false, 1L, 1L)), "qx", 16, None)
+      Array(message("w-qx-p00000-t0.parquet", nValues = 1L)), "qx", None)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$scratch/_snapshots/snap-1.json")),
       "the new append must not claim the in-flight rebase's id")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$scratch/_snapshots/snap-2.json")))

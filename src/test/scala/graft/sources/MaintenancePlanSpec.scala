@@ -66,9 +66,9 @@ class MaintenancePlanSpec extends AnyFunSuite {
 
   test("manifest numRows stays exact after re-manifesting (no double count)") {
     val conf = spark.sparkContext.hadoopConfiguration
-    val idx = GraftScan.manifestIndex(dir, conf)
+    val idx = GraftScan.manifestIndex(dir, conf, Maintenance.liveBlockFiles(dir, conf))
     assert(idx.isDefined)
-    assert(idx.get.numRows == input.count())
+    assert(idx.get.numRows.contains(input.count()))
   }
 
   test("metadata aggregate and snapshot travel match over the compacted dir") {

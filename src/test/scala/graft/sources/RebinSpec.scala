@@ -67,9 +67,9 @@ class RebinSpec extends AnyFunSuite {
     val row = spark.read.format("graft").load(d).where($"doc_id" === someId).collect()
     assert(row.length == 1)
 
-    // manifest numRows stays exact (old-layout winners superseded/zeroed)
-    val idx = GraftScan.manifestIndex(d, conf)
-    assert(idx.isDefined && idx.get.numRows == input.count())
+    // manifest numRows stays exact (the tombstoned old-layout files no longer count)
+    val idx = GraftScan.manifestIndex(d, conf, Maintenance.liveBlockFiles(d, conf))
+    assert(idx.isDefined && idx.get.numRows.contains(input.count()))
   }
 
   test("rebin folds history: old ids refuse, base replays the full corpus") {
@@ -159,8 +159,8 @@ class RebinSpec extends AnyFunSuite {
       spark.read.format("graft").option("fromSnapshot", "-1").load(d).count() == input.count()
     )
     assert(EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot))
-    val idx = GraftScan.manifestIndex(d, conf)
-    assert(idx.isDefined && idx.get.numRows == input.count())
+    val idx = GraftScan.manifestIndex(d, conf, Maintenance.liveBlockFiles(d, conf))
+    assert(idx.isDefined && idx.get.numRows.contains(input.count()))
     // heal is idempotent and gated: a second vacuum is a no-op
     Maintenance.vacuum(spark, d, olderThanMs = 0L)
     assert(spark.read.format("graft").load(d).count() == input.count())

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.pipeline.{GraftPipeline, SparkTestBase, TokenRow, TokenTables}
+import graft.pipeline.{EncodeJob, GraftPipeline, SparkTestBase, TokenRow, TokenTables}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,25 +16,26 @@ class StreamingEncodeSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("graft-stream").toString
+    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
 
+    // the bootstrap corpus starts the table (tables + every bin); the stream
+    // appends the rest through the DSv2 sink, one snapshot per epoch
     val corpus = TokenTables.synthetic(spark, 400L, seed = 11L).collect()
-    val bootstrap = spark.createDataset(corpus.toSeq)
-    val tables = spark.sparkContext.broadcast(
-      GraftPipeline.buildTables(GraftPipeline.analyze(bootstrap, cfg), cfg)
-    )
+    EncodeJob.run(spark.createDataset(corpus.take(150).toSeq), outDir, cfg)
 
     val input = MemoryStream[TokenRow]
-    val query = StreamingEncode.start(input.toDS(), outDir, tables, cfg)
+    val query = input.toDS().writeStream.format("graft")
+      .option("path", outDir).option("checkpointLocation", ckpt)
+      .outputMode("append").start()
     try {
-      input.addData(corpus.take(150).toSeq)
+      input.addData(corpus.slice(150, 275).toSeq)
       query.processAllAvailable()
-      input.addData(corpus.slice(150, 400).toSeq)
+      input.addData(corpus.slice(275, 400).toSeq)
       query.processAllAvailable()
     } finally query.stop()
 
-    val blocks = StreamingEncode.readBlocks(spark, outDir)
-    val decoded = GraftPipeline.decode(blocks, tables, cfg)
-    assert(GraftPipeline.verify(bootstrap, decoded) == 0L)
+    val decoded = spark.read.format("graft").load(outDir).as[TokenRow]
+    assert(GraftPipeline.verify(spark.createDataset(corpus.toSeq), decoded) == 0L)
   }
 
   test("streaming dedup keeps the first arrival of each content hash") {
