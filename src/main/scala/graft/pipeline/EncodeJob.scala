@@ -27,8 +27,10 @@ import java.nio.charset.StandardCharsets
   * bins) into `_write_staging/` and report each file's manifest rows, so
   * nothing is read back ([[commitBlocks]]).
   *
-  * Resume correctness: a bin is "done" iff its blocks are in blocks/ — the
-  * rename of one block file into blocks/ is the unit of progress; the
+  * Resume correctness: a bin is "done" iff a live block file's manifest
+  * rows claim it ([[doneBins]]) — the rename of one block file into
+  * blocks/ is the unit of progress (its rows were published before it),
+  * a live file no row names is claimed from its blocks first, and the
   * snapshot is derived metadata a resume repairs. Blocks are
   * a deterministic function of (bin row set, symbol tables, config), so a
   * resumed run is byte-identical to an uninterrupted one; the recorded
@@ -306,17 +308,16 @@ object EncodeJob {
     */
   private[pipeline] lazy val BlockSchema = Encoders.product[EncodedBlock].schema
 
-  /** Bins already committed to blocks/ (empty if no output yet). */
-  def doneBins(spark: SparkSession, outDir: String): Set[Int] = {
-    if (!exists(spark, s"$outDir/blocks")) return Set.empty
-    import spark.implicits._
-    liveBlocks(spark, outDir)
-      .select("bin")
-      .distinct()
-      .as[Int]
-      .collect()
-      .toSet
-  }
+  /** Bins already committed to blocks/: the union of the bins the live
+    * block files' manifest rows claim (empty if no output yet). Live files
+    * no row names (a lost manifest file, blocks written outside the
+    * engine's writers) are claimed first, from their blocks
+    * ([[claimLive]]); on a fully claimed dir this is a driver-side
+    * manifest read with no Spark job.
+    */
+  def doneBins(spark: SparkSession, outDir: String): Set[Int] =
+    if (!exists(spark, s"$outDir/blocks")) Set.empty
+    else claimLive(spark, outDir).iterator.map(_.bin).toSet
 
   private[graft] def nextSnapshotId(spark: SparkSession, outDir: String): (Long, Long) = {
     val dir = s"$outDir/_snapshots"
@@ -518,7 +519,8 @@ object EncodeJob {
     // a killed run's staged files were never published; nothing reads them
     sweepStaging(spark, outDir)
 
-    // 1. skip bins whose blocks are already committed.
+    // 1. skip bins whose blocks are already committed (claiming first any
+    // live file no manifest row names — no read on a fresh dir).
     val done = doneBins(spark, outDir)
     val requested = onlyBins.getOrElse((0 until cfg.numBins).toSet)
     val todo = requested -- done
@@ -569,18 +571,14 @@ object EncodeJob {
         )
         t
       case None =>
-        // cfg.rounds > 1 runs the reference-style iterative re-estimation,
-        // DEFAULTING to the estimated variant (Log2 bootstrap + Huffman
-        // estimator, no bit-writing — an extra round costs ~one analyze
-        // scan, the reference's actual design, convert.rs:95-152);
-        // estimatedRounds=false selects the exact dry-run-encode variant
-        // with the monotone-size guarantee. One round folds pass 1 into the
-        // routing shuffle's map side: one input scan.
+        // cfg.rounds > 1 runs the reference-style iterative re-estimation
+        // (Log2 bootstrap + Huffman estimator, no bit-writing — an extra
+        // round costs ~one analyze scan, convert.rs:95-152). One round
+        // folds pass 1 into the routing shuffle's map side: one input scan.
         require(cfg.rounds == 1 || cfg.autoSelect, "rounds > 1 requires autoSelect")
         val t =
           if (cfg.rounds == 1) GraftPipeline.buildTables(routed.histograms(), cfg)
-          else if (cfg.estimatedRounds) GraftPipeline.analyzeRoundsEstimated(input, cfg, cfg.rounds)
-          else GraftPipeline.analyzeRounds(input, cfg, cfg.rounds)
+          else GraftPipeline.analyzeRoundsEstimated(input, cfg, cfg.rounds)
         saveTables(spark, outDir, t, cfg.contextModel, layout = Some(cfg))
         t
     }
@@ -588,10 +586,6 @@ object EncodeJob {
     // manifest rows; the driver publishes both
     if (todo.nonEmpty)
       commitBlocks(spark, routed.blocks(spark.sparkContext.broadcast(tables)), outDir)
-
-    // self-repair: claim done files no manifest row names (a lost manifest
-    // file, or blocks written outside this job) — no job when none exists
-    appendManifest(spark, outDir, done, snapshotId)
 
     // 4. snapshot lineage record. Self-repair mirrors the manifest's: a
     // crash after the blocks commit but before the snapshot write leaves
@@ -693,36 +687,41 @@ object EncodeJob {
     } finally f.delete(staging, true): Unit
   }
 
-  /** Claim the live block files no manifest row names: write the rows of
-    * every such file that holds any of `bins`, derived from its blocks (a
-    * distributed scan of those files only, reading each payload for its
-    * length), as one file ([[publishManifest]]). A claimed file gets rows
-    * for ALL its bins, never only the requested ones. No job runs when
-    * every live file is named. `snapshotId` is unused: rows are facts
-    * about files, not about snapshots.
-    *
-    * Callers: [[run]]'s resume repair (a lost manifest file),
-    * [[Maintenance.rewriteManifests]] (files a streaming epoch or an
-    * older format left unclaimed), and blocks written outside the engine's
-    * writers (benchmarks, the Verify corpus dirs), which call it right
-    * after writing their files.
+  /** Claim the live block files no manifest row names ([[claimLive]]).
+    * Callers: blocks written outside the engine's writers (benchmarks, the
+    * Verify corpus dirs), right after writing their files, each passing
+    * the full bin range; an empty `bins` claims nothing. `snapshotId` is
+    * unused: rows are facts about files, not about snapshots.
     */
   def appendManifest(
       spark: SparkSession,
       outDir: String,
       bins: Set[Int],
       snapshotId: Long
-  ): Unit = {
-    if (bins.isEmpty) return
+  ): Unit =
+    if (bins.nonEmpty) claimLive(spark, outDir): Unit
+
+  /** The live block files' manifest rows, after claiming every live file no
+    * row names: the rows its blocks derive (a distributed scan of those
+    * files only, reading each payload for its length) are published as one
+    * file ([[publishManifest]]). No job runs when every live file is
+    * named. Behind [[doneBins]] (a resume claims what a lost manifest file
+    * left unnamed), [[appendManifest]] and [[Maintenance.rewriteManifests]]
+    * (files a pre-v5 manifest claims).
+    */
+  private[pipeline] def claimLive(spark: SparkSession, outDir: String): Seq[BinManifest] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val named = BlockParquet.readManifest(BlockParquet.manifestFiles(outDir, conf), conf).rows.map(_.file).toSet
-    val unnamed = Maintenance.liveBlockFiles(outDir, conf).map(_._1).filterNot(f => named(new Path(f).getName))
-    if (unnamed.isEmpty) return
-    val rows = deriveManifest(spark, unnamed.toIndexedSeq)
-    val hit = rows.filter(r => bins.contains(r.bin)).map(_.file).toSet
-    val claimed = rows.filter(r => hit(r.file))
+    val rows = BlockParquet.readManifest(BlockParquet.manifestFiles(outDir, conf).toSeq, conf).rows
+    val live = Maintenance.liveBlockFiles(outDir, conf).map(f => new Path(f._1))
+    val named = rows.iterator.map(_.file).toSet
+    val unnamed = live.filterNot(f => named(f.getName))
+    val claimed =
+      if (unnamed.isEmpty) Array.empty[BinManifest]
+      else deriveManifest(spark, unnamed.map(_.toString).toIndexedSeq)
     if (claimed.nonEmpty)
       publishManifest(conf, outDir, s"manifest-${java.util.UUID.randomUUID()}.parquet", claimed)
+    val liveNames = live.map(_.getName).toSet
+    rows.filter(r => liveNames(r.file)).toSeq ++ claimed
   }
 
   /** The manifest rows the blocks of `files` derive, one per (file, bin):

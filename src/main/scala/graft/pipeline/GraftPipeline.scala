@@ -67,16 +67,22 @@ object GraftPipeline {
     *                     value in the row, clamped; reference main.rs:394-399)
     * @param maxBits      canonical-code length limit, 1..24; 8 covers all
     *                     int32 tokens
-    * @param numBins      logical partitions (salted-hash bins of doc_id);
-    *                     sized independently of executor count so output is
+    * @param numBins      logical partitions (salted-hash bins of doc_id),
+    *                     1..2^20 (the [[Config.binsFor]] cap); sized
+    *                     independently of executor count so output is
     *                     byte-identical at any parallelism
-    * @param maxBlockRows / maxBlockValues  caps on the block work unit — the
-    *                     skew control: a giant row becomes its own block, so
-    *                     no single task element exceeds ~maxBlockValues tokens
+    * @param maxBlockRows / maxBlockValues  caps on the block work unit, each
+    *                     >= 1 — the skew control: a giant row becomes its
+    *                     own block, so no single task element exceeds
+    *                     ~maxBlockValues tokens
     * @param salt         salt mixed into the doc_id hash (defeats adversarial
     *                     key clustering)
     * @param autoSelect   per-block codec auto-selection; when false, always
     *                     uses the hybrid entropy codec
+    * @param rounds       analysis rounds, >= 1; more than one runs
+    *                     [[analyzeRoundsEstimated]] (Log2 bootstrap +
+    *                     Huffman re-estimation, no bit-writing — the
+    *                     reference's multi-round design, convert.rs:95-152)
     * @param contextModel "simple" (prev-token), "single" (one context) or
     *                     "zuckerli" (stateful: first value keyed by row
     *                     length, rest by prev value — see core.ContextModel)
@@ -84,13 +90,8 @@ object GraftPipeline {
     *                     of every hybrid block payload (blocks become
     *                     externally readable without the job's header file;
     *                     selection charges the header bits to the hybrid side)
-    * @param estimatedRounds rounds > 1 uses the estimator-driven analysis
-    *                     (Log2 bootstrap + Huffman re-estimation, no
-    *                     bit-writing — the reference's actual multi-round
-    *                     design, convert.rs:95-152) — the DEFAULT: an extra
-    *                     round costs ~one analyze scan, not a full dry-run
-    *                     encode. Set false for the exact variant with the
-    *                     monotone-size guarantee.
+    *
+    * Every range is checked at construction; a failure names the field.
     */
   final case class Config(
       numContexts: Int = 64,
@@ -102,19 +103,31 @@ object GraftPipeline {
       autoSelect: Boolean = true,
       rounds: Int = 1,
       contextModel: String = "simple",
-      embedTables: Boolean = false,
-      estimatedRounds: Boolean = true
+      embedTables: Boolean = false
   ) {
-    require(numContexts >= 1 && numContexts <= Hybrid.MaxNumContexts)
+    require(
+      numContexts >= 1 && numContexts <= Hybrid.MaxNumContexts,
+      s"Config.numContexts=$numContexts out of range 1..${Hybrid.MaxNumContexts}"
+    )
     require(
       maxBits >= 1 && maxBits <= Huffman.MaxLutBits,
       s"Config.maxBits=$maxBits out of range 1..${Huffman.MaxLutBits} (the encoder LUT packs codes in ${Huffman.MaxLutBits} bits)"
     )
+    require(
+      numBins >= 1 && numBins <= Config.MaxBins,
+      s"Config.numBins=$numBins out of range 1..${Config.MaxBins}"
+    )
+    require(maxBlockRows >= 1, s"Config.maxBlockRows=$maxBlockRows must be >= 1")
+    require(maxBlockValues >= 1, s"Config.maxBlockValues=$maxBlockValues must be >= 1")
+    require(rounds >= 1, s"Config.rounds=$rounds must be >= 1")
     /** Resolved context model; construction validates name + context count. */
     def model: ContextModel = ContextModel(contextModel, numContexts)
   }
 
   object Config {
+    /** Largest bin count: [[binsFor]]'s cap and the range [[Config]] accepts. */
+    val MaxBins: Int = 1 << 20
+
     /** Size numBins for a corpus: ~`targetValuesPerBin` tokens per bin.
       * The bin is the unit of shuffle partitioning, within-partition sort,
       * resume, and task granularity — a fixed default that fits sf0.1
@@ -128,7 +141,7 @@ object GraftPipeline {
     def binsFor(totalValues: Long, targetValuesPerBin: Long = 32L * 1024 * 1024): Int = {
       require(targetValuesPerBin > 0)
       val bins = (totalValues + targetValuesPerBin - 1) / targetValuesPerBin
-      math.max(1L, math.min(1L << 20, bins)).toInt
+      math.max(1L, math.min(MaxBins.toLong, bins)).toInt
     }
   }
 
@@ -251,66 +264,6 @@ object GraftPipeline {
   def buildTables(hist: Histograms, cfg: Config): SymbolTables =
     Huffman.buildTables(hist, cfg.maxBits)
 
-  /** Iterative re-estimation (the reference's multi-round conversion,
-    * /root/reference/src/graphs/convert.rs:398-561, re-targeted): round-1
-    * tables are built from ALL tokens, but auto-selection then routes
-    * RLE/FOR/dict-friendly blocks away from the entropy coder — their tokens
-    * polluted the histograms. Each extra round re-collects histograms only
-    * from the streams that the previous round's tables would actually send
-    * to the hybrid codec, sharpening the tables for the data they encode.
-    */
-  def analyzeRounds(ds: Dataset[TokenRow], cfg: Config, rounds: Int): SymbolTables = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    var tables = buildTables(analyze(ds, cfg), cfg)
-    var r = 1
-    while (r < rounds) {
-      val bTables = spark.sparkContext.broadcast(tables)
-      val nCtx = cfg.numContexts
-      val nSym = 1 << cfg.maxBits
-      // dry-run round: encode with the current tables, then collect
-      // histograms from exactly the streams block-level selection routed to
-      // the entropy coder (decode them back — the blocks ARE those streams).
-      // Huffman optimality over that union guarantees the next tables'
-      // total over those blocks is <= this round's, and selection only
-      // reroutes a block when it strictly shrinks, so total size is
-      // monotonically non-increasing across rounds.
-      val model = cfg.model
-      val flat = encode(ds, bTables, cfg)
-        .filter(_.codec == "hybrid")
-        .mapPartitions { it =>
-          val decoder = BlockDecoder(bTables.value, model)
-          val hist = new Histograms(nCtx, nSym)
-          it.foreach { b =>
-            val rowOffsets = BlockDecoder.rowOffsets(BlockDecoder.nToks(b))
-            val values = decoder.decodeAll(b, rowOffsets)
-            var row = 0
-            while (row < b.n_rows) {
-              var ctx = model.first(rowOffsets(row + 1) - rowOffsets(row))
-              var k = rowOffsets(row)
-              while (k < rowOffsets(row + 1)) {
-                val v = values(k).toLong
-                hist.add(ctx, v)
-                ctx = model.next(v)
-                k += 1
-              }
-              row += 1
-            }
-          }
-          Iterator.single(hist.flat)
-        }
-        // union a zero histogram so reduce is total even when no block
-        // chose the hybrid codec
-        .union(spark.createDataset(Seq(new Histograms(nCtx, nSym).flat)))
-        .rdd
-      val refined = Histograms.fromFlat(reduceFlat(flat), nCtx, nSym)
-      // if nothing routed to hybrid, keep the previous round's tables
-      if (refined.total > 0) tables = buildTables(refined, cfg)
-      r += 1
-    }
-    tables
-  }
-
   /** Estimator-driven analysis rounds — the reference's cheap bootstrap
     * (round 1 scores streams with the Log2 prior, /root/reference/src/
     * graphs/convert.rs:95-152 + log2_estimator.rs; later rounds with the
@@ -329,8 +282,7 @@ object GraftPipeline {
     * blocks away from the entropy coder whenever analysis-time pseudo-block
     * boundaries differ from encode-time blocks. The floor costs a few
     * long-coded rare symbols per context and guarantees the tables can
-    * express any stream selection routes to them. [[analyzeRounds]] remains
-    * the exact variant with a monotone-size guarantee.
+    * express any stream selection routes to them.
     */
   def analyzeRoundsEstimated(
       ds: Dataset[TokenRow],

@@ -1088,9 +1088,11 @@ object Maintenance {
   /** Consolidate the append-only `_manifest` into ONE parquet file holding
     * the rows of the live files. Every commit appends a manifest file, so a
     * year of daily deltas plus compactions is hundreds of driver-side
-    * parquet opens per index build; after consolidation it is one. First,
-    * live files no row names (streaming epochs, files claimed only by a
-    * pre-v5 manifest) get their rows ([[EncodeJob.appendManifest]]).
+    * parquet opens per index build; after consolidation it is one. Every
+    * writer publishes a manifest file per commit (a stream one per epoch),
+    * so this is the fold for both. First, live files no row names (files
+    * claimed only by a pre-v5 manifest, blocks written outside the
+    * engine's writers) get their rows ([[EncodeJob.claimLive]]).
     *
     * Reader-safe without coordination: the consolidated file REPEATS the
     * live files' rows verbatim, and readers key rows by (file, bin), so a
@@ -1107,21 +1109,9 @@ object Maintenance {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(outDir, conf)
     if (!fs.exists(new Path(s"$outDir/blocks"))) return RewriteManifestsResult(0, 0, 0L)
-    val numBins = EncodeJob
-      .loadMeta(spark, outDir)
-      .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/meta.json missing"))
-      .long("num_bins")
-      .toInt
-    EncodeJob.appendManifest(spark, outDir, (0 until numBins).toSet, 0L)
+    val kept = EncodeJob.claimLive(spark, outDir).distinctBy(r => (r.file, r.bin))
     val before = BlockParquet.manifestFiles(outDir, conf)
     if (before.length <= 1) return RewriteManifestsResult(before.length, before.length, -1L)
-
-    val live = liveBlockFiles(outDir, conf).map(f => new Path(f._1).getName).toSet
-    val kept = BlockParquet
-      .readManifest(before.toSeq, conf)
-      .rows
-      .filter(r => live(r.file))
-      .distinctBy(r => (r.file, r.bin))
     // unique name: never collides with other manifest files or prior rewrites
     EncodeJob.publishManifest(conf, outDir, s"consolidated-${System.nanoTime()}.parquet", kept)
     before.foreach(st => fs.delete(st.getPath, false): Unit)

@@ -70,13 +70,29 @@ private[sources] object GraftBootstrap {
       maxBlockValues: Int,
       salt: Long,
       rounds: Int
-  )
+  ) {
+    /** The encode Config over `bins` bins; construction checks every range. */
+    def config(bins: Int): GraftPipeline.Config =
+      GraftPipeline.Config(
+        numContexts = numContexts,
+        maxBits = maxBits,
+        numBins = bins,
+        maxBlockRows = maxBlockRows,
+        maxBlockValues = maxBlockValues,
+        salt = salt,
+        autoSelect = autoSelect,
+        rounds = rounds,
+        contextModel = contextModel,
+        embedTables = embedTables
+      )
+  }
 
   object Options {
+    /** Parsed and range-checked before any row is staged. */
     def from(o: CaseInsensitiveStringMap): Options = {
       val d = GraftPipeline.Config()
       def i(k: String, dflt: Int) = Option(o.get(k)).map(_.toInt).getOrElse(dflt)
-      Options(
+      val opts = Options(
         numBins = Option(o.get("numBins")).map(_.toInt),
         numContexts = i("numContexts", d.numContexts),
         maxBits = i("maxBits", d.maxBits),
@@ -88,6 +104,8 @@ private[sources] object GraftBootstrap {
         salt = Option(o.get("salt")).map(_.toLong).getOrElse(d.salt),
         rounds = i("rounds", d.rounds)
       )
+      opts.config(opts.numBins.getOrElse(1)): Unit
+      opts
     }
   }
 
@@ -265,18 +283,7 @@ private[sources] object GraftBootstrapCommit {
         .select("doc_id", "tokens_packed", "n_tok", "source")
         .as[(String, Array[Byte], Int, String)]
         .map { case (d, packed, n, s) => TokenRow(d, VarInt.unpack(packed, n), n, s) }
-      val cfg = GraftPipeline.Config(
-        numContexts = opts.numContexts,
-        maxBits = opts.maxBits,
-        numBins = opts.numBins.getOrElse(GraftPipeline.Config.binsFor(totalValues)),
-        maxBlockRows = opts.maxBlockRows,
-        maxBlockValues = opts.maxBlockValues,
-        salt = opts.salt,
-        autoSelect = opts.autoSelect,
-        rounds = opts.rounds,
-        contextModel = opts.contextModel,
-        embedTables = opts.embedTables
-      )
+      val cfg = opts.config(opts.numBins.getOrElse(GraftPipeline.Config.binsFor(totalValues)))
       EncodeJob.run(rows, path, cfg): Unit
     } catch {
       case e: Throwable =>

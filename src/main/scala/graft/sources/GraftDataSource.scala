@@ -58,8 +58,9 @@ import org.apache.spark.util.SerializableConfiguration
   *     small dim pushes the build side's keys into the scan at execution
   *     time — the "join a 100 TB corpus with an allowlist" shape reads only
   *     the allowlist's bins. doc_id predicates additionally prune whole
-  *     input files on the driver via parquet footer `bin` stats (capped;
-  *     beyond the cap the executors' row-group filter prunes distributed).
+  *     input files on the driver by the `_manifest/` claims (no footer
+  *     reads); files no row names are kept, and the executors' row-group
+  *     filter prunes inside them.
   *   - **Aggregate pushdown to metadata.** Unfiltered COUNT(*) / COUNT(col)
   *     / SUM(n_tok) are answered from each block's recorded row/value
   *     counts — one partial row per file, no payload bytes touched.
@@ -1106,14 +1107,15 @@ private[sources] class GraftScan(
       GraftScan.manifestIndex(path, hadoopConf, live).map(_.fileBins).filter(_.nonEmpty).flatMap { claims =>
         val (claimed, unclaimed) =
           live.partition { case (f, _) => claims.contains(GraftScan.nameOf(f)) }
-        // a shuffle write task with no bins still commits a ZERO-ROW part
-        // file; no manifest row claims it, but it also holds nothing —
-        // verify by footer record count (cached, and bounded like every
-        // other driver-side footer pass) rather than give up on keyed
-        // planning. An unclaimed file WITH rows is genuinely outside the
-        // manifest (a streamed epoch's file) → fall back to per-file planning.
+        // Spark's own writer (Bench and the SparkEntry fixtures write block
+        // files with it) commits a ZERO-ROW part file for a write task with
+        // no bins; no manifest row claims it, but it also holds nothing —
+        // verify by footer record count (cached, at most KeyedProbeCap
+        // files) rather than give up on keyed planning. An unclaimed file
+        // WITH rows is outside the manifest (blocks written outside the
+        // engine's writers) → fall back to per-file planning.
         val files = claimed.map(_._1)
-        val emptiesOnly = unclaimed.length <= GraftScan.sessionFooterPruneCap &&
+        val emptiesOnly = unclaimed.length <= GraftScan.KeyedProbeCap &&
           unclaimed.forall { case (f, len) =>
             GraftScan.parquetRowCount(f, len, hadoopConf) == 0L
           }
@@ -1185,12 +1187,12 @@ private[sources] class GraftScan(
 
   /** One partition per surviving block file. Runs AFTER runtime filtering,
     * so each partition carries the CURRENT doc_id restriction — sliced to
-    * the ids whose bins the file can hold (manifest claims / footer range),
-    * so a 1M-id allowlist ships each task only its own handful of ids, not
-    * the whole set, and total slicing work stays O(files × bins-per-file)
-    * hash lookups. Files with unknown bin membership get the full set
-    * (conservative, bounded). A small wanted-bin set also rides along for
-    * parquet row-group skipping in the reader.
+    * the ids whose bins the file's manifest rows claim, so a 1M-id
+    * allowlist ships each task only its own handful of ids, not the whole
+    * set, and total slicing work stays O(files × bins-per-file) hash
+    * lookups. Files no row names get the full set (conservative, bounded).
+    * A small wanted-bin set also rides along for parquet row-group
+    * skipping in the reader.
     */
   /** Memoized: Spark invokes planInputPartitions more than once per query
     * (plan rendering / outputPartitioning checks, then execution), and the
@@ -1256,7 +1258,7 @@ private[sources] class GraftScan(
     }
     val planned0 =
       GraftScan
-        .planFiles(path, blockFiles, wantedBins, hadoopConf, GraftScan.sessionFooterPruneCap)
+        .planFiles(path, blockFiles, wantedBins, hadoopConf)
         .filter { case (f, _) => !excludedAppendFiles.contains(GraftScan.nameOf(f)) }
     // token-index file pruning: drop files whose recorded token value range
     // cannot satisfy the needles (O(files) driver map, no footer reads).
@@ -1275,30 +1277,22 @@ private[sources] class GraftScan(
     }
     val idsByBin = docState._2
     if (System.getProperty("graft.debugTiming") != null) {
-      val kinds = planned.groupBy(_._2.getClass.getSimpleName).map { case (k, v) => s"$k=${v.length}" }
-      System.err.println(s"[scan] fileBins kinds: ${kinds.mkString(", ")}")
+      val claimed = planned.count(_._2.isDefined)
+      System.err.println(s"[scan] files claimed=$claimed unclaimed=${planned.length - claimed}")
     }
     val smallBins: Option[Array[Int]] = wantedBins.filter(_.size <= 1024).map(_.toArray.sorted)
-    // files with UNKNOWN bin membership would each have to carry the whole
-    // id set; bounded so a 1M-id runtime filter over a manifest-less dir
+    // files no manifest row names would each have to carry the whole id
+    // set; bounded so a 1M-id runtime filter over a manifest-less dir
     // cannot multiply itself into every task — past the cap those readers
     // emit unfiltered rows and the join/residual above re-checks (correct,
     // just less pruned)
     lazy val allIds: Option[Array[String]] =
       idsByBin.map(_.valuesIterator.flatten.toArray.sorted).filter(_.length <= 65536)
     planned.map { case (f, fileBins) =>
-      // slice a (bin -> ids) map down to this file's possible bins; None =
-      // bins unknown (the caller picks its own conservative fallback)
+      // slice the (bin -> ids) map down to this file's claimed bins; an
+      // unclaimed file gets the bounded full set
       def sliceBins(m: Map[Int, Array[String]]): Option[Array[String]] =
-        fileBins match {
-          case GraftScan.ExactBins(fb) =>
-            Some(fb.iterator.flatMap(m.get).flatten.toArray.sorted)
-          case GraftScan.RangeBins(lo, hi) =>
-            // footer path only exists at <= cap files; per file this walks
-            // the id-bin keys (bounded by the id count), not the bin range
-            Some(m.iterator.collect { case (b, arr) if b >= lo && b <= hi => arr }.flatten.toArray.sorted)
-          case GraftScan.UnknownBins => None
-        }
+        fileBins.map(_.iterator.flatMap(m.get).flatten.toArray.sorted)
       GraftInputPartition(
         f,
         binsOverride = smallBins,
@@ -1345,8 +1339,9 @@ private[sources] class GraftScan(
       // needle hides rows the same way (without this gate, CBO would size a
       // 1-row needle result at the full corpus and e.g. refuse to broadcast
       // it in a join).
-      // Every batch writer publishes a file's rows before the file goes
-      // live, so the live files' rows sum to the table's rows.
+      // Every writer, the streaming sink included, publishes a file's rows
+      // before the file goes live, so the live files' rows sum to the
+      // table's rows.
       // fromSnapshot sees a snapshot-range subset, like the other gates
       if (filters.isEmpty && snapshot.isEmpty && deleteState.isEmpty && containsToken.isEmpty &&
         sample.isEmpty && fromSnapshot.isEmpty)
@@ -1374,13 +1369,10 @@ private[sources] class GraftScan(
 }
 
 private[sources] object GraftScan {
-  /** Driver-side footer cap for file-level bin pruning: below it, read the
-    * per-file `bin` column stats and drop files no wanted bin can hit (a
-    * point read on a 4096-file dir plans ~1 partition instead of 4096);
-    * above it, skip the driver work — the executors' parquet row-group
-    * filter / exact bin check performs the same pruning distributed.
+  /** Most unclaimed files the keyed planner probes for zero rows
+    * ([[parquetRowCount]]) before it falls back to per-file planning.
     */
-  val FooterPruneCap = 4096
+  val KeyedProbeCap = 4096
 
   /** Plan the rows ADDED by snapshots in (s, e] — the ONE delta planner
     * behind both the streaming source (each micro-batch is one offset
@@ -1477,30 +1469,18 @@ private[sources] object GraftScan {
     }
     if (deltaBins.isEmpty) return fileParts
     val bins = deltaBins.toArray.sorted
-    // same pruning ladder (and session cap) as the batch path — manifest
-    // claims, then capped footer ranges; the readers' exact bin check
-    // keeps any kept file correct regardless
+    // same manifest pruning as the batch path; the readers' exact bin
+    // check keeps any kept file correct regardless
     val binParts: Array[InputPartition] = GraftScan
       .pruneFiles(
         path,
         files.filterNot(f => allAppendFiles.contains(GraftScan.nameOf(f._1))),
         Some(deltaBins),
-        hadoopConf,
-        GraftScan.sessionFooterPruneCap
+        hadoopConf
       )
       .map(f => GraftInputPartition(f, Some(bins)))
     binParts ++ fileParts
   }
-
-  /** JVM-wide footer-range cache keyed by (path, size): block files are
-    * immutable once committed (parquet write-once), so ranges never change
-    * for a given (path, size). Entries are a few bytes per file; bounded —
-    * a long-lived driver scanning many dirs clears it on overflow rather
-    * than growing without limit (re-reading footers is cheap and correct).
-    */
-  private val CacheCap = 1 << 16
-  private val footerCache =
-    scala.collection.concurrent.TrieMap[(String, Long), Option[(Int, Int)]]()
 
   /** Driver-side index derived from the `_manifest` parquet, read without
     * a Spark job. Each row is a fact about one immutable block file (the
@@ -1529,7 +1509,7 @@ private[sources] object GraftScan {
 
   /** Few entries, but each can be large (an 800k-bin corpus's index is
     * ~100 MB of file→bins claims) — so this cache is bounded by INDEX
-    * count, not entry count like the footer cache.
+    * count, not entry count like the row-count cache.
     */
   private val ManifestCacheCap = 64
   private val manifestRowsCache =
@@ -1559,110 +1539,52 @@ private[sources] object GraftScan {
       }
   }
 
-  /** The block files a scan restricted to `bins` must read. Preference
-    * order: manifest claims (exact per-file bin sets, zero footer IO, works
-    * at ANY file count), then parquet footer `bin` ranges (manifest-less
-    * dirs, driver work capped at `cap` files), else every file. File-level
-    * pruning is NOT advisory — a wrongly dropped file loses rows — so both
-    * prunings rest on authoritative metadata: footer stats are parquet's
-    * own, and a file's manifest rows name every bin it holds (a file no
-    * row names is always kept).
+  /** The block files a scan restricted to `bins` must read: the live
+    * files whose manifest rows claim a wanted bin, plus every file no row
+    * names. File-level pruning is NOT advisory — a wrongly dropped file
+    * loses rows — so it rests only on the manifest: a file's rows name
+    * every bin it holds, and a dir with no rows plans every live file
+    * (the readers' exact bin check and parquet row-group skipping still
+    * prune inside them). No footer is opened.
     */
-  /** What is known about a planned file's bin membership. */
-  sealed trait FileBins
-  /** Exact claims from the manifest (small: the file's own bins). */
-  final case class ExactBins(bins: Array[Int]) extends FileBins
-  /** Footer-stat min/max bound. */
-  final case class RangeBins(lo: Int, hi: Int) extends FileBins
-  /** No information — kept conservatively. */
-  case object UnknownBins extends FileBins
-
-  /** The session-configurable driver footer cap (primarily a test hook;
-    * the manifest index makes the cap moot for EncodeJob-written dirs).
-    */
-  def sessionFooterPruneCap: Int =
-    SparkSession.active.conf
-      .getOption("spark.graft.footerPruneCap")
-      .map(_.toInt)
-      .getOrElse(FooterPruneCap)
-
   def pruneFiles(
       path: String,
       blockFiles: Array[(String, Long)],
       bins: Option[Set[Int]],
-      conf: Configuration,
-      cap: Int = FooterPruneCap
-  ): Array[String] = planFiles(path, blockFiles, bins, conf, cap).map(_._1)
+      conf: Configuration
+  ): Array[String] = planFiles(path, blockFiles, bins, conf).map(_._1)
 
-  /** [[pruneFiles]] plus what is known about each kept file's bin
-    * membership — exact manifest claims, a footer min/max range, or
-    * nothing (kept conservatively). The concrete shape (not an opaque
-    * predicate) lets the planner slice a doc_id restriction per file in
-    * O(file's own bins) hash lookups instead of walking the whole id map
-    * once per file.
+  /** [[pruneFiles]] plus each kept file's claimed bins (None: no row
+    * names the file, or the scan wants every bin). The concrete bins let
+    * the planner slice a doc_id restriction per file in O(file's own bins)
+    * hash lookups instead of walking the whole id map once per file.
     */
   def planFiles(
       path: String,
       blockFiles: Array[(String, Long)],
       bins: Option[Set[Int]],
-      conf: Configuration,
-      cap: Int = FooterPruneCap
-  ): Array[(String, FileBins)] = bins match {
-    case None => blockFiles.map(f => (f._1, UnknownBins))
+      conf: Configuration
+  ): Array[(String, Option[Array[Int]])] = bins match {
+    case None => blockFiles.map(f => (f._1, None))
     case Some(b) =>
-      manifestIndex(path, conf, blockFiles).map(_.fileBins).filter(_.nonEmpty) match {
-        case Some(claims) =>
-          blockFiles.flatMap { case (f, _) =>
-            claims.get(nameOf(f)) match {
-              case Some(fb) =>
-                if (fb.exists(b.contains)) Some((f, ExactBins(fb))) else None
-              case None => Some((f, UnknownBins))
-            }
-          }
-        case None if blockFiles.length <= cap =>
-          val ranges = binRanges(blockFiles, conf)
-          blockFiles.zip(ranges).flatMap {
-            case ((f, _), Some((lo, hi))) =>
-              if (b.exists(x => x >= lo && x <= hi)) Some((f, RangeBins(lo, hi))) else None
-            case ((f, _), None) => Some((f, UnknownBins))
-          }
-        case None => blockFiles.map(f => (f._1, UnknownBins))
+      val claims = manifestIndex(path, conf, blockFiles).fold(Map.empty[String, Array[Int]])(_.fileBins)
+      blockFiles.flatMap { case (f, _) =>
+        claims.get(nameOf(f)) match {
+          case Some(fb) => if (fb.exists(b.contains)) Some((f, Some(fb))) else None
+          case None     => Some((f, None))
+        }
       }
   }
 
   private[sources] def nameOf(f: String): String = f.substring(f.lastIndexOf('/') + 1)
 
-  /** Min/max of the `bin` column per file, from parquet row-group stats.
-    * Uncached footers are read on a bounded thread pool — footer opens are
-    * latency-bound, and a cold 4096-file pass would otherwise serialize
-    * into seconds of driver time.
-    */
-  def binRanges(
-      files: Array[(String, Long)],
-      conf: Configuration
-  ): Array[Option[(Int, Int)]] = {
-    if (footerCache.size > CacheCap) footerCache.clear()
-    val missing = files.filterNot(f => footerCache.contains((f._1, f._2)))
-    if (missing.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, missing.length))
-      try {
-        missing
-          .map { case (f, len) =>
-            (f, len, pool.submit(new java.util.concurrent.Callable[Option[(Int, Int)]] {
-              override def call(): Option[(Int, Int)] = readBinRange(f, conf)
-            }))
-          }
-          .foreach { case (f, len, fut) => footerCache.put((f, len), fut.get()) }
-      } finally pool.shutdown()
-    }
-    files.map(f => footerCache((f._1, f._2)))
-  }
-
   /** Exact record count from the parquet footer (sum of row-group counts).
     * Used by the keyed planner to prove an unclaimed part file is the
-    * zero-row debris of an empty write task. Cached like the bin ranges —
-    * keyed by (path, length) so an overwritten file re-reads.
+    * zero-row debris of an empty write task. Cached JVM-wide, keyed by
+    * (path, length) so an overwritten file re-reads; bounded — a
+    * long-lived driver scanning many dirs clears it on overflow.
     */
+  private val CacheCap = 1 << 16
   private val rowCountCache =
     scala.collection.concurrent.TrieMap[(String, Long), Long]()
 
@@ -1675,28 +1597,6 @@ private[sources] object GraftScan {
         finally r.close()
       }
     )
-  }
-
-  private def readBinRange(file: String, conf: Configuration): Option[(Int, Int)] = {
-    val r = BlockParquet.openFile(new Path(file), conf)
-    try {
-      val ranges = r.getRowGroups.asScala.flatMap { rg =>
-        rg.getColumns.asScala
-          .find(_.getPath.toDotString == "bin")
-          .flatMap { c =>
-            val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
-            if (st == null || !st.hasNonNullValue) None
-            else
-              Some(
-                (
-                  st.genericGetMin.asInstanceOf[Number].intValue(),
-                  st.genericGetMax.asInstanceOf[Number].intValue()
-                )
-              )
-          }
-      }
-      if (ranges.isEmpty) None else Some((ranges.map(_._1).min, ranges.map(_._2).max))
-    } finally r.close()
   }
 }
 
@@ -2405,7 +2305,7 @@ private[sources] object GraftOffset {
 
 /** Micro-batch stream over an encode dir: each batch (start, end] reads
   * exactly the bins the snapshots in that range added (write-once bins make
-  * the delta exact), with manifest/footer pruning dropping files that hold
+  * the delta exact), with manifest pruning dropping files that hold
   * none of them. Commit/stop are no-ops — progress lives in the checkpoint
   * offsets, the source is immutable.
   *

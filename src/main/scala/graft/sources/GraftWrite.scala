@@ -37,8 +37,11 @@ import org.apache.spark.util.SerializableConfiguration
   * existing compressed table without re-encoding it.
   *
   * Commit protocol (driver, after every task committed):
-  *   1. a batch append publishes the manifest rows its tasks reported (one
-  *      per file and bin); readers ignore them until the files are live;
+  *   1. the manifest rows its tasks reported (one per file and bin) are
+  *      published as one manifest file, by a batch append and by every
+  *      streaming epoch alike; readers ignore them until the files are
+  *      live. A stream so adds one manifest file per epoch, as batch
+  *      appends add one per append; `rewrite_manifests` consolidates both;
   *   2. staged task files are renamed into `blocks/` (same visibility
   *      semantics as EncodeJob's blocks-before-snapshot ordering);
   *   3. THE commit point: one atomic snapshot write recording the appended
@@ -447,13 +450,10 @@ private[sources] object GraftAppendCommit {
     val renamed = mutable.ArrayBuffer[String]()
     try {
       // 1. the task files' manifest rows, ignored by readers until the
-      // files go live. Streaming epochs skip them: a manifest file per
-      // epoch would grow the manifest with stream age; scans keep the
-      // unclaimed files conservatively, and rewrite_manifests claims them.
-      if (epoch.isEmpty)
-        EncodeJob.publishManifest(
-          conf, path, s"append-${java.util.UUID.randomUUID()}.parquet", msgs.toSeq.flatMap(_.rows)
-        )
+      // files go live
+      EncodeJob.publishManifest(
+        conf, path, s"append-${java.util.UUID.randomUUID()}.parquet", msgs.toSeq.flatMap(_.rows)
+      )
 
       // 2. publish the task files (visible to full scans from here, exactly
       // like EncodeJob's block-file renames before its snapshot write)
@@ -505,7 +505,7 @@ private[sources] object GraftAppendCommit {
 
 /** Per-task commit message: the staged file's name and its manifest rows,
   * one per bin it holds ([[graft.pipeline.BlockParquet.FileRows]]) — the
-  * rows the driver publishes for a batch append. A task whose random
+  * rows the driver publishes for the append or epoch. A task whose random
   * doc_ids touch most of an 800k-bin table sends a row per bin: that file
   * holds those bins, and its rows are the claims a point read prunes by.
   */

@@ -15,10 +15,9 @@ import org.apache.spark.sql.SparkSession
   * numBins: explicit bin count, or "auto" (default) — sized from the
   *   corpus token count so each bin holds ~32M tokens at ANY data scale
   * model: simple (default) | single | zuckerli
-  * flags: comma-separated subset of {exact, embed, nohybridselect}
-  *   exact — rounds > 1 uses the exact dry-run-encode analysis (monotone
-  *           size guarantee) instead of the default estimator-driven
-  *           no-bit-writing rounds
+  * rounds: analysis rounds (default 1); more than one runs the
+  *   estimator-driven no-bit-writing rounds
+  * flags: comma-separated subset of {embed}
   *   embed — self-describing per-block table headers
   */
 object EncodeCli {
@@ -77,7 +76,6 @@ object EncodeCli {
       contextModel = model,
       numContexts =
         if (model == "zuckerli") graft.core.ZuckerliContextModel.NumContexts else 64,
-      estimatedRounds = !flags.contains("exact"),
       embedTables = flags.contains("embed")
     )
 

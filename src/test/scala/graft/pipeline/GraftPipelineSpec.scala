@@ -212,19 +212,6 @@ class GraftPipelineSpec extends AnyFunSuite {
   private val PinnedMetaBytes = 27874L
   private val PinnedTableHash = -4203900203503182743L
 
-  test("round-2 re-estimation shrinks (or matches) the encoded size and stays lossless") {
-    import spark.implicits._
-    val tables2 = spark.sparkContext.broadcast(GraftPipeline.analyzeRounds(input, cfg, rounds = 2))
-    val blocks2 = GraftPipeline.encode(input, tables2, cfg).cache()
-    val bits1 = blocks.map(_.payload_bits).reduce(_ + _)
-    val bits2 = blocks2.map(_.payload_bits).reduce(_ + _)
-    assert(bits2 <= bits1, s"round-2 $bits2 > round-1 $bits1")
-    val decoded = GraftPipeline.decode(blocks2, tables2, cfg)
-    assert(GraftPipeline.verify(input, decoded) == 0L)
-    info(f"round1=$bits1 bits, round2=$bits2 bits (${(bits1 - bits2) * 100.0 / bits1}%.2f%% smaller)")
-    blocks2.unpersist()
-  }
-
   test("empty corpus: analyze/encode/decode degrade gracefully to zero blocks") {
     import spark.implicits._
     val empty = spark.emptyDataset[TokenRow]
@@ -249,6 +236,31 @@ class GraftPipelineSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"maxBits=$bad"), e.getMessage)
     }
     assert(Config(maxBits = 24).maxBits == 24)
+  }
+
+  test("Config rejects out-of-range numBins, block caps and rounds, naming the field") {
+    val bad = Seq[(String, () => Config)](
+      "numContexts=0" -> (() => Config(numContexts = 0)),
+      "numBins=0" -> (() => Config(numBins = 0)),
+      s"numBins=${(1 << 20) + 1}" -> (() => Config(numBins = (1 << 20) + 1)),
+      "maxBlockRows=0" -> (() => Config(maxBlockRows = 0)),
+      "maxBlockValues=-1" -> (() => Config(maxBlockValues = -1)),
+      "rounds=0" -> (() => Config(rounds = 0))
+    )
+    for ((field, make) <- bad) {
+      val e = intercept[IllegalArgumentException](make())
+      assert(e.getMessage.contains(s"Config.$field"), e.getMessage)
+    }
+    val edge = Config(numBins = 1 << 20, maxBlockRows = 1, maxBlockValues = 1, rounds = 1)
+    assert(edge.numBins == Config.MaxBins)
+    // a DSv2 bootstrap option is checked before any row is staged
+    val dir = java.nio.file.Files.createTempDirectory("graft-badopt").toString + "/t"
+    val e = intercept[Exception] {
+      input.limit(1).write.format("graft").option("maxBlockRows", "0").mode("append").save(dir)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("Config.maxBlockRows=0"), msgs)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_write_staging")))
   }
 
   test("analyze rejects negative tokens, null token arrays and null tokens by name") {

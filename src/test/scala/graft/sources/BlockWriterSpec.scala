@@ -79,6 +79,36 @@ class BlockWriterSpec extends AnyFunSuite {
       .map(r => TokenRow(r.doc_id, r.tokens.map(t => (t * 3) & 0x7fff), r.n_tok, r.source))
     assert(Deletes.replaceDocs(spark, dir, ups).isDefined)
     checkFiles(dir, "replaceDocs")
+
+    stream(dir, input.limit(30).collect().map(r => r.copy(doc_id = s"s-${r.doc_id}")).toSeq)
+    checkFiles(dir, "stream")
+  }
+
+  /** Append `rows` as one epoch of a `writeStream.format("graft")` query. */
+  private def stream(dir: String, rows: Seq[TokenRow]): Unit = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TokenRow]
+    val q = in.toDS().writeStream.format("graft")
+      .option("path", dir)
+      .option("checkpointLocation", Files.createTempDirectory("graft-writers-ckpt").toString)
+      .outputMode("append")
+      .start()
+    try {
+      in.addData(rows)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  test("encode 300 rows, stream 100: the scan's row count estimate is 400") {
+    import spark.implicits._
+    val corpus = TokenTables.synthetic(spark, 400L, seed = 53L).collect()
+    val dir = Files.createTempDirectory("graft-writers-stream").toString
+    EncodeJob.run(spark.createDataset(corpus.take(300).toSeq), dir, cfg)
+    stream(dir, corpus.drop(300).toSeq)
+    val df = spark.read.format("graft").load(dir)
+    assert(df.count() == 400L)
+    assert(df.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(400)))
   }
 
   /** The manifest rows of the live files. */

@@ -649,42 +649,38 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("manifest claims plan O(hit-bins) partitions past the footer cap") {
     import spark.implicits._
-    // dirB has 8 bins across >2 files; capping driver footer reads at 2
-    // disables the footer path — the manifest's bin->file claims must prune
-    // instead, at ANY file count (the 100 TB point-read shape)
+    // dirB has 8 bins across >2 files; the manifest's bin->file claims are
+    // the only file pruning, at ANY file count (the 100 TB point-read shape)
     val ids = input.select($"doc_id").take(2).map(_.getString(0)).toSeq
     val totalFiles = GraftMeta.listBlockFiles(dirB, spark.sparkContext.hadoopConfiguration).length
     assert(totalFiles > 2, s"fixture too small: $totalFiles files")
-    spark.conf.set("spark.graft.footerPruneCap", "2")
-    try {
-      val hitBins = ids.map(GraftDataSource.binOf(_, 8, Config().salt)).toSet
-      val planned = plannedPartitions(dirB, ids)
-      // exactly the files the manifest claims for the hit bins (a bin can
-      // span >1 file when AQE splits its write partition) plus any file no
-      // row claims (empty part files are kept conservatively), nothing more
-      val ix = GraftScan.manifestIndex(dirB, spark.sparkContext.hadoopConfiguration, graft.pipeline.Maintenance.liveBlockFiles(dirB, spark.sparkContext.hadoopConfiguration)).get
-      val hitClaimed = ix.fileBins.count { case (_, bins) => bins.exists(hitBins.contains) }
-      val unclaimed = totalFiles - ix.fileBins.size
-      assert(
-        planned == hitClaimed + unclaimed,
-        s"planned $planned != $hitClaimed hit-claimed + $unclaimed unclaimed (of $totalFiles)"
-      )
-      assert(planned < totalFiles, s"no pruning: $planned of $totalFiles")
-      // and the pruned plan still returns exactly the hit rows
-      val got = spark.read
-        .format("graft")
-        .load(dirB)
-        .where($"doc_id".isin(ids: _*))
-        .select($"doc_id")
-        .collect()
-        .map(_.getString(0))
-      assert(got.sorted.toSeq == ids.sorted)
-    } finally spark.conf.unset("spark.graft.footerPruneCap")
+    val hitBins = ids.map(GraftDataSource.binOf(_, 8, Config().salt)).toSet
+    val planned = plannedPartitions(dirB, ids)
+    // exactly the files the manifest claims for the hit bins (a bin can
+    // span >1 file when AQE splits its write partition) plus any file no
+    // row claims (empty part files are kept conservatively), nothing more
+    val ix = GraftScan.manifestIndex(dirB, spark.sparkContext.hadoopConfiguration, graft.pipeline.Maintenance.liveBlockFiles(dirB, spark.sparkContext.hadoopConfiguration)).get
+    val hitClaimed = ix.fileBins.count { case (_, bins) => bins.exists(hitBins.contains) }
+    val unclaimed = totalFiles - ix.fileBins.size
+    assert(
+      planned == hitClaimed + unclaimed,
+      s"planned $planned != $hitClaimed hit-claimed + $unclaimed unclaimed (of $totalFiles)"
+    )
+    assert(planned < totalFiles, s"no pruning: $planned of $totalFiles")
+    // and the pruned plan still returns exactly the hit rows
+    val got = spark.read
+      .format("graft")
+      .load(dirB)
+      .where($"doc_id".isin(ids: _*))
+      .select($"doc_id")
+      .collect()
+      .map(_.getString(0))
+    assert(got.sorted.toSeq == ids.sorted)
   }
 
-  test("a corpus dir WITHOUT a manifest still prunes via footer stats under the cap") {
+  test("a manifest-less dir plans every live file and returns the hit rows") {
     import spark.implicits._
-    // strip the manifest: the ladder must fall back to footer bin ranges
+    // strip the manifest: no file is claimed, so none may be dropped
     val dir = Files.createTempDirectory("graft-nomanifest").toString
     EncodeJob.run(
       input, dir,
@@ -694,7 +690,8 @@ class GraftSourceSpec extends AnyFunSuite {
     rm(new java.io.File(s"$dir/_manifest"))
     val ids = input.select($"doc_id").take(2).map(_.getString(0)).toSeq
     val totalFiles = GraftMeta.listBlockFiles(dir, spark.sparkContext.hadoopConfiguration).length
-    assert(plannedPartitions(dir, ids) < totalFiles)
+    assert(totalFiles > 1, s"fixture too small: $totalFiles files")
+    assert(plannedPartitions(dir, ids) == totalFiles)
     val got = spark.read
       .format("graft")
       .load(dir)

@@ -63,7 +63,7 @@ class RebinSpec extends AnyFunSuite {
     val live = GraftMeta.listBlockFiles(d, conf)
     assert(live.forall(_._1.contains("/_compacted/")), "old files still live")
     val planned = GraftScan.planFiles(d, live, Some(Set(bin)), conf)
-    assert(planned.nonEmpty && planned.forall(_._2.isInstanceOf[GraftScan.ExactBins]))
+    assert(planned.nonEmpty && planned.forall(_._2.isDefined))
     val row = spark.read.format("graft").load(d).where($"doc_id" === someId).collect()
     assert(row.length == 1)
 
