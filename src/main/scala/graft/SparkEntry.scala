@@ -404,8 +404,8 @@ object SparkEntry {
     * .rebin: every row re-routed into a different bin count AND salt, all
     * blocks re-encoded, history folded into a new base snapshot) before any
     * query reads it — q_rebin_scan's point reads therefore pin the full
-    * redistribution chain (decode→re-route→re-encode→atomic layout flip→
-    * heal) under the hard DuckDB oracle: one row landing in the wrong bin,
+    * redistribution chain (decode→re-route→re-encode→one marker commit
+    * flipping layout and lineage) under the hard DuckDB oracle: one row landing in the wrong bin,
     * or decoding differently after the move, fails the hash.
     */
   private def graftRebinDir(s: SparkSession, dir: String): String =

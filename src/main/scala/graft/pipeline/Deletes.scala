@@ -190,9 +190,6 @@ object Deletes {
       docIds: Dataset[String],
       idsPerFile: Long = DefaultIdsPerDeleteFile
   ): Option[DeleteResult] = {
-    // an interrupted rebin must fold before any new snapshot commits (see
-    // EncodeJob.nextSnapshotId's base-id reservation); gated no-op otherwise
-    Maintenance.healRebin(spark, outDir)
     val (numBins, salt) = binLayout(spark, outDir)
     val parts = writeDeleteFiles(spark, outDir, docIds, numBins, salt, idsPerFile)
       .getOrElse(return None)
@@ -255,7 +252,6 @@ object Deletes {
     import MiniJson.ObjOps
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(outDir, conf)
-    Maintenance.healRebin(spark, outDir) // as in deleteDocs
     val (numBins, salt) = binLayout(spark, outDir)
     val meta = EncodeJob.loadMeta(spark, outDir).get
     val version = meta.longOpt("format_version").map(_.toInt)
@@ -263,11 +259,7 @@ object Deletes {
       version.contains(EncodeJob.FormatVersion),
       s"$outDir blocks format v${version.getOrElse(1)} != engine v${EncodeJob.FormatVersion}"
     )
-    val covered = EncodeJob.loadSnapshots(outDir, conf).flatMap(_._2).toSet
-    require(
-      (0 until numBins).forall(covered.contains),
-      s"$outDir is not fully encoded — finish EncodeJob.run before replacing docs"
-    )
+    EncodeJob.requireFullyEncoded(outDir, conf, numBins, "replace docs")
     val tables = EncodeJob
       .loadTables(spark, outDir)
       .getOrElse(throw new IllegalArgumentException(s"$outDir: _tables/header.bin missing"))

@@ -33,8 +33,10 @@ import java.nio.charset.StandardCharsets
   * a live file no row names is claimed from its blocks first, and the
   * snapshot is derived metadata a resume repairs. Blocks are
   * a deterministic function of (bin row set, symbol tables, config), so a
-  * resumed run is byte-identical to an uninterrupted one; the recorded
-  * table hash guards against resuming with different tables.
+  * resumed run writes the same data pages, manifest rows and `_tables/` as
+  * an uninterrupted one (parquet footer bytes are not stable across JVMs,
+  * so whole block files are not byte-identical); the recorded table hash
+  * guards against resuming with different tables.
   */
 object EncodeJob {
 
@@ -222,14 +224,11 @@ object EncodeJob {
   }
 
   /** Parsed `_tables/meta.json` (fails loudly, naming the file and field).
-    * The recorded bin layout is OVERRIDDEN by a committed
-    * [[Maintenance.rebin]] marker when one exists: the marker rename is the
-    * atomic commit point that flips routing together with the live file
-    * set, and meta.json catches up in the (crash-recoverable) heal step —
-    * so every layout consumer must read through this override. Read order
-    * matters and is safe here: meta.json is parsed BEFORE the marker
-    * listing, so a rebin committing in between is seen (new layout), never
-    * unseen-after-heal (stale layout over new files).
+    * meta.json keeps its bootstrap layout; the recorded bin layout is
+    * OVERRIDDEN by the newest committed [[Maintenance.rebin]] marker when
+    * one exists — the marker rename is the rebin's only commit, flipping
+    * routing together with the live file set, so every layout consumer must
+    * read through this override.
     */
   def loadMeta(spark: SparkSession, outDir: String): Option[MiniJson.JObj] = {
     val path = s"$outDir/_tables/meta.json"
@@ -322,11 +321,9 @@ object EncodeJob {
   private[graft] def nextSnapshotId(spark: SparkSession, outDir: String): (Long, Long) = {
     val dir = s"$outDir/_snapshots"
     val f = fs(spark, outDir)
-    // a committed rebin marker RESERVES its base id even before the heal
-    // writes snap-<base>.json: a routine append in the commit-to-heal crash
-    // window would otherwise claim that exact id, and the later heal would
-    // silently adopt the foreign snapshot as the folded base (then delete
-    // all pre-rebin history around it)
+    // a committed rebin marker RESERVES its base id: the lineage reader
+    // takes the base record from the marker, so a snapshot committed under
+    // that id would never be read
     val reserved = Maintenance
       .rebinState(outDir, spark.sparkContext.hadoopConfiguration)
       .map(_.baseSnapshot)
@@ -347,9 +344,8 @@ object EncodeJob {
   }
 
   /** Canonical snapshot / interrupted-rebase file names. Derived copies like
-    * `snap-7.json.orig` must match NEITHER: the id listing and the record
-    * load have to agree on the same file set, or vacuum's completeness guard
-    * (records vs ids) could be fooled into sweeping off a partial lineage.
+    * `snap-7.json.orig` must match NEITHER: they are not part of the
+    * lineage, so neither its records nor its id listing may see them.
     */
   private[graft] val SnapNameRe = raw"snap-(\d+)\.json".r
   private[graft] val TmpRebaseNameRe = raw"\.tmp-rebase-(\d+)\.json".r
@@ -376,102 +372,172 @@ object EncodeJob {
       deletesAdded: Seq[(String, Long)] = Seq.empty
   )
 
-  /** Snapshot lineage under `outDir`, sorted by id. Tolerant of in-flight
-    * files — the snapshot write is not atomic, so a file that does not yet
-    * parse to both `snapshot_id` and `bins_added` is skipped (the next
-    * listing sees it complete). Blocks commit before the snapshot, so a
-    * completed file's bins/files are always readable.
+  /** The table's snapshot lineage from ONE `_snapshots` listing ([[lineage]]).
+    *
+    * @param records  the lineage records, sorted by id
+    * @param ids      every listed snapshot id the lineage spans (a file that
+    *                 is in flight or unreadable is listed but has no record)
+    * @param times    (id, commit wall-clock ms) for every id in `ids`
+    * @param complete every listed id parsed (`records` covers `ids`): the
+    *                 gate of the paths that rewrite or sweep off the lineage
+    * @param rebin    the newest committed rebin, if any
     */
-  def loadSnapshotRecords(outDir: String, conf: Configuration): Seq[SnapshotRecord] = {
+  final case class Lineage(
+      records: Seq[SnapshotRecord],
+      ids: Seq[Long],
+      times: Seq[(Long, Long)],
+      complete: Boolean,
+      rebin: Option[Maintenance.RebinInfo]
+  )
+
+  /** THE lineage reader: every lineage view (scans, time travel, streaming,
+    * the snapshots procedure, appends, vacuum, rebin) reads through it.
+    *
+    * History folds are applied here, not repaired on disk. The fold point F
+    * is the larger of the newest committed rebin's base snapshot and the
+    * newest record an expiry rebased (`rebased_from`); every id below F is
+    * folded into F, so the reader drops its records and ids. When F is a
+    * rebin base, the base record is the marker's [[Maintenance.RebinInfo]]
+    * (every bin of the new layout, the carried writer marks and retired
+    * deletes, committed at the marker's mtime) — a `snap-<base>.json` file
+    * holds the same facts and is not read. Snapshot files are parsed newest
+    * first and nothing below F is opened.
+    *
+    * Tolerant of in-flight files — the snapshot write is not atomic, so a
+    * file that does not parse (or whose `snapshot_id` is not its name's) is
+    * listed without a record, and `complete` turns false. Order: the
+    * snapshot listing first, then the rebin marker — `comps`, when a scan
+    * planner passes the marker listing it already holds, else a read of
+    * its own. A rebin committing in between is then seen with the
+    * pre-rebin ids it folds, never missed behind post-rebin ids.
+    */
+  def lineage(
+      outDir: String,
+      conf: Configuration,
+      comps: Option[Seq[Maintenance.Compaction]] = None
+  ): Lineage = {
     val f = new Path(outDir).getFileSystem(conf)
     val dir = new Path(s"$outDir/_snapshots")
-    if (!f.exists(dir)) return Seq.empty
-    f.listStatus(dir)
-      .toSeq
-      .map(_.getPath)
-      .filter(p => SnapNameRe.matches(p.getName))
-      .flatMap { p =>
-        val in = f.open(p)
-        val txt =
-          try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-          finally in.close()
-        scala.util.Try {
-          val o = MiniJson.parseObject(txt, where = p.toString)
-          // writer marks: (writer, max committed epoch) pairs carried
-          // forward by snapshot expiry so a retried epoch stays a no-op
-          // after its own snapshot was expired (parallel arrays — the
-          // flat shape MiniJson reads without nested-object support)
-          val marks = (o.strArrOpt("marked_writers"), o.longArrOpt("marked_epochs")) match {
-            case (Some(w), Some(e)) if w.length == e.length => w.zip(e)
-            case _                                          => Seq.empty[(String, Long)]
+    val listed =
+      if (!f.exists(dir)) Seq.empty
+      else
+        f.listStatus(dir).toSeq.flatMap { st =>
+          st.getPath.getName match {
+            case SnapNameRe(n) => Some((n.toLong, st))
+            case _             => None
           }
-          // delete lineage: parallel name/count arrays (the flat shape
-          // MiniJson reads). Mismatched lengths = a malformed commit —
-          // fail the parse (the record is then treated as in-flight and the
-          // strict destructive paths refuse), never half-read a delete set.
-          val deletes = (o.strArrOpt("deletes_added"), o.longArrOpt("deletes_counts")) match {
-            case (Some(n), Some(c)) if n.length == c.length => n.zip(c)
-            case (None, None)                               => Seq.empty[(String, Long)]
-            case _ =>
-              throw new IllegalArgumentException("deletes_added/deletes_counts length mismatch")
-          }
-          SnapshotRecord(
-            o.long("snapshot_id"),
-            o.longArrOpt("bins_added")
-              .getOrElse(throw new IllegalArgumentException("bins_added absent"))
-              .map(_.toInt),
-            o.strArrOpt("files_added").getOrElse(Seq.empty),
-            o.strOpt("writer_id"),
-            o.longOpt("writer_epoch"),
-            marks,
-            deletes
-          )
-        }.toOption
-      }
-      .sortBy(_.id)
+        }
+    val rebin = comps.fold(Maintenance.rebinState(outDir, conf))(Maintenance.rebinStateFrom)
+    val base = rebin.map(_.baseSnapshot).getOrElse(-1L)
+    // newest first, down to the first rebased record or the rebin base
+    val parsed = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Option[SnapshotRecord])]
+    val it = listed.filter(_._1 > base).sortBy(-_._1).iterator
+    var folded = false
+    while (!folded && it.hasNext) {
+      val (id, st) = it.next()
+      val rec = parseSnapshot(f, st.getPath).filter(_._1.id == id)
+      folded = rec.exists(_._2)
+      parsed += ((id, st.getModificationTime, rec.map(_._1)))
+    }
+    val baseRec = rebin.filter(_ => !folded).map { r =>
+      (
+        r.baseSnapshot,
+        r.committedAtMs,
+        Some(SnapshotRecord(r.baseSnapshot, 0 until r.numBins, Seq.empty, None, None, r.marks, r.deletes))
+      )
+    }
+    val all = (parsed ++ baseRec).sortBy(_._1)
+    Lineage(
+      all.flatMap(_._3).toSeq,
+      all.map(_._1).toSeq,
+      all.map(e => (e._1, e._2)).toSeq,
+      all.forall(_._3.isDefined),
+      rebin
+    )
   }
 
-  /** List committed snapshot ids without opening any file — lets vacuum
-    * detect that [[loadSnapshotRecords]]'s read-tolerant parse silently
-    * skipped a snapshot before it deletes anything based on the lineage.
+  /** One snapshot file's record, and whether an expiry rebased it (its
+    * `rebased_from` marks the fold point of every id below it); None when
+    * the file does not parse to both `snapshot_id` and `bins_added`, or
+    * vanished after the listing (vacuum deleting a folded file).
     */
-  def listSnapshotIds(outDir: String, conf: Configuration): Seq[Long] = {
-    val f = new Path(outDir).getFileSystem(conf)
-    val dir = new Path(s"$outDir/_snapshots")
-    if (!f.exists(dir)) return Seq.empty
-    f.listStatus(dir)
-      .toSeq
-      .map(_.getPath.getName)
-      .collect { case SnapNameRe(n) => n.toLong }
-      .sorted
-  }
+  private def parseSnapshot(f: FileSystem, p: Path): Option[(SnapshotRecord, Boolean)] =
+    scala.util.Try {
+      val in = f.open(p)
+      val txt =
+        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        finally in.close()
+      val o = MiniJson.parseObject(txt, where = p.toString)
+      // writer marks: (writer, max committed epoch) pairs carried
+      // forward by snapshot expiry so a retried epoch stays a no-op
+      // after its own snapshot was expired (parallel arrays — the
+      // flat shape MiniJson reads without nested-object support)
+      val marks = (o.strArrOpt("marked_writers"), o.longArrOpt("marked_epochs")) match {
+        case (Some(w), Some(e)) if w.length == e.length => w.zip(e)
+        case _                                          => Seq.empty[(String, Long)]
+      }
+      // delete lineage: parallel name/count arrays (the flat shape
+      // MiniJson reads). Mismatched lengths = a malformed commit —
+      // fail the parse (the record is then treated as in-flight and the
+      // strict destructive paths refuse), never half-read a delete set.
+      val deletes = (o.strArrOpt("deletes_added"), o.longArrOpt("deletes_counts")) match {
+        case (Some(n), Some(c)) if n.length == c.length => n.zip(c)
+        case (None, None)                               => Seq.empty[(String, Long)]
+        case _ =>
+          throw new IllegalArgumentException("deletes_added/deletes_counts length mismatch")
+      }
+      val rec = SnapshotRecord(
+        o.long("snapshot_id"),
+        o.longArrOpt("bins_added")
+          .getOrElse(throw new IllegalArgumentException("bins_added absent"))
+          .map(_.toInt),
+        o.strArrOpt("files_added").getOrElse(Seq.empty),
+        o.strOpt("writer_id"),
+        o.longOpt("writer_epoch"),
+        marks,
+        deletes
+      )
+      (rec, o.longOpt("rebased_from").isDefined)
+    }.toOption
+
+  /** The [[lineage]] records, sorted by id. */
+  def loadSnapshotRecords(outDir: String, conf: Configuration): Seq[SnapshotRecord] =
+    lineage(outDir, conf).records
+
+  /** The [[lineage]] ids, including listed files that do not parse yet. */
+  def listSnapshotIds(outDir: String, conf: Configuration): Seq[Long] =
+    lineage(outDir, conf).ids
 
   /** The (snapshot_id, bins committed) view of [[loadSnapshotRecords]]. */
   def loadSnapshots(outDir: String, conf: Configuration): Seq[(Long, Seq[Int])] =
     loadSnapshotRecords(outDir, conf).map(r => (r.id, r.binsAdded))
 
-  /** (snapshot id, commit wall-clock ms) pairs from the snapshot files'
-    * modification times, sorted by id. The snapshot JSON itself carries no
-    * timestamp ON PURPOSE — resume/replay must produce byte-identical
+  /** (snapshot id, commit wall-clock ms) pairs, sorted by id: the
+    * [[lineage]] times, which are the snapshot files' modification times
+    * (a rebin base's is its marker's). The snapshot JSON itself carries no
+    * timestamp ON PURPOSE — resume/replay must produce identical
     * metadata — so commit time is the filesystem's, which is exact for the
     * atomic-rename commit (object stores stamp the final PUT). Maintenance
     * that rewrites snapshot files (expiry folds) refreshes their times;
     * time travel then resolves against the rewritten history, which is the
     * only history that still exists.
     */
-  def listSnapshotTimes(outDir: String, conf: Configuration): Seq[(Long, Long)] = {
-    val f = new Path(outDir).getFileSystem(conf)
-    val dir = new Path(s"$outDir/_snapshots")
-    if (!f.exists(dir)) return Seq.empty
-    f.listStatus(dir)
-      .toSeq
-      .flatMap { st =>
-        st.getPath.getName match {
-          case SnapNameRe(n) => Some((n.toLong, st.getModificationTime))
-          case _             => None
-        }
-      }
-      .sortBy(_._1)
+  def listSnapshotTimes(outDir: String, conf: Configuration): Seq[(Long, Long)] =
+    lineage(outDir, conf).times
+
+  /** Refuse `op` unless the lineage covers every bin of a `numBins` layout
+    * — appends, replaces and adopts add rows to EXISTING bins, which a
+    * resumed [[run]] would misread as done on a partially encoded dir. A
+    * rebin's base record covers every bin of its layout.
+    */
+  def requireFullyEncoded(outDir: String, conf: Configuration, numBins: Int, op: String): Unit = {
+    val covered = loadSnapshotRecords(outDir, conf).iterator.flatMap(_.binsAdded).toSet
+    val missing = (0 until numBins).count(b => !covered(b))
+    require(
+      missing == 0,
+      s"$op: $outDir is not fully encoded ($missing of $numBins bins missing from snapshot " +
+        "lineage) — finish EncodeJob.run first"
+    )
   }
 
   /** Resolve `TIMESTAMP AS OF`: the snapshot live at wall-clock `tsMs` —
@@ -496,7 +562,7 @@ object EncodeJob {
     * block encode. Every run routes its input once through
     * [[GraftPipeline.route]], keeping the bins not yet committed, and
     * commits that shuffle's blocks ([[commitBlocks]]). The tables are the
-    * persisted ones on a resume (byte-identical output); a fresh run with
+    * persisted ones on a resume (the same blocks); a fresh run with
     * `rounds == 1` folds pass 1 into the routing shuffle's map side (one
     * input scan, one small merge job), and `rounds > 1` runs its analysis
     * rounds first.
@@ -512,10 +578,6 @@ object EncodeJob {
   ): EncodeResult = {
     val spark = input.sparkSession
 
-    // complete any interrupted rebin before reading layout or lineage — a
-    // routine encode entering the commit-to-heal crash window must not run
-    // against a half-folded history (gated no-op on healthy dirs)
-    Maintenance.healRebin(spark, outDir)
     // a killed run's staged files were never published; nothing reads them
     sweepStaging(spark, outDir)
 
@@ -529,8 +591,8 @@ object EncodeJob {
     val keep = if (todo.size == cfg.numBins) None else Some(todo)
     val (snapshotId, parentId) = nextSnapshotId(spark, outDir)
 
-    // 2. shared symbol tables: reuse persisted ones (byte-identical
-    // resume), else pass 1 + build + persist; then 3. encode the missing
+    // 2. shared symbol tables: reuse persisted ones (a resume writes
+    // the same blocks), else pass 1 + build + persist; then 3. encode the missing
     // bins. The routing shuffle drops committed bins on its map side, so a
     // resume shuffles only the remaining data.
     val routed = GraftPipeline.route(input, cfg, keep)
@@ -709,7 +771,7 @@ object EncodeJob {
     * left unnamed), [[appendManifest]] and [[Maintenance.rewriteManifests]]
     * (files a pre-v5 manifest claims).
     */
-  private[pipeline] def claimLive(spark: SparkSession, outDir: String): Seq[BinManifest] = {
+  private[graft] def claimLive(spark: SparkSession, outDir: String): Seq[BinManifest] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val rows = BlockParquet.readManifest(BlockParquet.manifestFiles(outDir, conf).toSeq, conf).rows
     val live = Maintenance.liveBlockFiles(outDir, conf).map(f => new Path(f._1))

@@ -62,13 +62,18 @@ import java.nio.charset.StandardCharsets
   * a crash after step 5 is a committed compaction whose dead input files
   * [[vacuum]] removes. Tombstoned files stay on disk until vacuum so that
   * in-flight readers planned against the old listing finish correctly.
+  * Step 5 is the whole commit for every op here, [[rebin]] included (its
+  * marker also carries the new layout and the folded lineage base, which
+  * readers apply): like the reference's conversion-time offsets, nothing
+  * is repaired after the commit.
   */
 object Maintenance {
 
   /** A committed rebin ([[rebin]]): the marker-recorded NEW layout plus the
-    * folded-history base snapshot id and the lineage facts the heal step
-    * must reconstruct (writer epoch marks, retired delete names) — carried
-    * in the marker so a crash between commit and heal loses nothing.
+    * folded-history base snapshot id and the lineage facts of the base
+    * record (writer epoch marks, retired delete names), which the lineage
+    * reader ([[EncodeJob.lineage]]) takes from here; the marker's mtime is
+    * the base record's commit time.
     */
   final case class RebinInfo(
       cid: Long,
@@ -77,7 +82,8 @@ object Maintenance {
       baseSnapshot: Long,
       tableHash: Long,
       marks: Seq[(String, Long)],
-      deletes: Seq[(String, Long)]
+      deletes: Seq[(String, Long)],
+      committedAtMs: Long
   )
 
   /** A committed compaction: id, tombstoned file names, published file names,
@@ -138,7 +144,7 @@ object Maintenance {
             o.strArrOpt("removed").getOrElse(throw new IllegalArgumentException("removed absent")),
             o.strArrOpt("added").getOrElse(throw new IllegalArgumentException("added absent")),
             o.strArrOpt("applied_deletes").getOrElse(Seq.empty),
-            parseRebinFields(o)
+            parseRebinFields(o, st.getModificationTime)
           )
         }.toOption
       }
@@ -146,7 +152,7 @@ object Maintenance {
   }
 
   /** The optional rebin fields of a parsed marker (see [[RebinInfo]]). */
-  private def parseRebinFields(o: MiniJson.JObj): Option[RebinInfo] = {
+  private def parseRebinFields(o: MiniJson.JObj, committedAtMs: Long): Option[RebinInfo] = {
     import MiniJson.ObjOps
     o.longOpt("rebin_num_bins").map { nb =>
       val marks =
@@ -165,7 +171,8 @@ object Maintenance {
         o.long("rebin_base"),
         o.long("rebin_table_hash"),
         marks,
-        dels
+        dels,
+        committedAtMs
       )
     }
   }
@@ -191,8 +198,7 @@ object Maintenance {
     * unchanged, so older rebin info stays authoritative until the next
     * rebin). When present, the recorded layout OVERRIDES meta.json's
     * num_bins/salt — that is what makes the marker rename the single atomic
-    * commit point for both the file set and the routing; the heal step
-    * rewrites meta.json to match, after which the override is a no-op.
+    * commit point for both the file set and the routing.
     */
   def rebinStateFrom(comps: Seq[Compaction]): Option[RebinInfo] =
     comps.flatMap(_.rebin).lastOption
@@ -219,7 +225,7 @@ object Maintenance {
       if (!txt.contains("\"rebin_num_bins\"")) None
       else
         scala.util.Try {
-          parseRebinFields(MiniJson.parseObject(txt, where = st.getPath.toString))
+          parseRebinFields(MiniJson.parseObject(txt, where = st.getPath.toString), st.getModificationTime)
         }.toOption.flatten
     }.nextOption()
   }
@@ -430,12 +436,14 @@ object Maintenance {
     * max + 1, claiming every new-layout bin — carrying writer epoch marks
     * (streaming-sink retry idempotence survives, as with snapshot expiry)
     * and retired delete names (vacuum keeps telling them apart from
-    * orphans) forward. Time travel, incremental reads and stream
-    * checkpoints older than the base refuse loudly: maintenance coarsened
-    * reachable history, the compaction/purge stance. The fold runs in
-    * [[healRebin]] AFTER the marker commit; a crash in between leaves a
-    * table that reads correctly at its current state (layout override) but
-    * refuses pre-rebin history — [[vacuum]] completes the heal.
+    * orphans) forward. The marker carries the base record, and the marker
+    * rename is the rebin's only commit: the lineage reader
+    * ([[EncodeJob.lineage]]) applies the fold — it drops every id below the
+    * base and reads the base record from the marker — so nothing is
+    * repaired afterwards, and [[vacuum]] deletes the folded snapshot files
+    * as garbage. Time travel, incremental reads and stream checkpoints
+    * older than the base refuse loudly: maintenance coarsened reachable
+    * history, the compaction/purge stance.
     *
     * Contract: single maintainer, and like [[purgeDeletes]] no concurrent
     * appends (a content redistribution cannot tolerate the race verbatim
@@ -447,15 +455,12 @@ object Maintenance {
       spark: SparkSession,
       outDir: String,
       newNumBins: Int,
-      newSalt: Option[Long] = None,
-      healAfterCommit: Boolean = true
+      newSalt: Option[Long] = None
   ): Option[RebinResult] = {
     import spark.implicits._
     import graft.core.MiniJson.ObjOps
     require(newNumBins >= 1, "newNumBins must be >= 1")
     val conf = spark.sparkContext.hadoopConfiguration
-    // complete any interrupted prior rebin before folding history again
-    healRebin(spark, outDir)
     require(
       Deletes.liveDeletes(outDir, conf, asOf = None).isEmpty,
       s"$outDir has live equality deletes — run purgeDeletes before rebin " +
@@ -489,13 +494,13 @@ object Maintenance {
     // the fold rewrites history, so it must see ALL of it: an unreadable
     // snapshot could hide writer marks or delete lineage that would then be
     // lost for good (the same strict gate vacuum's destructive sweep uses)
-    val records = EncodeJob.loadSnapshotRecords(outDir, conf)
-    val snapIds = EncodeJob.listSnapshotIds(outDir, conf)
+    val lineage = EncodeJob.lineage(outDir, conf)
     require(
-      records.map(_.id).sorted == snapIds,
+      lineage.complete,
       s"$outDir: a snapshot file is unreadable or in flight — rebin folds the " +
         "lineage and refuses to run off a partial read"
     )
+    val records = lineage.records
     val (base, _) = EncodeJob.nextSnapshotId(spark, outDir)
     val marks = records
       .flatMap(r => r.writerMarks ++ r.writerId.zip(r.writerEpoch))
@@ -527,130 +532,10 @@ object Maintenance {
       "rebin_deletes" -> MiniJson.JArr(dels.toVector.map(d => MiniJson.JStr(d._1))),
       "rebin_delete_counts" -> MiniJson.JArr(dels.toVector.map(d => MiniJson.JNum(d._2.toString)))
     )
-    // THE commit point: files + routing flip together
+    // THE commit point: files, routing and the folded lineage flip together
     val (added, _) =
       commitRewrite(conf, outDir, cid, staged, victims, victims.map(_._2).sum, extraMarkerFields = extra)
-    if (healAfterCommit) healRebin(spark, outDir)
     Some(RebinResult(cid, base, oldNumBins, newNumBins, victims.length, added.length))
-  }
-
-  /** Complete a committed [[rebin]]'s post-commit work — idempotent, cheap
-    * when already healed (one marker-file existence check), safe to call on
-    * any dir. Steps, each individually recoverable:
-    *   1. write the folded base snapshot `snap-<base>.json` (exclusive
-    *      create; a torn write leaves a zero-length claim vacuum reclaims,
-    *      after which the next heal rewrites it);
-    *   2. delete every pre-rebin snapshot file (ids < base) — from here,
-    *      old-id time travel fails with "not found" instead of the explicit
-    *      rebin guard;
-    *   3. rewrite meta.json's num_bins/salt to match (the marker override
-    *      then becomes a no-op).
-    * The rebin's new files were claimed in the new bin space before its
-    * marker committed ([[commitRewrite]]), so no step touches the manifest.
-    * A `c<cid>.rebin-healed` marker (written last) gates re-entry so vacuum
-    * can call this unconditionally.
-    */
-  private[graft] def healRebin(spark: SparkSession, outDir: String): Unit = {
-    import graft.core.MiniJson.ObjOps
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(outDir, conf)
-    val r = rebinState(outDir, conf).getOrElse(return)
-    val healedMarker = new Path(compactRoot(outDir), s"c${r.cid}.rebin-healed")
-    if (fs.exists(healedMarker)) return
-
-    // 0. meta.json swap crash repair FIRST: a crash between step 3's delete
-    // and rename leaves meta.json missing with the staged copy orphaned —
-    // every raw meta read (including this heal's own step 3) would die
-    // forever otherwise. The staged copy is complete (written and closed
-    // before the delete), so renaming it back is always safe; step 3 then
-    // re-verifies the layout fields regardless of which content came back.
-    val metaPath0 = new Path(s"$outDir/_tables/meta.json")
-    val metaTmp0 = new Path(metaPath0.getParent, s".tmp-${metaPath0.getName}")
-    if (!fs.exists(metaPath0)) {
-      require(
-        fs.exists(metaTmp0),
-        s"$outDir/_tables/meta.json missing and no staged rebin copy to recover from"
-      )
-      require(fs.rename(metaTmp0, metaPath0), s"recovering $metaPath0 from staged copy failed")
-    }
-
-    // 1. the folded base snapshot, reconstructed entirely from the marker.
-    // A zero-length file is an UNCOMMITTED claim from a crashed heal (the
-    // exclusive create succeeded, the content write did not) — treat it as
-    // absent, or step 2 would delete all pre-rebin history around an empty
-    // base and the healed marker would lock the loss in.
-    val snapB = new Path(s"$outDir/_snapshots/snap-${r.baseSnapshot}.json")
-    if (fs.exists(snapB) && fs.getFileStatus(snapB).getLen == 0)
-      fs.delete(snapB, false): Unit
-    if (!fs.exists(snapB)) {
-      val binsJson = (0 until r.numBins).mkString("[", ",", "]")
-      val marksW = r.marks.map(m => MiniJson.render(MiniJson.JStr(m._1))).mkString("[", ",", "]")
-      val marksE = r.marks.map(_._2).mkString("[", ",", "]")
-      val delsN = r.deletes.map(d => MiniJson.render(MiniJson.JStr(d._1))).mkString("[", ",", "]")
-      val delsC = r.deletes.map(_._2).mkString("[", ",", "]")
-      try
-        EncodeJob.casWriteSnapshot(
-          spark,
-          outDir,
-          () => (r.baseSnapshot, -1L),
-          (_, _) =>
-            s"""{"snapshot_id":${r.baseSnapshot},"parent_id":-1,"table_hash":${r.tableHash},
-               |"num_bins":${r.numBins},"salt":${r.salt},"bins_added":$binsJson,
-               |"marked_writers":$marksW,"marked_epochs":$marksE,
-               |"deletes_added":$delsN,"deletes_counts":$delsC,
-               |"rebased_from_rebin":${r.cid}}""".stripMargin,
-          maxAttempts = 1
-        ): Unit
-      catch {
-        // lost to a concurrent heal that just wrote it — success by other
-        case e: IllegalStateException => if (!fs.exists(snapB)) throw e
-      }
-    }
-
-    // 2. drop the folded pre-rebin history (including interrupted expiry
-    // rebase tmps, whose ids are equally pre-rebin)
-    val snapsDir = new Path(s"$outDir/_snapshots")
-    if (fs.exists(snapsDir)) {
-      fs.listStatus(snapsDir).foreach { st =>
-        st.getPath.getName match {
-          case EncodeJob.SnapNameRe(n) if n.toLong < r.baseSnapshot =>
-            fs.delete(st.getPath, false): Unit
-          case EncodeJob.TmpRebaseNameRe(n) if n.toLong < r.baseSnapshot =>
-            fs.delete(st.getPath, false): Unit
-          case _ =>
-        }
-      }
-    }
-
-    // 3. meta.json layout swap (atomic rename; raw read — the override
-    // would mask the very staleness this step repairs)
-    val metaPath = new Path(s"$outDir/_tables/meta.json")
-    val in = fs.open(metaPath)
-    val txt =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    val orig = MiniJson.parseObject(txt, where = metaPath.toString)
-    if (orig.long("num_bins") != r.numBins.toLong || orig.long("salt") != r.salt) {
-      val updated = MiniJson.JObj(
-        orig.v ++ Map(
-          "num_bins" -> MiniJson.JNum(r.numBins.toString),
-          "salt" -> MiniJson.JNum(r.salt.toString)
-        )
-      )
-      // delete + rename, the expiry base-swap pattern (HDFS rename cannot
-      // overwrite). The transient gap is tolerable here: a reader hitting
-      // it fails loudly on the missing file, layout CORRECTNESS never
-      // depends on meta.json once the marker committed (the override is
-      // authoritative), and a crash in the gap re-runs this heal.
-      val tmp = new Path(metaPath.getParent, s".tmp-${metaPath.getName}")
-      val out = fs.create(tmp, true)
-      try out.write(MiniJson.render(updated).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      require(fs.delete(metaPath, false), s"delete $metaPath failed")
-      require(fs.rename(tmp, metaPath), s"rename $tmp -> $metaPath failed")
-    }
-
-    writeAtomic(fs, healedMarker, s"""{"cid":${r.cid}}""")
   }
 
   /** The staging dir of compaction `cid` (step 1 of the protocol). */
@@ -1036,29 +921,29 @@ object Maintenance {
       }
     }
 
-    // complete an interrupted rebin's history fold — the strict lineage
-    // gate below depends on it, and until the fold runs, pre-rebin history
-    // reads keep refusing. Gated on a healed marker, so this is one
-    // existence check on already-healed (or never-rebinned) dirs. Runs
-    // after the zero-length-snapshot reclaim above so a torn base-snapshot
-    // write from a crashed heal is rewritten in the same vacuum.
-    healRebin(spark, outDir)
-
     val blocksDir = new Path(s"$outDir/blocks")
     if (fs.exists(blocksDir)) {
       repairRebase(fs, outDir)
-      val snapIds = EncodeJob.listSnapshotIds(outDir, conf)
-      val records = EncodeJob.loadSnapshotRecords(outDir, conf)
-      // compare the id SEQUENCES, not counts: a name-unparseable extra file
-      // could otherwise mask an unreadable snapshot (and a record whose
-      // content id disagrees with its file name is equally untrustworthy)
-      if (records.map(_.id).sorted == snapIds) {
-        val lineage = records.flatMap(_.filesAdded).toSet
+      val lineage = EncodeJob.lineage(outDir, conf)
+      // snapshot files below the lineage's fold point (a rebin base or an
+      // expiry's rebased record) are garbage: no reader opens them
+      lineage.ids.headOption.filter(_ => fs.exists(snapsDir)).foreach { first =>
+        fs.listStatus(snapsDir).foreach { st =>
+          st.getPath.getName match {
+            case EncodeJob.SnapNameRe(n) if n.toLong < first =>
+              if (fs.delete(st.getPath, false)) filesDeleted += 1
+            case _ =>
+          }
+        }
+      }
+      if (lineage.complete) {
+        val records = lineage.records
+        val fileLineage = records.flatMap(_.filesAdded).toSet
         fs.listStatus(blocksDir).foreach { st =>
           val n = st.getPath.getName
           if (
             st.isFile && n.startsWith("w-") && n.endsWith(".parquet") &&
-            !lineage.contains(n) && st.getModificationTime <= cutoff
+            !fileLineage.contains(n) && st.getModificationTime <= cutoff
           )
             if (fs.delete(st.getPath, false)) filesDeleted += 1
         }
@@ -1129,9 +1014,11 @@ object Maintenance {
     * contract Iceberg/Kafka give when history is truncated under a consumer.
     *
     * The base-snapshot swap is delete + rename (HDFS rename cannot
-    * overwrite); [[EncodeJob.loadSnapshots]] tolerates the transient gap by
-    * skipping unreadable/in-flight files. Run from the single maintenance
-    * writer, not concurrently with encodes.
+    * overwrite); [[EncodeJob.lineage]] tolerates the transient gap by
+    * skipping unreadable/in-flight files, and from the rename on it drops
+    * every id below the rebased record, so expired files a crash left
+    * behind are never read (vacuum deletes them). Run from the single
+    * maintenance writer, not concurrently with encodes.
     */
   def expireSnapshots(spark: SparkSession, outDir: String, keepLast: Int): ExpireResult = {
     require(keepLast >= 1, "keepLast must be >= 1")
@@ -1249,15 +1136,6 @@ object Maintenance {
     ExpireResult(expired.map(_._1), Some(baseId))
   }
 
-  /** Complete (or discard) an interrupted [[expireSnapshots]] base swap.
-    * The swap is create-tmp → delete-base → rename; a crash between the
-    * last two leaves the base snapshot missing and its merged content only
-    * in `.tmp-rebase-*`. Lineage READERS tolerate the gap (the table stays
-    * scannable), but vacuum's orphan sweep must not — the missing
-    * files_added would make it read committed append files as orphans and
-    * delete them. If the snap file exists the tmp is pre-delete debris and
-    * is discarded instead.
-    */
   final case class AdoptResult(
       snapshotId: Long,
       filesAdopted: Int,
@@ -1265,7 +1143,7 @@ object Maintenance {
       rowsAdopted: Long,
       valuesAdopted: Long,
       /** doc_ids live on BOTH sides before the merge — each becomes a
-        * same-id twin in the union (see the adopt guard's warning).
+        * same-id twin in the union (see the adopt overlap guard).
         */
       docIdOverlap: Long = 0L
   )
@@ -1314,11 +1192,6 @@ object Maintenance {
     val dstQ = dstFs.makeQualified(new Path(dstDir))
     require(srcQ != dstQ, s"adopt: source and destination are the same dir ($srcQ)")
 
-    // complete any committed-but-unhealed rebin on either side first: the
-    // layout fields and live file sets read below must be post-fold
-    healRebin(spark, dstDir)
-    healRebin(spark, srcDir)
-
     def metaOf(dir: String): MiniJson.JObj =
       EncodeJob
         .loadMeta(spark, dir)
@@ -1359,16 +1232,8 @@ object Maintenance {
     val numBins = layoutField("num_bins")._2.toInt
     val expectedHash = layoutField("table_hash")._2
 
-    def checkCovered(dir: String): Unit = {
-      val covered = EncodeJob.loadSnapshots(dir, conf).flatMap(_._2).toSet
-      require(
-        (0 until numBins).forall(covered.contains),
-        s"adopt: $dir is not fully encoded (${(0 until numBins).count(!covered.contains(_))} of " +
-          s"$numBins bins missing from snapshot lineage) — finish EncodeJob.run first"
-      )
-    }
-    checkCovered(srcDir)
-    checkCovered(dstDir)
+    EncodeJob.requireFullyEncoded(srcDir, conf, numBins, "adopt")
+    EncodeJob.requireFullyEncoded(dstDir, conf, numBins, "adopt")
 
     val srcDeletes = Deletes.liveDeletes(srcDir, conf, None)
     require(
@@ -1386,21 +1251,15 @@ object Maintenance {
     // them as same_id_groups but cannot delete them), and point lookups on
     // that id return two rows. Both sides are METADATA-ONLY scans (doc_id
     // streams, no entropy decode) and the shuffle carries ids only — the
-    // cost any id-level check must pay, tiny next to a re-encode. Warn
-    // loudly rather than refuse: the union of genuinely disjoint crawls is
-    // the common case and must not grow a bypass flag.
+    // cost any id-level check must pay, tiny next to a re-encode. Reported
+    // (AdoptResult.docIdOverlap, the CALL row's doc_id_overlap) rather
+    // than refused: the union of genuinely disjoint crawls is the common
+    // case and must not grow a bypass flag.
     val docIdOverlap = {
       val srcIds = spark.read.format("graft").load(srcDir).select("doc_id").distinct()
       val dstIds = spark.read.format("graft").load(dstDir).select("doc_id")
       srcIds.join(dstIds, Seq("doc_id"), "left_semi").count()
     }
-    if (docIdOverlap > 0L)
-      System.err.println(
-        s"adopt: WARNING — $docIdOverlap doc_id(s) in $srcDir are already live in $dstDir; " +
-          "the union will hold same-id twins that equality deletes cannot separate " +
-          "(dedup_exact reports them as same_id_groups). Re-id the source or purge the " +
-          "destination ids first if id uniqueness matters."
-      )
 
     val uid = java.util.UUID.randomUUID().toString
     val stagingDir = new Path(s"$dstDir/_write_staging/adopt-$uid")
@@ -2015,6 +1874,15 @@ object Maintenance {
     } finally flagged.unpersist(): Unit
   }
 
+  /** Complete (or discard) an interrupted [[expireSnapshots]] base swap.
+    * The swap is create-tmp → delete-base → rename; a crash between the
+    * last two leaves the base snapshot missing and its merged content only
+    * in `.tmp-rebase-*`. Lineage READERS tolerate the gap (the table stays
+    * scannable), but vacuum's orphan sweep must not — the missing
+    * files_added would make it read committed append files as orphans and
+    * delete them. If the snap file exists the tmp is pre-delete debris and
+    * is discarded instead.
+    */
   private[graft] def repairRebase(fs: FileSystem, outDir: String): Unit = {
     val snapsDir = new Path(s"$outDir/_snapshots")
     if (!fs.exists(snapsDir)) return

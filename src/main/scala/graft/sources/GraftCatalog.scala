@@ -701,9 +701,10 @@ private object GraftCatalog {
 
   /** Iceberg's `snapshots` metadata table as a procedure: the lineage,
     * one row per live snapshot (expiry bounds the count by design, so the
-    * driver-side collect is small). `committed_at_ms` is the snapshot
-    * file's mtime — the same clock `TIMESTAMP AS OF` resolves against; the
-    * JSON itself stays timestamp-free for resume/replay byte-identity.
+    * driver-side collect is small). `committed_at_ms` is the lineage's
+    * commit time (the snapshot file's mtime, a rebin base's marker's) —
+    * the same clock `TIMESTAMP AS OF` resolves against; the JSON itself
+    * stays timestamp-free for resume/replay identity.
     */
   private val snapshots = new MaintenanceProcedure(
     "snapshots",
@@ -717,19 +718,9 @@ private object GraftCatalog {
       val spark = SparkSession.active
       val conf = spark.sparkContext.hadoopConfiguration
       val dir = pathOf(input)
-      val recs = graft.pipeline.EncodeJob.loadSnapshotRecords(dir, conf)
-      val mtimes: Map[Long, Long] = {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/_snapshots")
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) Map.empty
-        else
-          fs.listStatus(p).flatMap { st =>
-            st.getPath.getName match {
-              case graft.pipeline.EncodeJob.SnapNameRe(id) => Some(id.toLong -> st.getModificationTime)
-              case _                                       => None
-            }
-          }.toMap
-      }
+      val lineage = graft.pipeline.EncodeJob.lineage(dir, conf)
+      val recs = lineage.records
+      val mtimes = lineage.times.toMap
       val out: Array[InternalRow] = recs.zipWithIndex.map { case (r, i) =>
         InternalRow(
           r.id,

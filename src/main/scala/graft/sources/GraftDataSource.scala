@@ -197,20 +197,6 @@ private[sources] object GraftMeta {
     */
   def listBlockFiles(outDir: String, conf: Configuration): Array[(String, Long)] =
     graft.pipeline.Maintenance.liveBlockFiles(outDir, conf)
-
-  /** EncodeJob's snapshot lineage: (snapshot_id, bins committed by it).
-    * Delegates to the writer's own loader (one parser, one tolerance rule:
-    * in-flight snapshot files are skipped until their write completes).
-    */
-  def loadSnapshots(outDir: String, conf: Configuration): Seq[(Long, Seq[Int])] =
-    graft.pipeline.EncodeJob.loadSnapshots(outDir, conf)
-
-  /** Full snapshot records, including DSv2-append `files_added` lineage. */
-  def loadSnapshotRecords(
-      outDir: String,
-      conf: Configuration
-  ): Seq[graft.pipeline.EncodeJob.SnapshotRecord] =
-    graft.pipeline.EncodeJob.loadSnapshotRecords(outDir, conf)
 }
 
 private[sources] class GraftTable(
@@ -368,9 +354,9 @@ private[sources] class GraftTable(
     val m = graft.pipeline.EncodeJob
       .loadMeta(spark, path)
       .getOrElse(return java.util.Map.of("provider", "graft"))
-    val snaps = GraftMeta
-      .loadSnapshots(path, spark.sparkContext.hadoopConfiguration)
-      .map(_._1)
+    val snaps = graft.pipeline.EncodeJob
+      .loadSnapshotRecords(path, spark.sparkContext.hadoopConfiguration)
+      .map(_.id)
     java.util.Map.of(
       "provider", "graft",
       "num_bins", m.long("num_bins").toString,
@@ -851,20 +837,22 @@ private[sources] class GraftScan(
     *   - file→snapshot attribution must be resolved AFTER the listing, or
     *     a file committed during planning would appear in the listing but
     *     not the lineage and default to -1 — every delete would wrongly
-    *     hide its re-appended rows → [[postListingRecords]].
+    *     hide its re-appended rows → [[postListingLineage]].
     * Time-travel bins ride the early read (bins are write-once); the as-of
     * file exclusion rides the late one (a file committed mid-planning must
-    * be seen so it can be excluded).
+    * be seen so it can be excluded). The late read takes its rebin from
+    * the scan's one marker listing ([[compactionState]]), so its fold
+    * agrees with the listed files.
     */
   private lazy val lineageRecords: Seq[graft.pipeline.EncodeJob.SnapshotRecord] =
-    GraftMeta.loadSnapshotRecords(path, hadoopConf)
+    graft.pipeline.EncodeJob.lineage(path, hadoopConf).records
 
   /** Fresh lineage read forced after the block-file listing — the superset
     * of [[lineageRecords]] covering files committed while planning ran.
     */
-  private lazy val postListingRecords: Seq[graft.pipeline.EncodeJob.SnapshotRecord] = {
+  private lazy val postListingLineage: graft.pipeline.EncodeJob.Lineage = {
     blockFiles: Unit
-    GraftMeta.loadSnapshotRecords(path, hadoopConf)
+    graft.pipeline.EncodeJob.lineage(path, hadoopConf, Some(compactionState))
   }
 
   /** Snapshot time travel: a snapshot sees exactly the bins committed by it
@@ -872,9 +860,8 @@ private[sources] class GraftScan(
     * as-of state — the queryable face of EncodeJob's snapshot lineage).
     * History older than a committed rebin's base refuses loudly: the old
     * bins_added ids live in the PRE-rebin bin space and would be
-    * reinterpreted under the new routing (after the rebin heal completes,
-    * those snapshot files are gone and the plain not-found error fires
-    * instead).
+    * reinterpreted under the new routing (the lineage reader has already
+    * dropped them, so without this guard the plain not-found error fires).
     */
   private lazy val snapshotBins: Option[Set[Int]] = snapshot.map { id =>
     rebinInfo.foreach { r =>
@@ -941,10 +928,9 @@ private[sources] class GraftScan(
   /** ONE marker listing per scan: the live file set AND the (possibly
     * rebin-overridden) bin layout both derive from it, so a rebin committing
     * mid-planning can never pair new files with old routing or vice versa.
-    * Forcing order inside: meta.json strictly BEFORE the marker listing
-    * (a rebin flips the marker first, meta.json in the heal — this order
-    * sees it or predates it entirely), and the delete state BEFORE the
-    * file listing (the purge-commit ordering [[blockFiles]] documents).
+    * Forcing order inside: meta.json strictly BEFORE the marker listing,
+    * and the delete state BEFORE the file listing (the purge-commit
+    * ordering [[blockFiles]] documents).
     */
   private lazy val compactionState: Seq[graft.pipeline.Maintenance.Compaction] = {
     rawMeta: Unit
@@ -1004,7 +990,7 @@ private[sources] class GraftScan(
     * = delete + append, atomically via [[graft.pipeline.Deletes.replaceDocs]].
     */
   private lazy val fileCommitSnaps: Map[String, Long] =
-    postListingRecords.flatMap(r => r.filesAdded.map(_ -> r.id)).toMap
+    postListingLineage.records.flatMap(r => r.filesAdded.map(_ -> r.id)).toMap
 
   /** As-of file exclusion for DSv2 appends: bins are write-once for
     * EncodeJob snapshots (bin visibility covers them) but appends add files
@@ -1021,7 +1007,7 @@ private[sources] class GraftScan(
     case Some(s) =>
       // post-listing read: a file committed while planning ran must be in
       // this set, or the as-of scan would include rows from the future
-      val later = postListingRecords
+      val later = postListingLineage.records
         .filter(_.id > s)
         .flatMap(_.filesAdded)
         .toSet
@@ -1207,13 +1193,7 @@ private[sources] class GraftScan(
     cachedPartitions match {
       case Some(p) => p
       case None =>
-        val r =
-          if (System.getProperty("graft.debugTiming") != null) {
-            val t0 = System.nanoTime()
-            val x = planInputPartitionsImpl()
-            System.err.println(f"[scan] planInputPartitions   ${(System.nanoTime() - t0) / 1e9}%7.3f s (${x.length} parts)")
-            x
-          } else planInputPartitionsImpl()
+        val r = planInputPartitionsImpl()
         cachedPartitions = Some(r)
         r
     }
@@ -1237,8 +1217,7 @@ private[sources] class GraftScan(
         s"fromSnapshot $s is newer than the read end $e — an incremental range must go forward"
       )
       return GraftScan.planDeltaPartitions(
-        path, s, e, blockFiles, postListingRecords, hadoopConf,
-        s"incremental read ($s, $e]")
+        path, s, e, blockFiles, postListingLineage, hadoopConf, s"incremental read ($s, $e]")
     }
     keyedBinPartitions.foreach { groups =>
       // keyed (storage-partitioned) planning: one split per (file, bin),
@@ -1276,10 +1255,6 @@ private[sources] class GraftScan(
       case None => planned0
     }
     val idsByBin = docState._2
-    if (System.getProperty("graft.debugTiming") != null) {
-      val claimed = planned.count(_._2.isDefined)
-      System.err.println(s"[scan] files claimed=$claimed unclaimed=${planned.length - claimed}")
-    }
     val smallBins: Option[Array[Int]] = wantedBins.filter(_.size <= 1024).map(_.toArray.sorted)
     // files no manifest row names would each have to carry the whole id
     // set; bounded so a 1M-id runtime filter over a manifest-less dir
@@ -1378,7 +1353,7 @@ private[sources] object GraftScan {
     * behind both the streaming source (each micro-batch is one offset
     * range) and the batch incremental read (`option("fromSnapshot", s)`),
     * so the two surfaces can never disagree on what a snapshot range
-    * contains. `recs` must be loaded BEFORE `files` was listed (a file
+    * contains. `lineage` must be read BEFORE `files` was listed (a file
     * committed in between then appears in the listing but in no planned
     * delta — correctly excluded, it belongs to a later range).
     *
@@ -1404,18 +1379,19 @@ private[sources] object GraftScan {
       s: Long,
       e: Long,
       files: Array[(String, Long)],
-      recs: Seq[graft.pipeline.EncodeJob.SnapshotRecord],
+      lineage: graft.pipeline.EncodeJob.Lineage,
       hadoopConf: Configuration,
       context: String
   ): Array[InputPartition] = {
     if (e <= s) return Array.empty
+    val recs = lineage.records
     // a committed rebin folded all earlier history into its base snapshot:
     // pre-rebin bin deltas would be reinterpreted in the NEW bin space
     // (stale stream checkpoints would silently re-read the whole corpus as
     // a "delta", or worse, a wrong subset of it) — refuse loudly instead.
-    // A from-scratch replay (s == -1) is legal once the heal has removed
-    // the folded snapshots: the base snapshot then replays the full corpus.
-    graft.pipeline.Maintenance.rebinState(path, hadoopConf).foreach { r =>
+    // A from-scratch replay (s == -1) is legal: the lineage starts at the
+    // base record, which replays the full corpus.
+    lineage.rebin.foreach { r =>
       require(
         s == -1L || s >= r.baseSnapshot,
         s"$context starts at snapshot $s, which predates the rebin of $path (base " +
@@ -1423,12 +1399,6 @@ private[sources] object GraftScan {
           "folded; streams must restart from a fresh checkpoint, batch readers drop " +
           "fromSnapshot (a full read is exact)"
       )
-      if (s == -1L)
-        require(
-          recs.forall(_.id >= r.baseSnapshot),
-          s"$context cannot replay yet: pre-rebin snapshots are still present (the rebin's " +
-            "history fold is incomplete — run Maintenance.vacuum to heal, then retry)"
-        )
       require(
         e >= r.baseSnapshot,
         s"$context ends at snapshot $e, which predates the rebin of $path (base " +
@@ -2341,9 +2311,11 @@ private[sources] class GraftMicroBatchStream(
     */
   @volatile private var availableNowEnd: Option[Long] = None
 
+  private def latestSnapshot: Long =
+    graft.pipeline.EncodeJob.loadSnapshotRecords(path, hadoopConf).map(_.id).maxOption.getOrElse(-1L)
+
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd =
-      Some(GraftMeta.loadSnapshots(path, hadoopConf).map(_._1).maxOption.getOrElse(-1L))
+    availableNowEnd = Some(latestSnapshot)
 
   override def initialOffset(): Offset = GraftOffset(-1L)
 
@@ -2358,7 +2330,7 @@ private[sources] class GraftMicroBatchStream(
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[GraftOffset].snapshot
-    val all = GraftMeta.loadSnapshots(path, hadoopConf).map(_._1)
+    val all = graft.pipeline.EncodeJob.loadSnapshotRecords(path, hadoopConf).map(_.id)
     val pending = availableNowEnd.fold(all)(e => all.filter(_ <= e)).filter(_ > s)
     val capped = limit match {
       case f: ReadMaxFiles => pending.take(f.maxFiles())
@@ -2374,10 +2346,7 @@ private[sources] class GraftMicroBatchStream(
       "latestOffset(Offset, ReadLimit) should be called instead of this method"
     )
 
-  override def reportLatestOffset(): Offset =
-    GraftOffset(
-      GraftMeta.loadSnapshots(path, hadoopConf).map(_._1).maxOption.getOrElse(-1L)
-    )
+  override def reportLatestOffset(): Offset = GraftOffset(latestSnapshot)
 
   override def deserializeOffset(json: String): Offset = GraftOffset.fromJson(json)
 
@@ -2385,11 +2354,10 @@ private[sources] class GraftMicroBatchStream(
     val s = start.asInstanceOf[GraftOffset].snapshot
     val e = end.asInstanceOf[GraftOffset].snapshot
     if (e <= s) return Array.empty
-    // recs BEFORE the file listing — the order planDeltaPartitions requires
-    val recs = GraftMeta.loadSnapshotRecords(path, hadoopConf)
+    // lineage BEFORE the file listing — the order planDeltaPartitions requires
+    val lineage = graft.pipeline.EncodeJob.lineage(path, hadoopConf)
     val files = GraftMeta.listBlockFiles(path, hadoopConf)
-    GraftScan.planDeltaPartitions(
-      path, s, e, files, recs, hadoopConf, s"stream batch ($s, $e]")
+    GraftScan.planDeltaPartitions(path, s, e, files, lineage, hadoopConf, s"stream batch ($s, $e]")
   }
 
   override def createReaderFactory(): PartitionReaderFactory = factory()

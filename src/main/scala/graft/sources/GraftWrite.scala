@@ -73,14 +73,6 @@ private[sources] final class GraftWriteBuilder(
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
 
-    // an interrupted rebin must fold before validation: the coverage check
-    // below reads the (marker-overridden) NEW layout but would see the
-    // pre-fold lineage — a routine append entering the commit-to-heal crash
-    // window completes the heal instead of failing on the mismatch (gated
-    // no-op on healthy dirs; commit() heals again as a backstop for
-    // builders created before the rebin committed)
-    Maintenance.healRebin(spark, path)
-
     // --- dir validation (driver, at planning time: fail before any task) ---
     val metaOpt = EncodeJob.loadMeta(spark, path)
     if (metaOpt.isEmpty) {
@@ -133,17 +125,7 @@ private[sources] final class GraftWriteBuilder(
       .loadTables(spark, path)
       .getOrElse(throw new IllegalArgumentException(s"$path: _tables/header.bin missing"))
 
-    // Appends add rows to EXISTING bins, which EncodeJob's bin-level resume
-    // bookkeeping would misread on a partially-encoded dir (an appended bin
-    // looks `done`, so a resumed run would skip the original data for it).
-    // Only a fully-encoded dir (every bin committed by the snapshot lineage)
-    // accepts appends.
-    val covered = EncodeJob.loadSnapshots(path, conf).flatMap(_._2).toSet
-    require(
-      (0 until numBins).forall(covered.contains),
-      s"$path is not fully encoded (${numBins - covered.count((0 until numBins).contains)} of " +
-        s"$numBins bins missing from snapshot lineage) — finish EncodeJob.run before appending"
-    )
+    EncodeJob.requireFullyEncoded(path, conf, numBins, "graft append")
 
     // --- schema validation: ACCEPT_ANY_SCHEMA skips Spark's check, so the
     // builder owns it (by NAME; nullability is enforced per-row at write) ---
@@ -362,13 +344,6 @@ private[sources] object GraftAppendCommit {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(path).getFileSystem(conf)
 
-    // an interrupted rebin must fold before this append's snapshot commits
-    // — its base id is reserved (EncodeJob.nextSnapshotId), but committing
-    // around a half-folded history would still interleave with the heal's
-    // snapshot deletions; completing it first is cheap (gated no-op) and
-    // makes the lineage this commit reads self-consistent
-    Maintenance.healRebin(spark, path)
-
     // streaming exactly-once: a retried epoch whose snapshot already
     // committed must not append its rows again. Epochs are monotonic per
     // writer, so ANY record (or expiry-carried mark) for this writer with
@@ -402,18 +377,19 @@ private[sources] object GraftAppendCommit {
         // backoff before declaring the lineage unreadable. A claim that
         // never fills in (crashed writer) keeps failing here until vacuum
         // reclaims it — refusing is the safe direction for the sweep below.
-        var recs = EncodeJob.loadSnapshotRecords(path, conf)
+        var lineage = EncodeJob.lineage(path, conf)
         var tries = 0
-        while (recs.map(_.id).sorted != EncodeJob.listSnapshotIds(path, conf) && tries < 5) {
+        while (!lineage.complete && tries < 5) {
           Thread.sleep(100L << tries)
-          recs = EncodeJob.loadSnapshotRecords(path, conf)
+          lineage = EncodeJob.lineage(path, conf)
           tries += 1
         }
         require(
-          recs.map(_.id).sorted == EncodeJob.listSnapshotIds(path, conf),
+          lineage.complete,
           s"graft append: unreadable snapshot lineage under $path/_snapshots — cannot " +
             "decide epoch idempotence; repair or remove the corrupt snapshot file"
         )
+        val recs = lineage.records
         val max = recs.iterator.flatMap { r =>
           r.writerEpoch.filter(_ => r.writerId.contains(writerId)) ++
             r.writerMarks.collect { case (w, me) if w == writerId => me }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** The spark-submit-able encode job (north-rule launch surface):
   * reads a token table, runs the resumable checkpointed encode into
   * `outDir`, prints the snapshot summary. Re-running resumes: committed
-  * bins are skipped, output stays byte-identical.
+  * bins are skipped, and the resumed blocks equal an uninterrupted run's.
   *
   * Usage:
   *   runMain graft.tools.EncodeCli synth:<rows> <outDir> [numBins|auto] [rounds] [model] [flags]
@@ -21,6 +21,24 @@ import org.apache.spark.sql.SparkSession
   *   embed — self-describing per-block table headers
   */
 object EncodeCli {
+
+  /** Totals over the live block files' manifest rows. */
+  final case class Summary(rows: Long, tokens: Long, payloadBits: Long, payloadBytes: Long)
+
+  /** [[Summary]] of `outDir`: one row per live (file, bin)
+    * ([[EncodeJob.claimLive]]), so rows a compaction, purge or rebin left
+    * behind for files that are no longer live do not count.
+    */
+  def summary(spark: SparkSession, outDir: String): Summary = {
+    val rows = EncodeJob.claimLive(spark, outDir).distinctBy(r => (r.file, r.bin))
+    Summary(
+      rows.map(_.n_rows).sum,
+      rows.map(_.n_values).sum,
+      rows.map(_.payload_bits).sum,
+      rows.map(_.payload_bytes).sum
+    )
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: EncodeCli <input> <outDir> [numBins] [rounds] [model] [flags]")
     val spark = SparkSession
@@ -80,21 +98,12 @@ object EncodeCli {
     )
 
     val result = EncodeJob.run(input, args(1), cfg)
-    val manifest = spark.read.parquet(s"${args(1)}/_manifest")
-    import org.apache.spark.sql.functions._
-    val row = manifest
-      .agg(
-        sum($"n_rows").as("rows"),
-        sum($"n_values").as("tokens"),
-        sum($"payload_bits").as("bits"),
-        sum($"payload_bytes").as("bytes")
-      )
-      .head()
+    val s = summary(spark, args(1))
     println(
       s"snapshot=${result.snapshotId} encoded_bins=${result.binsEncoded.size} " +
         s"skipped_bins=${result.binsSkipped.size} table_hash=${result.tableHash} " +
-        s"rows=${row.getLong(0)} tokens=${row.getLong(1)} payload_bits=${row.getLong(2)} " +
-        s"bytes=${row.getLong(3)} bits_per_token=${row.getLong(2).toDouble / math.max(row.getLong(1), 1)}"
+        s"rows=${s.rows} tokens=${s.tokens} payload_bits=${s.payloadBits} " +
+        s"bytes=${s.payloadBytes} bits_per_token=${s.payloadBits.toDouble / math.max(s.tokens, 1)}"
     )
     spark.stop()
   }

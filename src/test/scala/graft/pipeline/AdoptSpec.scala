@@ -109,4 +109,21 @@ class AdoptSpec extends AnyFunSuite {
     assert(merged.where(col("doc_id") === victim).isEmpty)
     assert(merged.count() == 1198L)
   }
+
+  test("an overlapping adopt reports its doc_id overlap in the result and the CALL row") {
+    import spark.implicits._
+    spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    val dst = encode("graft-adopt-ovl-dst")
+    // 5 ids deleted in the destination are not live there, so they do not overlap
+    val victims = input.take(5).map(_.doc_id).toSeq
+    assert(Deletes.deleteDocs(spark, dst, victims.toDS()).nonEmpty)
+    val row = spark
+      .sql(s"CALL graft.system.adopt(path => '$dst', source => '${encode("graft-adopt-ovl-src1")}')")
+      .head()
+    assert(row.getAs[Long]("doc_id_overlap") == 595L)
+    // the first adopt made every id live in the destination
+    val r = Maintenance.adopt(spark, encode("graft-adopt-ovl-src2"), dst).get
+    assert(r.docIdOverlap == 600L)
+    assert(spark.read.format("graft").load(dst).count() == 595L + 600L + 600L)
+  }
 }

@@ -194,4 +194,47 @@ class MaintenanceSpec extends AnyFunSuite {
     // keepLast >= current count is a no-op
     assert(Maintenance.expireSnapshots(spark, dir, keepLast = 5) == Maintenance.ExpireResult(Seq.empty, None))
   }
+
+  test("an expiry stopped after its rename leaves the expired ids out of the lineage") {
+    val dir = freshDir("graft-maint-expire-crash")
+    incrementalEncode(dir) // snapshots 0, 1, 2
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    def snap(id: Long) = new org.apache.hadoop.fs.Path(s"$dir/_snapshots/snap-$id.json")
+    def read(id: Long): Array[Byte] = {
+      val in = fs.open(snap(id))
+      try in.readAllBytes()
+      finally in.close()
+    }
+    val kept = Seq(0L, 1L).map(id => id -> read(id))
+    Maintenance.expireSnapshots(spark, dir, keepLast = 1)
+    // the expiry stopped after renaming the rebased snap-2 into place, before
+    // deleting the expired files
+    kept.foreach { case (id, bytes) =>
+      val out = fs.create(snap(id), true)
+      try out.write(bytes)
+      finally out.close()
+    }
+
+    assert(EncodeJob.listSnapshotIds(dir, conf) == Seq(2L))
+    assert(EncodeJob.loadSnapshotRecords(dir, conf).map(_.id) == Seq(2L))
+    val e = intercept[Exception] {
+      spark.read.format("graft").option("snapshot", "0").load(dir).count()
+    }
+    assert(e.getMessage.contains("not found"))
+    assert(spark.read.format("graft").option("fromSnapshot", "-1").load(dir).count() == 600L)
+    // vacuum deletes the leftovers
+    Maintenance.vacuum(spark, dir)
+    assert(!fs.exists(snap(0L)) && !fs.exists(snap(1L)) && fs.exists(snap(2L)))
+  }
+
+  test("EncodeCli's summary counts live files only: a compact leaves the totals unchanged") {
+    val dir = freshDir("graft-maint-summary")
+    incrementalEncode(dir)
+    val before = graft.tools.EncodeCli.summary(spark, dir)
+    assert(before.rows == 600L)
+    assert(before.tokens == input.collect().map(_.n_tok.toLong).sum)
+    assert(Maintenance.compact(spark, dir, smallFileBytes = Long.MaxValue / 2, targetFileBytes = Long.MaxValue / 2).isDefined)
+    assert(graft.tools.EncodeCli.summary(spark, dir) == before)
+  }
 }

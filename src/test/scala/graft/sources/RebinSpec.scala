@@ -9,9 +9,10 @@ import java.nio.file.Files
 
 /** In-place bin-layout change ([[Maintenance.rebin]]): decoded content must
   * be bit-identical under the new routing, every read surface must key off
-  * the NEW layout from the marker commit onward (including the crash window
-  * before the heal), and pre-rebin history must refuse loudly everywhere a
-  * bin-delta would be reinterpreted in the new bin space.
+  * the NEW layout and the folded lineage from the marker commit onward (the
+  * marker is the rebin's only commit), and pre-rebin history must refuse
+  * loudly everywhere a bin-delta would be reinterpreted in the new bin
+  * space.
   */
 class RebinSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -124,33 +125,170 @@ class RebinSpec extends AnyFunSuite {
     })
   }
 
-  test("crash window before the heal: current reads correct, history refuses, vacuum heals") {
+  test("marker alone: reads verify, old ids refuse, replay reads each row once") {
     import spark.implicits._
     val d = encodedDir()
     val conf = spark.sparkContext.hadoopConfiguration
-    // commit the marker but crash before the heal
-    val res = Maintenance.rebin(spark, d, newNumBins = 13, healAfterCommit = false).get
+    val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(conf)
+    val res = Maintenance.rebin(spark, d, newNumBins = 13).get
+    // nothing ran after the marker: the pre-rebin snapshot files are still
+    // on disk and meta.json keeps its bootstrap layout
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$d/_snapshots/snap-0.json")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$d/_snapshots/snap-${res.baseSnapshot}.json")))
 
-    // layout override: current-state reads are already correct
     val decoded = spark.read.format("graft").load(d).as[graft.pipeline.TokenRow]
     assert(GraftPipeline.verify(input, decoded) == 0L)
     val someId = input.head().doc_id
-    val hit = spark.read.format("graft").load(d).where($"doc_id" === someId).collect()
-    assert(hit.length == 1)
+    assert(spark.read.format("graft").load(d).where($"doc_id" === someId).count() == 1L)
 
-    // pre-rebin snapshots still exist on disk, but travel refuses loudly
     val e1 = intercept[Exception] {
       spark.read.format("graft").option("snapshot", "0").load(d).count()
     }
     assert(e1.getMessage.contains("predates the rebin"))
-    // incremental replay refuses until the fold completes
-    val e2 = intercept[Exception] {
-      spark.read.format("graft").option("fromSnapshot", "-1").load(d).count()
-    }
-    assert(e2.getMessage.contains("fold is incomplete"))
 
-    // vacuum completes the heal; everything works from the base snapshot on
+    // the lineage is the base record alone; base and a full replay each
+    // read every row once
+    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot))
+    assert(EncodeJob.loadSnapshotRecords(d, conf).head.binsAdded == (0 until 13))
+    val atBase = spark.read.format("graft").option("snapshot", res.baseSnapshot).load(d)
+    assert(atBase.count() == input.count())
+    val replay = spark.read.format("graft").option("fromSnapshot", "-1").load(d)
+    assert(replay.count() == input.count())
+    assert(replay.select($"doc_id").distinct().count() == input.count())
+    val idx = GraftScan.manifestIndex(d, conf, Maintenance.liveBlockFiles(d, conf))
+    assert(idx.isDefined && idx.get.numRows.contains(input.count()))
+
+    // vacuum deletes the folded snapshot files as garbage; reads unchanged
     Maintenance.vacuum(spark, d, olderThanMs = 0L)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$d/_snapshots")).isEmpty)
+    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot))
+    assert(
+      spark.read.format("graft").option("fromSnapshot", "-1").load(d).count() == input.count()
+    )
+  }
+
+  test("marker alone: appends, deletes and replaces commit above the base id") {
+    import spark.implicits._
+    val d = encodedDir()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val res = Maintenance.rebin(spark, d, newNumBins = 9).get
+    val base = res.baseSnapshot
+
+    // the base id is reserved although no snap-<base>.json exists
+    assert(EncodeJob.nextSnapshotId(spark, d)._1 == base + 1)
+
+    val extra = TokenTables.synthetic(spark, 10L, seed = 7L)
+      .withColumn("doc_id", concat(lit("cw-"), $"doc_id"))
+      .as[graft.pipeline.TokenRow]
+    extra.toDF().write.format("graft").mode("append").save(d)
+    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(base, base + 1))
+    assert(spark.read.format("graft").load(d).count() == input.count() + 10)
+    assert(
+      spark.read.format("graft").option("fromSnapshot", "-1").load(d).count() ==
+        input.count() + 10
+    )
+
+    val rows = input.take(4)
+    val victim = rows.head.doc_id
+    val del = Deletes.deleteDocs(spark, d, Seq(victim).toDS()).get
+    assert(del.snapshotId == base + 2)
+    val updated = rows.tail.map(_.copy(tokens = Array(1, 2), n_tok = 2))
+    val rep = Deletes.replaceDocs(spark, d, updated.toSeq.toDS()).get
+    assert(rep.snapshotId == base + 3)
+    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(base, base + 1, base + 2, base + 3))
+    val now = spark.read.format("graft").load(d)
+    assert(now.count() == input.count() + 10 - 1)
+    val replaced = now.where($"doc_id".isin(updated.map(_.doc_id): _*)).select($"n_tok").as[Int].collect()
+    assert(replaced.toSeq == Seq(2, 2, 2))
+    assert(spark.read.format("graft").option("snapshot", base).load(d).count() == input.count())
+  }
+
+  test("marker alone: adopt and EncodeJob.run read the rebinned layout") {
+    val src = encodedDir()
+    val dst = encodedDir()
+    Maintenance.rebin(spark, src, newNumBins = 10, newSalt = Some(5L)).get
+    val dstBase = Maintenance.rebin(spark, dst, newNumBins = 10, newSalt = Some(5L)).get.baseSnapshot
+    val r = Maintenance.adopt(spark, src, dst).get
+    assert(r.snapshotId == dstBase + 1)
+    assert(spark.read.format("graft").load(dst).count() == 2 * input.count())
+    // every bin is committed under the new layout, so a resume encodes none
+    val ok = EncodeJob.run(input, src, cfg.copy(numBins = 10, salt = 5L))
+    assert(ok.binsEncoded.isEmpty)
+    assert(spark.read.format("graft").load(src).count() == input.count())
+  }
+
+  test("expireSnapshots(keepLast = 1) after a rebin and two appends leaves one lineage record") {
+    import spark.implicits._
+    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    val d = encodedDir()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val base = Maintenance.rebin(spark, d, newNumBins = 7).get.baseSnapshot
+    Seq("a1-", "a2-").zipWithIndex.foreach { case (prefix, i) =>
+      TokenTables.synthetic(spark, 20L, seed = 40L + i)
+        .withColumn("doc_id", concat(lit(prefix), $"doc_id"))
+        .write.format("graft").mode("append").save(d)
+    }
+    val total = input.count() + 40
+    val exp = Maintenance.expireSnapshots(spark, d, keepLast = 1)
+    assert(exp.snapshotsExpired == Seq(base, base + 1))
+    val fold = base + 2
+    assert(exp.rebasedInto.contains(fold))
+
+    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(fold))
+    assert(EncodeJob.loadSnapshotRecords(d, conf).map(_.id) == Seq(fold))
+    val replay = spark.read.format("graft").option("fromSnapshot", "-1").load(d)
+    assert(replay.count() == total)
+    assert(replay.select($"doc_id").distinct().count() == total)
+    val listed = spark.sql(s"CALL graft.system.snapshots(path => '$d')").collect().map(_.getLong(0))
+    assert(listed.toSeq == Seq(fold))
+  }
+
+  test("a dir whose rebin was healed on disk (snap-<base>, rewritten meta.json) reads unchanged") {
+    import spark.implicits._
+    import graft.core.MiniJson
+    import graft.core.MiniJson.ObjOps
+    val d = encodedDir()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(conf)
+    val res = Maintenance.rebin(spark, d, newNumBins = 6, newSalt = Some(3L)).get
+    val r = Maintenance.rebinState(d, conf).get
+    // the heal an older engine ran after the marker: snap-<base> written
+    // from the marker, the folded snapshots deleted, meta.json's layout
+    // rewritten
+    def write(path: String, text: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
+      try out.write(text.getBytes("UTF-8"))
+      finally out.close()
+    }
+    def arr(xs: Seq[String]) = xs.mkString("[", ",", "]")
+    write(
+      s"$d/_snapshots/snap-${r.baseSnapshot}.json",
+      s"""{"snapshot_id":${r.baseSnapshot},"parent_id":-1,"table_hash":${r.tableHash},""" +
+        s""""num_bins":${r.numBins},"salt":${r.salt},"bins_added":${arr((0 until r.numBins).map(_.toString))},""" +
+        s""""marked_writers":${arr(r.marks.map(m => MiniJson.render(MiniJson.JStr(m._1))))},""" +
+        s""""marked_epochs":${arr(r.marks.map(_._2.toString))},""" +
+        s""""deletes_added":${arr(r.deletes.map(x => MiniJson.render(MiniJson.JStr(x._1))))},""" +
+        s""""deletes_counts":${arr(r.deletes.map(_._2.toString))},"rebased_from_rebin":${r.cid}}"""
+    )
+    (0L until r.baseSnapshot).foreach { id =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$d/_snapshots/snap-$id.json"), false)
+    }
+    val metaPath = s"$d/_tables/meta.json"
+    val in = fs.open(new org.apache.hadoop.fs.Path(metaPath))
+    val meta =
+      try MiniJson.parseObject(new String(in.readAllBytes(), "UTF-8"), where = metaPath)
+      finally in.close()
+    write(
+      metaPath,
+      MiniJson.render(
+        MiniJson.JObj(meta.v ++ Map("num_bins" -> MiniJson.JNum("6"), "salt" -> MiniJson.JNum("3")))
+      )
+    )
+
+    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot))
+    assert(EncodeJob.loadMeta(spark, d).get.long("num_bins") == 6L)
+    val decoded = spark.read.format("graft").load(d).as[graft.pipeline.TokenRow]
+    assert(GraftPipeline.verify(input, decoded) == 0L)
     assert(
       spark.read.format("graft").option("snapshot", res.baseSnapshot).load(d).count() ==
         input.count()
@@ -158,71 +296,13 @@ class RebinSpec extends AnyFunSuite {
     assert(
       spark.read.format("graft").option("fromSnapshot", "-1").load(d).count() == input.count()
     )
-    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot))
-    val idx = GraftScan.manifestIndex(d, conf, Maintenance.liveBlockFiles(d, conf))
-    assert(idx.isDefined && idx.get.numRows.contains(input.count()))
-    // heal is idempotent and gated: a second vacuum is a no-op
+    TokenTables.synthetic(spark, 5L, seed = 3L)
+      .withColumn("doc_id", concat(lit("h-"), $"doc_id"))
+      .write.format("graft").mode("append").save(d)
+    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot, res.baseSnapshot + 1))
+    assert(spark.read.format("graft").load(d).count() == input.count() + 5)
     Maintenance.vacuum(spark, d, olderThanMs = 0L)
-    assert(spark.read.format("graft").load(d).count() == input.count())
-  }
-
-  test("crash window: a routine append heals first and never claims the reserved base id") {
-    import spark.implicits._
-    val d = encodedDir()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val res = Maintenance.rebin(spark, d, newNumBins = 9, healAfterCommit = false).get
-
-    // the base id is reserved even before snap-<base> exists
-    assert(EncodeJob.nextSnapshotId(spark, d)._1 == res.baseSnapshot + 1)
-
-    // a routine DSv2 append in the window completes the heal, then commits
-    // UNDER the folded base — never inside the pre-rebin history
-    val extra = TokenTables.synthetic(spark, 10L, seed = 7L)
-      .withColumn("doc_id", concat(lit("cw-"), $"doc_id"))
-      .as[graft.pipeline.TokenRow]
-    extra.toDF().write.format("graft").mode("append").save(d)
-    assert(
-      EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot, res.baseSnapshot + 1)
-    )
-    assert(spark.read.format("graft").load(d).count() == input.count() + 10)
-    // full replay sees the folded base + the append delta
-    assert(
-      spark.read.format("graft").option("fromSnapshot", "-1").load(d).count() ==
-        input.count() + 10
-    )
-  }
-
-  test("heal recovers its own crash windows: zero-length base claim, torn meta swap") {
-    import graft.core.MiniJson.ObjOps
-    val d = encodedDir()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(conf)
-    val res = Maintenance.rebin(spark, d, newNumBins = 6, healAfterCommit = false).get
-
-    // crashed heal attempt 1: exclusive create of snap-<base> succeeded,
-    // content write did not (zero-length claim)
-    val snapB = new org.apache.hadoop.fs.Path(s"$d/_snapshots/snap-${res.baseSnapshot}.json")
-    fs.create(snapB, false).close()
-    assert(fs.getFileStatus(snapB).getLen == 0)
-    // crashed heal attempt 2: meta.json swap interrupted between delete and
-    // rename (staged copy present, meta.json gone)
-    val metaP = new org.apache.hadoop.fs.Path(s"$d/_tables/meta.json")
-    val tmpP = new org.apache.hadoop.fs.Path(s"$d/_tables/.tmp-meta.json")
-    require(fs.rename(metaP, tmpP))
-
-    // vacuum with a LONG grace window (its own zero-length sweep skips the
-    // fresh claim) must still complete the fold correctly
-    Maintenance.vacuum(spark, d, olderThanMs = 3600000L)
-    assert(EncodeJob.listSnapshotIds(d, conf) == Seq(res.baseSnapshot))
-    assert(fs.getFileStatus(snapB).getLen > 0)
-    val meta = EncodeJob.loadMeta(spark, d).get
-    assert(meta.long("num_bins") == 6L)
-    import spark.implicits._
-    val decoded = spark.read.format("graft").load(d).as[graft.pipeline.TokenRow]
-    assert(GraftPipeline.verify(input, decoded) == 0L)
-    assert(
-      spark.read.format("graft").option("fromSnapshot", "-1").load(d).count() == input.count()
-    )
+    assert(spark.read.format("graft").load(d).count() == input.count() + 5)
   }
 
   test("rebin refuses under live deletes; retired delete names fold forward") {
